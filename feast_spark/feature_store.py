@@ -53,13 +53,6 @@ class RepoConfig:
     # columns, broadcast range join for small feature tables,
     # union_window otherwise — operators/asof_join.choose_strategy)
     asof_strategy: str = "union_window"
-    # Temporal scan pruning: bound each feature scan to
-    # [min(entity_ts) - ttl, max(entity_ts)] (the reference's BQ rewrite,
-    # bigquery.py:418-437 + template :599-602).  Costs one tiny agg job on
-    # the entity_df; the injected filter reaches the parquet scan
-    # (PushedFilters -> row-group min/max skipping), which at 100 TB is
-    # the difference between scanning a window and scanning all history.
-    scan_pruning: bool = True
 
 
 def _fs_for_path(path: str, spark: SparkSession):
@@ -408,6 +401,47 @@ class FeatureStore:
                 sel.append(F.col(f).alias(out))
         return result.select(*sel)
 
+    def _asof_specs(
+        self,
+        grouped: list[tuple[FeatureView, list[str]]],
+        full_feature_names: bool,
+        ts_bounds: tuple | None = None,
+    ) -> list[AsOfJoinSpec]:
+        """One as-of spec per view, over a fresh load of its batch
+        source (shared by batch retrieval and streaming enrichment).
+        ``ts_bounds`` = (min, max) entity timestamp bounds each feature
+        scan to [min - ttl, max] (A4, the reference's BQ rewrite,
+        bigquery.py:418-437 + template :599-602): the injected filter
+        reaches the parquet scan as row-group min/max skipping."""
+        specs = []
+        for view, feats in grouped:
+            src = view.batch_source
+            if src is None:
+                raise ValueError(f"view {view.name!r} has no batch source")
+            fdf = src.load(self.spark)
+            ts_col = infer_event_timestamp_column(fdf, src.event_timestamp_column)
+            if ts_bounds is not None:
+                lo, hi = ts_bounds
+                fdf = fdf.filter(F.col(ts_col) <= F.lit(hi))
+                if view.ttl is not None:
+                    fdf = fdf.filter(
+                        F.col(ts_col) >= F.lit(lo) - F.expr(
+                            f"INTERVAL {view.ttl.total_seconds()} SECONDS"
+                        )
+                    )
+            specs.append(
+                AsOfJoinSpec(
+                    feature_df=fdf,
+                    join_keys=self._join_keys_for_view(view),
+                    timestamp_col=ts_col,
+                    features=feats,
+                    created_col=src.created_timestamp_column or None,
+                    ttl=view.ttl,
+                    prefix=view.name if full_feature_names else None,
+                )
+            )
+        return specs
+
     def enrich_stream(
         self,
         stream_df,
@@ -437,27 +471,9 @@ class FeatureStore:
         entity_cols = list(stream_df.columns)
 
         def specs() -> list[AsOfJoinSpec]:
-            out = []
-            for view, feats in self._group_feature_refs(base_refs):
-                src = view.batch_source
-                if src is None:
-                    raise ValueError(f"view {view.name!r} has no batch source")
-                fdf = src.load(self.spark)
-                ts_col = infer_event_timestamp_column(
-                    fdf, src.event_timestamp_column
-                )
-                out.append(
-                    AsOfJoinSpec(
-                        feature_df=fdf,
-                        join_keys=self._join_keys_for_view(view),
-                        timestamp_col=ts_col,
-                        features=feats,
-                        created_col=src.created_timestamp_column or None,
-                        ttl=view.ttl,
-                        prefix=view.name if full_feature_names else None,
-                    )
-                )
-            return out
+            return self._asof_specs(
+                self._group_feature_refs(base_refs), full_feature_names
+            )
 
         def _post(result):
             return self._apply_odfvs(
@@ -502,52 +518,29 @@ class FeatureStore:
 
         grouped = self._group_feature_refs(base_refs)
 
-        # A4 — entity timestamp bounds for temporal scan pruning
-        ts_bounds = None
-        if self.config.scan_pruning:
-            row = entity_sdf.agg(
-                F.min(entity_ts_col).alias("lo"), F.max(entity_ts_col).alias("hi")
-            ).first()
-            if row is not None and row["lo"] is not None:
-                ts_bounds = (row["lo"], row["hi"])
+        # A4 — entity timestamp bounds for temporal scan pruning (one
+        # tiny agg job; the bounds reach every feature scan)
+        row = entity_sdf.agg(
+            F.min(entity_ts_col).alias("lo"), F.max(entity_ts_col).alias("hi")
+        ).first()
+        ts_bounds = (
+            (row["lo"], row["hi"])
+            if row is not None and row["lo"] is not None
+            else None
+        )
 
         # collision validation (feature_store.py:636-657) — over the
         # names the caller actually receives (explicit + on-demand)
         self._validate_out_names(explicit_base, odfv_feats, full_feature_names)
 
-        specs = []
-        for view, feats in grouped:
+        for view, _ in grouped:
             join_keys = self._join_keys_for_view(view)
             missing = [k for k in join_keys if k not in entity_sdf.columns]
             if missing:
                 raise EntityDFMissingColumnsError(
                     expected=join_keys + [entity_ts_col], missing=missing
                 )
-            src = view.batch_source
-            if src is None:
-                raise ValueError(f"view {view.name!r} has no batch source")
-            fdf = src.load(self.spark)
-            ts_col = infer_event_timestamp_column(fdf, src.event_timestamp_column)
-            if ts_bounds is not None:
-                lo, hi = ts_bounds
-                fdf = fdf.filter(F.col(ts_col) <= F.lit(hi))
-                if view.ttl is not None:
-                    fdf = fdf.filter(
-                        F.col(ts_col) >= F.lit(lo) - F.expr(
-                            f"INTERVAL {view.ttl.total_seconds()} SECONDS"
-                        )
-                    )
-            specs.append(
-                AsOfJoinSpec(
-                    feature_df=fdf,
-                    join_keys=join_keys,
-                    timestamp_col=ts_col,
-                    features=feats,
-                    created_col=src.created_timestamp_column or None,
-                    ttl=view.ttl,
-                    prefix=view.name if full_feature_names else None,
-                )
-            )
+        specs = self._asof_specs(grouped, full_feature_names, ts_bounds)
         result = as_of_join(
             entity_sdf, entity_ts_col, specs, strategy=self.config.asof_strategy
         )

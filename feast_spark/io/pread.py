@@ -26,6 +26,7 @@ memo (os.stat can't see them) and keep the plain read.
 from __future__ import annotations
 
 import os
+import threading
 from collections import OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession
@@ -33,6 +34,9 @@ from pyspark.sql import DataFrame, SparkSession
 _MAX_ENTRIES = 64
 
 _DF_MEMO: OrderedDict[tuple, DataFrame] = OrderedDict()
+# serving threads share the memo: a get -> move_to_end racing another
+# thread's eviction would raise KeyError inside a request
+_DF_MEMO_LOCK = threading.Lock()
 
 
 def _path_token(path: str) -> tuple | None:
@@ -95,16 +99,18 @@ def read_parquet_memo(
         )
     )
     if key is not None:
-        df = _DF_MEMO.get(key)
-        if df is not None:
-            _DF_MEMO.move_to_end(key)
-            return df
+        with _DF_MEMO_LOCK:
+            df = _DF_MEMO.get(key)
+            if df is not None:
+                _DF_MEMO.move_to_end(key)
+                return df
     reader = spark.read
     if base_path is not None:
         reader = reader.option("basePath", base_path)
     df = reader.parquet(*paths)
     if key is not None:
-        _DF_MEMO[key] = df
-        while len(_DF_MEMO) > _MAX_ENTRIES:
-            _DF_MEMO.popitem(last=False)
+        with _DF_MEMO_LOCK:
+            _DF_MEMO[key] = df
+            while len(_DF_MEMO) > _MAX_ENTRIES:
+                _DF_MEMO.popitem(last=False)
     return df

@@ -11,7 +11,7 @@ For entity row (k, t) and feature view V with ttl τ:
   3. no candidate => feature columns NULL (left join); every entity row
      appears exactly once with all original columns preserved.
 
-Two physical strategies, chosen by ``strategy``:
+Three physical strategies, chosen by ``strategy``:
 
 * ``union_window`` (default — the 100 TB scale path): tag and union the
   entity rows with the (projected) feature rows, hash-partition ONCE by
@@ -19,7 +19,11 @@ Two physical strategies, chosen by ``strategy``:
   the latest feature row forward with ``last(struct, ignoreNulls)``.
   Exactly one shuffle of each side, no range-join row explosion on hot
   keys, created_ts dedup folded into the same sort.  This is the
-  sort-merge formulation of pandas' merge_asof, distributed.
+  sort-merge formulation of pandas' merge_asof, distributed.  One
+  builder, :func:`_asof_union_window`, makes the plan for every column
+  name and type: SQL text with quoted identifiers, key/ts casts through
+  ``Column.cast(DataType)``, and typed NULL padding from
+  ``unionByName(allowMissingColumns=True)``.
 
 * ``range_join``: classic range join + ROW_NUMBER (the reference's
   BigQuery formulation).  With a small feature table Spark broadcasts
@@ -37,16 +41,21 @@ Two physical strategies, chosen by ``strategy``:
   The per-task unit is one key's rows in pandas, so the hot-key bound
   is per-key group size; prefer union_window when keys are skewed and
   inputs are not pre-bucketed.
+
+All three strategies take any column name: every reference is quoted
+(``sql_ident``), so a dot or backtick in a key or feature name is part
+of the name.
 """
 
 from __future__ import annotations
 
-import re
 from dataclasses import dataclass, field
 from datetime import timedelta
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from feast_spark.functions.text import sql_ident as _q
 
 _TS = "__asof_ts"
 _SIDE = "__asof_side"  # 0 = feature row, 1 = entity row (sorts after at equal ts)
@@ -176,7 +185,13 @@ def as_of_join(
             raise ValueError(f"unknown as-of join strategy: {strategy}")
     # P5 — entity timestamp column first
     cols = [entity_ts_col] + [c for c in out.columns if c != entity_ts_col]
-    return out.select(*cols)
+    return out.selectExpr(*[_q(c) for c in cols])
+
+
+def _col(name: str):
+    """Column reference by exact name: dots and backticks in ``name``
+    are part of the name, never struct access or quoting."""
+    return F.col(_q(name))
 
 
 def _projected_feature_df(
@@ -193,12 +208,12 @@ def _projected_feature_df(
     sel = []
     for ek in spec.join_keys:
         fk = spec.key_mapping.get(ek, ek)
-        sel.append(F.col(fk).cast(entity_df.schema[ek].dataType).alias(ek))
-    sel.append(F.col(spec.timestamp_col).cast(ts_type).alias(_TS))
+        sel.append(_col(fk).cast(entity_df.schema[ek].dataType).alias(ek))
+    sel.append(_col(spec.timestamp_col).cast(ts_type).alias(_TS))
     if spec.created_col:
-        sel.append(F.col(spec.created_col).alias(_CREATED))
-    sel.extend(F.col(f) for f in spec.features)
-    sel.extend(F.col(c) for c in (extra_cols or []))
+        sel.append(_col(spec.created_col).alias(_CREATED))
+    sel.extend(_col(f) for f in spec.features)
+    sel.extend(_col(c) for c in (extra_cols or []))
     return fdf.select(*sel)
 
 
@@ -218,272 +233,91 @@ def _lex_nondecreasing(arrs) -> bool:
     return True
 
 
-_SAFE_ID = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
-
-
-def _sql_type(dt) -> str | None:
-    """CAST-parseable DDL text for ``dt``, or None when the type cannot
-    be expressed safely (exotic nested field names, UDTs) — callers
-    fall back to the Column-DSL builder.  Atomic ``simpleString()``
-    round-trips through the DDL parser; struct field names are emitted
-    only when they are plain identifiers (simpleString does not quote,
-    so a field named ``a b`` would not re-parse)."""
-    from pyspark.sql import types as T
-
-    if isinstance(dt, T.UserDefinedType):
-        return None
-    if isinstance(dt, T.StructType):
-        parts = []
-        for f in dt.fields:
-            # DDL cannot express non-nullable fields (or quote exotic
-            # names); fall back so the DSL's exact nullability wins
-            if not _SAFE_ID.match(f.name) or not f.nullable:
-                return None
-            inner = _sql_type(f.dataType)
-            if inner is None:
-                return None
-            parts.append(f"{f.name}:{inner}")
-        return f"struct<{','.join(parts)}>"
-    if isinstance(dt, T.ArrayType):
-        if not dt.containsNull:
-            return None  # DDL arrays are containsNull=true
-        inner = _sql_type(dt.elementType)
-        return None if inner is None else f"array<{inner}>"
-    if isinstance(dt, T.MapType):
-        if not dt.valueContainsNull:
-            return None  # DDL maps are valueContainsNull=true
-        k, v = _sql_type(dt.keyType), _sql_type(dt.valueType)
-        return None if (k is None or v is None) else f"map<{k},{v}>"
-    return dt.simpleString()
-
-
 def _asof_union_window(
     entity_df: DataFrame, entity_ts_col: str, spec: AsOfJoinSpec
 ) -> DataFrame:
-    """Dispatch between the SQL-text and Column-DSL builds of the same
-    union-window plan.  The SQL-text build assembles each projection as
-    ONE ``selectExpr`` (one py4j round trip + a JVM-side parse) — the
-    Column-DSL path spent ~700 py4j round trips per spec constructing
-    the same expressions object by object (plus the GC-detach traffic
-    of every intermediate Column), pure driver wall time under the
-    per-call query contract (guide §7.3).  Identifiers or types the
-    SQL text cannot express exactly fall back to the DSL build; both
-    produce the identical analyzed plan (pinned by tests)."""
-    names = (
-        list(entity_df.columns)
-        + list(spec.join_keys)
-        + [spec.key_mapping.get(k, k) for k in spec.join_keys]
-        + [spec.timestamp_col, entity_ts_col]
-        + list(spec.features)
-        + [spec.out_name(f) for f in spec.features]
-        + ([spec.created_col] if spec.created_col else [])
-    )
-    if spec.join_keys and all(_SAFE_ID.match(n) for n in names):
-        try:
-            sql_build = _asof_union_window_sql(
-                entity_df, entity_ts_col, spec
-            )
-        except Exception:
-            # any parse/analysis surprise -> the DSL build is the
-            # semantics of record; SQL text is only a faster spelling
-            sql_build = None
-        if sql_build is not None:
-            return sql_build
-    return _asof_union_window_dsl(entity_df, entity_ts_col, spec)
+    """The ``union_window`` plan: tag and union both sides, partition
+    ONCE by the join keys, sort by (ts, side[, created]) and carry the
+    latest feature struct forward with ``last(struct, ignoreNulls)``.
 
+    Every projection is ONE ``selectExpr`` of SQL text with each
+    identifier backtick-quoted (an unquoted column named like a niladic
+    function, ``current_date``, would parse as the function call):
+    plan construction is driver wall time under the per-call query
+    contract, and each Column-DSL node costs a dozen py4j round trips.
 
-def _asof_union_window_sql(
-    entity_df: DataFrame, entity_ts_col: str, spec: AsOfJoinSpec
-) -> DataFrame | None:
-    """The union_window plan built from SQL snippet text — expression-
-    for-expression the same plan as :func:`_asof_union_window_dsl`
-    (same casts, same window frame, same CASE projection), just parsed
-    JVM-side in one call per projection.  Returns None when a type has
-    no exact DDL text (caller falls back)."""
-    from pyspark.sql import types as T
+    * Feature leg: keys renamed to the entity side's names; keys and ts
+      that differ in type from the entity side are cast first with
+      ``Column.cast(DataType)``, exact for every type with no DDL text
+      (an identity cast is skipped — the optimizer drops it anyway).
+      The values travel in one struct that is non-null whenever a
+      feature row exists, so a NULL feature value is carried as NULL
+      rather than skipped back to an older value.
+    * Entity leg: the ts and side tags.
+    * ``unionByName(allowMissingColumns=True)`` pads each leg with
+      Spark-typed NULLs for the other leg's columns (entity payload,
+      struct, created).
 
-    keys = list(spec.join_keys)
-    fdf = spec.feature_df
+    At equal ts, feature rows (side 0) sort before the entity row, so
+    the upper bound is inclusive; among equal (key, ts) feature rows
+    created ASC puts the max created last (NULL created sorts first,
+    so it loses ties)."""
     ent_schema = entity_df.schema
-    f_schema = fdf.schema
-    ts_type = ent_schema[entity_ts_col].dataType
+    fdf = spec.feature_df
+    f_types = {f.name: f.dataType for f in fdf.schema.fields}
+    casts = {}
 
-    created_type = (
-        f_schema[spec.created_col].dataType if spec.created_col
-        else T.TimestampType()
-    )
-    struct_type = T.StructType(
-        [T.StructField("__ts", ts_type, True)]
-        + [T.StructField(f, f_schema[f].dataType, True) for f in spec.features]
-    )
-    ts_sql = _sql_type(ts_type)
-    created_sql = _sql_type(created_type)
-    struct_sql = _sql_type(struct_type)
-    ent_sqls = {
-        c: _sql_type(ent_schema[c].dataType) for c in entity_df.columns
-    }
-    if (
-        ts_sql is None
-        or created_sql is None
-        or struct_sql is None
-        or any(v is None for v in ent_sqls.values())
-    ):
-        return None
+    def typed(col: str, dtype, tmp: str) -> str:
+        if f_types.get(col) == dtype:
+            return _q(col)
+        casts[tmp] = _col(col).cast(dtype)
+        return tmp
 
-    from feast_spark.functions.text import sql_ident as _q
-
-    # every identifier REFERENCE is backtick-quoted: a column whose
-    # name collides with a niladic SQL function (current_date,
-    # current_timestamp, current_user) would otherwise parse as the
-    # function call and silently return wrong values
-    entity_cols = entity_df.columns
-    ent_tagged = entity_df.selectExpr(
-        *[_q(c) for c in entity_cols],
-        f"{_q(entity_ts_col)} AS {_TS}",
-        f"CAST(NULL AS {created_sql}) AS {_CREATED}",
-        f"1 AS {_SIDE}",
-        f"CAST(NULL AS {struct_sql}) AS {_STRUCT}",
-    )
-
-    feat_ts = f"CAST({_q(spec.timestamp_col)} AS {ts_sql})"
-    key_map = {k: spec.key_mapping.get(k, k) for k in keys}
-    feat_exprs = [
-        (
-            f"CAST({_q(key_map[c])} AS {ent_sqls[c]}) AS {_q(c)}"
-            if c in key_map
-            else f"CAST(NULL AS {ent_sqls[c]}) AS {_q(c)}"
-        )
-        for c in entity_cols
+    key_refs = [
+        typed(spec.key_mapping.get(k, k), ent_schema[k].dataType, f"__asof_k{i}")
+        for i, k in enumerate(spec.join_keys)
     ]
-    feat_exprs.append(f"{feat_ts} AS {_TS}")
-    feat_exprs.append(
-        f"{_q(spec.created_col)} AS {_CREATED}"
-        if spec.created_col
-        else f"CAST(NULL AS {created_sql}) AS {_CREATED}"
+    ts_ref = typed(spec.timestamp_col, ent_schema[entity_ts_col].dataType, _TS)
+    if casts:
+        fdf = fdf.withColumns(casts)
+    values = "".join(f", {_q(f)} AS {_q(f)}" for f in spec.features)
+    feat = fdf.selectExpr(
+        *[f"{r} AS {_q(k)}" for r, k in zip(key_refs, spec.join_keys)],
+        f"{ts_ref} AS {_TS}",
+        *([f"{_q(spec.created_col)} AS {_CREATED}"] if spec.created_col else []),
+        f"0 AS {_SIDE}",
+        f"struct({ts_ref} AS __ts{values}) AS {_STRUCT}",
     )
-    feat_exprs.append(f"0 AS {_SIDE}")
-    feat_exprs.append(
-        "named_struct('__ts', " + feat_ts
-        + "".join(f", '{f}', {_q(f)}" for f in spec.features)
-        + f") AS {_STRUCT}"
+    ent = entity_df.selectExpr(
+        "*", f"{_q(entity_ts_col)} AS {_TS}", f"1 AS {_SIDE}"
     )
-    feat_full = fdf.selectExpr(*feat_exprs)
-    unioned = feat_full.unionByName(ent_tagged)
+    unioned = feat.unionByName(ent, allowMissingColumns=True)
 
+    partition = (
+        f"PARTITION BY {', '.join(_q(k) for k in spec.join_keys)} "
+        if spec.join_keys
+        else ""
+    )
+    order = f"{_TS}, {_SIDE}" + (f", {_CREATED}" if spec.created_col else "")
     carried = unioned.selectExpr(
         "*",
-        f"last({_STRUCT}, true) OVER ("
-        f"PARTITION BY {', '.join(_q(k) for k in keys)} "
-        f"ORDER BY {_TS} ASC, {_SIDE} ASC, {_CREATED} ASC "
-        f"ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"
-        f") AS __carried",
-    )
-    result = carried.filter(f"{_SIDE} = 1")
-    valid_sql = "__carried IS NOT NULL"
+        f"last({_STRUCT}, true) OVER ({partition}ORDER BY {order} "
+        f"ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS __carried",
+    ).filter(f"{_SIDE} = 1")
+    valid = "__carried IS NOT NULL"
     if spec.ttl is not None:
-        ttl_secs = spec.ttl.total_seconds()
-        valid_sql += (
-            f" AND __carried.__ts >= {_TS} - INTERVAL {ttl_secs} SECONDS"
+        valid += (
+            f" AND __carried.__ts >= {_TS}"
+            f" - INTERVAL {spec.ttl.total_seconds()} SECONDS"
         )
-    proj = [_q(c) for c in entity_cols] + [
-        f"CASE WHEN {valid_sql} THEN __carried.{_q(f)} "
-        f"END AS {_q(spec.out_name(f))}"
-        for f in spec.features
-    ]
-    return result.selectExpr(*proj)
-
-
-def _asof_union_window_dsl(
-    entity_df: DataFrame, entity_ts_col: str, spec: AsOfJoinSpec
-) -> DataFrame:
-    from pyspark.sql import types as T
-
-    keys = list(spec.join_keys)
-    fdf = spec.feature_df
-    ent_schema = entity_df.schema
-    f_schema = fdf.schema
-    ts_type = ent_schema[entity_ts_col].dataType
-
-    # Both union legs are built as ONE select each, with every needed
-    # type derived from the (already-analyzed, cached) input schemas:
-    # the former projected->tagged->null-padded chain analyzed the
-    # growing tree once per intermediate Dataset, which is pure driver
-    # wall time under the per-call query contract.
-    created_type = (
-        f_schema[spec.created_col].dataType if spec.created_col
-        else T.TimestampType()
-    )
-    struct_type = T.StructType(
-        [T.StructField("__ts", ts_type, True)]
-        + [T.StructField(f, f_schema[f].dataType, True) for f in spec.features]
-    )
-
-    entity_cols = entity_df.columns
-    ent_tagged = entity_df.select(
-        *entity_cols,
-        F.col(entity_ts_col).alias(_TS),
-        F.lit(None).cast(created_type).alias(_CREATED),
-        F.lit(1).alias(_SIDE),
-        F.lit(None).cast(struct_type).alias(_STRUCT),
-    )
-
-    # Feature rows: a struct carries (event_ts + values); the struct
-    # itself is non-null whenever a feature row exists, so per-row NULL
-    # feature values survive (a naive per-column last(ignoreNulls) would
-    # wrongly skip back to an older non-null value).  Key columns are
-    # renamed/cast to the entity side's names and types; entity payload
-    # columns are NULL.
-    feat_ts = F.col(spec.timestamp_col).cast(ts_type)
-    key_exprs = {
-        ek: F.col(spec.key_mapping.get(ek, ek)).cast(ent_schema[ek].dataType)
-        for ek in keys
-    }
-    feat_full = fdf.select(
+    return carried.selectExpr(
+        *[_q(c) for c in ent_schema.names],
         *[
-            key_exprs[c].alias(c)
-            if c in key_exprs
-            else F.lit(None).cast(ent_schema[c].dataType).alias(c)
-            for c in entity_cols
+            f"CASE WHEN {valid} THEN __carried.{_q(f)} END "
+            f"AS {_q(spec.out_name(f))}"
+            for f in spec.features
         ],
-        feat_ts.alias(_TS),
-        (
-            F.col(spec.created_col).alias(_CREATED)
-            if spec.created_col
-            else F.lit(None).cast(created_type).alias(_CREATED)
-        ),
-        F.lit(0).alias(_SIDE),
-        F.struct(
-            feat_ts.alias("__ts"), *[F.col(f) for f in spec.features]
-        ).alias(_STRUCT),
     )
-    unioned = feat_full.unionByName(ent_tagged)
-
-    # ONE shuffle: hash-partition by entity key; sort (ts, side, created)
-    # inside each partition.  At equal ts, features (side=0) sort before
-    # the entity row => inclusive upper bound; among equal (key, ts)
-    # feature rows, created ASC puts max created last => last() picks it
-    # (A2 dedup folded into the same sort, zero extra shuffle).
-    w = (
-        Window.partitionBy(*keys)
-        .orderBy(F.col(_TS).asc(), F.col(_SIDE).asc(), F.col(_CREATED).asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    carried = unioned.withColumn("__carried", F.last(_STRUCT, ignorenulls=True).over(w))
-
-    result = carried.filter(F.col(_SIDE) == 1)
-    valid: Column = F.col("__carried").isNotNull()
-    if spec.ttl is not None:
-        ttl_secs = spec.ttl.total_seconds()
-        valid = valid & (
-            F.col("__carried.__ts")
-            >= F.col(_TS) - F.expr(f"INTERVAL {ttl_secs} SECONDS")
-        )
-    proj = [F.col(c) for c in entity_cols]
-    proj += [
-        F.when(valid, F.col(f"__carried.{f}")).alias(spec.out_name(f))
-        for f in spec.features
-    ]
-    return result.select(*proj)
 
 
 def _asof_sorted_merge(
@@ -557,6 +391,19 @@ def _asof_sorted_merge(
         ]
     )
     out_cols = [f.name for f in out_schema.fields]
+    # PySpark's cogroup resolves every input column by its unquoted
+    # name, so both sides cross the Arrow boundary under positional
+    # names (a dot or backtick would not resolve); the output schema
+    # keeps the real ones.
+    pos = {c: f"__c{i}" for i, c in enumerate(entity_cols)}
+    values = [f"__f{i}" for i in range(len(features))]
+    ent = entity_df.toDF(*pos.values())
+    feat = feat.toDF(
+        *[pos[k] for k in keys], _TS, *([_CREATED] if has_created else []),
+        *values, *([pos[bucket_col]] if bucket_col else []),
+    )
+    keys = [pos[k] for k in keys]
+    ent_ts = pos[entity_ts_col]
     # Per-key groups hold exactly one key, so the key-code arrays are
     # constant zero; per-bucket groups compute real codes.
     multi_key = bucket_col is not None
@@ -571,15 +418,16 @@ def _asof_sorted_merge(
             return pd.DataFrame(
                 {c: pd.Series([], dtype=object) for c in out_cols}
             )
-        out = left[entity_cols].copy()
+        out = left.copy()
         right = right[right[_TS].notna()] if len(right) else right
         if not len(right):
             for n in out_names:
                 out[n] = None
+            out.columns = out_cols
             return out
         nl, nr = len(left), len(right)
         rts = right[_TS].to_numpy()
-        ets = left[entity_ts_col].to_numpy(dtype=rts.dtype)
+        ets = left[ent_ts].to_numpy(dtype=rts.dtype)
         rts_i = rts.astype("int64")
         ets_i = ets.astype("int64")
         if multi_key:
@@ -634,19 +482,20 @@ def _asof_sorted_merge(
             # NaT lower bounds compare False and are already masked
             valid &= rts[safe] >= ets - np.timedelta64(ttl_us, "us")
         take = order[safe] if order is not None else safe
-        for f, n in zip(features, out_names):
-            vals = right[f].to_numpy()[take]
+        for v, n in zip(values, out_names):
+            vals = right[v].to_numpy()[take]
             if valid.all():
                 out[n] = vals
             else:
                 col = pd.Series(list(vals), index=out.index, dtype=object)
                 col[~np.asarray(valid)] = None
                 out[n] = col
+        out.columns = out_cols
         return out
 
-    grouping = [bucket_col] if bucket_col else keys
+    grouping = [pos[bucket_col]] if bucket_col else keys
     return (
-        entity_df.groupBy(*grouping)
+        ent.groupBy(*grouping)
         .cogroup(feat.groupBy(*grouping))
         .applyInPandas(merge, out_schema)
     )
@@ -659,25 +508,25 @@ def _asof_range_join(
     feat = _projected_feature_df(spec, entity_df, entity_ts_col)
     # Rename to avoid collisions with entity columns during the join
     feat = feat.select(
-        *[F.col(k).alias(f"__fk_{k}") for k in keys],
+        *[_col(k).alias(f"__fk_{k}") for k in keys],
         F.col(_TS),
         *(
             [F.col(_CREATED)]
             if spec.created_col
             else [F.lit(None).cast("timestamp").alias(_CREATED)]
         ),
-        *[F.col(f).alias(f"__fv_{f}") for f in spec.features],
+        *[_col(f).alias(f"__fv_{f}") for f in spec.features],
     )
 
     ent = entity_df.withColumn(_ROW_ID, F.monotonically_increasing_id())
     cond = F.lit(True)
     for k in keys:
-        cond = cond & (F.col(f"__fk_{k}") == F.col(k))
-    cond = cond & (F.col(_TS) <= F.col(entity_ts_col))
+        cond = cond & (_col(f"__fk_{k}") == _col(k))
+    cond = cond & (F.col(_TS) <= _col(entity_ts_col))
     if spec.ttl is not None:
         ttl_secs = spec.ttl.total_seconds()
         cond = cond & (
-            F.col(_TS) >= F.col(entity_ts_col) - F.expr(f"INTERVAL {ttl_secs} SECONDS")
+            F.col(_TS) >= _col(entity_ts_col) - F.expr(f"INTERVAL {ttl_secs} SECONDS")
         )
     joined = ent.join(feat, cond, "left")
     # Dedup window partitioned by (entity keys, row id): row id alone
@@ -689,10 +538,10 @@ def _asof_range_join(
     # ClusteredDistribution(keys, row_id).  This is what makes
     # bucketed PIT retrieval exchange-free end-to-end
     # (tests/test_skew.py::test_bucketed_pit_retrieval_zero_exchange).
-    w = Window.partitionBy(*keys, _ROW_ID).orderBy(
+    w = Window.partitionBy(*map(_col, keys), _ROW_ID).orderBy(
         F.col(_TS).desc_nulls_last(), F.col(_CREATED).desc_nulls_last()
     )
     ranked = joined.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1)
-    proj = [F.col(c) for c in entity_df.columns]
-    proj += [F.col(f"__fv_{f}").alias(spec.out_name(f)) for f in spec.features]
+    proj = [_col(c) for c in entity_df.columns]
+    proj += [_col(f"__fv_{f}").alias(spec.out_name(f)) for f in spec.features]
     return ranked.select(*proj)

@@ -1,15 +1,20 @@
 """Round-16 optimization pins: the per-call cost cuts must stay
 result-identical and keep their plan shapes.
 
-Covers: the parquet schema memo (testdata + io/pread), the SQL-text
-twins of the Column-DSL literal-tree builders (nearest_centroid,
-probe_cells, with_lsh_signature), the zero-Exchange repetition_stats
-rewrite, the bm25 batch subset-partitioning exchange collapse, the
-connected_components one-job small-graph path, and dsir's
-single-tokenize persist.
+Covers: the parquet schema memo (testdata + io/pread, including its
+thread safety), the SQL-text twins of the Column-DSL literal-tree
+builders (nearest_centroid, probe_cells, with_lsh_signature), the
+zero-Exchange repetition_stats rewrite, the bm25 batch
+subset-partitioning exchange collapse, the connected_components
+one-job small-graph path, dsir's single-tokenize persist, and the
+as-of join's SQL-text union_window builder (every strategy, every spec
+shape and column name).
 """
 
+import functools
+
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_MED
@@ -41,6 +46,70 @@ def test_schema_memo_read_is_identical_and_invalidates(spark, tmp_path):
     ).write.mode("overwrite").parquet(p)
     r2 = read_parquet_memo(spark, p)
     assert r2.columns == ["y"]  # stale schema would still say ["x"]
+
+
+def test_read_parquet_memo_is_thread_safe_under_eviction(tmp_path, monkeypatch):
+    """Serving threads share the memo: with a 2-entry memo and 4 paths
+    every miss evicts, so an unlocked get -> move_to_end can race
+    another thread's eviction and raise KeyError.  The memo's get
+    yields the GIL to make that window reliable; the reader is a stub,
+    so only the memo's own bookkeeping is exercised."""
+    import sys
+    import threading
+    import time
+    from types import SimpleNamespace
+
+    from feast_spark.io import pread
+
+    class _Reader:
+        def option(self, *_):
+            return self
+
+        def parquet(self, *paths):
+            return SimpleNamespace(paths=paths)
+
+    stub = SimpleNamespace(
+        _jsparkSession=SimpleNamespace(sessionUUID=lambda: "s"),
+        sparkContext=SimpleNamespace(applicationId="app"),
+        read=_Reader(),
+    )
+    paths = []
+    for i in range(4):
+        p = tmp_path / f"f{i}.parquet"
+        p.write_bytes(b"x")
+        paths.append(str(p))
+
+    class _YieldingMemo(type(pread._DF_MEMO)):
+        def get(self, key, default=None):
+            got = super().get(key, default)
+            time.sleep(0)  # let other threads run between get and move_to_end
+            return got
+
+    monkeypatch.setattr(pread, "_MAX_ENTRIES", 2)
+    monkeypatch.setattr(pread, "_DF_MEMO", _YieldingMemo())
+    old_interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)  # switch threads often: widen the race
+    errors = []
+
+    def worker(k):
+        try:
+            for i in range(300):
+                path = paths[(i * (k + 1)) % 4]
+                assert pread.read_parquet_memo(stub, path).paths == (path,)
+        except Exception as e:  # surfaced below, not lost in the thread
+            errors.append(e)
+
+    try:
+        threads = [threading.Thread(target=worker, args=(k,)) for k in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old_interval)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors[:3]
+    assert len(pread._DF_MEMO) <= 2
 
 
 # ---------------------------------------------------------------------------
@@ -211,62 +280,152 @@ def test_dsir_weights_tokenize_pass_is_persisted_once(spark):
 
 
 # ---------------------------------------------------------------------------
-# asof union_window: SQL-text build == Column-DSL build
+# asof join: every strategy agrees on every spec shape and column name
 # ---------------------------------------------------------------------------
 
-def test_asof_union_window_sql_build_matches_dsl(spark):
-    """The selectExpr-assembled union_window plan must be row- and
-    schema-identical to the Column-DSL build for every spec shape
-    (ttl / no-ttl / created-col tie-break / key mapping / prefix), and
-    exotic identifiers must fall back to the DSL path untouched."""
-    from datetime import timedelta
+def _asof_oracle(ent_rows, feat_rows, spec, ent_ts):
+    """Nested-loop as-of join over plain dicts: per entity row, the
+    latest feature row with equal keys and ts in [t - ttl, t]; ties on
+    ts go to the max created, and a NULL created loses."""
+    def rank(r):
+        c = r[spec.created_col] if spec.created_col else None
+        return (r[spec.timestamp_col], c is not None, c or r[spec.timestamp_col])
 
-    from feast_spark.operators import asof_join as aj
-    from feast_spark.sources.testdata import load_table
+    out = []
+    for e in ent_rows:
+        t = e[ent_ts]
+        best = max(
+            (
+                r for r in feat_rows
+                if all(r[spec.key_mapping.get(k, k)] == e[k] for k in spec.join_keys)
+                and r[spec.timestamp_col] <= t
+                and (spec.ttl is None or r[spec.timestamp_col] >= t - spec.ttl)
+            ),
+            key=rank,
+            default=None,
+        )
+        row = dict(e)
+        for f in spec.features:
+            row[spec.out_name(f)] = None if best is None else best[f]
+        out.append(row)
+    return out
 
-    ev = load_table(spark, SF_MED, "events")
-    entity = ev.filter(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", "ts"
+
+@pytest.mark.parametrize(
+    "shape",
+    [
+        "ttl", "no_ttl", "prefix_created", "keymap", "int_key_cast",
+        "spaced_entity_col", "current_date_ts", "nested_nonnull",
+        "no_keys", "dotted_names", "backtick_feature",
+    ],
+)
+def test_asof_join_shapes_agree_across_strategies(spark, shape):
+    """All three strategies return the nested-loop oracle's rows and
+    the declared schema for each spec shape: ttl / no ttl, prefix +
+    created tie-break (a NULL created loses), key mapping, an int
+    feature key joined to a long entity key, an entity column with a
+    space, an entity ts named like a niladic SQL function
+    (``current_date`` must resolve as the column), non-nullable nested
+    features (nested nullability survives), no join keys, and key and
+    feature names containing a dot or a backtick."""
+    from datetime import datetime, timedelta
+
+    from pyspark.sql import types as T
+
+    from feast_spark.operators.asof_join import AsOfJoinSpec, as_of_join
+
+    L, I, D, TS = T.LongType(), T.IntegerType(), T.DoubleType(), T.TimestampType()
+
+    def day(d):
+        return datetime(2024, 1, 1) + timedelta(days=d)
+
+    # (user, ts, value, created); (user, ts) is unique outside `twins`
+    feats = [
+        (1, day(0), 1.0, day(0)), (1, day(2), None, day(2)),
+        (1, day(5), 3.0, day(5)), (2, day(1), 10.0, None),
+        (2, day(4), 20.0, day(4)),
+    ]
+    twins = [(1, day(0), 1.5, day(0) + timedelta(hours=1)),
+             (2, day(1), 11.0, day(1))]
+    # (event, user, ts): a plain match, a NULL value at an equal ts
+    # (inclusive upper bound; must not fall back to an older value),
+    # ttl expiry, the inclusive lower ttl bound, no row yet, unknown key
+    ents = [(1, 1, day(1)), (2, 1, day(2)), (3, 1, day(5.5)),
+            (4, 1, day(9)), (5, 2, day(3)), (6, 2, day(0)), (7, 3, day(3))]
+
+    key, fkey, ts, eid, val = "user_id", "user_id", "ts", "event_id", "value"
+    fkey_t, val_t = L, D
+    key_map, ttl = {}, timedelta(days=2)
+    created, prefix = None, None
+    if shape == "no_ttl":
+        ttl = None
+    elif shape == "prefix_created":
+        created, prefix, feats = "created", "v", feats + twins
+    elif shape == "keymap":
+        fkey, key_map = "uid", {key: "uid"}
+    elif shape == "int_key_cast":
+        fkey_t = I
+    elif shape == "spaced_entity_col":
+        eid = "event id"
+    elif shape == "current_date_ts":
+        ts = "current_date"
+    elif shape == "nested_nonnull":
+        val_t = T.StructType([
+            T.StructField("a", T.ArrayType(L, False), False),
+            T.StructField("b", D, False),
+        ])
+        feats = [
+            (k, t, None if v is None else {"a": [int(v)], "b": v}, c)
+            for k, t, v, c in feats
+        ]
+    elif shape == "no_keys":
+        ents = [e for e in ents if e[1] == 1]
+        feats = [f for f in feats if f[0] == 1]
+    elif shape == "dotted_names":
+        key, fkey, val = "u.id", "u.id", "a.b"
+    elif shape == "backtick_feature":
+        val = "x`y"
+
+    keys = [] if shape == "no_keys" else [key]
+    f_schema = T.StructType([
+        T.StructField(fkey, fkey_t), T.StructField("ts", TS),
+        T.StructField(val, val_t), T.StructField("created", TS),
+    ])
+    e_schema = T.StructType([
+        T.StructField(eid, L), T.StructField(key, L), T.StructField(ts, TS),
+    ])
+    spec = AsOfJoinSpec(
+        spark.createDataFrame(feats, f_schema), keys, "ts", [val],
+        created_col=created, ttl=ttl, prefix=prefix, key_mapping=key_map,
     )
-    views = ev.filter(F.col("event_type") == "view").select(
-        "user_id", "ts", "value"
+    entity_df = spark.createDataFrame(ents, e_schema)
+    want_schema = [(ts, TS), (eid, L), (key, L), (spec.out_name(val), val_t)]
+    want = sorted(
+        repr({c: r[c] for c, _ in want_schema})
+        for r in _asof_oracle(
+            [dict(zip(e_schema.names, r)) for r in ents],
+            [dict(zip(f_schema.names, r)) for r in feats],
+            spec, ts,
+        )
     )
-    cases = {
-        "ttl": aj.AsOfJoinSpec(
-            views, ["user_id"], "ts", ["value"], ttl=timedelta(days=2)
-        ),
-        "no_ttl": aj.AsOfJoinSpec(views, ["user_id"], "ts", ["value"]),
-        "prefix": aj.AsOfJoinSpec(
-            views, ["user_id"], "ts", ["value"], prefix="v",
-            ttl=timedelta(hours=7),
-        ),
-        "created": aj.AsOfJoinSpec(
-            views.withColumn("created", F.col("ts")),
-            ["user_id"], "ts", ["value"], created_col="created",
-            ttl=timedelta(days=1),
-        ),
-        "keymap": aj.AsOfJoinSpec(
-            views.withColumnRenamed("user_id", "uid"),
-            ["user_id"], "ts", ["value"],
-            key_mapping={"user_id": "uid"}, ttl=timedelta(days=2),
-        ),
-    }
-    for name, spec in cases.items():
-        a = aj._asof_union_window_sql(entity, "ts", spec)
-        b = aj._asof_union_window_dsl(entity, "ts", spec)
-        assert a is not None, name
-        assert a.schema == b.schema, name
-        assert sorted(a.collect(), key=str) == sorted(
-            b.collect(), key=str
-        ), name
 
-    # an identifier SQL text cannot express exactly -> DSL fallback
-    ent2 = entity.withColumnRenamed("event_id", "event id")
-    spec = cases["ttl"]
-    got = aj._asof_union_window(ent2, "ts", spec)
-    ref = aj._asof_union_window_dsl(ent2, "ts", spec)
-    assert got.schema == ref.schema
-    assert sorted(got.collect(), key=str) == sorted(ref.collect(), key=str)
+    strategies = ("union_window", "range_join", "sorted_merge")
+    outs = []
+    for strategy in strategies:
+        out = as_of_join(entity_df, ts, [spec], strategy=strategy)
+        assert [(f.name, f.dataType) for f in out.schema] == want_schema, (
+            shape, strategy,
+        )
+        outs.append(out.withColumn("__strategy", F.lit(strategy)))
+    # one job for all three strategies keeps the test to seconds
+    rows = functools.reduce(DataFrame.unionByName, outs).collect()
+    for strategy in strategies:
+        got = sorted(
+            repr({c: v for c, v in r.asDict(recursive=True).items()
+                  if c != "__strategy"})
+            for r in rows if r["__strategy"] == strategy
+        )
+        assert got == want, (shape, strategy)
 
 
 # ---------------------------------------------------------------------------
@@ -440,43 +599,3 @@ def test_ensure_local_sees_through_projections(spark):
         spark, [(1, "a"), (2, "b")], "query_id BIGINT, term STRING"
     )
     assert is_local_relation(base.select("query_id", "term"))
-
-
-def test_asof_sql_build_quotes_function_like_names_and_falls_back(spark):
-    """A column literally named current_date must resolve as the
-    COLUMN in the SQL-text build (unquoted it parses as the niladic
-    function); empty join_keys and non-default nested nullability
-    must fall back to the DSL build rather than crash or drift."""
-    from datetime import timedelta
-
-    from pyspark.sql import types as T
-
-    from feast_spark.operators import asof_join as aj
-    from feast_spark.sources.testdata import load_table
-
-    ev = load_table(spark, SF_MED, "events")
-    entity = (
-        ev.filter(F.col("event_type") == "purchase")
-        .select("event_id", "user_id", "ts")
-        .withColumnRenamed("ts", "current_date")
-    )
-    views = ev.filter(F.col("event_type") == "view").select(
-        "user_id", "ts", "value"
-    )
-    spec = aj.AsOfJoinSpec(
-        views, ["user_id"], "ts", ["value"], ttl=timedelta(days=2)
-    )
-    got = aj._asof_union_window(entity, "current_date", spec)
-    ref = aj._asof_union_window_dsl(entity, "current_date", spec)
-    assert got.schema == ref.schema
-    assert sorted(got.collect(), key=str) == sorted(ref.collect(), key=str)
-
-    # non-default nested nullability has no DDL text -> fallback
-    assert aj._sql_type(T.ArrayType(T.IntegerType(), False)) is None
-    assert (
-        aj._sql_type(
-            T.StructType([T.StructField("a", T.IntegerType(), False)])
-        )
-        is None
-    )
-    assert aj._sql_type(T.MapType(T.StringType(), T.IntegerType(), False)) is None
