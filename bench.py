@@ -408,23 +408,21 @@ def main() -> None:
 
     _online_tmp = tempfile.mkdtemp(prefix="bench_online_")
     _online_store = _build_store(spark, sf_dir, _online_tmp, "parquet")
-    # request frames arrive as LocalRelations (io/localframe), the
-    # representation the serving coalescers actually hand the read
-    # path — a classic createDataFrame frame is a pickled-RDD plan
-    # whose evaluation cost is the CALLER's, not the multiget's
     from feast_spark.io.localframe import local_df
+    from feast_spark.online.store import encode_request_keys
 
-    _online_req = local_df(
-        spark,
-        [(i, i) for i in range(10_000)],
-        "user_id BIGINT, __req_id BIGINT",
+    _online_keys = encode_request_keys(
+        [{"user_id": i} for i in range(10_000)], ["user_id"]
     )
 
     def q_online_multiget(spark, sf_dir):
-        return _online_store.online_store.online_read(
+        # the read is driver-side; the slot's frame only carries the
+        # per-key found flags for the harness's count()
+        hits = _online_store.online_store.online_read(
             spark, _online_store.config.project, "user_latest",
-            _online_req, ["user_id"], ["value"],
+            _online_keys, ["value"],
         )
+        return local_df(spark, [(h is not None,) for h in hits], "found BOOLEAN")
 
     queries["online_multiget"] = q_online_multiget
 

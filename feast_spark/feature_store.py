@@ -30,7 +30,7 @@ from feast_spark.inference import (
     update_entities_with_inferred_types,
     update_view_with_inferred_features,
 )
-from feast_spark.online.store import OnlineStore
+from feast_spark.online.store import OnlineStore, encode_request_keys
 from feast_spark.operators.asof_join import AsOfJoinSpec, as_of_join
 from feast_spark.operators.dedup import latest_per_key
 from feast_spark.registry import Registry
@@ -767,6 +767,12 @@ class FeatureStore:
         """Multiget with per-feature field statuses
         (feature_store.py:504-617, ServingService FieldStatus).
 
+        Served from the driver: each request row's join keys are
+        encoded once in Python (``online/store.encode_request_keys``)
+        and each view's backend answers ``online_read`` with one row
+        per key; the request never becomes a DataFrame.  An empty
+        ``entity_rows`` returns ``[]`` for every feature and status.
+
         Default statuses are PRESENT/NOT_FOUND — exactly what the
         reference's Python serving path emits
         (feature_store.py:588-615).  ``full_field_statuses=True``
@@ -855,13 +861,18 @@ class FeatureStore:
                     seen.add(src_ref)
 
         grouped = self._group_feature_refs(base_refs)
-        req = self.spark.createDataFrame(entity_rows)  # small request batch
-        req = req.withColumn("__req_id", F.monotonically_increasing_id())
-        base = {c: [r[c] for r in entity_rows] for c in entity_rows[0].keys()}
-        result: dict[str, list] = dict(base)
+        result: dict[str, list] = {
+            c: [r[c] for r in entity_rows]
+            for c in (entity_rows[0] if entity_rows else ())
+        }
         statuses: dict[str, list[str]] = {}
+        encoded: dict[tuple[str, ...], list[str]] = {}
         for view, feats in grouped:
-            join_keys = self._join_keys_for_view(view)
+            join_keys = tuple(sorted(self._join_keys_for_view(view)))
+            if join_keys not in encoded:
+                encoded[join_keys] = encode_request_keys(
+                    entity_rows, list(join_keys)
+                )
             if isinstance(as_of, dict):
                 if view.name not in as_of:
                     raise ValueError(
@@ -873,12 +884,11 @@ class FeatureStore:
                 kw = {"as_of": as_of[view.name]}
             else:
                 kw = {} if as_of is None else {"as_of": as_of}
-            got = self.online_store.online_read(
-                self.spark, self.config.project, view.name, req, join_keys,
-                feats, **kw,
+            # one dict per request row, None on a miss
+            ordered = self.online_store.online_read(
+                self.spark, self.config.project, view.name,
+                encoded[join_keys], feats, **kw,
             )
-            rows = {r["__req_id"]: r for r in got.collect()}
-            ordered = [rows[i] for i in sorted(rows.keys())]
             if full_field_statuses:
                 cutoff = None
                 if view.ttl is not None:
@@ -894,7 +904,7 @@ class FeatureStore:
                     cutoff = ref_now - view.ttl
 
                 def classify(r, f):
-                    if not r["__found"]:
+                    if r is None:
                         return None, "NOT_FOUND"
                     if cutoff is not None and r["__event_ts"] < cutoff:
                         return None, "OUTSIDE_MAX_AGE"
@@ -908,9 +918,9 @@ class FeatureStore:
                     statuses[f] = [s for _, s in pairs]
             else:
                 for f in feats:
-                    result[f] = [r[f] if r["__found"] else None for r in ordered]
+                    result[f] = [None if r is None else r[f] for r in ordered]
                     statuses[f] = [
-                        "PRESENT" if (r["__found"] and r[f] is not None) else "NOT_FOUND"
+                        "NOT_FOUND" if r is None or r[f] is None else "PRESENT"
                         for r in ordered
                     ]
         # on-demand transforms over the assembled response (the serving
@@ -922,6 +932,10 @@ class FeatureStore:
             pdf = pd.DataFrame({k: v for k, v in result.items()})
             for name, feats in odfv_feats.items():
                 ov = self.registry.get_on_demand_view(name)
+                if not entity_rows:  # an empty frame has no schema to infer
+                    for f in feats:
+                        result[f], statuses[f] = [], []
+                    continue
                 if ov.mode == "pandas":
                     new = ov.transform(pdf)
                 else:

@@ -194,7 +194,9 @@ class DynamoDBOnlineStore:
                     break
         return payloads, schema_json
 
-    def online_read(self, *args, **kwargs) -> DataFrame:
+    def online_read(self, *args, **kwargs) -> list[dict | None]:
+        """Driver-side multiget (``online/kv._read_via_lookup``): one
+        ``batch_get_item`` per 100 distinct keys."""
         return _read_via_lookup(self, *args, **kwargs)
 
     def teardown(self, project: str, view_names: list[str] | None = None) -> None:
@@ -319,7 +321,9 @@ class DatastoreOnlineStore:
                 payloads.append(row["payload"])
         return payloads, meta["schema_json"]
 
-    def online_read(self, *args, **kwargs) -> DataFrame:
+    def online_read(self, *args, **kwargs) -> list[dict | None]:
+        """Driver-side multiget (``online/kv._read_via_lookup``): one
+        ``get`` per distinct key."""
         return _read_via_lookup(self, *args, **kwargs)
 
     def teardown(self, project: str, view_names: list[str] | None = None) -> None:

@@ -44,7 +44,6 @@ from feast_spark.online.store import (
     _CREATED_TS,
     _EVENT_TS,
     _KEY,
-    encode_entity_key,
     project_incoming,
 )
 from feast_spark.operators.dedup import latest_per_key
@@ -105,10 +104,13 @@ def _parse_hits(
     payloads: list[str],
     schema_json: str | None,
     feature_cols: list[str],
-) -> DataFrame | None:
-    """Rebuild a typed hit frame from stored JSON payloads."""
+) -> dict[str, dict]:
+    """``{key: row}`` from stored JSON payloads, decoded with the
+    recorded schema by Spark's ``from_json`` (µs timestamps, arrays,
+    structs and binary round-trip exactly) in one collect of a
+    hits-only LocalRelation.  No hits: no Spark at all."""
     if schema_json is None or not payloads:
-        return None
+        return {}
     schema = StructType.fromJson(json.loads(schema_json))
     from feast_spark.io.localframe import local_df
 
@@ -118,12 +120,15 @@ def _parse_hits(
     parsed = raw.select(
         F.from_json("payload", schema, _JSON_OPTS).alias("j")
     ).select("j.*")
+    # schema evolution: a feature added after the write reads None
     avail = [f for f in feature_cols if f in parsed.columns]
-    out = parsed.select(_KEY, _EVENT_TS, *avail)
-    for f in feature_cols:
-        if f not in avail:  # schema evolution: feature added after write
-            out = out.withColumn(f, F.lit(None))
-    return out
+    hits: dict[str, dict] = {}
+    for r in parsed.select(_KEY, _EVENT_TS, *avail).collect():
+        if r[_EVENT_TS] is not None:  # a NULL event ts never served
+            row = dict.fromkeys(feature_cols)
+            row.update(r.asDict())
+            hits[row.pop(_KEY)] = row
+    return hits
 
 
 def _read_via_lookup(
@@ -131,29 +136,24 @@ def _read_via_lookup(
     spark: SparkSession,
     project: str,
     view_name: str,
-    entity_rows_df: DataFrame,
-    join_keys: list[str],
+    keys: list[str],
     feature_cols: list[str],
-) -> DataFrame:
-    """Shared multiget: collect the (small by contract) request keys,
-    point-lookup the KV from the driver — the reference's online_read
-    loop (sqlite.py:139-166) — and broadcast the hits back onto the
-    request frame.  The KV is never scanned."""
-    keyed = entity_rows_df.withColumn(_KEY, encode_entity_key(join_keys))
-    keys = [r[0] for r in keyed.select(_KEY).distinct().collect()]
-    payloads, schema_json = store._lookup(project, view_name, keys)
-    hits = _parse_hits(spark, payloads, schema_json, feature_cols)
-    if hits is None:
-        out = keyed
-        for f in feature_cols:
-            out = out.withColumn(f, F.lit(None))
-        return (
-            out.withColumn("__found", F.lit(False))
-            .withColumn(_EVENT_TS, F.lit(None).cast("timestamp"))
-            .drop(_KEY)
+    as_of=None,
+) -> list[dict | None]:
+    """Shared ``online_read``: point-lookup the distinct request keys
+    in the KV from the driver — the reference's online_read loop
+    (sqlite.py:139-166) — and answer one ``dict | None`` per key, in
+    key order.  The KV is never scanned.  KV backends overwrite in
+    place, so there is no snapshot to serve ``as_of`` from."""
+    if as_of is not None:
+        raise ValueError(
+            f"{type(store).__name__} keeps no history; as_of reads need "
+            "the parquet online store"
         )
-    out = keyed.join(F.broadcast(hits), on=_KEY, how="left")
-    return out.withColumn("__found", F.col(_EVENT_TS).isNotNull()).drop(_KEY)
+    distinct = list(dict.fromkeys(keys))
+    payloads, schema_json = store._lookup(project, view_name, distinct)
+    hits = _parse_hits(spark, payloads, schema_json, feature_cols)
+    return [hits.get(k) for k in keys]
 
 
 class SqliteOnlineStore:
@@ -254,7 +254,9 @@ class SqliteOnlineStore:
             )
         return payloads, row[0]
 
-    def online_read(self, *args, **kwargs) -> DataFrame:
+    def online_read(self, *args, **kwargs) -> list[dict | None]:
+        """Driver-side multiget (``_read_via_lookup``): one
+        ``SELECT ... IN`` per 500 distinct keys."""
         return _read_via_lookup(self, *args, **kwargs)
 
     def expire(self, spark, project: str, view_name: str, cutoff) -> int:
@@ -365,7 +367,9 @@ class RedisOnlineStore:
         ]
         return payloads, schema_json
 
-    def online_read(self, *args, **kwargs) -> DataFrame:
+    def online_read(self, *args, **kwargs) -> list[dict | None]:
+        """Driver-side multiget (``_read_via_lookup``): one pipelined
+        ``HGET`` per distinct key."""
         return _read_via_lookup(self, *args, **kwargs)
 
     def teardown(self, project: str, view_names: list[str] | None = None) -> None:

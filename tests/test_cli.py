@@ -5,6 +5,7 @@ from datetime import datetime
 from pyspark.sql import Row
 
 from feast_spark.cli import main, parse_repo
+from feast_spark.online.store import encode_request_keys
 
 REPO_TMPL = '''
 from datetime import timedelta
@@ -117,11 +118,11 @@ def test_cli_expire_online(spark, tmp_path, monkeypatch):
     # stale row gone, fresh row still served
     got = st.online_store.online_read(
         spark, "t", "fv",
-        spark.createDataFrame([Row(driver_id=1), Row(driver_id=2)]),
-        ["driver_id"], ["value"],
-    ).collect()
-    by_id = {r["driver_id"]: r for r in got}
-    assert by_id[1]["__found"] is False
+        encode_request_keys([{"driver_id": 1}, {"driver_id": 2}], ["driver_id"]),
+        ["value"],
+    )
+    by_id = dict(zip([1, 2], got))
+    assert by_id[1] is None  # not found
     assert by_id[2]["value"] == 2.0
 
 

@@ -15,6 +15,7 @@ from feast_spark.online.cloud import (
     DatastoreOnlineStore,
     DynamoDBOnlineStore,
 )
+from feast_spark.online.store import encode_request_keys
 
 
 def _ts(s):
@@ -142,9 +143,12 @@ def _write(store, spark, rows, features=("value",)):
 
 
 def _read(store, spark, ids, features=("value",)):
-    req = spark.createDataFrame([Row(driver_id=i) for i in ids])
-    out = store.online_read(spark, "p", "v", req, ["driver_id"], list(features))
-    return {r["driver_id"]: r for r in out.collect()}
+    keys = encode_request_keys([{"driver_id": i} for i in ids], ["driver_id"])
+    out = store.online_read(spark, "p", "v", keys, list(features))
+    return {
+        i: {**dict.fromkeys(features), **(r or {}), "__found": r is not None}
+        for i, r in zip(ids, out)
+    }
 
 
 @pytest.mark.parametrize("kind", ["dynamodb", "datastore"])

@@ -12,7 +12,7 @@ import pytest
 from pyspark.sql import Row
 
 from feast_spark.io.fs import HadoopFS, LocalFS
-from feast_spark.online.store import MANIFEST, OnlineStore
+from feast_spark.online.store import MANIFEST, OnlineStore, encode_request_keys
 
 
 def _write(store, spark, rows):
@@ -23,9 +23,9 @@ def _write(store, spark, rows):
 
 
 def _read_values(store, spark, ids):
-    req = spark.createDataFrame([Row(driver_id=i) for i in ids])
-    out = store.online_read(spark, "p", "v", req, ["driver_id"], ["value"])
-    return {r["driver_id"]: r["value"] for r in out.collect()}
+    keys = encode_request_keys([{"driver_id": i} for i in ids], ["driver_id"])
+    out = store.online_read(spark, "p", "v", keys, ["value"])
+    return {i: None if r is None else r["value"] for i, r in zip(ids, out)}
 
 
 def _ts(s):

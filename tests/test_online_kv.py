@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import Row
 
 from feast_spark.online.kv import RedisOnlineStore, SqliteOnlineStore
+from feast_spark.online.store import encode_request_keys
 
 
 def _ts(s):
@@ -72,9 +73,12 @@ def _write(store, spark, rows, features=("value",)):
 
 
 def _read(store, spark, ids, features=("value",)):
-    req = spark.createDataFrame([Row(driver_id=i) for i in ids])
-    out = store.online_read(spark, "p", "v", req, ["driver_id"], list(features))
-    return {r["driver_id"]: r for r in out.collect()}
+    keys = encode_request_keys([{"driver_id": i} for i in ids], ["driver_id"])
+    out = store.online_read(spark, "p", "v", keys, list(features))
+    return {
+        i: {**dict.fromkeys(features), **(r or {}), "__found": r is not None}
+        for i, r in zip(ids, out)
+    }
 
 
 @pytest.mark.parametrize("kind", ["sqlite", "redis"])
@@ -251,14 +255,10 @@ def test_delete_feature_view_and_teardown(spark, tmp_path):
         with pytest.raises(FeatureViewNotFoundError):
             st.get_feature_view("fv")
         # online state gone: a fresh store of the same view serves a miss
-        assert (
-            st.online_store.online_read(
-                spark, "t", "fv",
-                spark.createDataFrame([Row(driver_id=1)]),
-                ["driver_id"], ["value"],
-            ).collect()[0]["__found"]
-            is False
-        )
+        assert st.online_store.online_read(
+            spark, "t", "fv",
+            encode_request_keys([{"driver_id": 1}], ["driver_id"]), ["value"],
+        ) == [None]
         st.teardown()
         assert st.list_entities() == []
         assert st.list_feature_views() == []
@@ -340,12 +340,13 @@ def test_ttl_expiry_sweep_parquet_and_sqlite(spark, tmp_path):
         # fresh row still serves; stale key is now a miss at the store
         got = st.online_store.online_read(
             spark, "t", "fv",
-            spark.createDataFrame([Row(driver_id=1), Row(driver_id=2)]),
-            ["driver_id"], ["value"],
-        ).collect()
-        by_id = {r["driver_id"]: r for r in got}
+            encode_request_keys([{"driver_id": 1}, {"driver_id": 2}],
+                                ["driver_id"]),
+            ["value"],
+        )
+        by_id = dict(zip([1, 2], got))
         assert by_id[2]["value"] == pytest.approx(2.0)
-        assert by_id[1]["__found"] is False
+        assert by_id[1] is None  # not found
         # idempotent: second sweep finds nothing
         assert st.expire_online_features(now=now) == {"fv": 0}
 
@@ -368,8 +369,8 @@ def test_sqlite_accepts_timestamp_ntz_source(spark, tmp_path):
     store.online_write_batch(
         spark, "p", "v", ev, ["user_id"], "ts", None, ["value"]
     )
-    req = spark.createDataFrame(
-        [Row(user_id=r["user_id"]) for r in ev.limit(3).collect()]
+    keys = encode_request_keys(
+        [{"user_id": r["user_id"]} for r in ev.limit(3).collect()], ["user_id"]
     )
-    out = store.online_read(spark, "p", "v", req, ["user_id"], ["value"]).collect()
-    assert len(out) == 3 and all(r["__found"] for r in out)
+    out = store.online_read(spark, "p", "v", keys, ["value"])
+    assert len(out) == 3 and all(r is not None for r in out)

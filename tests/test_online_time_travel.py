@@ -20,6 +20,7 @@ from feast_spark import (
 )
 from feast_spark.io.fs import LocalFS
 from feast_spark.io.manifest import ManifestedParquetTable
+from feast_spark.online.store import encode_request_keys
 
 
 def _utcnow():
@@ -493,9 +494,9 @@ def test_as_of_degrades_like_head(spark, store, tmp_path):
     )
     got = store.online_store.online_read(
         spark, "tt", "fv",
-        spark.createDataFrame([Row(driver_id=1, __req_id=0)]),
-        ["driver_id"], ["value", "value2"], as_of=between,
-    ).collect()[0]
+        encode_request_keys([{"driver_id": 1}], ["driver_id"]),
+        ["value", "value2"], as_of=between,
+    )[0]
     assert got["value"] == pytest.approx(0.3)
     assert got["value2"] is None  # serving then had no value2
 

@@ -127,19 +127,61 @@ def test_scan_pruning_injected(spark, tmp_path):
     assert out.collect()[0]["v"] == 31.0
 
 
-def test_online_read_broadcasts_request_keys(spark, tmp_path):
-    from feast_spark.online.store import OnlineStore
+def test_online_read_runs_no_spark_job(spark, tmp_path):
+    """An online request on a materialized parquet store is a driver-side
+    read: after warm-up, get_online_features adds no Spark job."""
+    import uuid
 
-    store = OnlineStore(str(tmp_path / "online"))
-    df = spark.createDataFrame(
-        [Row(k=i, ts=datetime(2024, 1, 1), v=float(i)) for i in range(100)]
+    from feast_spark import (
+        Entity,
+        FeatureStore,
+        FeatureView,
+        FileSource,
+        RepoConfig,
+        ValueType,
     )
-    store.online_write_batch(spark, "p", "t", df, ["k"], "ts", None, ["v"])
-    req = spark.createDataFrame([Row(k=5), Row(k=7)])
-    out = store.online_read(spark, "p", "t", req, ["k"], ["v"])
-    plan = _executed_plan(out)
-    assert "BroadcastHashJoin" in plan
-    assert {r["k"]: r["v"] for r in out.collect()} == {5: 5.0, 7: 7.0}
+
+    src_path = str(tmp_path / "feat.parquet")
+    spark.createDataFrame(
+        [Row(k=i, ts=datetime(2024, 1, 1), v=float(i)) for i in range(100)]
+    ).write.parquet(src_path)
+    store = FeatureStore(
+        spark,
+        RepoConfig(
+            registry_path=str(tmp_path / "r.json"),
+            online_store_path=str(tmp_path / "o"),
+        ),
+    )
+    store.apply(
+        [
+            Entity(name="k", value_type=ValueType.INT64),
+            FeatureView(
+                name="fv",
+                entities=["k"],
+                ttl=timedelta(days=2),
+                batch_source=FileSource(path=src_path, event_timestamp_column="ts"),
+            ),
+        ]
+    )
+    store.materialize(datetime(2023, 12, 31), datetime(2024, 1, 2))
+    rows = [{"k": 5}, {"k": 7}, {"k": 1000}]
+    store.get_online_features(["fv:v"], rows)  # warm-up
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    control, group = f"control-{uuid.uuid4()}", f"online-{uuid.uuid4()}"
+    try:
+        # control: the job-group probe does see an ordinary action
+        sc.setJobGroup(control, "control")
+        spark.range(10).collect()
+        sc.setJobGroup(group, "online read")
+        resp = store.get_online_features(["fv:v"], rows)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert tracker.getJobIdsForGroup(control)
+    assert tracker.getJobIdsForGroup(group) == []
+    assert resp["v"] == [5.0, 7.0, None]
+    assert resp["__statuses"]["v"] == ["PRESENT", "PRESENT", "NOT_FOUND"]
 
 
 def test_cosine_topk_broadcasts_queries(spark):

@@ -3,13 +3,12 @@
 
 The reference's only performance artifact is an online WRITE throughput
 script (sdk/python/tests/online_write_benchmark.py:46-95); this is the
-read-path counterpart.  The parquet-snapshot path is a Spark job per
-request batch (broadcast semi-join of the request keys against the
-snapshot — the store side streams and is never shuffled, so latency is
-~flat in store size and grows only with the request batch); the SQLite
-path is the reference's local-serving shape (per-key point lookups, no
-Spark job), which wins at tiny batches and loses the scan economics at
-large ones.  Run solo (timing protocol, SCALE.md).
+read-path counterpart.  Both paths are driver-side: the parquet
+snapshot store filters the snapshot's files with pyarrow on the
+request keys (no Spark job; latency grows with snapshot size), and the
+SQLite path is the reference's local-serving shape (per-key point
+lookups; a hit's payload decodes through one small Spark collect).
+Run solo (timing protocol, SCALE.md).
 
 Usage: python tools/online_bench.py   -> one JSON line; the table is
 recorded in SCALE.md / README.
@@ -90,7 +89,6 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     tmp = tempfile.mkdtemp(prefix="online_bench_")
     results: dict[str, dict] = {}
-    plan_flags: dict[str, bool] = {}
     for kind in ("parquet", "sqlite"):
         st = _build_store(spark, sf_dir, tmp, kind)
         per = {}
@@ -106,35 +104,6 @@ def main() -> None:
                 samples.append(time.monotonic() - t0)
             per[f"k{n}"] = round(statistics.median(samples), 3)
         results[kind] = per
-        if kind == "parquet":
-            # record the multiget plan shape: request keys broadcast,
-            # store side streamed (never shuffled)
-            from pyspark.sql import functions as F
-
-            req = spark.createDataFrame(
-                [{"user_id": i} for i in range(100)]
-            ).withColumn("__req_id", F.monotonically_increasing_id())
-            plan = (
-                st.online_store.online_read(
-                    spark, st.config.project, "user_latest", req,
-                    ["user_id"], ["value"],
-                )
-                ._jdf.queryExecution()
-                .executedPlan()
-                .toString()
-            )
-            plan_flags["broadcast_multiget"] = "BroadcastHashJoin" in plan
-            # the snapshot scan must feed its joins directly: no hash
-            # Exchange may appear ABOVE the FileScan in the printed
-            # tree (the one legitimate hash Exchange — the REQUEST-key
-            # distinct, request-sized — prints below it as the deepest
-            # subtree)
-            plan_flags["store_side_unshuffled"] = (
-                "Exchange hashpartitioning" not in plan.split("FileScan")[0]
-            )
-            plan_flags["n_hash_exchanges"] = plan.count(
-                "Exchange hashpartitioning"
-            )
     print(
         json.dumps(
             {
@@ -143,7 +112,6 @@ def main() -> None:
                 "counts": counts,
                 "runs": runs,
                 "stores": results,
-                "plan": plan_flags,
             }
         )
     )
