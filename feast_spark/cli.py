@@ -344,7 +344,6 @@ def _doctor_provenance_orphans(args) -> int:
 
     from feast_spark.io import epochs as epochs_io
     from feast_spark.io.fs import LocalFS
-    from feast_spark.io.manifest import ManifestedParquetTable
     from feast_spark.provenance import (
         NEVER_MATERIALIZED, PROVENANCE_FORMAT,
     )
@@ -413,30 +412,17 @@ def _doctor_provenance_orphans(args) -> int:
     for (kind, key), known in sorted(
         referenced.items(), key=lambda kv: repr(kv[0])
     ):
-        if kind == "index":
-            where = key
-            try:
-                live = epochs_io.read_tags(key, fs)
-            except (OSError, ValueError):
-                print(f"skip     index {key} — unreadable/deleted")
-                continue
-        elif kind == "dataset":
-            where = key
-            try:
-                live = ManifestedParquetTable(key, fs=fs).tags()
-            except (OSError, ValueError):
-                print(f"skip     dataset {key} — unreadable/deleted")
-                continue
-        else:
+        if kind == "online":
             root, project, view = key
             where = f"{root} {project}/{view}"
-            try:
-                live = ManifestedParquetTable(
-                    posixpath.join(root, project, view), fs=fs
-                ).tags()
-            except (OSError, ValueError):
-                print(f"skip     online {where} — unreadable/deleted")
-                continue
+            path = posixpath.join(root, project, view)
+        else:
+            where = path = key
+        try:
+            live = epochs_io.read_tags(path, fs)
+        except (OSError, ValueError):
+            print(f"skip     {kind} {where} — unreadable/deleted")
+            continue
         stray = sorted(set(live) - known)
         for t in stray:
             print(
@@ -575,7 +561,7 @@ def _doctor_history(args) -> int:
     tags_by_seq: dict[int, list[str]] = {}
     for name, seq in epochs_io.read_tags(path, fs).items():
         tags_by_seq.setdefault(seq, []).append(name)
-    seqs = epochs_io.history_seqs(path, fs)
+    seqs = epochs_io.served_seqs(path, fs, head_seq or 0)
     if not seqs:
         print(
             "no archived commits — the index predates manifest history "
@@ -849,54 +835,21 @@ def _cmd_dataset_diff(args) -> int:
 
 def _cmd_tag(args) -> int:
     """``tag PATH [NAME] [--seq N] [--delete] [--list]``: pin / unpin /
-    list named commits.  Layer-agnostic like ``doctor --history``: a
-    persisted INDEX uses the io/epochs.py tag table; an ONLINE snapshot
-    table or a versioned DATASET root (io/manifest.py ``_MANIFEST.json``)
-    uses the manifest tag table (r14) — both make the tagged commit
-    exempt from every vacuum/GC retention window until the tag is
-    deleted, so 'the corpus the June model trained on' stays an
-    ``as_of="name"`` target while daily vacuums reclaim everything
-    else.  Defaults to pinning the CURRENT head commit.  Exit 2 on a
-    missing path, an unarchived seq, or an unknown tag name."""
-    import json as _json
-    import posixpath
-
+    list named commits of any committed layer — a persisted INDEX, an
+    ONLINE snapshot table or a versioned DATASET root all share the
+    io/epochs.py tag table.  A tagged commit is exempt from every
+    vacuum/GC retention window until the tag is deleted, so 'the corpus
+    the June model trained on' stays an ``as_of="name"`` target while
+    daily vacuums reclaim everything else.  Defaults to pinning the
+    CURRENT head commit.  Exit 2 on a missing path, an unarchived seq,
+    or an unknown tag name."""
     from feast_spark.io import epochs as epochs_io
     from feast_spark.io.fs import LocalFS
 
     fs = LocalFS()
     path = args.index_path
-
-    # manifest-table layer (online snapshot table / dataset root)
-    mp = posixpath.join(path, "_MANIFEST.json")
-    if fs.exists(mp) and "current" in _json.loads(fs.read_bytes(mp)):
-        from feast_spark.io.manifest import ManifestedParquetTable
-
-        t = ManifestedParquetTable(path, fs=fs)
-        if args.list:
-            tags = t.tags()
-            if not tags:
-                print("no tags")
-            for name in sorted(tags):
-                print(f"{name} -> commit_seq={tags[name]}")
-            return 0
-        if not args.name:
-            print("error    NAME is required unless --list")
-            return 2
-        try:
-            if args.delete:
-                t.delete_tag(args.name)
-                print(f"deleted  {args.name}")
-            else:
-                seq = t.tag(args.name, args.seq)
-                print(f"tagged   {args.name} -> commit_seq={seq}")
-        except ValueError as e:
-            print(f"error    {e}")
-            return 2
-        return 0
-
     try:
-        head = epochs_io.read_manifest(path, fs)
+        head = epochs_io.read_manifest(path, fs, required_keys=(), kind="table")
     except ValueError as e:
         print(f"error    {e}")
         return 2

@@ -1,30 +1,46 @@
-"""Shared epoch-append commit protocol for persisted indexes.
+"""The one commit protocol for every directory layer.
 
-One implementation of the stage-then-flip discipline the BM25
-(``operators/bm25.py``), minhash (``operators/minhash_index.py``) and
-IVF (``operators/similarity.py``) indexes all follow:
+Persisted indexes (BM25 ``operators/bm25.py``, minhash
+``operators/minhash_index.py``, IVF / IVF-PQ ``operators/similarity.py``
+and ``operators/pq_index.py``) and versioned parquet snapshot tables
+(``io/manifest.py``: the online store, training datasets, sketch and
+decayed-feature rollups) all publish through this module:
 
-* writers stage new ``epoch=N`` directories under each of the index's
-  sub-tables first, then atomically rewrite ``_MANIFEST.json`` to
-  include the epoch — readers resolve the manifest, so a crashed
-  writer's partial directories are invisible;
-* epoch numbering skips BOTH committed epochs and orphaned directories
-  (a crashed writer's leftovers), so stages never collide — appends
-  are single-writer;
-* ``vacuum`` deletes only directories the committed manifest no longer
-  references (compaction leftovers, crash orphans) — never anything a
-  new reader could resolve (the Delta/Iceberg OPTIMIZE-then-VACUUM
-  split; run it once readers of the previous manifest have drained).
+    <root>/
+        _MANIFEST.json              head: the layer's manifest plus
+                                    ``commit_seq`` and ``committed_at``
+        _history/commit_seq=N.json  every commit, archived before its
+                                    head flip (time travel, ``as_of=N``)
+        _TAGS.json                  named pins ``{name: commit_seq}``
 
-Each index keeps its own manifest SCHEMA (signature params, bucketing
-params, centroid generation pointer); this module owns only the
-protocol mechanics.
+* writers stage write-once data directories first (``epoch=N`` under
+  an index's sub-tables, ``v_<n>`` for a snapshot table), then
+  :func:`commit_manifest` atomically rewrites the head — readers
+  resolve the head, so a crashed writer's partial directories are
+  invisible;
+* compare-and-swap: a manifest carrying the ``commit_seq`` it was
+  derived from commits only if the head is still at that seq, else
+  :class:`ConcurrentCommitError`; a manifest without one (a build, a
+  blind overwrite) commits unconditionally but still bumps the seq;
+* retention is one expire-then-delete sequence (:func:`vacuum`): the
+  keep set is the last N commits, the head and every tagged commit;
+  archived manifests outside it expire FIRST, then the layer deletes
+  data directories no kept commit references — so a failed delete or a
+  crash never leaves an archived seq whose directories are gone;
+* one tag-name rule (:func:`check_tag_name`) and one tag table for
+  every layer; tags pin commits outside the retention window.
+
+Each layer keeps its own manifest SCHEMA (an index's epoch list and
+model pointers, a snapshot table's ``current`` version); this module
+owns only the protocol mechanics.
 """
 
 from __future__ import annotations
 
 import json
 import posixpath
+import time
+from collections.abc import Callable
 
 from feast_spark.io.fs import LocalFS, StoreFS
 
@@ -33,28 +49,57 @@ HISTORY_DIR = "_history"
 TAGS = "_TAGS.json"
 
 
-def _history_path(path: str, seq: int) -> str:
-    return posixpath.join(path, HISTORY_DIR, f"commit_seq={seq}.json")
-
-
 def history_manifest_path(path: str, seq: int) -> str:
     """Where commit ``seq``'s archived manifest lives — the one owner
     of the archive layout (CLI and tools resolve through this)."""
-    return _history_path(path, seq)
+    return posixpath.join(path, HISTORY_DIR, f"commit_seq={seq}.json")
 
 
 def retention_lock(path: str, fs: StoreFS):
     """The lock every retention-affecting writer must hold: tag /
-    delete_tag / the vacuum sequence (retention_window → deletes →
-    expire_history) all serialize on it, so a tag committed while a
-    vacuum computes its keep set cannot end up pinned to a commit that
-    vacuum then expires — the race would silently violate the
-    'tagged commits are vacuum-immune' contract."""
+    delete_tag / :func:`vacuum` all serialize on it, so a tag committed
+    while a vacuum computes its keep set cannot end up pinned to a
+    commit that vacuum then expires — the race would silently violate
+    the 'tagged commits are vacuum-immune' contract.  It is the same
+    lock :func:`commit_manifest` takes; ``LocalFS.lock`` is an
+    ``flock`` and not reentrant, so never nest it."""
     return fs.lock(posixpath.join(path, MANIFEST))
 
 
+def check_tag_name(name: str, what: str = "tag name") -> None:
+    """The one tag-name rule: non-empty, non-numeric (a digit-only tag
+    would be ambiguous with a literal seq in ``as_of=``), and free of
+    ``=`` and ``,`` (both break the ``doctor --history`` rendering)."""
+    if not name or name.isdigit() or "=" in name or "," in name:
+        raise ValueError(
+            f"{what} {name!r} must be non-empty, non-numeric and free "
+            "of '=' and ','"
+        )
+
+
+def head_commit_seq(path: str, fs: StoreFS) -> int:
+    """The committed head's ``commit_seq``; 0 before the first commit
+    (and for a head written before commit seqs existed)."""
+    mp = posixpath.join(path, MANIFEST)
+    if not fs.exists(mp):
+        return 0
+    return json.loads(fs.read_bytes(mp)).get("commit_seq", 0)
+
+
+def served_seqs(
+    path: str, fs: StoreFS, head: int | None = None
+) -> list[int]:
+    """:func:`history_seqs` at or below the head's ``commit_seq``
+    (``head``, read from disk when None).  An archived seq above the
+    head is a crashed commit's orphan — archived, never flipped, never
+    served — so as-of reads, tags and retention ignore it until the
+    next commit claims that seq and overwrites it."""
+    bound = head_commit_seq(path, fs) if head is None else head
+    return [s for s in history_seqs(path, fs) if s <= bound]
+
+
 def read_tags(path: str, fs: StoreFS) -> dict[str, int]:
-    """The index's named commit tags: ``{name: commit_seq}``.  A tagged
+    """The layer's named commit tags: ``{name: commit_seq}``.  A tagged
     commit is PINNED — exempt from every vacuum retention window until
     the tag is deleted (the Iceberg table-tag discipline): 'the corpus
     the 2024-06 model trained on' stays reproducible while daily
@@ -65,37 +110,32 @@ def read_tags(path: str, fs: StoreFS) -> dict[str, int]:
     return {str(k): int(v) for k, v in json.loads(fs.read_bytes(tp)).items()}
 
 
+def _window_text(avail: list[int]) -> str:
+    return (
+        f"archived commits: {avail[0]}..{avail[-1]}"
+        if avail else "no archived commits"
+    )
+
+
 def tag_commit(path: str, fs: StoreFS | None, name: str, seq: int) -> None:
-    """Pin ``commit_seq=seq`` under ``name``.  The seq must have an
-    archived manifest (and therefore resolvable epochs) — tagging an
-    already-expired commit would pin a read that can never succeed.
-    Re-tagging an existing name moves it (one writer's deliberate
-    choice; tags share the manifest's single-writer contract and the
-    same lock)."""
+    """Pin ``commit_seq=seq`` under ``name``.  The seq must be a served
+    commit with an archived manifest (and therefore resolvable data) —
+    tagging an already-expired commit would pin a read that can never
+    succeed.  Re-tagging an existing name moves it."""
     fs = fs or LocalFS()
-    if not name or "=" in name or name.isdigit():
-        # a digit-only tag would be ambiguous with a literal seq in
-        # as_of=; '=' breaks the doctor --history rendering contract
-        raise ValueError(
-            f"tag name must be non-empty, non-numeric and '='-free, "
-            f"got {name!r}"
-        )
+    check_tag_name(name)
     tp = posixpath.join(path, TAGS)
     with retention_lock(path, fs):
         # existence checked INSIDE the lock: a vacuum holding it has
         # either finished (this seq survived or is gone — checked
         # against the post-vacuum truth) or has not started (it will
         # see this tag in its keep set) — never in between
-        if not fs.exists(_history_path(path, seq)):
-            avail = history_seqs(path, fs)
-            window = (
-                f"archived commits: {avail[0]}..{avail[-1]}"
-                if avail else "no archived commits"
-            )
+        avail = served_seqs(path, fs)
+        if seq not in avail:
             raise ValueError(
                 f"cannot tag commit_seq={seq} at {path}: no archived "
-                f"manifest ({window}) — only commits inside the history "
-                "window can be pinned"
+                f"manifest ({_window_text(avail)}) — commits outside "
+                "the history window cannot be pinned"
             )
         tags = read_tags(path, fs)
         tags[name] = int(seq)
@@ -181,16 +221,14 @@ def read_manifest(
     same as to head, so travelling across a rebuild to a DIFFERENT
     index kind fails loudly rather than reading a foreign layout.
     A STRING ``as_of_seq`` resolves through the tag table
-    (:func:`tag_commit`) — pinned named commits."""
+    (:func:`tag_commit`) — pinned named commits.  Seqs above the head
+    (a crashed commit's orphan archive) do not resolve."""
     if as_of_seq is not None:
         as_of_seq = resolve_as_of(path, fs, as_of_seq)
-        hp = _history_path(path, as_of_seq)
-        if not fs.exists(hp):
-            avail = history_seqs(path, fs)
-            window = (
-                f"archived commits: {avail[0]}..{avail[-1]}"
-                if avail
-                else "no archived commits (index predates manifest "
+        avail = served_seqs(path, fs)
+        if as_of_seq not in avail:
+            window = _window_text(avail) + (
+                "" if avail else " (the table predates manifest "
                 "history, or vacuum expired them all)"
             )
             raise ValueError(
@@ -198,7 +236,7 @@ def read_manifest(
                 f"commit_seq={as_of_seq} — {window}; commits past the "
                 "vacuum retention window are expired"
             )
-        manifest = json.loads(fs.read_bytes(hp))
+        manifest = json.loads(fs.read_bytes(history_manifest_path(path, as_of_seq)))
     else:
         mp = posixpath.join(path, MANIFEST)
         if not fs.exists(mp):
@@ -224,30 +262,32 @@ def read_manifest(
 
 class ConcurrentCommitError(RuntimeError):
     """A manifest flip raced another writer: the committed head is no
-    longer the manifest this write derived from.  The epoch protocol is
-    single-writer by contract; this error turns a contract violation —
-    which plain ``os.replace`` would resolve as silent last-writer-wins
-    (lost epochs, lost pair stamps) — into a loud failure.  Re-read the
-    manifest and re-apply the change, or fix the duplicated writer."""
+    longer the manifest this write derived from.  Plain ``os.replace``
+    would resolve the race as silent last-writer-wins (lost epochs,
+    lost snapshot rows, lost pair stamps); this error makes it loud.
+    Re-read the head and re-apply the change, or fix the duplicated
+    writer."""
 
 
-def commit_manifest(path: str, fs: StoreFS, manifest: dict) -> None:
+def commit_manifest(path: str, fs: StoreFS, manifest: dict) -> dict:
     """Atomically publish ``manifest`` — with optimistic concurrency
-    for every read-modify-write flow.
+    for every read-modify-write flow — and return the committed head.
 
     Every committed manifest carries a monotonically increasing
-    ``commit_seq``.  Writers that derive their manifest from the
-    committed head (appends, compacts, meta stamps — anything built as
-    ``{**read_manifest, ...}``) carry the head's ``commit_seq`` along,
-    and this function treats that carried value as the expected parent:
-    if the committed head has moved past it, the flip raises
+    ``commit_seq`` and its ``committed_at`` wall clock, both stamped
+    under the lock, so seq order and time order agree.  Writers that
+    derive their manifest from the committed head (index appends,
+    compacts, meta stamps built as ``{**read_manifest, ...}``; snapshot
+    writers passing ``base_seq``) carry the head's ``commit_seq``
+    along, and this function treats that carried value as the expected
+    parent: if the committed head has moved past it, the flip raises
     :class:`ConcurrentCommitError` instead of silently discarding the
-    other writer's epochs/stamps.  Fresh manifests without a
-    ``commit_seq`` (index BUILDS — including rebuild-over-existing,
-    where ``carried_meta``'s allowlist deliberately drops the seq)
-    overwrite unconditionally: a rebuild is a new index over a
-    caller-supplied corpus, last-writer-wins by design, and it still
-    bumps the seq so any in-flight pre-rebuild appender fails its CAS.
+    other writer's work.  An empty path's head is seq 0.  Fresh
+    manifests without a ``commit_seq`` (index BUILDS — including
+    rebuild-over-existing, where ``carried_meta``'s allowlist
+    deliberately drops the seq — and blind snapshot overwrites)
+    overwrite unconditionally, and still bump the seq so any in-flight
+    writer that read the old head fails its CAS.
 
     The check-then-rename window is closed entirely on LocalFS (an
     flock around the read+compare+replace); on object stores
@@ -259,32 +299,31 @@ def commit_manifest(path: str, fs: StoreFS, manifest: dict) -> None:
     mp = posixpath.join(path, MANIFEST)
     expected = manifest.get("commit_seq")
     with fs.lock(mp):
-        head_seq = (
-            json.loads(fs.read_bytes(mp)).get("commit_seq", 0)
-            if fs.exists(mp)
-            else None
-        )
-        if expected is not None and head_seq != expected:
+        current = head_commit_seq(path, fs)
+        if expected is not None and current != expected:
             raise ConcurrentCommitError(
                 f"manifest at {path} moved from commit_seq={expected} to "
-                f"{head_seq} since it was read — another writer committed "
-                "in between (the epoch protocol is single-writer per "
-                "index).  Re-read the manifest and re-apply, or remove "
-                "the duplicate writer."
+                f"{current} since it was read — another writer committed "
+                "in between.  Re-read the manifest and re-apply, or "
+                "remove the duplicate writer."
             )
-        out = {**manifest, "commit_seq": (head_seq or 0) + 1}
+        out = {
+            **manifest,
+            "commit_seq": current + 1,
+            "committed_at": time.time(),
+        }
         data = json.dumps(out).encode()
         # archive BEFORE the head flip so a committed head always has
         # its history entry (time travel to the head seq never 404s).
         # A crash between the two writes leaves an orphan history file
-        # for a seq head never reached; the next commit computes the
-        # same seq from head and atomically overwrites the orphan, so
-        # history never shows a manifest that was not, or will not be,
-        # the committed head at that seq.
+        # for a seq head never reached: readers ignore seqs above the
+        # head (served_seqs), and the next commit computes the same seq
+        # from head and atomically overwrites the orphan.
         fs.write_bytes_atomic(
-            _history_path(path, out["commit_seq"]), data
+            history_manifest_path(path, out["commit_seq"]), data
         )
         fs.write_bytes_atomic(mp, data)
+    return out
 
 
 # the sidecar keys a rebuild preserves from a pre-existing manifest
@@ -345,18 +384,21 @@ def retention_window(
 ) -> tuple[set[int], set[int], list[dict]]:
     """The vacuum retention window: ``(protected_epochs, keep_seqs,
     retained_manifests)`` covering the ``retain_last`` most recent
-    archived commits plus the head's own archive entry (always kept so
-    ``as_of=head`` never expires).  Epochs any retained manifest
-    references are PROTECTED from vacuum — the Iceberg
-    expire-snapshots discipline: the time-travel window and the
-    in-flight-reader grace window are the same mechanism, because a
-    reader that resolved manifest N scans exactly the directories
-    manifest N lists."""
+    served commits, the head (``head_seq``, read from disk when None —
+    always kept so ``as_of=head`` never expires) and every tagged
+    commit; ``retained_manifests`` are their archived manifests in seq
+    order.  Epochs any retained manifest references are PROTECTED from
+    vacuum — the Iceberg expire-snapshots discipline: the time-travel
+    window and the in-flight-reader grace window are the same
+    mechanism, because a reader that resolved manifest N scans exactly
+    the directories manifest N lists."""
     if retain_last < 0:
         raise ValueError(f"retain_last must be >= 0, got {retain_last}")
-    seqs = history_seqs(path, fs)
+    if head_seq is None:
+        head_seq = head_commit_seq(path, fs)
+    seqs = served_seqs(path, fs, head_seq)
     keep = set(seqs[-retain_last:]) if retain_last > 0 else set()
-    if head_seq is not None:
+    if head_seq:
         keep.add(head_seq)
     # tagged commits are pinned OUTSIDE the sliding window: they stay
     # readable through any number of vacuums until the tag is deleted
@@ -364,7 +406,7 @@ def retention_window(
     protected: set[int] = set()
     manifests: list[dict] = []
     for s in sorted(keep):
-        hp = _history_path(path, s)
+        hp = history_manifest_path(path, s)
         if not fs.exists(hp):
             continue  # a pre-history head has no archive entry
         m = json.loads(fs.read_bytes(hp))
@@ -376,17 +418,40 @@ def retention_window(
 def expire_history(
     path: str, fs: StoreFS, keep_seqs: set[int]
 ) -> list[int]:
-    """Delete archived manifests outside ``keep_seqs`` — run by vacuum
-    AFTER epoch deletion so the time-travel window is honest: every
-    surviving ``as_of`` target still has all of its epoch directories,
-    and an expired target fails with the friendly range error instead
-    of a missing-path read mid-scan."""
+    """Delete the served commits' archived manifests outside
+    ``keep_seqs``; returns the expired seqs.  :func:`vacuum` runs it
+    BEFORE any data directory is deleted, so every archived seq that
+    survives a failed delete or a crash still has all of its
+    directories, and an expired target fails with the friendly range
+    error instead of a missing-path read mid-scan."""
     removed = []
-    for s in history_seqs(path, fs):
+    for s in served_seqs(path, fs):
         if s not in keep_seqs:
-            fs.delete(_history_path(path, s))
+            fs.delete(history_manifest_path(path, s))
             removed.append(s)
     return removed
+
+
+def vacuum(
+    path: str,
+    fs: StoreFS,
+    retain_last: int,
+    read_head: Callable[[], dict],
+    sweep: Callable[[dict, set[int], list[dict]], object],
+) -> tuple[list[int], object]:
+    """The one retention sequence for every layer, under
+    :func:`retention_lock`: read the head, compute the keep set
+    (:func:`retention_window`), expire the archive outside it, then
+    ``sweep(head, protected_epochs, retained_manifests)`` deletes the
+    layer's data directories that no kept commit references.  Returns
+    ``(expired_seqs, sweep_result)``."""
+    with retention_lock(path, fs):
+        head = read_head()
+        protected, keep, retained = retention_window(
+            path, fs, retain_last, head_seq=head.get("commit_seq")
+        )
+        expired = expire_history(path, fs, keep)
+        return expired, sweep(head, protected, retained)
 
 
 def vacuum_epochs(

@@ -1,31 +1,48 @@
-"""Manifest-flip parquet table: the object-store-safe commit protocol
-shared by the online store and every incrementally-maintained rollup
-table (sketches, decayed feature state).
+"""Versioned parquet snapshot table: the online store's and every
+incrementally-maintained rollup table's (sketches, decayed feature
+state, training datasets) client of the one commit protocol,
+``io/epochs.py``.
 
-Protocol (no directory renames anywhere, so it holds on S3/GCS/ABFS
-semantics exactly like ``online/store.py``): a writer (1) writes the
-new snapshot into a fresh ``v_<n>`` directory numbered past every
-existing one — committed or orphaned, so a crashed writer's leftovers
-are never overwritten — then (2) atomically replaces
-``_MANIFEST.json`` to point at it.  Readers resolve the manifest
-first; they either see the old complete snapshot or the new complete
-snapshot, never a partial write.  GC keeps the last ``keep_versions``
-snapshots (concurrent readers of the previous version stay valid) and
-is best-effort — a failed delete is retried by the next commit.
+    <root>/
+        _MANIFEST.json              head: {"current": "v_00000003",
+                                    "format", "keep_versions",
+                                    ["meta"], ["tables"],
+                                    "commit_seq", "committed_at"}
+        _history/commit_seq=N.json  every commit, archived
+        _TAGS.json                  named pins {name: commit_seq}
+        v_00000001/ ...             immutable parquet snapshots
+
+A writer (1) writes the new snapshot into a fresh ``v_<n>`` directory
+numbered past every existing one — committed or orphaned, so a crashed
+writer's leftovers are never overwritten — then (2) publishes it with
+``epochs.commit_manifest`` (no directory renames anywhere, so it holds
+on S3/GCS/ABFS semantics).  Readers resolve the head first; they see
+the old complete snapshot or the new complete snapshot, never a
+partial write.
+
+A writer that read, modified and wrote passes the seq it read as
+``base_seq``: if another writer committed in between, the commit
+raises ``ConcurrentCommitError`` and deletes its own staged directory,
+instead of silently publishing a snapshot without the other writer's
+rows.  Without a base the snapshot overwrites.
+
+After each flip, retention runs the core's expire-then-delete sequence
+(``epochs.vacuum``) with the last ``keep_versions`` commits, the head
+and every tagged commit as the keep set.  It is best-effort: a failed
+delete is retried by the next commit or :meth:`vacuum`.
 """
 
 from __future__ import annotations
 
 import json
 import posixpath
-import time
 from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 
+from feast_spark.io import epochs as epochs_io
+from feast_spark.io.epochs import MANIFEST, ConcurrentCommitError
 from feast_spark.io.fs import LocalFS, StoreFS
-
-MANIFEST = "_MANIFEST.json"
 
 #: GC window when neither the caller nor the manifest names one
 DEFAULT_KEEP_VERSIONS = 2
@@ -36,6 +53,12 @@ def _to_epoch_s(dt: datetime) -> float:
     if dt.tzinfo is None:
         dt = dt.replace(tzinfo=timezone.utc)
     return dt.timestamp()
+
+
+def _version_no(version: str | None) -> int | None:
+    if version and version.startswith("v_") and version[2:].isdigit():
+        return int(version[2:])
+    return None
 
 
 class ManifestedParquetTable:
@@ -77,15 +100,23 @@ class ManifestedParquetTable:
         stored = manifest.get("keep_versions")
         return max(1, stored) if stored else DEFAULT_KEEP_VERSIONS
 
-    def _manifest_path(self) -> str:
-        return posixpath.join(self.root, MANIFEST)
+    def _read_manifest(self) -> dict:
+        mp = posixpath.join(self.root, MANIFEST)
+        if not self.fs.exists(mp):
+            return {}
+        return json.loads(self.fs.read_bytes(mp))
+
+    def head(self) -> tuple[str | None, int]:
+        """``(snapshot path, commit seq)`` from ONE head read: the base
+        a read-modify-write reads from and passes back as
+        ``commit(..., base_seq=seq)``.  ``(None, 0)`` before the first
+        commit."""
+        m = self._read_manifest()
+        path = posixpath.join(self.root, m["current"]) if m else None
+        return path, m.get("commit_seq", 0)
 
     def current_path(self) -> str | None:
-        mp = self._manifest_path()
-        if not self.fs.exists(mp):
-            return None
-        version = json.loads(self.fs.read_bytes(mp))["current"]
-        return posixpath.join(self.root, version)
+        return self.head()[0]
 
     def _next_version(self) -> str:
         versions = [
@@ -108,10 +139,7 @@ class ManifestedParquetTable:
     def current_meta(self) -> dict:
         """Caller-supplied metadata recorded with the last commit (e.g.
         the streaming epoch watermark); empty before the first commit."""
-        mp = self._manifest_path()
-        if not self.fs.exists(mp):
-            return {}
-        return json.loads(self.fs.read_bytes(mp)).get("meta", {})
+        return self._read_manifest().get("meta", {})
 
     def read_table(self, spark: SparkSession, name: str) -> DataFrame | None:
         """Read one named sub-table of a :meth:`commit_tables` snapshot."""
@@ -125,6 +153,7 @@ class ManifestedParquetTable:
         tables: dict[str, DataFrame],
         partition_by: dict[str, list[str]] | None = None,
         meta: dict | None = None,
+        base_seq: int | None = None,
     ) -> int:
         """Atomically commit SEVERAL named tables as ONE snapshot (one
         manifest flip): each DataFrame lands under
@@ -132,8 +161,8 @@ class ManifestedParquetTable:
         columns, and readers resolving the manifest always see a
         CONSISTENT set (e.g. a postings table and the corpus stats it
         was computed with — two separate manifests could flip between a
-        reader's two resolves).  Meta merges like :meth:`commit`.
-        Returns the commit seq."""
+        reader's two resolves).  Meta and ``base_seq`` work as in
+        :meth:`commit`.  Returns the commit seq."""
         version = self._next_version()
         for name, tdf in tables.items():
             w = tdf.write.mode("errorifexists")
@@ -141,13 +170,23 @@ class ManifestedParquetTable:
             if cols:
                 w = w.partitionBy(*cols)
             w.parquet(posixpath.join(self.root, version, name))
-        return self._flip(version, meta, tables=sorted(tables))
+        return self._publish(version, meta, base_seq, sorted(tables))
 
-    def commit(self, df: DataFrame, meta: dict | None = None) -> int:
+    def commit(
+        self,
+        df: DataFrame,
+        meta: dict | None = None,
+        base_seq: int | None = None,
+    ) -> int:
         """Write a new snapshot and flip the manifest to it; returns
         the commit seq (minted UNDER the manifest lock — re-reading
         ``history()[-1]`` after the fact could return a concurrent
         committer's seq, a wrong provenance coordinate).
+
+        ``base_seq`` is the head seq ``df`` was derived from
+        (:meth:`head`): if the head has moved since, the commit raises
+        ``ConcurrentCommitError`` and leaves the head, the archive and
+        the ``v_*`` listing as they were.  ``None`` overwrites.
 
         ``meta`` MERGES over the previous commit's meta (it does not
         replace it): a manual ``update()`` between streaming
@@ -160,138 +199,137 @@ class ManifestedParquetTable:
         df.write.mode("errorifexists").parquet(
             posixpath.join(self.root, version)
         )
-        return self._flip(version, meta)
+        return self._publish(version, meta, base_seq)
 
-    def _read_manifest(self) -> dict:
-        mp = self._manifest_path()
-        if not self.fs.exists(mp):
-            return {}
-        return json.loads(self.fs.read_bytes(mp))
+    def _publish(
+        self,
+        version: str,
+        meta: dict | None,
+        base_seq: int | None,
+        tables: list[str] | None = None,
+    ) -> int:
+        try:
+            head = self._flip(version, meta, base_seq, tables)
+        except ConcurrentCommitError:
+            # never published: the staged snapshot goes with the loser
+            self.fs.delete(posixpath.join(self.root, version))
+            raise
+        try:
+            self._vacuum(head["keep_versions"])
+        except Exception:
+            pass  # GC is best-effort; the next commit or vacuum() retries
+        return head["commit_seq"]
+
+    def _flip(
+        self,
+        version: str,
+        meta: dict | None,
+        base_seq: int | None,
+        tables: list[str] | None,
+    ) -> dict:
+        while True:
+            prev = self._read_manifest()
+            manifest = {
+                "current": version,
+                "format": "parquet",
+                # the committer's retention is part of the table's
+                # contract: persisted so vacuum() and other processes
+                # honor it by default
+                "keep_versions": self._effective_keep(prev),
+                "commit_seq": (
+                    prev.get("commit_seq", 0) if base_seq is None
+                    else base_seq
+                ),
+            }
+            if tables:
+                manifest["tables"] = tables
+            merged = {**prev.get("meta", {}), **(meta or {})}
+            merged = {k: v for k, v in merged.items() if v is not None}
+            if merged:
+                manifest["meta"] = merged
+            try:
+                return epochs_io.commit_manifest(self.root, self.fs, manifest)
+            except ConcurrentCommitError:
+                if base_seq is not None:
+                    raise
+                # no base: only meta and the window derive from the
+                # head, so re-merge them over the new head and flip again
 
     def history(self) -> list[dict]:
         """The retained commit log, oldest first: one
-        ``{"seq", "version", "committed_at"}`` entry per commit whose
-        snapshot directory GC still keeps (the ``keep_versions``
-        window, plus every tagged commit) — the resolvable time-travel
-        targets."""
-        return list(self._read_manifest().get("history", []))
+        ``{"seq", "version", "committed_at"}`` entry per archived
+        commit (the ``keep_versions`` window, plus every tagged commit)
+        — the resolvable time-travel targets."""
+        out = []
+        for s in epochs_io.served_seqs(self.root, self.fs):
+            hp = epochs_io.history_manifest_path(self.root, s)
+            if not self.fs.exists(hp):
+                continue  # expired by a concurrent vacuum
+            m = json.loads(self.fs.read_bytes(hp))
+            out.append({
+                "seq": s, "version": m["current"],
+                "committed_at": m["committed_at"],
+            })
+        return out
 
     def tags(self) -> dict[str, int]:
         """Named commit pins ``{name: seq}``.  A tagged snapshot is
-        exempt from ``keep_versions`` GC until its tag is deleted — the
-        io/epochs.py tag discipline applied to the snapshot store, so a
+        exempt from ``keep_versions`` GC until its tag is deleted, so a
         provenance-pinned online state ("the snapshots the June model
         served from") survives daily materializations."""
-        return dict(self._read_manifest().get("tags", {}))
+        return epochs_io.read_tags(self.root, self.fs)
 
     def tag(self, name: str, seq: int | None = None) -> int:
         """Pin commit ``seq`` (default: head) under ``name``; returns
-        the pinned seq.  Names must be non-numeric so they can never
-        shadow a literal seq in :meth:`path_as_of`.  Runs under the
-        manifest lock — a tag committed while a concurrent commit's GC
-        computes its keep set cannot end up pinned to a snapshot that
-        GC then deletes (the epochs.py tag-vs-vacuum discipline)."""
-        if not name or name.isdigit() or "=" in name or "," in name:
-            # the same rule io/epochs.py enforces: numeric names would
-            # shadow literal seqs in as_of resolution; '='/',' break
-            # the doctor --history tags=a,b rendering contract
-            raise ValueError(
-                f"tag name {name!r} must be non-empty, non-numeric and "
-                "free of '='/','"
-            )
-        with self.fs.lock(self._manifest_path()):
-            manifest = self._read_manifest()
-            hist = manifest.get("history", [])
-            if not hist:
+        the pinned seq (``epochs.tag_commit``)."""
+        if seq is None:
+            seq = self.head()[1]
+            if not seq:
                 raise ValueError(
                     f"no commit history at {self.root} — commit once to "
                     "start the log, then tag"
                 )
-            if seq is None:
-                seq = hist[-1]["seq"]
-            if seq not in {e["seq"] for e in hist}:
-                retained = ", ".join(str(e["seq"]) for e in hist)
-                raise ValueError(
-                    f"no retained snapshot for commit seq={seq} at "
-                    f"{self.root}: retained seqs {retained} (GC'd "
-                    "snapshots cannot be pinned after the fact)"
-                )
-            tags = dict(manifest.get("tags", {}))
-            tags[name] = int(seq)
-            manifest["tags"] = tags
-            self.fs.write_bytes_atomic(
-                self._manifest_path(), json.dumps(manifest).encode()
-            )
+        epochs_io.tag_commit(self.root, self.fs, name, seq)
         return int(seq)
 
+    def delete_tag(self, name: str) -> None:
+        """Unpin ``name``; its snapshot rejoins the GC window at the
+        next commit (or an explicit :meth:`vacuum`)."""
+        epochs_io.delete_tag(self.root, self.fs, name)
+
     def vacuum(self) -> list[str]:
-        """Re-run GC against the CURRENT manifest without committing a
-        new snapshot: reclaim versions a deleted tag left behind (GC
+        """Re-run GC against the CURRENT head without committing a new
+        snapshot: reclaim versions a deleted tag left behind (GC
         otherwise only runs inside a commit, so an unpinned snapshot on
         a cold table would linger until someone writes).  Same keep
-        rules as the commit path — last ``keep_versions``, the current
-        version, every tagged version — with the history log truncated
-        to survivors BEFORE the deletes (readers resolve the manifest
-        first, so a concurrent as_of read never holds a path the
-        manifest still lists).  Returns the deleted version dirs."""
-        with self.fs.lock(self._manifest_path()):
-            manifest = self._read_manifest()
-            if not manifest:
+        rules as the commit path.  Returns the deleted version dirs."""
+        if not self.fs.exists(posixpath.join(self.root, MANIFEST)):
+            return []
+        return self._vacuum(self.keep_versions)
+
+    def _vacuum(self, keep: int) -> list[str]:
+        def sweep(head, _protected, retained):
+            # retained is seq-ordered and ends with the sliding window;
+            # versions numbered above its oldest are never deleted — a
+            # concurrent writer may be staging one right now
+            window = [_version_no(m.get("current")) for m in retained[-keep:]]
+            if None in window or not window:
                 return []
-            versions = sorted(
-                d
-                for d in self.fs.list_subdirs(self.root)
-                if d.startswith("v_") and d[2:].isdigit()
-            )
-            tags = manifest.get("tags", {})
-            pinned_seqs = set(tags.values())
-            pinned = {
-                e["version"]
-                for e in manifest.get("history", [])
-                if e["seq"] in pinned_seqs
-            }
-            keep = (
-                set(versions[-self._effective_keep(manifest):])
-                | {manifest["current"]}
-                | pinned
-            )
-            manifest["history"] = [
-                e
-                for e in manifest.get("history", [])
-                if e["version"] in keep
-            ]
-            self.fs.write_bytes_atomic(
-                self._manifest_path(), json.dumps(manifest).encode()
-            )
+            live = {m.get("current") for m in [head, *retained]}
             deleted = []
-            for v in versions:
-                if v not in keep:
+            for d in sorted(self.fs.list_subdirs(self.root)):
+                n = _version_no(d)
+                if n is not None and n < min(window) and d not in live:
                     try:
-                        self.fs.delete(posixpath.join(self.root, v))
-                        deleted.append(v)
+                        self.fs.delete(posixpath.join(self.root, d))
+                        deleted.append(d)
                     except Exception:
-                        pass  # best-effort, like commit-path GC
+                        pass  # best-effort; the next GC retries
             return deleted
 
-    def delete_tag(self, name: str) -> None:
-        """Unpin ``name``; its snapshot rejoins the normal GC window at
-        the next commit (or an explicit :meth:`vacuum`)."""
-        with self.fs.lock(self._manifest_path()):
-            manifest = self._read_manifest()
-            tags = dict(manifest.get("tags", {}))
-            if name not in tags:
-                raise ValueError(
-                    f"no tag {name!r} at {self.root}; committed tags: "
-                    f"{sorted(tags)}"
-                )
-            del tags[name]
-            if tags:
-                manifest["tags"] = tags
-            else:
-                manifest.pop("tags", None)
-            self.fs.write_bytes_atomic(
-                self._manifest_path(), json.dumps(manifest).encode()
-            )
+        return epochs_io.vacuum(
+            self.root, self.fs, keep, self._read_manifest, sweep
+        )[1]
 
     def path_as_of(self, as_of: int | str | datetime) -> str:
         """The snapshot directory serving reads resolved at commit seq
@@ -305,14 +343,26 @@ class ManifestedParquetTable:
         instant at or past the last commit resolves to HEAD — head is
         what serving returned at every instant since that commit
         (pinned by tests; int seqs, by contrast, raise when unknown)."""
-        if isinstance(as_of, str):
-            tags = self.tags()
-            if as_of not in tags:
-                raise ValueError(
-                    f"no tag {as_of!r} at {self.root}; committed tags: "
-                    f"{sorted(tags)}"
-                )
-            as_of = tags[as_of]
+        if isinstance(as_of, datetime):
+            return posixpath.join(self.root, self._version_at(as_of))
+        seq = epochs_io.resolve_as_of(self.root, self.fs, as_of)
+        try:
+            m = epochs_io.read_manifest(
+                self.root, self.fs, ("current",), kind="snapshot",
+                as_of_seq=seq,
+            )
+        except ValueError:
+            hist = self._history_or_raise()
+            if any(e["seq"] == seq for e in hist):
+                raise  # archived, but not a snapshot manifest
+            raise ValueError(
+                f"no snapshot at {self.root} for commit seq={seq}: "
+                f"retained seqs {', '.join(str(e['seq']) for e in hist)} "
+                "(keep_versions GC reclaims untagged snapshots)"
+            ) from None
+        return posixpath.join(self.root, m["current"])
+
+    def _history_or_raise(self) -> list[dict]:
         hist = self.history()
         if not hist:
             raise ValueError(
@@ -320,131 +370,40 @@ class ManifestedParquetTable:
                 "commit logging (its next commit starts the log) or was "
                 "never committed"
             )
-        retained = ", ".join(str(e["seq"]) for e in hist)
-        if isinstance(as_of, datetime):
-            ts = _to_epoch_s(as_of)
-            live = [e for e in hist if e["committed_at"] <= ts]
-            if not live:
-                oldest = datetime.fromtimestamp(
-                    hist[0]["committed_at"], tz=timezone.utc
-                )
-                raise ValueError(
-                    f"no snapshot at {self.root} as of {as_of}: the "
-                    f"oldest retained commit is seq={hist[0]['seq']} at "
-                    f"{oldest:%Y-%m-%d %H:%M:%S}Z — older snapshots were "
-                    "reclaimed by keep_versions GC (raise keep_versions "
-                    "to widen the window)"
-                )
-            entry = live[-1]
-            # tag pins make the retained log GAPPED: if the commit
-            # AFTER the resolved one was GC'd, the snapshot actually
-            # serving at the requested instant may be among the
-            # expired seqs (their committed_at fell somewhere in the
-            # gap) — silently returning the pinned-but-stale snapshot
-            # would be exactly the wrong-answer time travel promises
-            # never to give.  Raise honestly; seq/tag targets stay
-            # exact.
-            idx = hist.index(entry)
-            if (
-                idx + 1 < len(hist)
-                and hist[idx + 1]["seq"] > entry["seq"] + 1
-            ):
-                raise ValueError(
-                    f"ambiguous instant at {self.root}: commits "
-                    f"{entry['seq'] + 1}..{hist[idx + 1]['seq'] - 1} "
-                    "were reclaimed by keep_versions GC, and the "
-                    f"snapshot serving at {as_of} may be among them "
-                    f"(retained seqs: {retained}) — resolve by commit "
-                    "seq or tag name instead"
-                )
-        else:
-            by_seq = {e["seq"]: e for e in hist}
-            if as_of not in by_seq:
-                raise ValueError(
-                    f"no snapshot at {self.root} for commit seq={as_of}: "
-                    f"retained seqs {retained} "
-                    "(keep_versions GC reclaims untagged snapshots)"
-                )
-            entry = by_seq[as_of]
-        return posixpath.join(self.root, entry["version"])
+        return hist
 
-    def _flip(
-        self,
-        version: str,
-        meta: dict | None,
-        tables: list[str] | None = None,
-    ) -> int:
-        # read-modify-write of seq/meta/history under the manifest
-        # lock: the documented manual-commit-beside-streaming flow
-        # means two writers CAN interleave, and an unlocked seq
-        # derivation would mint duplicate seqs and a commit log that
-        # path_as_of silently mis-resolves (same hazard io/epochs.py
-        # commit_manifest locks against)
-        with self.fs.lock(self._manifest_path()):
-            return self._flip_locked(version, meta, tables)
-
-    def _flip_locked(
-        self,
-        version: str,
-        meta: dict | None,
-        tables: list[str] | None = None,
-    ) -> int:
-        prev = self._read_manifest()
-        keep_n = self._effective_keep(prev)
-        manifest = {"current": version, "format": "parquet"}
-        if tables:
-            manifest["tables"] = tables
-        merged = dict(prev.get("meta", {}))
-        merged.update(meta or {})
-        merged = {k: v for k, v in merged.items() if v is not None}
-        if merged:
-            manifest["meta"] = merged
-        versions = sorted(
-            d
-            for d in self.fs.list_subdirs(self.root)
-            if d.startswith("v_") and d[2:].isdigit()
-        )
-        # tagged snapshots are GC-exempt: their versions join the keep
-        # set (and therefore stay in the history log, so path_as_of can
-        # still resolve them) until the tag is deleted
-        tags = dict(prev.get("tags", {}))
-        pinned_seqs = set(tags.values())
-        pinned_versions = {
-            e["version"]
-            for e in prev.get("history", [])
-            if e["seq"] in pinned_seqs
-        }
-        keep = (
-            set(versions[-keep_n:])
-            | {version}
-            | pinned_versions
-        )
-        # commit log: seq + wall-clock per commit, truncated to the
-        # kept snapshot dirs so every listed entry is resolvable
-        # (path_as_of / time travel); recorded in the SAME atomic
-        # manifest write that publishes the snapshot
-        seq = prev.get("seq", 0) + 1
-        history = [
-            e for e in prev.get("history", []) if e["version"] in keep
-        ]
-        history.append(
-            {"seq": seq, "version": version, "committed_at": time.time()}
-        )
-        manifest["seq"] = seq
-        manifest["history"] = history
-        # the committer's retention is part of the table's contract:
-        # persisted so vacuum() and other processes honor it by default
-        manifest["keep_versions"] = keep_n
-        if tags:
-            manifest["tags"] = tags
-        self.fs.write_bytes_atomic(
-            self._manifest_path(),
-            json.dumps(manifest).encode(),
-        )
-        for v in versions:
-            if v not in keep:
-                try:
-                    self.fs.delete(posixpath.join(self.root, v))
-                except Exception:
-                    pass  # GC is best-effort; next commit retries
-        return seq
+    def _version_at(self, as_of: datetime) -> str:
+        hist = self._history_or_raise()
+        ts = _to_epoch_s(as_of)
+        live = [e for e in hist if e["committed_at"] <= ts]
+        if not live:
+            oldest = datetime.fromtimestamp(
+                hist[0]["committed_at"], tz=timezone.utc
+            )
+            raise ValueError(
+                f"no snapshot at {self.root} as of {as_of}: the "
+                f"oldest retained commit is seq={hist[0]['seq']} at "
+                f"{oldest:%Y-%m-%d %H:%M:%S}Z — older snapshots were "
+                "reclaimed by keep_versions GC (raise keep_versions "
+                "to widen the window)"
+            )
+        entry = live[-1]
+        # tag pins make the retained log GAPPED: if the commit AFTER the
+        # resolved one was GC'd, the snapshot actually serving at the
+        # requested instant may be among the expired seqs (their
+        # committed_at fell somewhere in the gap) — silently returning
+        # the pinned-but-stale snapshot would be exactly the
+        # wrong-answer time travel promises never to give.  Raise
+        # honestly; seq/tag targets stay exact.
+        idx = hist.index(entry)
+        if idx + 1 < len(hist) and hist[idx + 1]["seq"] > entry["seq"] + 1:
+            retained = ", ".join(str(e["seq"]) for e in hist)
+            raise ValueError(
+                f"ambiguous instant at {self.root}: commits "
+                f"{entry['seq'] + 1}..{hist[idx + 1]['seq'] - 1} "
+                "were reclaimed by keep_versions GC, and the "
+                f"snapshot serving at {as_of} may be among them "
+                f"(retained seqs: {retained}) — resolve by commit "
+                "seq or tag name instead"
+            )
+        return entry["version"]

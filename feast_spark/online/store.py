@@ -13,22 +13,23 @@ distributed, and on a production deployment the same plan targets Delta
 identical.
 
 Commit protocol (object-store safe — no directory renames anywhere):
-
-    <root>/<project>/<view>/
-        _MANIFEST.json      <- pointer: {"current": "v_00000003", ...}
-        v_00000001/ ...     <- immutable parquet snapshots
-        v_00000003/ ...
-
-A writer (1) writes the merged table to a FRESH ``v_NNNNNNNN``
-directory, (2) atomically replaces ``_MANIFEST.json`` to point at it,
-(3) best-effort prunes snapshots older than ``keep_versions``.  Readers
-resolve the manifest once per query and only ever see a fully written
-immutable snapshot — a writer crash between (1) and (2) leaves an
-orphan directory the next commit numbers past and GC later removes.
-This works on HDFS/S3/ABFS/GCS semantics (S3 has no atomic directory
-rename, which is why the previous ``os.rename`` swap could not), with
-filesystem access behind ``StoreFS`` (LocalFS for tests/POSIX, HadoopFS
-for any scheme the cluster resolves).
+each view is a ``ManifestedParquetTable`` (``io/manifest.py``) with the
+layout ``_MANIFEST.json`` (head), ``_history/commit_seq=N.json`` (every
+commit), ``_TAGS.json`` and immutable ``v_NNNNNNNN/`` snapshots.  A
+write reads the head once (snapshot path and ``commit_seq``), merges
+the incoming rows over that snapshot, writes a FRESH ``v_NNNNNNNN``
+directory and publishes it with a compare-and-swap on the seq it read.
+If another writer committed in between (a streaming sink plus a manual
+backfill of one view), the staged directory is deleted and
+``online_write_batch`` re-reads the head, re-merges the same incoming
+rows and commits again, raising ``ConcurrentCommitError`` after
+``_COMMIT_ATTEMPTS`` lost races.  The newest-wins merge is
+commutative, so a retry lands the rows a serial run would.  Readers
+resolve the head once per query and only ever see a fully written
+snapshot; a crashed writer leaves an orphan directory that the next
+commit numbers past and GC later removes.  Filesystem access is behind
+``StoreFS`` (LocalFS for tests/POSIX, HadoopFS for any scheme the
+cluster resolves).
 
 The READ path is driver-side, like the reference's point lookup
 (sqlite.py:139-166, the multiget in feature_store.py:568-587): the
@@ -66,10 +67,15 @@ from decimal import Decimal
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
+from feast_spark.io.epochs import MANIFEST, ConcurrentCommitError
 from feast_spark.io.fs import LocalFS, StoreFS
 from feast_spark.io.pread import read_parquet_memo
-from feast_spark.io.manifest import MANIFEST, ManifestedParquetTable
+from feast_spark.io.manifest import ManifestedParquetTable
 from feast_spark.operators.dedup import latest_per_key
+
+#: merge-and-commit attempts of one online write before a lost CAS race
+#: is raised
+_COMMIT_ATTEMPTS = 4
 
 _KEY = "__entity_key"
 _EVENT_TS = "__event_ts"
@@ -212,15 +218,15 @@ class OnlineStore:
         table_dir = self._table_dir(project, view_name)
         if not self.fs.exists(posixpath.join(table_dir, MANIFEST)):
             return None
-        hist = self._mtable(table_dir).history()
-        if not hist:
+        seq = self._mtable(table_dir).head()[1]
+        if not seq:
             raise ValueError(
                 f"online table {project}/{view_name} has a manifest but "
                 "no commit log — it predates commit logging, so its "
                 "serving state has no replayable coordinate; "
                 "materialize once to start the log"
             )
-        return hist[-1]["seq"]
+        return seq
 
     def tag_snapshot(
         self, project: str, view_name: str, name: str,
@@ -283,23 +289,31 @@ class OnlineStore:
         ``meta`` merges into the snapshot manifest (io/manifest.py
         commit) — the streaming sink stamps its ``stream_epoch``
         watermark here so a provenance snapshot can record how far a
-        never-stopping ingestion had gotten."""
-        table_dir = self._table_dir(project, view_name)
+        never-stopping ingestion had gotten.  A concurrent commit makes
+        it re-merge and retry (module docstring)."""
+        table = self._mtable(self._table_dir(project, view_name))
         incoming = project_incoming(df, join_keys, ts_col, created_col, feature_cols)
-        current = self._current_data_path(project, view_name)
-        if current is not None:
-            existing = read_parquet_memo(spark, current)
-            # schema evolution: tolerate new feature columns
-            for c in incoming.columns:
-                if c not in existing.columns:
-                    existing = existing.withColumn(
-                        c, F.lit(None).cast(incoming.schema[c].dataType)
-                    )
-            incoming = existing.select(*incoming.columns).unionByName(incoming)
-        merged = latest_per_key(
-            incoming, [_KEY], _EVENT_TS, created_col=_CREATED_TS
-        )
-        self._mtable(table_dir).commit(merged, meta=meta)
+        for attempt in range(_COMMIT_ATTEMPTS):
+            current, seq = table.head()
+            rows = incoming
+            if current is not None:
+                existing = read_parquet_memo(spark, current)
+                # schema evolution: tolerate new feature columns
+                for c in incoming.columns:
+                    if c not in existing.columns:
+                        existing = existing.withColumn(
+                            c, F.lit(None).cast(incoming.schema[c].dataType)
+                        )
+                rows = existing.select(*incoming.columns).unionByName(incoming)
+            merged = latest_per_key(
+                rows, [_KEY], _EVENT_TS, created_col=_CREATED_TS
+            )
+            try:
+                table.commit(merged, meta=meta, base_seq=seq)
+                return
+            except ConcurrentCommitError:
+                if attempt + 1 == _COMMIT_ATTEMPTS:
+                    raise
 
     def expire(
         self,
@@ -408,7 +422,7 @@ class OnlineStore:
         ``as_of`` (datetime, naive = UTC; or an int commit seq) serves
         the read from the snapshot that was current THEN — what did we
         serve this entity yesterday 14:00? — resolved through the
-        manifest commit log (``io/manifest.path_as_of``); snapshots
+        commit archive (``io/manifest.path_as_of``); snapshots
         older than the ``keep_versions`` GC window raise with the
         surviving range.  Degradation matches the head path's: a view
         NEVER materialized serves misses (it would have then, too),

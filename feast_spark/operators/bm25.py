@@ -824,21 +824,13 @@ def bm25_index_vacuum(
     run vacuum once readers of the previous manifest have drained
     (the Delta/Iceberg VACUUM contract)."""
     fs = fs or LocalFS()
-    # the whole keep-set-compute -> delete -> expire sequence runs
-    # under the retention lock, so a concurrent tag_commit cannot pin
-    # a commit this vacuum is about to expire (epochs_io.retention_lock)
-    with epochs_io.retention_lock(path, fs):
-        manifest = _bm25_manifest(path, fs)
-        protected, keep_seqs, _ = epochs_io.retention_window(
-            path, fs, retain_last, head_seq=manifest.get("commit_seq")
-        )
-        removed = epochs_io.vacuum_epochs(
-            path, fs, manifest["epochs"], _BM25_SUBDIRS,
-            protect_epochs=protected,
-        )
-        removed["history_expired"] = [
-            str(s) for s in epochs_io.expire_history(path, fs, keep_seqs)
-        ]
+    expired, removed = epochs_io.vacuum(
+        path, fs, retain_last, lambda: _bm25_manifest(path, fs),
+        lambda head, protected, _: epochs_io.vacuum_epochs(
+            path, fs, head["epochs"], _BM25_SUBDIRS, protect_epochs=protected
+        ),
+    )
+    removed["history_expired"] = [str(s) for s in expired]
     return removed
 
 

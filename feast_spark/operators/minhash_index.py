@@ -426,15 +426,11 @@ def minhash_index_vacuum(
     Delta/Iceberg VACUUM contract); never touches a dir the current
     manifest references."""
     fs = fs or LocalFS()
-    with epochs_io.retention_lock(path, fs):  # vs concurrent tag_commit
-        manifest = _manifest(path, fs)
-        protected, keep_seqs, _ = epochs_io.retention_window(
-            path, fs, retain_last, head_seq=manifest.get("commit_seq")
-        )
-        removed = epochs_io.vacuum_epochs(
-            path, fs, manifest["epochs"], _SUBDIRS, protect_epochs=protected
-        )
-        removed["history_expired"] = [
-            str(s) for s in epochs_io.expire_history(path, fs, keep_seqs)
-        ]
+    expired, removed = epochs_io.vacuum(
+        path, fs, retain_last, lambda: _manifest(path, fs),
+        lambda head, protected, _: epochs_io.vacuum_epochs(
+            path, fs, head["epochs"], _SUBDIRS, protect_epochs=protected
+        ),
+    )
+    removed["history_expired"] = [str(s) for s in expired]
     return removed

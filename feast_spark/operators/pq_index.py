@@ -397,15 +397,18 @@ def ivfpq_index_vacuum(
     generations AND codebook generations are all protected, preserving
     each historical manifest's frozen-model pairing."""
     fs = fs or LocalFS()
-    with epochs_io.retention_lock(path, fs):  # vs concurrent tag_commit
-        return _vacuum_locked(path, fs, retain_last)
-
-
-def _vacuum_locked(path: str, fs: StoreFS, retain_last: int) -> dict:
-    manifest = _manifest(path, fs)
-    protected, keep_seqs, retained = epochs_io.retention_window(
-        path, fs, retain_last, head_seq=manifest.get("commit_seq")
+    expired, removed = epochs_io.vacuum(
+        path, fs, retain_last, lambda: _manifest(path, fs),
+        lambda *window: _sweep(path, fs, *window),
     )
+    removed["history_expired"] = [str(s) for s in expired]
+    return removed
+
+
+def _sweep(
+    path: str, fs: StoreFS, manifest: dict, protected: set[int],
+    retained: list[dict],
+) -> dict:
     removed = epochs_io.vacuum_epochs(
         path, fs, manifest["epochs"], _SUBDIRS, protect_epochs=protected
     )
@@ -434,7 +437,4 @@ def _vacuum_locked(path: str, fs: StoreFS, retain_last: int) -> dict:
             removed["codebooks"].append(f)
     removed["centroids"].sort()
     removed["codebooks"].sort()
-    removed["history_expired"] = [
-        str(s) for s in epochs_io.expire_history(path, fs, keep_seqs)
-    ]
     return removed

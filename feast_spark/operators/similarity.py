@@ -1280,11 +1280,8 @@ def ivf_index_vacuum(
     Never removes anything the current manifest lists, so it is always
     safe with respect to NEW readers."""
     fs = fs or LocalFS()
-    with epochs_io.retention_lock(path, fs):  # vs concurrent tag_commit
-        manifest = _ivf_manifest(path, fs)
-        protected, keep_seqs, retained = epochs_io.retention_window(
-            path, fs, retain_last, head_seq=manifest.get("commit_seq")
-        )
+
+    def sweep(manifest, protected, retained):
         removed_e = epochs_io.vacuum_epochs(
             path, fs, manifest["epochs"], _IVF_SUBDIRS,
             protect_epochs=protected,
@@ -1299,9 +1296,13 @@ def ivf_index_vacuum(
             if d.startswith("gen=") and d not in live_gens:
                 fs.delete(posixpath.join(cbase, d))
                 removed_g.append(d)
-        expired = epochs_io.expire_history(path, fs, keep_seqs)
+        return removed_e, sorted(removed_g)
+
+    expired, (removed_e, removed_g) = epochs_io.vacuum(
+        path, fs, retain_last, lambda: _ivf_manifest(path, fs), sweep
+    )
     return {
         "epochs_removed": removed_e,
-        "centroid_gens_removed": sorted(removed_g),
+        "centroid_gens_removed": removed_g,
         "history_expired": [str(s) for s in expired],
     }

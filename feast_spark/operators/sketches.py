@@ -149,18 +149,24 @@ class SketchTable:
     ) -> None:
         """Sketch the incoming event slice and fold it into the table.
         Cost is one scan of the slice (never of history) plus a
-        O(groups)-row merge; crash-safe via the manifest flip."""
+        O(groups)-row merge; crash-safe via the manifest flip.  The
+        commit is a compare-and-swap on the head the fold read: a
+        concurrent update makes it raise ``ConcurrentCommitError``
+        (``n_rows`` and the epoch meta are not replay-safe, so it is
+        not retried here)."""
         incoming = build_distinct_sketches(
             events, self.key_col, self.grain_cols, lgk=self.lgk
         )
-        existing = self.read(spark)
+        path, seq = self._table.head()
         merged = (
             incoming
-            if existing is None
-            else merge_sketch_tables(existing, incoming, self.grain_cols)
+            if path is None
+            else merge_sketch_tables(
+                spark.read.parquet(path), incoming, self.grain_cols
+            )
         )
         meta = {"epoch": _epoch_id} if _epoch_id is not None else None
-        self._table.commit(merged, meta=meta)
+        self._table.commit(merged, meta=meta, base_seq=seq)
 
     def estimate(
         self,
@@ -420,22 +426,26 @@ class HistogramTable:
     ) -> None:
         """Histogram the incoming slice and element-add it into the
         table.  Cost: one scan of the slice (never of history) plus an
-        O(groups x bins) merge; crash-safe via the manifest flip."""
+        O(groups x bins) merge; crash-safe via the manifest flip, and a
+        compare-and-swap on the head the fold read, as
+        :meth:`SketchTable.update`."""
         self._check_binning()
         incoming = build_histogram_sketches(
             events, self.val_col, self.grain_cols, self.lo, self.hi,
             self.n_bins,
         )
-        existing = self.read(spark)
+        path, seq = self._table.head()
         merged = (
             incoming
-            if existing is None
-            else merge_histogram_tables(existing, incoming, self.grain_cols)
+            if path is None
+            else merge_histogram_tables(
+                spark.read.parquet(path), incoming, self.grain_cols
+            )
         )
         meta: dict = {"binning": self._binning()}
         if _epoch_id is not None:
             meta["epoch"] = _epoch_id
-        self._table.commit(merged, meta=meta)
+        self._table.commit(merged, meta=meta, base_seq=seq)
 
     def quantiles(
         self,

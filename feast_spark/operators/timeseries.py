@@ -362,7 +362,10 @@ class DecayedFeatureTable:
         EARLIER than some of the slice's events is rejected — those
         events would be silently excluded by the no-future-leakage
         filter and never re-presented, breaking the scanned-once
-        contract."""
+        contract.  The commit is a compare-and-swap on the head the
+        fold read: a concurrent update makes it raise
+        ``ConcurrentCommitError`` (decayed sums and the epoch meta are
+        not replay-safe, so it is not retried here)."""
         from datetime import datetime
 
         slice_max = events.agg(F.max(self.ts_col)).collect()[0][0]
@@ -379,7 +382,8 @@ class DecayedFeatureTable:
                 "dropped permanently. Pass at_time >= the slice max "
                 "(or None to use it)."
             )
-        state = self.read(spark)
+        path, seq = self._table.head()
+        state = None if path is None else spark.read.parquet(path)
         if state is not None:
             state_at = self._state_as_of(state)
             new_at = max(state_at, at_time)
@@ -408,6 +412,7 @@ class DecayedFeatureTable:
         self._table.commit(
             merged.withColumn("as_of", F.lit(new_at).cast("timestamp")),
             meta=meta,
+            base_seq=seq,
         )
 
     def features(self, spark, at_time=None) -> DataFrame:

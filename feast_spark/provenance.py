@@ -25,7 +25,7 @@ few JSON reads — so stamping every training run is control-plane cheap.
 Replay durability is the layers' own retention windows
 (``keep_history`` / ``keep_versions`` / ``*_index_vacuum retain_last``)
 — unless the run is PINNED: ``pin_tag="june-run"`` tags every recorded
-index commit and online snapshot (both tag tables are GC/vacuum-exempt
+index commit and online snapshot (tagged commits are GC/vacuum-exempt
 until deleted), and ``embed_registry`` (default) copies the small
 registry payload into the JSON itself, so a pinned run replays for as
 long as someone keeps its provenance file and tags.
@@ -79,7 +79,7 @@ def snapshot_provenance(
     ``pin_tag`` makes the run's pins VACUUM-IMMUNE: every recorded
     index commit is tagged (io/epochs.py tag table) and every
     materialized view's snapshot and dataset commit is tagged
-    (io/manifest.py tags), so daily vacuums / ``keep_versions`` GC can
+    (the same io/epochs.py tag table), so daily vacuums / ``keep_versions`` GC can
     never expire what this run replays — delete the tags when the run
     is retired.
 
@@ -91,18 +91,10 @@ def snapshot_provenance(
     (definitions are small; the layers that hold DATA pin by
     reference + tag instead).
     """
-    if pin_tag is not None and (
-        not pin_tag or pin_tag.isdigit() or "=" in pin_tag
-        or "," in pin_tag
-    ):
-        # the strictest layer's naming rule, checked BEFORE any layer
-        # is touched: a name one layer accepts and another rejects
-        # would otherwise leave orphaned vacuum-immune tags behind a
-        # mid-loop failure, with no provenance file referencing them
-        raise ValueError(
-            f"pin_tag {pin_tag!r} must be non-empty, non-numeric and "
-            "free of '='/','"
-        )
+    if pin_tag is not None:
+        # checked BEFORE any layer is touched, so a bad name cannot
+        # fail mid-loop after some layers were tagged
+        epochs_io.check_tag_name(pin_tag, "pin_tag")
 
     reg = store.registry
     registry_seq = None
@@ -176,14 +168,14 @@ def snapshot_provenance(
     datasets = {}
     for name, droot in (dataset_paths or {}).items():
         t = ManifestedParquetTable(droot, fs=ifs)
-        hist = t.history()
-        if not hist:
+        seq = t.head()[1]
+        if not seq:
             raise ValueError(
                 f"no committed dataset at {droot} — commit it with "
                 "RetrievalJob.to_dataset / datasets.commit_dataset "
                 "before recording it"
             )
-        datasets[name] = {"path": droot, "commit_seq": hist[-1]["seq"],
+        datasets[name] = {"path": droot, "commit_seq": seq,
                           "tags": t.tags()}
         meta = t.current_meta()
         if meta:

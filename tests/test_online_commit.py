@@ -11,7 +11,9 @@ import os
 import pytest
 from pyspark.sql import Row
 
+from feast_spark.io.epochs import ConcurrentCommitError
 from feast_spark.io.fs import HadoopFS, LocalFS
+from feast_spark.io.manifest import ManifestedParquetTable
 from feast_spark.online.store import MANIFEST, OnlineStore, encode_request_keys
 
 
@@ -123,3 +125,62 @@ def test_online_store_over_hadoopfs(spark, tmp_path):
     _write(store, spark, [Row(driver_id=1, ts=_ts("2024-01-01T00:00"), value=10.0)])
     _write(store, spark, [Row(driver_id=1, ts=_ts("2024-01-02T00:00"), value=20.0)])
     assert _read_values(store, spark, [1]) == {1: 20.0}
+
+
+def test_interleaved_writers_keep_both_writers_rows(spark, tmp_path, monkeypatch):
+    """A streaming sink and a manual backfill writing one view: writer
+    B runs a whole online_write_batch after writer A read the head and
+    before A's flip.  A's compare-and-swap fails, A re-merges over B's
+    snapshot and commits again, so every key of both writers reads
+    back — a blind flip would publish A's merge without B's row."""
+    store = OnlineStore(str(tmp_path), keep_versions=3)
+    _write(store, spark, [Row(driver_id=0, ts=_ts("2024-01-01T00:00"), value=0.0),
+                          Row(driver_id=1, ts=_ts("2024-01-01T00:00"), value=1.0)])
+    orig = ManifestedParquetTable.commit
+    commits = []
+
+    def interleaved(self, *args, **kwargs):
+        commits.append(len(commits))
+        if len(commits) == 1:  # writer A's first commit: B lands first
+            _write(store, spark,
+                   [Row(driver_id=2, ts=_ts("2024-01-02T00:00"), value=2.0)])
+        return orig(self, *args, **kwargs)
+
+    monkeypatch.setattr(ManifestedParquetTable, "commit", interleaved)
+    _write(store, spark, [Row(driver_id=1, ts=_ts("2024-01-03T00:00"), value=10.0),
+                          Row(driver_id=3, ts=_ts("2024-01-03T00:00"), value=3.0)])
+    monkeypatch.undo()
+    assert _read_values(store, spark, [0, 1, 2, 3]) == {
+        0: 0.0, 1: 10.0, 2: 2.0, 3: 3.0
+    }
+    # A committed twice (the lost race, then the retry), B once; the
+    # log holds the initial write, B's commit and A's retried commit
+    assert len(commits) == 3
+    table = ManifestedParquetTable(str(tmp_path / "p" / "v"))
+    assert [e["seq"] for e in table.history()] == [1, 2, 3]
+    b_snapshot = store.online_read(
+        spark, "p", "v",
+        encode_request_keys([{"driver_id": i} for i in (1, 2, 3)], ["driver_id"]),
+        ["value"], as_of=2,
+    )
+    assert [r and r["value"] for r in b_snapshot] == [1.0, 2.0, None]
+
+
+def test_superseded_base_raises_and_leaves_the_table_untouched(spark, tmp_path):
+    t = ManifestedParquetTable(str(tmp_path / "t"))
+    t.commit(spark.createDataFrame([(0,)], "x INT"))
+    t.commit(spark.createDataFrame([(1,)], "x INT"), base_seq=1)
+
+    def state():
+        root = tmp_path / "t"
+        return (
+            (root / MANIFEST).read_bytes(),
+            sorted(os.listdir(root / "_history")),
+            sorted(d for d in os.listdir(root) if d.startswith("v_")),
+        )
+
+    before = state()
+    with pytest.raises(ConcurrentCommitError):
+        t.commit(spark.createDataFrame([(2,)], "x INT"), base_seq=1)
+    assert state() == before
+    assert t.read(spark).collect()[0]["x"] == 1

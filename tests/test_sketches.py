@@ -409,3 +409,36 @@ def test_histogram_table_replay_is_idempotent(spark, tmp_path):
     fn(ev, 0)  # still skipped after the manual commit
     doubled = [r["bin_counts"] for r in ht.read(spark).collect()]
     assert doubled == [[2 * c for c in row] for row in once]
+
+
+def test_interleaved_sketch_update_raises(spark, tmp_path, monkeypatch):
+    """Two updates that fold over the same head: the one that commits
+    second raises instead of publishing a fold without the other's
+    slice (``n_rows`` is not replay-safe, so it is not retried)."""
+    from feast_spark.io.epochs import ConcurrentCommitError
+    from feast_spark.io.manifest import ManifestedParquetTable
+
+    ev = _events(spark)
+    table = SketchTable(str(tmp_path / "cas"), "user_id", ["day"])
+    table.update(spark, ev.filter(F.col("day") < "2024-01-05"))
+    orig = ManifestedParquetTable.commit
+
+    def interleaved(self, *args, **kwargs):
+        # the other writer's whole update lands between this fold's
+        # head read and its commit
+        monkeypatch.setattr(ManifestedParquetTable, "commit", orig)
+        table.update(spark, ev.filter(F.col("day") >= "2024-01-10"))
+        return orig(self, *args, **kwargs)
+
+    monkeypatch.setattr(ManifestedParquetTable, "commit", interleaved)
+    with pytest.raises(ConcurrentCommitError):
+        table.update(
+            spark,
+            ev.filter(
+                (F.col("day") >= "2024-01-05") & (F.col("day") < "2024-01-10")
+            ),
+        )
+    assert table._table.head()[1] == 2
+    assert table.read(spark).agg(F.sum("n_rows")).collect()[0][0] == ev.filter(
+        (F.col("day") < "2024-01-05") | (F.col("day") >= "2024-01-10")
+    ).count()

@@ -99,6 +99,9 @@ def test_crash_between_archive_and_head_flip_self_heals(tmp_path):
     # orphan archived at seq 2, head still at seq 1
     assert epochs_io.history_seqs(root, fs) == [1, 2]
     assert epochs_io.read_manifest(root, fs)["commit_seq"] == 1
+    # the orphan was never served: as-of resolution ignores it
+    with pytest.raises(ValueError, match="archived commits: 1..1"):
+        epochs_io.read_manifest(root, fs, as_of_seq=2)
     # the next real commit claims seq 2 and overwrites the orphan
     head = epochs_io.read_manifest(root, fs)
     epochs_io.commit_manifest(root, fs, {**head, "epochs": [0, 1]})
@@ -123,6 +126,47 @@ def test_retention_window_protects_and_expires(tmp_path):
     expired = epochs_io.expire_history(root, fs, keep)
     assert expired == [1, 2]
     assert epochs_io.history_seqs(root, fs) == [3, 4]
+
+
+def test_vacuum_expires_the_archive_before_deleting_epochs(tmp_path):
+    """A delete that fails partway through a vacuum leaves no archived
+    seq outside the keep set: the archive expires FIRST, so every seq
+    still listed has all of its epoch directories."""
+    fs = LocalFS()
+    root = str(tmp_path / "idx")
+    for epochs in ([0], [0, 1], [2]):  # build, append, compact
+        for e in epochs:
+            fs.mkdirs(f"{root}/data/epoch={e}")
+        head = (
+            epochs_io.read_manifest(root, fs) if epochs != [0]
+            else {"kind": "bm25"}
+        )
+        epochs_io.commit_manifest(root, fs, {**head, "epochs": epochs})
+
+    real_delete = fs.delete
+    deletes = []
+
+    def failing(path):
+        if "epoch=" in path:
+            deletes.append(path)
+            if len(deletes) == 2:
+                raise OSError("simulated delete failure")
+        real_delete(path)
+
+    fs.delete = failing
+    with pytest.raises(OSError, match="simulated"):
+        epochs_io.vacuum(
+            root, fs, 1, lambda: epochs_io.read_manifest(root, fs),
+            lambda head, protected, _: epochs_io.vacuum_epochs(
+                root, fs, head["epochs"], ("data",), protect_epochs=protected
+            ),
+        )
+    fs.delete = real_delete
+    assert len(deletes) == 2  # one epoch deleted, the next one failed
+    assert epochs_io.history_seqs(root, fs) == [3]
+    for s in epochs_io.history_seqs(root, fs):
+        for e in epochs_io.read_manifest(root, fs, as_of_seq=s)["epochs"]:
+            assert fs.exists(f"{root}/data/epoch={e}")
 
 
 def test_retention_window_rejects_negative(tmp_path):
@@ -639,7 +683,7 @@ def test_tag_validation(tmp_path):
     epochs_io.commit_manifest(root, fs, {"kind": "bm25", "epochs": [0]})
     with pytest.raises(ValueError, match="no archived manifest"):
         epochs_io.tag_commit(root, fs, "x", 9)
-    for bad in ("", "7", "a=b"):
+    for bad in ("", "7", "a=b", "a,b"):
         with pytest.raises(ValueError, match="tag name"):
             epochs_io.tag_commit(root, fs, bad, 1)
     with pytest.raises(ValueError, match="no tag"):
