@@ -461,13 +461,12 @@ def _doctor_history(args) -> int:
     committed layer lives at PATH — a persisted INDEX (epoch manifests,
     ``_history/commit_seq=N.json``), an ONLINE snapshot table
     (``io/manifest.py`` versioned parquet + commit log), or a REGISTRY
-    file (``<path>.history/seq=N.json``) — one line per retained
+    file (``registry.py``, the same core) — one line per retained
     commit: seq, kind/version, stamps/pins, and whether it is still a
     readable ``as_of=`` target.  The audit trail behind time travel,
     same discipline as ``DESCRIBE HISTORY`` on a Delta table.
     Driver-only (tiny JSON reads) — no Spark session.  Exit 2 on a
     missing/uncommitted path."""
-    import json as _json
     import os
     import posixpath
     from datetime import datetime, timezone
@@ -483,32 +482,23 @@ def _doctor_history(args) -> int:
             "%Y-%m-%d %H:%M:%SZ"
         )
 
-    # registry file: a JSON document (not a directory) with .history/
+    # registry file: a JSON document (not a directory)
     if os.path.isfile(path):
         from feast_spark.registry import Registry
 
-        reg = Registry.__new__(Registry)
-        reg.path, reg.fs = path, fs
-        seqs = reg.history_seqs()
+        seqs = Registry(path, fs=fs).history_seqs()
         if not seqs:
             print(
                 "no archived registry versions — the registry predates "
                 "version archiving (its next apply starts the log)"
             )
             return 0
-        head_seq = _json.loads(fs.read_bytes(path)).get("seq")
         for s in seqs:
-            m = _json.loads(
-                fs.read_bytes(
-                    posixpath.join(f"{path}.history", f"seq={s}.json")
-                )
-            )
-            mark = "*" if s == head_seq else " "
-            at = (
-                _fmt_ts(m["committed_at"]) if "committed_at" in m else "?"
-            )
+            m = Registry.read_payload(path, s, fs)
+            mark = "*" if s == seqs[-1] else " "
             print(
-                f"{mark}seq={s:<4} {at}  entities={len(m.get('entities', []))} "
+                f"{mark}seq={s:<4} {_fmt_ts(m['committed_at'])}  "
+                f"entities={len(m.get('entities', []))} "
                 f"views={len(m.get('feature_views', []))} "
                 f"services={len(m.get('feature_services', []))}"
             )
@@ -516,8 +506,7 @@ def _doctor_history(args) -> int:
         return 0
 
     # online snapshot table: manifest with a 'current' version pointer
-    mp = posixpath.join(path, "_MANIFEST.json")
-    if fs.exists(mp) and "current" in _json.loads(fs.read_bytes(mp)):
+    if "current" in epochs_io.current_head(path, fs):
         from feast_spark.io.manifest import ManifestedParquetTable
 
         t = ManifestedParquetTable(path, fs=fs)
@@ -557,21 +546,19 @@ def _doctor_history(args) -> int:
     except ValueError as e:
         print(f"error    {e}")
         return 2
-    head_seq = head.get("commit_seq")
+    head_seq = epochs_io.commit_seq_of(head)
     tags_by_seq: dict[int, list[str]] = {}
     for name, seq in epochs_io.read_tags(path, fs).items():
         tags_by_seq.setdefault(seq, []).append(name)
-    seqs = epochs_io.served_seqs(path, fs, head_seq or 0)
-    if not seqs:
+    manifests = epochs_io.served_manifests(path, fs)
+    if not manifests:
         print(
             "no archived commits — the index predates manifest history "
             "(its next commit starts the log) or vacuum expired them all"
         )
         return 0
-    for s in seqs:
-        m = _json.loads(
-            fs.read_bytes(epochs_io.history_manifest_path(path, s))
-        )
+    for m in manifests:
+        s = m["commit_seq"]
         kind = m.get("kind", "?")
         epochs = m.get("epochs", [])
         subdirs = _KIND_SUBDIRS.get(kind)
@@ -1154,30 +1141,17 @@ def main(argv: list[str] | None = None) -> int:
         print(f"wrote {len(payload)} bytes to {args.out_path}")
         return 0
     if args.cmd == "registry-dump":
-        import os
+        import json
 
-        if args.as_of is not None:
-            import posixpath
+        from feast_spark.registry import Registry
 
-            hp = posixpath.join(
-                f"{args.registry}.history", f"seq={args.as_of}.json"
-            )
-            if os.path.exists(hp):
-                with open(hp) as f:
-                    print(f.read())
-                return 0
-            print(
-                f"no archived registry version seq={args.as_of} at "
-                f"{args.registry} (see {args.registry}.history/)",
-                file=sys.stderr,
-            )
+        try:
+            payload = Registry.read_payload(args.registry, args.as_of)
+        except ValueError as e:
+            print(e, file=sys.stderr)
             return 1
-        if os.path.exists(args.registry):
-            with open(args.registry) as f:
-                print(f.read())
-            return 0
-        print(f"no registry at {args.registry}", file=sys.stderr)
-        return 1
+        print(json.dumps(payload, indent=1))
+        return 0
     if args.cmd == "teardown":
         import os
         import shutil

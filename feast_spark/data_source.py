@@ -93,7 +93,8 @@ class FileSource(DataSource):
 
         if "*" in self.path:
             return None
-        from feast_spark.io.manifest import MANIFEST, ManifestedParquetTable
+        from feast_spark.io.epochs import MANIFEST
+        from feast_spark.io.manifest import ManifestedParquetTable
 
         if "://" in self.path:
             if spark is None:

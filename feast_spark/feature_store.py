@@ -965,8 +965,8 @@ class FeatureStore:
         fs=None,
     ) -> dict:
         """Record the committed head coordinate of every layer —
-        registry seq (payload embedded by default, so ``keep_history``
-        pruning cannot expire the pin), per-view online snapshot seq,
+        registry seq (payload embedded by default, so the archive
+        window cannot expire the pin), per-view online snapshot seq,
         per-index manifest commit_seq + tags for the named
         ``index_paths`` — as one JSON (provenance.py).  ``pin_tag``
         additionally tags every recorded index commit and online

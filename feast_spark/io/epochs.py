@@ -30,9 +30,14 @@ decayed-feature rollups) all publish through this module:
 * one tag-name rule (:func:`check_tag_name`) and one tag table for
   every layer; tags pin commits outside the retention window.
 
+The registry (``registry.py``) is a client too, with one difference:
+its head is a file, not ``<root>/_MANIFEST.json``.  Every function a
+client of a file head calls takes that file as ``head_file``;
+:func:`head_path` is the one place that resolves a layer's head.
+
 Each layer keeps its own manifest SCHEMA (an index's epoch list and
-model pointers, a snapshot table's ``current`` version); this module
-owns only the protocol mechanics.
+model pointers, a snapshot table's ``current`` version, the registry's
+object lists); this module owns only the protocol mechanics.
 """
 
 from __future__ import annotations
@@ -41,12 +46,24 @@ import json
 import posixpath
 import time
 from collections.abc import Callable
+from datetime import datetime, timezone
 
 from feast_spark.io.fs import LocalFS, StoreFS
 
 MANIFEST = "_MANIFEST.json"
 HISTORY_DIR = "_history"
 TAGS = "_TAGS.json"
+
+#: lost commit races a read-modify-write writer re-applies its change
+#: over before it raises :class:`ConcurrentCommitError`
+COMMIT_ATTEMPTS = 4
+
+
+def head_path(path: str, head_file: str | None = None) -> str:
+    """Where the layer rooted at ``path`` keeps its head: ``head_file``
+    when the layer names one (the registry file), else
+    ``<path>/_MANIFEST.json``."""
+    return head_file or posixpath.join(path, MANIFEST)
 
 
 def history_manifest_path(path: str, seq: int) -> str:
@@ -55,7 +72,7 @@ def history_manifest_path(path: str, seq: int) -> str:
     return posixpath.join(path, HISTORY_DIR, f"commit_seq={seq}.json")
 
 
-def retention_lock(path: str, fs: StoreFS):
+def retention_lock(path: str, fs: StoreFS, head_file: str | None = None):
     """The lock every retention-affecting writer must hold: tag /
     delete_tag / :func:`vacuum` all serialize on it, so a tag committed
     while a vacuum computes its keep set cannot end up pinned to a
@@ -63,7 +80,7 @@ def retention_lock(path: str, fs: StoreFS):
     the 'tagged commits are vacuum-immune' contract.  It is the same
     lock :func:`commit_manifest` takes; ``LocalFS.lock`` is an
     ``flock`` and not reentrant, so never nest it."""
-    return fs.lock(posixpath.join(path, MANIFEST))
+    return fs.lock(head_path(path, head_file))
 
 
 def check_tag_name(name: str, what: str = "tag name") -> None:
@@ -77,25 +94,95 @@ def check_tag_name(name: str, what: str = "tag name") -> None:
         )
 
 
-def head_commit_seq(path: str, fs: StoreFS) -> int:
-    """The committed head's ``commit_seq``; 0 before the first commit
-    (and for a head written before commit seqs existed)."""
-    mp = posixpath.join(path, MANIFEST)
-    if not fs.exists(mp):
-        return 0
-    return json.loads(fs.read_bytes(mp)).get("commit_seq", 0)
+def commit_seq_of(manifest: dict) -> int:
+    """A head's ``commit_seq``, else the ``seq`` a head written before
+    this protocol counted with (numbering continues, so an old recorded
+    seq never names a new version), else 0: before the first commit."""
+    return manifest.get("commit_seq", manifest.get("seq", 0))
+
+
+def current_head(
+    path: str, fs: StoreFS, head_file: str | None = None
+) -> dict:
+    """The committed head; ``{}`` before the first commit."""
+    hp = head_path(path, head_file)
+    return json.loads(fs.read_bytes(hp)) if fs.exists(hp) else {}
+
+
+def head_commit_seq(
+    path: str, fs: StoreFS, head_file: str | None = None
+) -> int:
+    """The committed head's seq (:func:`commit_seq_of`)."""
+    return commit_seq_of(current_head(path, fs, head_file))
 
 
 def served_seqs(
-    path: str, fs: StoreFS, head: int | None = None
+    path: str,
+    fs: StoreFS,
+    head_seq: int | None = None,
+    head_file: str | None = None,
 ) -> list[int]:
-    """:func:`history_seqs` at or below the head's ``commit_seq``
-    (``head``, read from disk when None).  An archived seq above the
-    head is a crashed commit's orphan — archived, never flipped, never
-    served — so as-of reads, tags and retention ignore it until the
-    next commit claims that seq and overwrites it."""
-    bound = head_commit_seq(path, fs) if head is None else head
-    return [s for s in history_seqs(path, fs) if s <= bound]
+    """:func:`history_seqs` at or below the head's seq (``head_seq``,
+    read from disk when None).  An archived seq above the head is a
+    crashed commit's orphan — archived, never flipped, never served —
+    so as-of reads, tags and retention ignore it until the next commit
+    claims that seq and overwrites it."""
+    if head_seq is None:
+        head_seq = head_commit_seq(path, fs, head_file)
+    return [s for s in history_seqs(path, fs) if s <= head_seq]
+
+
+def served_manifests(
+    path: str, fs: StoreFS, head_file: str | None = None
+) -> list[dict]:
+    """The served commits' archived manifests, oldest first (a seq a
+    concurrent vacuum expired mid-listing is skipped)."""
+    hps = [
+        history_manifest_path(path, s)
+        for s in served_seqs(path, fs, head_file=head_file)
+    ]
+    return [json.loads(fs.read_bytes(hp)) for hp in hps if fs.exists(hp)]
+
+
+def manifest_at(
+    manifests: list[dict], instant: datetime, where: str, what: str
+) -> dict:
+    """The latest of ``manifests`` (:func:`served_manifests`) committed
+    at or before ``instant`` (naive = UTC), Delta's ``TIMESTAMP AS OF``;
+    an instant past the last commit resolves to it.  Raises when the
+    instant predates the oldest retained commit, and when the commit
+    after the resolved one expired: tag pins leave gaps in the log, and
+    the version live at ``instant`` may be among the expired seqs."""
+    if not manifests:
+        raise ValueError(
+            f"no commit history at {where} — it predates commit logging "
+            "(its next commit starts the log) or was never committed"
+        )
+    ts = instant if instant.tzinfo else instant.replace(tzinfo=timezone.utc)
+    idx = max(
+        (i for i, m in enumerate(manifests)
+         if m["committed_at"] <= ts.timestamp()),
+        default=None,
+    )
+    seqs = [m["commit_seq"] for m in manifests]
+    if idx is None:
+        oldest = datetime.fromtimestamp(
+            manifests[0]["committed_at"], tz=timezone.utc
+        )
+        raise ValueError(
+            f"no {what} at {where} as of {instant}: the oldest retained "
+            f"commit is seq={seqs[0]} at {oldest:%Y-%m-%d %H:%M:%S}Z — "
+            "older commits are past the retention window"
+        )
+    if idx + 1 < len(seqs) and seqs[idx + 1] > seqs[idx] + 1:
+        raise ValueError(
+            f"ambiguous instant at {where}: commits {seqs[idx] + 1}.."
+            f"{seqs[idx + 1] - 1} expired, and the {what} live at "
+            f"{instant} may be among them (retained seqs: "
+            f"{', '.join(map(str, seqs))}) — resolve by commit seq or "
+            "tag name instead"
+        )
+    return manifests[idx]
 
 
 def read_tags(path: str, fs: StoreFS) -> dict[str, int]:
@@ -196,6 +283,7 @@ def read_manifest(
     kind: str = "index",
     kind_id: str | None = None,
     as_of_seq: int | str | None = None,
+    head_file: str | None = None,
 ) -> dict:
     """Load and validate the committed manifest.  A manifest missing
     ``required_keys`` — e.g. one written by an older, incompatible
@@ -225,7 +313,7 @@ def read_manifest(
     (a crashed commit's orphan archive) do not resolve."""
     if as_of_seq is not None:
         as_of_seq = resolve_as_of(path, fs, as_of_seq)
-        avail = served_seqs(path, fs)
+        avail = served_seqs(path, fs, head_file=head_file)
         if as_of_seq not in avail:
             window = _window_text(avail) + (
                 "" if avail else " (the table predates manifest "
@@ -238,10 +326,10 @@ def read_manifest(
             )
         manifest = json.loads(fs.read_bytes(history_manifest_path(path, as_of_seq)))
     else:
-        mp = posixpath.join(path, MANIFEST)
-        if not fs.exists(mp):
-            raise ValueError(f"no {kind} committed at {path}")
-        manifest = json.loads(fs.read_bytes(mp))
+        hp = head_path(path, head_file)
+        if not fs.exists(hp):
+            raise ValueError(f"no {kind} committed at {head_file or path}")
+        manifest = json.loads(fs.read_bytes(hp))
     missing = [k for k in required_keys if k not in manifest]
     if missing:
         raise ValueError(
@@ -269,7 +357,9 @@ class ConcurrentCommitError(RuntimeError):
     writer."""
 
 
-def commit_manifest(path: str, fs: StoreFS, manifest: dict) -> dict:
+def commit_manifest(
+    path: str, fs: StoreFS, manifest: dict, head_file: str | None = None
+) -> dict:
     """Atomically publish ``manifest`` — with optimistic concurrency
     for every read-modify-write flow — and return the committed head.
 
@@ -296,10 +386,10 @@ def commit_manifest(path: str, fs: StoreFS, manifest: dict) -> dict:
     GCS ``ifGenerationMatch``) — SCALE.md documents the mapping.
     Manifests written before this protocol carry no seq; protection
     engages from their first re-commit."""
-    mp = posixpath.join(path, MANIFEST)
+    hp = head_path(path, head_file)
     expected = manifest.get("commit_seq")
-    with fs.lock(mp):
-        current = head_commit_seq(path, fs)
+    with fs.lock(hp):
+        current = head_commit_seq(path, fs, head_file)
         if expected is not None and current != expected:
             raise ConcurrentCommitError(
                 f"manifest at {path} moved from commit_seq={expected} to "
@@ -322,7 +412,7 @@ def commit_manifest(path: str, fs: StoreFS, manifest: dict) -> dict:
         fs.write_bytes_atomic(
             history_manifest_path(path, out["commit_seq"]), data
         )
-        fs.write_bytes_atomic(mp, data)
+        fs.write_bytes_atomic(hp, data)
     return out
 
 
@@ -355,10 +445,7 @@ def carried_meta(
     rebuild — a rebuild is a new index over a new corpus, so stale
     per-corpus annotations are dropped by design; re-attach them via
     the first append's ``meta`` if they still apply."""
-    mp = posixpath.join(path, MANIFEST)
-    if not fs.exists(mp):
-        return {}
-    manifest = json.loads(fs.read_bytes(mp))
+    manifest = current_head(path, fs)
     return {k: manifest[k] for k in carry_keys if k in manifest}
 
 
@@ -381,17 +468,19 @@ def retention_window(
     fs: StoreFS,
     retain_last: int,
     head_seq: int | None = None,
+    read_manifests: bool = True,
 ) -> tuple[set[int], set[int], list[dict]]:
     """The vacuum retention window: ``(protected_epochs, keep_seqs,
     retained_manifests)`` covering the ``retain_last`` most recent
     served commits, the head (``head_seq``, read from disk when None —
     always kept so ``as_of=head`` never expires) and every tagged
     commit; ``retained_manifests`` are their archived manifests in seq
-    order.  Epochs any retained manifest references are PROTECTED from
-    vacuum — the Iceberg expire-snapshots discipline: the time-travel
-    window and the in-flight-reader grace window are the same
-    mechanism, because a reader that resolved manifest N scans exactly
-    the directories manifest N lists."""
+    order (not read, and empty, without ``read_manifests``).  Epochs
+    any retained manifest references are PROTECTED from vacuum — the
+    Iceberg expire-snapshots discipline: the time-travel window and the
+    in-flight-reader grace window are the same mechanism, because a
+    reader that resolved manifest N scans exactly the directories
+    manifest N lists."""
     if retain_last < 0:
         raise ValueError(f"retain_last must be >= 0, got {retain_last}")
     if head_seq is None:
@@ -405,7 +494,7 @@ def retention_window(
     keep.update(read_tags(path, fs).values())
     protected: set[int] = set()
     manifests: list[dict] = []
-    for s in sorted(keep):
+    for s in sorted(keep) if read_manifests else []:
         hp = history_manifest_path(path, s)
         if not fs.exists(hp):
             continue  # a pre-history head has no archive entry
@@ -416,7 +505,10 @@ def retention_window(
 
 
 def expire_history(
-    path: str, fs: StoreFS, keep_seqs: set[int]
+    path: str,
+    fs: StoreFS,
+    keep_seqs: set[int],
+    head_file: str | None = None,
 ) -> list[int]:
     """Delete the served commits' archived manifests outside
     ``keep_seqs``; returns the expired seqs.  :func:`vacuum` runs it
@@ -425,7 +517,7 @@ def expire_history(
     directories, and an expired target fails with the friendly range
     error instead of a missing-path read mid-scan."""
     removed = []
-    for s in served_seqs(path, fs):
+    for s in served_seqs(path, fs, head_file=head_file):
         if s not in keep_seqs:
             fs.delete(history_manifest_path(path, s))
             removed.append(s)
@@ -437,20 +529,25 @@ def vacuum(
     fs: StoreFS,
     retain_last: int,
     read_head: Callable[[], dict],
-    sweep: Callable[[dict, set[int], list[dict]], object],
+    sweep: Callable[[dict, set[int], list[dict]], object] | None,
+    head_file: str | None = None,
 ) -> tuple[list[int], object]:
     """The one retention sequence for every layer, under
     :func:`retention_lock`: read the head, compute the keep set
     (:func:`retention_window`), expire the archive outside it, then
     ``sweep(head, protected_epochs, retained_manifests)`` deletes the
-    layer's data directories that no kept commit references.  Returns
-    ``(expired_seqs, sweep_result)``."""
-    with retention_lock(path, fs):
+    layer's data directories that no kept commit references.  A layer
+    without data directories (the registry) passes ``sweep=None`` and
+    the kept manifests are never read.  Returns ``(expired_seqs,
+    sweep_result)``."""
+    with retention_lock(path, fs, head_file):
         head = read_head()
         protected, keep, retained = retention_window(
-            path, fs, retain_last, head_seq=head.get("commit_seq")
+            path, fs, retain_last, commit_seq_of(head), sweep is not None
         )
-        expired = expire_history(path, fs, keep)
+        expired = expire_history(path, fs, keep, head_file)
+        if sweep is None:
+            return expired, None
         return expired, sweep(head, protected, retained)
 
 

@@ -34,25 +34,17 @@ delete is retried by the next commit or :meth:`vacuum`.
 
 from __future__ import annotations
 
-import json
 import posixpath
-from datetime import datetime, timezone
+from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession
 
 from feast_spark.io import epochs as epochs_io
-from feast_spark.io.epochs import MANIFEST, ConcurrentCommitError
+from feast_spark.io.epochs import ConcurrentCommitError
 from feast_spark.io.fs import LocalFS, StoreFS
 
 #: GC window when neither the caller nor the manifest names one
 DEFAULT_KEEP_VERSIONS = 2
-
-
-def _to_epoch_s(dt: datetime) -> float:
-    """Naive datetimes are UTC (the store's timestamp convention)."""
-    if dt.tzinfo is None:
-        dt = dt.replace(tzinfo=timezone.utc)
-    return dt.timestamp()
 
 
 def _version_no(version: str | None) -> int | None:
@@ -81,12 +73,6 @@ class ManifestedParquetTable:
         self.fs = fs or LocalFS()
         self._keep_arg = None if keep_versions is None else max(1, keep_versions)
 
-    @property
-    def keep_versions(self) -> int:
-        """The effective GC window: the explicit constructor arg, else
-        the manifest's stored window, else the default."""
-        return self._effective_keep(self._read_manifest())
-
     def stored_keep_versions(self) -> int | None:
         """The window persisted by the last commit, or None for a
         manifest predating window persistence (callers with a
@@ -101,10 +87,7 @@ class ManifestedParquetTable:
         return max(1, stored) if stored else DEFAULT_KEEP_VERSIONS
 
     def _read_manifest(self) -> dict:
-        mp = posixpath.join(self.root, MANIFEST)
-        if not self.fs.exists(mp):
-            return {}
-        return json.loads(self.fs.read_bytes(mp))
+        return epochs_io.current_head(self.root, self.fs)
 
     def head(self) -> tuple[str | None, int]:
         """``(snapshot path, commit seq)`` from ONE head read: the base
@@ -113,7 +96,7 @@ class ManifestedParquetTable:
         commit."""
         m = self._read_manifest()
         path = posixpath.join(self.root, m["current"]) if m else None
-        return path, m.get("commit_seq", 0)
+        return path, epochs_io.commit_seq_of(m)
 
     def current_path(self) -> str | None:
         return self.head()[0]
@@ -237,7 +220,7 @@ class ManifestedParquetTable:
                 # honor it by default
                 "keep_versions": self._effective_keep(prev),
                 "commit_seq": (
-                    prev.get("commit_seq", 0) if base_seq is None
+                    epochs_io.commit_seq_of(prev) if base_seq is None
                     else base_seq
                 ),
             }
@@ -260,17 +243,13 @@ class ManifestedParquetTable:
         ``{"seq", "version", "committed_at"}`` entry per archived
         commit (the ``keep_versions`` window, plus every tagged commit)
         — the resolvable time-travel targets."""
-        out = []
-        for s in epochs_io.served_seqs(self.root, self.fs):
-            hp = epochs_io.history_manifest_path(self.root, s)
-            if not self.fs.exists(hp):
-                continue  # expired by a concurrent vacuum
-            m = json.loads(self.fs.read_bytes(hp))
-            out.append({
-                "seq": s, "version": m["current"],
+        return [
+            {
+                "seq": m["commit_seq"], "version": m["current"],
                 "committed_at": m["committed_at"],
-            })
-        return out
+            }
+            for m in epochs_io.served_manifests(self.root, self.fs)
+        ]
 
     def tags(self) -> dict[str, int]:
         """Named commit pins ``{name: seq}``.  A tagged snapshot is
@@ -303,9 +282,8 @@ class ManifestedParquetTable:
         otherwise only runs inside a commit, so an unpinned snapshot on
         a cold table would linger until someone writes).  Same keep
         rules as the commit path.  Returns the deleted version dirs."""
-        if not self.fs.exists(posixpath.join(self.root, MANIFEST)):
-            return []
-        return self._vacuum(self.keep_versions)
+        head = self._read_manifest()
+        return self._vacuum(self._effective_keep(head)) if head else []
 
     def _vacuum(self, keep: int) -> list[str]:
         def sweep(head, _protected, retained):
@@ -344,7 +322,11 @@ class ManifestedParquetTable:
         what serving returned at every instant since that commit
         (pinned by tests; int seqs, by contrast, raise when unknown)."""
         if isinstance(as_of, datetime):
-            return posixpath.join(self.root, self._version_at(as_of))
+            m = epochs_io.manifest_at(
+                epochs_io.served_manifests(self.root, self.fs), as_of,
+                self.root, "snapshot",
+            )
+            return posixpath.join(self.root, m["current"])
         seq = epochs_io.resolve_as_of(self.root, self.fs, as_of)
         try:
             m = epochs_io.read_manifest(
@@ -352,7 +334,13 @@ class ManifestedParquetTable:
                 as_of_seq=seq,
             )
         except ValueError:
-            hist = self._history_or_raise()
+            hist = self.history()
+            if not hist:
+                raise ValueError(
+                    f"no commit history at {self.root} — the table "
+                    "predates commit logging (its next commit starts the "
+                    "log) or was never committed"
+                ) from None
             if any(e["seq"] == seq for e in hist):
                 raise  # archived, but not a snapshot manifest
             raise ValueError(
@@ -361,49 +349,3 @@ class ManifestedParquetTable:
                 "(keep_versions GC reclaims untagged snapshots)"
             ) from None
         return posixpath.join(self.root, m["current"])
-
-    def _history_or_raise(self) -> list[dict]:
-        hist = self.history()
-        if not hist:
-            raise ValueError(
-                f"no commit history at {self.root} — the table predates "
-                "commit logging (its next commit starts the log) or was "
-                "never committed"
-            )
-        return hist
-
-    def _version_at(self, as_of: datetime) -> str:
-        hist = self._history_or_raise()
-        ts = _to_epoch_s(as_of)
-        live = [e for e in hist if e["committed_at"] <= ts]
-        if not live:
-            oldest = datetime.fromtimestamp(
-                hist[0]["committed_at"], tz=timezone.utc
-            )
-            raise ValueError(
-                f"no snapshot at {self.root} as of {as_of}: the "
-                f"oldest retained commit is seq={hist[0]['seq']} at "
-                f"{oldest:%Y-%m-%d %H:%M:%S}Z — older snapshots were "
-                "reclaimed by keep_versions GC (raise keep_versions "
-                "to widen the window)"
-            )
-        entry = live[-1]
-        # tag pins make the retained log GAPPED: if the commit AFTER the
-        # resolved one was GC'd, the snapshot actually serving at the
-        # requested instant may be among the expired seqs (their
-        # committed_at fell somewhere in the gap) — silently returning
-        # the pinned-but-stale snapshot would be exactly the
-        # wrong-answer time travel promises never to give.  Raise
-        # honestly; seq/tag targets stay exact.
-        idx = hist.index(entry)
-        if idx + 1 < len(hist) and hist[idx + 1]["seq"] > entry["seq"] + 1:
-            retained = ", ".join(str(e["seq"]) for e in hist)
-            raise ValueError(
-                f"ambiguous instant at {self.root}: commits "
-                f"{entry['seq'] + 1}..{hist[idx + 1]['seq'] - 1} "
-                "were reclaimed by keep_versions GC, and the "
-                f"snapshot serving at {as_of} may be among them "
-                f"(retained seqs: {retained}) — resolve by commit "
-                "seq or tag name instead"
-            )
-        return entry["version"]

@@ -23,7 +23,7 @@ If another writer committed in between (a streaming sink plus a manual
 backfill of one view), the staged directory is deleted and
 ``online_write_batch`` re-reads the head, re-merges the same incoming
 rows and commits again, raising ``ConcurrentCommitError`` after
-``_COMMIT_ATTEMPTS`` lost races.  The newest-wins merge is
+``epochs.COMMIT_ATTEMPTS`` lost races.  The newest-wins merge is
 commutative, so a retry lands the rows a serial run would.  Readers
 resolve the head once per query and only ever see a fully written
 snapshot; a crashed writer leaves an orphan directory that the next
@@ -67,15 +67,15 @@ from decimal import Decimal
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
-from feast_spark.io.epochs import MANIFEST, ConcurrentCommitError
+from feast_spark.io.epochs import (
+    COMMIT_ATTEMPTS,
+    MANIFEST,
+    ConcurrentCommitError,
+)
 from feast_spark.io.fs import LocalFS, StoreFS
 from feast_spark.io.pread import read_parquet_memo
 from feast_spark.io.manifest import ManifestedParquetTable
 from feast_spark.operators.dedup import latest_per_key
-
-#: merge-and-commit attempts of one online write before a lost CAS race
-#: is raised
-_COMMIT_ATTEMPTS = 4
 
 _KEY = "__entity_key"
 _EVENT_TS = "__event_ts"
@@ -293,7 +293,7 @@ class OnlineStore:
         it re-merge and retry (module docstring)."""
         table = self._mtable(self._table_dir(project, view_name))
         incoming = project_incoming(df, join_keys, ts_col, created_col, feature_cols)
-        for attempt in range(_COMMIT_ATTEMPTS):
+        for attempt in range(COMMIT_ATTEMPTS):
             current, seq = table.head()
             rows = incoming
             if current is not None:
@@ -312,7 +312,7 @@ class OnlineStore:
                 table.commit(merged, meta=meta, base_seq=seq)
                 return
             except ConcurrentCommitError:
-                if attempt + 1 == _COMMIT_ATTEMPTS:
+                if attempt + 1 == COMMIT_ATTEMPTS:
                     raise
 
     def expire(

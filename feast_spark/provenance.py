@@ -2,13 +2,13 @@
 coordinates of every layer at training time, and the verb that re-pins
 all of them for a faithful replay.
 
-The three time-travel mechanisms (registry version archiving,
-``registry.py load_as_of``; index manifest history, ``io/epochs.py``
-``as_of=``; online snapshot commit log, ``io/manifest.py path_as_of``)
-answer "what was live when model X trained" only if someone recorded
-the coordinates AT training time.  :func:`snapshot_provenance` is that
-record — the MLflow-run-tag / Delta-commit-pin discipline applied
-across all three layers at once:
+The three layers travel in time through the one commit core,
+``io/epochs.py`` (registry versions, ``registry.py load_as_of``; index
+manifests, ``as_of=``; online snapshots, ``io/manifest.py
+path_as_of``), and they answer "what was live when model X trained"
+only if someone recorded the coordinates AT training time.
+:func:`snapshot_provenance` is that record — the MLflow-run-tag /
+Delta-commit-pin discipline applied across all three layers at once:
 
     prov = store.snapshot_provenance(
         index_paths={"bm25": bm25_path}, path=run_dir + "/provenance.json"
@@ -23,7 +23,8 @@ The snapshot reads ONLY committed heads (registry seq, per-view online
 manifest seq, per-index manifest commit_seq + tags) — no Spark job, a
 few JSON reads — so stamping every training run is control-plane cheap.
 Replay durability is the layers' own retention windows
-(``keep_history`` / ``keep_versions`` / ``*_index_vacuum retain_last``)
+(the registry's newest 50 versions / ``keep_versions`` /
+``*_index_vacuum retain_last``)
 — unless the run is PINNED: ``pin_tag="june-run"`` tags every recorded
 index commit and online snapshot (tagged commits are GC/vacuum-exempt
 until deleted), and ``embed_registry`` (default) copies the small
@@ -85,11 +86,11 @@ def snapshot_provenance(
 
     ``embed_registry`` (default on) copies the registry's archived
     payload INTO the record: registry retention is count-based
-    (``keep_history`` newest versions), so a runaway apply loop could
-    otherwise prune a pinned run's version — the embedded copy makes
-    the registry pin durable for the lifetime of the JSON itself
-    (definitions are small; the layers that hold DATA pin by
-    reference + tag instead).
+    (the ``Registry.KEEP_HISTORY`` newest versions), so a runaway
+    apply loop could otherwise prune a pinned run's version — the
+    embedded copy makes the registry pin durable for the lifetime of
+    the JSON itself (definitions are small; the layers that hold DATA
+    pin by reference + tag instead).
     """
     if pin_tag is not None:
         # checked BEFORE any layer is touched, so a bad name cannot
@@ -101,7 +102,8 @@ def snapshot_provenance(
     registry_payload = None
     if reg.fs.exists(reg.path):
         registry_payload = json.loads(reg.fs.read_bytes(reg.path))
-        registry_seq = registry_payload.get("seq")
+        # a head from before the commit core counts with a legacy seq
+        registry_seq = epochs_io.commit_seq_of(registry_payload) or None
 
     online: dict = {"type": type(store.online_store).__name__}
     if getattr(store.online_store, "supports_time_travel", False):
@@ -327,7 +329,7 @@ class RunReplay:
                     info["path"], info["seq"], fs=self._registry_fs
                 )
             except ValueError:
-                # the archive was pruned past keep_history — fall back
+                # the archive window expired the version — fall back
                 # to the payload embedded at snapshot time (the whole
                 # point of embed_registry: the registry pin is durable
                 # for the lifetime of the provenance JSON)

@@ -2,8 +2,8 @@
 
 The reference persists a protobuf registry file on local/GCS/S3 with a
 cache TTL (sdk/python/feast/registry.py:39-77,444-611: one
-RegistryStore subclass per SDK — Local/GCS/S3).  Here: one JSON file,
-atomic replace on commit, entities + feature views + services +
+RegistryStore subclass per SDK — Local/GCS/S3).  Here: one JSON file
+holding entities + feature views + services + on-demand views +
 materialization intervals (M1/M2).  Remote storage goes through ONE
 implementation — ``StoreFS``/``HadoopFS`` over the cluster's Hadoop
 connectors — so ``s3a://``, ``gs://``, ``hdfs://``, ``abfss://`` all
@@ -11,14 +11,27 @@ work with zero extra Python SDKs (the scheme dispatch lives in
 ``FeatureStore``).  ``refresh()`` re-reads the backing object so
 long-lived sessions see other writers' commits, the reference's
 cache-TTL refresh path (registry.py:110-126).
+
+Commits go through the one commit protocol, ``io/epochs.py``: the
+file is the head (with ``commit_seq`` and ``committed_at``), and each
+commit is archived under ``<path>.history/_history/commit_seq=N.json``
+— so :meth:`Registry.load_as_of` answers "which definitions were live
+when model X trained" for the newest :attr:`Registry.KEEP_HISTORY`
+versions (the reference keeps no registry history).
+
+A commit is a compare-and-swap on the seq the registry loaded.  After
+a lost race it re-reads the head and merges per object (section,
+name) against what it loaded: a change only one side made wins, and
+an object both sides changed differently raises
+``ConcurrentCommitError`` with the head untouched.  So two ``apply``
+runs against one file both land, as in the reference, which re-reads
+its registry before each change (registry.py:390-393,473-501).
 """
 
 from __future__ import annotations
 
 import json
-import posixpath
-import time
-from datetime import datetime, timezone
+from datetime import datetime
 
 from feast_spark.entity import Entity
 from feast_spark.errors import EntityNotFoundError, FeatureViewNotFoundError
@@ -27,27 +40,38 @@ from feast_spark.feature_view import (
     FeatureView,
     OnDemandFeatureView,
 )
+from feast_spark.io import epochs as epochs_io
+from feast_spark.io.epochs import COMMIT_ATTEMPTS, ConcurrentCommitError
 from feast_spark.io.fs import LocalFS, StoreFS
+
+#: the payload's object lists; each is also a ``{name: object}``
+#: attribute of :class:`Registry`
+_SECTIONS = (
+    "entities", "feature_views", "feature_services", "on_demand_views",
+)
+
+
+def _root(path: str) -> str:
+    """The epoch root holding the archive of the registry at ``path``."""
+    return f"{path}.history"
+
+
+def _canonical(payload: dict) -> dict[tuple[str, str], str]:
+    """``{(section, name): canonical JSON}`` — what the merge compares."""
+    return {
+        (section, d["name"]): json.dumps(d, sort_keys=True)
+        for section in _SECTIONS
+        for d in payload.get(section, [])
+    }
 
 
 class Registry:
-    def __init__(
-        self,
-        path: str,
-        fs: StoreFS | None = None,
-        keep_history: int | None = None,
-    ):
-        """``keep_history=None`` (default) defers to the archive window
-        the registry was last COMMITTED with — each commit persists its
-        effective window in the registry head, so a commit from a
-        differently-configured process honors the original committer's
-        retention instead of silently pruning archived seqs that
-        ``load_as_of(seq)`` callers depend on (the ``io/manifest.py``
-        ``keep_versions`` discipline, one layer up).  An explicit int
-        overrides."""
+    def __init__(self, path: str, fs: StoreFS | None = None):
         self.path = path
         self.fs = fs or LocalFS()
-        self._keep_arg = None if keep_history is None else max(1, keep_history)
+        # the loaded head's seq and objects: the CAS base and merge base
+        self._seq = 0
+        self._base: dict[tuple[str, str], str] = {}
         self.entities: dict[str, Entity] = {}
         self.feature_views: dict[str, FeatureView] = {}
         self.feature_services: dict[str, FeatureService] = {}
@@ -116,110 +140,104 @@ class Registry:
 
     # -- persistence ---------------------------------------------------
 
-    #: archive window when neither the caller nor the registry file
-    #: names one (definitions are small JSON; the window exists so a
-    #: runaway apply loop cannot grow the sidecar unboundedly).  This
-    #: was the class-wide default before the window was persisted, so
-    #: legacy registry files with no stored window fall back to it —
-    #: upgrading cannot shrink their retention.
-    DEFAULT_KEEP_HISTORY = 50
+    #: archived versions kept: definitions are small JSON, and the
+    #: window exists so a runaway apply loop cannot grow the archive
+    #: unboundedly
+    KEEP_HISTORY = 50
 
-    @property
-    def keep_history(self) -> int:
-        """The effective archive window: the explicit constructor arg
-        (or assignment), else the window persisted in the registry
-        head, else :attr:`DEFAULT_KEEP_HISTORY`."""
-        return self._effective_keep(self.stored_keep_history())
-
-    @keep_history.setter
-    def keep_history(self, value: int | None) -> None:
-        self._keep_arg = None if value is None else max(1, value)
-
-    def stored_keep_history(self) -> int | None:
-        """The window persisted by the last commit, or None for a
-        registry file predating window persistence."""
-        if self.fs.exists(self.path):
-            return json.loads(self.fs.read_bytes(self.path)).get(
-                "keep_history"
-            )
-        return None
-
-    def _effective_keep(self, stored: int | None) -> int:
-        if self._keep_arg is not None:
-            return self._keep_arg
-        return max(1, stored) if stored else self.DEFAULT_KEEP_HISTORY
-
-    def _history_dir(self) -> str:
-        return f"{self.path}.history"
+    def _payload(self) -> dict:
+        return {
+            section: [o.to_dict() for o in getattr(self, section).values()]
+            for section in _SECTIONS
+        }
 
     def commit(self) -> None:
-        """Single atomic write (registry.py:390-393,473-501): temp +
-        rename locally/HDFS, single-object PUT on object stores.
-
-        Every commit also archives the full payload under
-        ``<path>.history/seq=N.json`` (written BEFORE the head flip,
-        the ``io/epochs.py`` ordering — a crash orphan is overwritten
-        by the next commit), stamped with a monotonically increasing
-        ``seq`` and ``committed_at`` — so :meth:`load_as_of` answers
-        "which feature definitions were live when model X trained"
-        (the reference keeps no registry history; this is the index /
-        online-store time-travel discipline applied to the control
-        plane).  The newest :attr:`keep_history` versions are kept;
-        the effective window is persisted in the head payload so later
-        commits from differently-configured processes honor it (an
-        explicit constructor arg overrides; legacy heads fall back to
-        :attr:`DEFAULT_KEEP_HISTORY`).
-        The seq derivation + archive + head flip run under the
-        registry lock: head was last-writer-wins before (reference
-        semantics), but two concurrent appliers minting the SAME seq
-        would silently cross-clobber the archive — corrupting exactly
-        the provenance record the history exists for."""
-        with self.fs.lock(self.path):
-            prev_seq = 0
-            stored_keep = None
-            if self.fs.exists(self.path):
-                head = json.loads(self.fs.read_bytes(self.path))
-                prev_seq = head.get("seq", 0)
-                stored_keep = head.get("keep_history")
-            keep = self._effective_keep(stored_keep)
-            payload = {
-                "seq": prev_seq + 1,
-                "committed_at": time.time(),
-                "keep_history": keep,
-                "entities": [e.to_dict() for e in self.entities.values()],
-                "feature_views": [
-                    v.to_dict() for v in self.feature_views.values()
-                ],
-                "feature_services": [
-                    s.to_dict() for s in self.feature_services.values()
-                ],
-                "on_demand_views": [
-                    v.to_dict() for v in self.on_demand_views.values()
-                ],
-            }
-            data = json.dumps(payload, indent=1).encode()
-            self.fs.write_bytes_atomic(
-                posixpath.join(
-                    self._history_dir(), f"seq={prev_seq + 1}.json"
-                ),
-                data,
-            )
-            self.fs.write_bytes_atomic(self.path, data)
-            for s in self.history_seqs()[:-keep]:
-                self.fs.delete(
-                    posixpath.join(self._history_dir(), f"seq={s}.json")
+        """Publish the in-memory state as the next version: one atomic
+        write of the head (temp + rename locally/HDFS, single-object PUT
+        on object stores), archived first.  Afterwards the in-memory
+        state is what was committed, merge included."""
+        for _ in range(COMMIT_ATTEMPTS):
+            payload = self._payload()
+            try:
+                head = epochs_io.commit_manifest(
+                    _root(self.path), self.fs,
+                    {**payload, "commit_seq": self._seq},
+                    head_file=self.path,
                 )
+            except ConcurrentCommitError:
+                self._merge(Registry(self.path, self.fs))
+                continue
+            self._seq, self._base = head["commit_seq"], _canonical(payload)
+            epochs_io.vacuum(
+                _root(self.path), self.fs, self.KEEP_HISTORY,
+                lambda: self.read_payload(self.path, fs=self.fs),
+                None, head_file=self.path,
+            )
+            return
+        raise ConcurrentCommitError(
+            f"registry at {self.path} lost {COMMIT_ATTEMPTS} commit races "
+            "in a row — is an apply loop running elsewhere?"
+        )
+
+    def _merge(self, theirs: "Registry") -> None:
+        """Fold the committed head ``theirs`` in, per (section, name)
+        against the loaded base; raise, changing nothing, if both sides
+        changed one object differently.  Where the sides agree, keep
+        this registry's object: an applied on-demand view carries its
+        transform, a loaded one does not."""
+        mine = _canonical(self._payload())
+        take = []
+        for key in self._base.keys() | mine.keys() | theirs._base.keys():
+            base, m = self._base.get(key), mine.get(key)
+            t = theirs._base.get(key)
+            if m == t or t == base:
+                continue
+            if m != base:
+                raise ConcurrentCommitError(
+                    f"registry at {self.path}: {key[0]} {key[1]!r} was "
+                    "changed both here and by a concurrent commit "
+                    f"(commit_seq={theirs._seq}) — refresh and re-apply"
+                )
+            take.append(key)
+        for section, name in take:
+            objs, head_objs = getattr(self, section), getattr(theirs, section)
+            if name in head_objs:
+                objs[name] = head_objs[name]
+            else:
+                del objs[name]
+        self._seq, self._base = theirs._seq, theirs._base
 
     def history_seqs(self) -> list[int]:
         """Sorted archived registry versions (the load_as_of targets)."""
-        base = self._history_dir()
-        out = []
-        for name in self.fs.list_files(base) if self.fs.exists(base) else []:
-            if name.startswith("seq=") and name.endswith(".json"):
-                body = name[4:-5]
-                if body.isdigit():
-                    out.append(int(body))
-        return sorted(out)
+        return epochs_io.served_seqs(
+            _root(self.path), self.fs, head_file=self.path
+        )
+
+    @classmethod
+    def read_payload(
+        cls, path: str, seq: int | None = None, fs: StoreFS | None = None
+    ) -> dict:
+        """The committed head's payload, or version ``seq``'s archived
+        one; raises with the archived range when ``seq`` is not served
+        (expired, never committed, or archived before this layout)."""
+        fs = fs or LocalFS()
+        try:
+            return epochs_io.read_manifest(
+                _root(path), fs, (), kind="registry", as_of_seq=seq,
+                head_file=path,
+            )
+        except ValueError:
+            if seq is None:
+                raise
+            seqs = epochs_io.served_seqs(_root(path), fs, head_file=path)
+            window = (
+                f"archived seqs {seqs[0]}..{seqs[-1]}" if seqs
+                else "no archived versions"
+            )
+            raise ValueError(
+                f"no registry version seq={seq} at {path}: {window} (the "
+                f"newest {cls.KEEP_HISTORY} versions are kept)"
+            ) from None
 
     @classmethod
     def load_as_of(
@@ -234,46 +252,14 @@ class Registry:
         :meth:`commit` on the snapshot is refused: republishing an old
         version as head must be an explicit apply, not an accident."""
         fs = fs or LocalFS()
-        reg = cls.__new__(cls)
-        reg.path = path
-        reg.fs = fs
-        seqs = reg.history_seqs()
-        if not seqs:
-            raise ValueError(
-                f"no registry history at {path} — the registry predates "
-                "version archiving (its next apply starts the log)"
-            )
         if isinstance(as_of, datetime):
-            ts = as_of
-            if ts.tzinfo is None:
-                ts = ts.replace(tzinfo=timezone.utc)
-            epoch = ts.timestamp()
-            live = []
-            for s in seqs:
-                p = posixpath.join(f"{path}.history", f"seq={s}.json")
-                if json.loads(fs.read_bytes(p)).get(
-                    "committed_at", float("inf")
-                ) <= epoch:
-                    live.append(s)
-            if not live:
-                raise ValueError(
-                    f"no registry version at {path} as of {as_of}: "
-                    f"oldest archived seq is {seqs[0]} (versions past "
-                    "keep_history are pruned)"
-                )
-            seq = live[-1]
+            payload = epochs_io.manifest_at(
+                epochs_io.served_manifests(_root(path), fs, head_file=path),
+                as_of, path, "registry version",
+            )
         else:
-            if as_of not in seqs:
-                raise ValueError(
-                    f"no registry version seq={as_of} at {path}: "
-                    f"archived seqs {seqs[0]}..{seqs[-1]} (versions "
-                    "past keep_history are pruned)"
-                )
-            seq = as_of
-        hp = posixpath.join(f"{path}.history", f"seq={seq}.json")
-        return cls.from_payload(
-            json.loads(fs.read_bytes(hp)), path=path, fs=fs, seq=seq
-        )
+            payload = cls.read_payload(path, as_of, fs)
+        return cls.from_payload(payload, path=path, fs=fs)
 
     @classmethod
     def from_payload(
@@ -286,19 +272,13 @@ class Registry:
         """A read-only Registry built from an archived payload dict —
         the deserialization half of :meth:`load_as_of`, also used to
         resurrect the registry EMBEDDED in a provenance record
-        (provenance.py) after ``keep_history`` pruned the archive.
-        Commit is refused: republishing an old version as head must be
-        an explicit apply, not an accident."""
+        (provenance.py) after the archive window expired its version.
+        Commit is refused, as on :meth:`load_as_of` snapshots."""
         reg = cls.__new__(cls)
         reg.path = path
         reg.fs = fs or LocalFS()
-        reg._keep_arg = None
-        reg.entities = {}
-        reg.feature_views = {}
-        reg.feature_services = {}
-        reg.on_demand_views = {}
         reg._load_payload(payload)
-        reg._frozen_seq = seq if seq is not None else payload.get("seq")
+        reg._frozen_seq = seq if seq is not None else payload.get("commit_seq")
 
         def _refuse_commit() -> None:
             raise RuntimeError(
@@ -316,16 +296,19 @@ class Registry:
             self._load()
 
     def _load(self) -> None:
-        self._load_payload(json.loads(self.fs.read_bytes(self.path)))
+        payload = self.read_payload(self.path, fs=self.fs)
+        self._load_payload(payload)
+        self._seq = epochs_io.commit_seq_of(payload)
+        self._base = _canonical(self._payload())
 
     def _load_payload(self, payload: dict) -> None:
-        self.entities = {
-            e["name"]: Entity.from_dict(e) for e in payload.get("entities", [])
-        }
-        self.feature_views = {
-            v["name"]: FeatureView.from_dict(v)
-            for v in payload.get("feature_views", [])
-        }
+        def by_name(cls, section):
+            return {
+                d["name"]: cls.from_dict(d) for d in payload.get(section, [])
+            }
+
+        self.entities = by_name(Entity, "entities")
+        self.feature_views = by_name(FeatureView, "feature_views")
         # services need views resolved
         self.feature_services = {}
         for s in payload.get("feature_services", []):
@@ -338,7 +321,4 @@ class Registry:
             )
         # transforms are code: loaded entries are metadata-only until
         # re-applied from the repo file (OnDemandFeatureView docstring)
-        self.on_demand_views = {
-            v["name"]: OnDemandFeatureView.from_dict(v)
-            for v in payload.get("on_demand_views", [])
-        }
+        self.on_demand_views = by_name(OnDemandFeatureView, "on_demand_views")

@@ -368,61 +368,161 @@ def test_registry_history_pruned_to_window(tmp_path):
 
     path = str(tmp_path / "registry.json")
     reg = Registry(path)
-    reg.keep_history = 3
     reg.apply_entity(Entity(name="driver", join_key="driver_id",
                             value_type=ValueType.INT64))
-    for _ in range(5):
+    window = Registry.KEEP_HISTORY
+    for _ in range(window + 2):
         reg.commit()
-    assert reg.history_seqs() == [3, 4, 5]
-    with pytest.raises(ValueError, match="archived seqs 3..5"):
+    assert reg.history_seqs() == list(range(3, window + 3))
+    with pytest.raises(ValueError, match=f"archived seqs 3..{window + 2}"):
         Registry.load_as_of(path, 1)
 
 
-def test_registry_keep_history_persists_in_head(tmp_path):
-    """The archive window is a property of the registry FILE, not the
-    process (r16 — the io/manifest.py keep_versions discipline one
-    layer up): a commit from a differently-configured process honors
-    the committer's stored window instead of pruning archived seqs
-    that load_as_of(seq) callers depend on; an explicit arg overrides;
-    legacy heads (no stored window) fall back to the historical
-    default of 50."""
+def _entity(name):
+    return Entity(name=name, join_key=f"{name}_id",
+                  value_type=ValueType.INT64)
+
+
+def _view(ttl_days):
+    return FeatureView(
+        name="fv", entities=["driver"], ttl=timedelta(days=ttl_days),
+        batch_source=FileSource(path="x.parquet",
+                                event_timestamp_column="ts"),
+    )
+
+
+def test_registry_concurrent_appliers_both_land(tmp_path):
+    """Two registries loaded from one file each apply a different
+    entity: the second commit loses the compare-and-swap, merges the
+    head per object and lands both."""
+    from feast_spark.registry import Registry
+
+    path = str(tmp_path / "registry.json")
+    a, b = Registry(path), Registry(path)
+    a.apply_entity(_entity("driver"))
+    a.commit()
+    b.apply_entity(_entity("rider"))
+    b.commit()
+    assert sorted(Registry(path).entities) == ["driver", "rider"]
+    assert sorted(b.entities) == ["driver", "rider"]
+    assert b.history_seqs() == [1, 2]
+    assert sorted(Registry.load_as_of(path, 1).entities) == ["driver"]
+    # b's in-memory base is now the merged head: its next commit is a
+    # plain compare-and-swap success
+    b.commit()
+    assert b.history_seqs() == [1, 2, 3]
+
+
+def test_registry_deletion_survives_unrelated_concurrent_commit(tmp_path):
+    from feast_spark.registry import Registry
+
+    path = str(tmp_path / "registry.json")
+    seed = Registry(path)
+    seed.apply_entity(_entity("driver"))
+    seed.apply_entity(_entity("rider"))
+    seed.commit()
+    a, b = Registry(path), Registry(path)
+    a.delete_entity("driver")
+    a.commit()
+    b.apply_entity(_entity("car"))
+    b.commit()
+    assert sorted(Registry(path).entities) == ["car", "rider"]
+    assert sorted(b.entities) == ["car", "rider"]
+
+
+def test_registry_conflicting_edits_raise_and_leave_head(tmp_path):
+    """Both writers edit view ``fv`` differently: the second commit
+    raises and neither the head nor the archive moves."""
+    import os
+
+    from feast_spark.io.epochs import ConcurrentCommitError
+    from feast_spark.registry import Registry
+
+    path = str(tmp_path / "registry.json")
+    seed = Registry(path)
+    seed.apply_entity(_entity("driver"))
+    seed.apply_feature_view(_view(1))
+    seed.commit()
+    a, b = Registry(path), Registry(path)
+    a.apply_feature_view(_view(2))
+    a.commit()
+    head = open(path, "rb").read()
+    archive = sorted(os.listdir(f"{path}.history/_history"))
+    b.apply_feature_view(_view(3))
+    with pytest.raises(ConcurrentCommitError, match="'fv'"):
+        b.commit()
+    assert open(path, "rb").read() == head
+    assert sorted(os.listdir(f"{path}.history/_history")) == archive
+    assert Registry(path).get_feature_view("fv").ttl == timedelta(days=2)
+
+
+def test_registry_crash_between_archive_and_head_leaves_no_readable_orphan(
+    tmp_path,
+):
+    """A crash after the archive write and before the head write leaves
+    an archived version above the head: it never resolves, and the
+    next commit takes that seq and overwrites it."""
+    from feast_spark.registry import Registry
+
+    path = str(tmp_path / "registry.json")
+
+    class CrashingFS(LocalFS):
+        crash = False
+
+        def write_bytes_atomic(self, p, data):
+            if self.crash and p == path:
+                raise OSError("crash before the head write")
+            super().write_bytes_atomic(p, data)
+
+    fs = CrashingFS()
+    reg = Registry(path, fs=fs)
+    reg.apply_entity(_entity("driver"))
+    for _ in range(3):
+        reg.commit()
+    fs.crash = True
+    reg.apply_entity(_entity("orphan"))
+    with pytest.raises(OSError, match="crash"):
+        reg.commit()
+    with pytest.raises(ValueError, match="archived seqs 1..3"):
+        Registry.load_as_of(path, 4)
+    assert reg.history_seqs() == [1, 2, 3]
+
+    fs.crash = False
+    reg.delete_entity("orphan")
+    reg.apply_entity(_entity("rider"))
+    reg.commit()
+    assert reg.history_seqs() == [1, 2, 3, 4]
+    assert sorted(Registry.load_as_of(path, 4).entities) == [
+        "driver", "rider",
+    ]
+
+
+def test_registry_legacy_head_keeps_its_numbering(tmp_path):
+    """A head written before the commit core counts with ``seq``: the
+    next commit continues from it, the legacy window setting is
+    dropped, and the legacy seq itself has no archived version."""
     import json as _json
 
     from feast_spark.registry import Registry
 
     path = str(tmp_path / "registry.json")
-    reg = Registry(path, keep_history=2)
-    reg.apply_entity(Entity(name="driver", join_key="driver_id",
-                            value_type=ValueType.INT64))
-    for _ in range(4):
-        reg.commit()
-    assert _json.loads(open(path).read())["keep_history"] == 2
-    assert reg.history_seqs() == [3, 4]
-
-    # a default-configured process inherits the stored window: it does
-    # NOT reset retention to its own default
-    other = Registry(path)
-    assert other.keep_history == 2
-    other.commit()
-    assert other.history_seqs() == [4, 5]
-    assert _json.loads(open(path).read())["keep_history"] == 2
-
-    # an explicit constructor arg wins and re-persists
-    wider = Registry(path, keep_history=3)
-    wider.commit()
-    assert _json.loads(open(path).read())["keep_history"] == 3
-    wider.commit()
-    assert wider.history_seqs() == [5, 6, 7]
-
-    # legacy head (predates window persistence) -> historical default
+    with open(path, "w") as f:
+        _json.dump({
+            "seq": 7, "committed_at": 0.0, "keep_history": 3,
+            "entities": [_entity("driver").to_dict()],
+            "feature_views": [], "feature_services": [],
+            "on_demand_views": [],
+        }, f)
+    reg = Registry(path)
+    reg.apply_entity(_entity("rider"))
+    reg.commit()
     head = _json.loads(open(path).read())
-    del head["keep_history"]
-    open(path, "w").write(_json.dumps(head))
-    legacy = Registry(path)
-    assert legacy.stored_keep_history() is None
-    assert legacy.keep_history == 50
-    legacy.commit()
-    assert _json.loads(open(path).read())["keep_history"] == 50
+    assert head["commit_seq"] == 8
+    assert "seq" not in head and "keep_history" not in head
+    assert reg.history_seqs() == [8]
+    assert sorted(Registry(path).entities) == ["driver", "rider"]
+    with pytest.raises(ValueError, match="archived seqs 8..8"):
+        Registry.load_as_of(path, 7)
 
 
 def test_registry_dump_as_of_cli(tmp_path, capsys):

@@ -188,7 +188,7 @@ def test_pinned_run_survives_vacuum_and_registry_pruning(
     """pin_tag makes the run vacuum-immune: the index pin survives an
     append + vacuum(retain_last=0), the online pin survives enough
     materializations to exhaust keep_versions, and the embedded
-    registry payload survives keep_history pruning."""
+    registry payload survives the registry's archive window."""
     from feast_spark.operators.bm25 import (
         bm25_index_append,
         bm25_index_topk,
@@ -226,9 +226,8 @@ def test_pinned_run_survives_vacuum_and_registry_pruning(
             ),
             ["driver_id"], "ts", "created_ts", ["value"],
         )
-    # registry layer: prune the archive past the recorded seq
-    store.registry.keep_history = 1
-    for i in range(3):
+    # registry layer: commit the recorded seq out of the archive window
+    for _ in range(store.registry.KEEP_HISTORY + 1):
         store.registry.commit()
 
     run = store.describe_run(prov_path)
