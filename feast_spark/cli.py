@@ -322,8 +322,8 @@ def _doctor_provenance_orphans(args) -> int:
     death; a GC-exempt tag with no record referencing it leaks storage
     silently forever).
 
-    Layer discovery comes from the records themselves: every index /
-    dataset / online coordinate named by ANY record (pinned or not) is
+    Layer discovery comes from the records themselves: every layer of
+    ``provenance.record_layers`` named by ANY record (pinned or not) is
     audited, so the killed run's layers are found through its
     siblings' records.  A tag counts as referenced when a record names
     it as its ``pin_tag`` or carried it in a layer's recorded tag
@@ -340,12 +340,11 @@ def _doctor_provenance_orphans(args) -> int:
     session."""
     import json as _json
     import os
-    import posixpath
 
     from feast_spark.io import epochs as epochs_io
     from feast_spark.io.fs import LocalFS
     from feast_spark.provenance import (
-        NEVER_MATERIALIZED, PROVENANCE_FORMAT,
+        NEVER_MATERIALIZED, PROVENANCE_FORMAT, record_layers,
     )
 
     run_dir = args.provenance_orphans
@@ -373,35 +372,19 @@ def _doctor_provenance_orphans(args) -> int:
         )
         return 2
 
-    # (kind, layer key) -> set of referenced tag names; the layer key
-    # is the index/dataset root, or (root, project, view) for online
-    referenced: dict = {}
+    # (scope, layer root) -> set of referenced tag names
+    referenced: dict[tuple[str, str], set[str]] = {}
     pins_seen = 0
     for _p, doc in docs:
         pin = doc.get("pin_tag")
-        if pin:
-            pins_seen += 1
-        for info in doc.get("indexes", {}).values():
-            key = ("index", info["path"])
-            tags = referenced.setdefault(key, set())
-            tags.update(info.get("tags", {}))
-            if pin:
-                tags.add(pin)
-        for info in doc.get("datasets", {}).values():
-            key = ("dataset", info["path"])
-            tags = referenced.setdefault(key, set())
-            tags.update(info.get("tags", {}))
-            if pin:
-                tags.add(pin)
-        online = doc.get("online", {})
-        root = online.get("path")
-        if root:
-            for view, seq in online.get("views", {}).items():
-                key = ("online", (root, doc.get("project"), view))
-                tags = referenced.setdefault(key, set())
-                tags.update(online.get("tags", {}).get(view, {}))
-                if pin and seq != NEVER_MATERIALIZED:
-                    tags.add(pin)
+        pins_seen += bool(pin)
+        for scope, _name, root, seq, tags, _meta in record_layers(doc):
+            if root is None:
+                continue  # an online section recorded without its root
+            known = referenced.setdefault((scope, root), set())
+            known.update(tags)
+            if pin and seq != NEVER_MATERIALIZED:
+                known.add(pin)
 
     fs = LocalFS()
     print(
@@ -409,30 +392,22 @@ def _doctor_provenance_orphans(args) -> int:
         f"({pins_seen} pinned), {len(referenced)} layers referenced"
     )
     orphans = 0
-    for (kind, key), known in sorted(
-        referenced.items(), key=lambda kv: repr(kv[0])
-    ):
-        if kind == "online":
-            root, project, view = key
-            where = f"{root} {project}/{view}"
-            path = posixpath.join(root, project, view)
-        else:
-            where = path = key
+    for (scope, root), known in sorted(referenced.items()):
         try:
-            live = epochs_io.read_tags(path, fs)
+            live = epochs_io.read_tags(root, fs)
         except (OSError, ValueError):
-            print(f"skip     {kind} {where} — unreadable/deleted")
+            print(f"skip     {scope} {root} — unreadable/deleted")
             continue
         stray = sorted(set(live) - known)
         for t in stray:
             print(
-                f"ORPHAN   {kind} {where} tag {t!r} -> seq {live[t]} "
+                f"ORPHAN   {scope} {root} tag {t!r} -> seq {live[t]} "
                 "(no provenance record references it)"
             )
         orphans += len(stray)
         if not stray:
             print(
-                f"ok       {kind} {where} — "
+                f"ok       {scope} {root} — "
                 f"{len(live)} tags, all referenced"
             )
     if orphans:
@@ -458,139 +433,106 @@ _KIND_SUBDIRS = {
 
 def _doctor_history(args) -> int:
     """``doctor --history PATH``: print the commit log of whatever
-    committed layer lives at PATH — a persisted INDEX (epoch manifests,
-    ``_history/commit_seq=N.json``), an ONLINE snapshot table
-    (``io/manifest.py`` versioned parquet + commit log), or a REGISTRY
-    file (``registry.py``, the same core) — one line per retained
-    commit: seq, kind/version, stamps/pins, and whether it is still a
-    readable ``as_of=`` target.  The audit trail behind time travel,
-    same discipline as ``DESCRIBE HISTORY`` on a Delta table.
-    Driver-only (tiny JSON reads) — no Spark session.  Exit 2 on a
-    missing/uncommitted path."""
+    committed layer lives at PATH — a persisted INDEX (epoch
+    manifests), a SNAPSHOT table (``io/manifest.py``: an online view or
+    a dataset) or a REGISTRY file (``registry.py``, archived beside
+    it) — one line per served commit: seq, a per-kind summary, pins,
+    and whether it is still a readable ``as_of=`` target.  One walk
+    for every kind: the layer's archive (``_history/commit_seq=N``)
+    and tag table, both through ``io/epochs.py``.  The audit trail
+    behind time travel, same discipline as ``DESCRIBE HISTORY`` on a
+    Delta table.  Driver-only (tiny JSON reads) — no Spark session.
+    Exit 2 on a missing/uncommitted path."""
     import os
     import posixpath
     from datetime import datetime, timezone
 
     from feast_spark.io import epochs as epochs_io
     from feast_spark.io.fs import LocalFS
+    from feast_spark.registry import archive_root
 
     fs = LocalFS()
     path = args.history
-
-    def _fmt_ts(epoch_s: float) -> str:
-        return datetime.fromtimestamp(epoch_s, tz=timezone.utc).strftime(
-            "%Y-%m-%d %H:%M:%SZ"
+    # a registry is a file whose archive and tags sit beside it
+    head_file = path if os.path.isfile(path) else None
+    root = archive_root(path) if head_file else path
+    try:
+        head = epochs_io.read_manifest(
+            root, fs, (), kind="layer", head_file=head_file
         )
+    except ValueError as e:
+        print(f"error    {e}")
+        return 2
 
-    # registry file: a JSON document (not a directory)
-    if os.path.isfile(path):
-        from feast_spark.registry import Registry
+    def _fmt_ts(m: dict) -> str:
+        return datetime.fromtimestamp(
+            m["committed_at"], tz=timezone.utc
+        ).strftime("%Y-%m-%d %H:%M:%SZ")
 
-        seqs = Registry(path, fs=fs).history_seqs()
-        if not seqs:
-            print(
-                "no archived registry versions — the registry predates "
-                "version archiving (its next apply starts the log)"
-            )
-            return 0
-        for s in seqs:
-            m = Registry.read_payload(path, s, fs)
-            mark = "*" if s == seqs[-1] else " "
-            print(
-                f"{mark}seq={s:<4} {_fmt_ts(m['committed_at'])}  "
-                f"entities={len(m.get('entities', []))} "
+    def _state(readable: bool) -> str:
+        return "readable" if readable else "expired "
+
+    if head_file:
+        footer = "*=head; each seq is a Registry.load_as_of target"
+
+        def summary(m: dict, _tags: list[str]) -> str:
+            return (
+                f"{_fmt_ts(m)}  entities={len(m.get('entities', []))} "
                 f"views={len(m.get('feature_views', []))} "
                 f"services={len(m.get('feature_services', []))}"
             )
-        print("*=head; each seq is a Registry.load_as_of target")
-        return 0
-
-    # online snapshot table: manifest with a 'current' version pointer
-    if "current" in epochs_io.current_head(path, fs):
-        from feast_spark.io.manifest import ManifestedParquetTable
-
-        t = ManifestedParquetTable(path, fs=fs)
-        hist = t.history()
-        if not hist:
-            print(
-                "no commit log — the table predates commit logging "
-                "(its next commit starts the log)"
-            )
-            return 0
-        head_seq = hist[-1]["seq"]
-        snap_tags: dict[int, list[str]] = {}
-        for name, seq in t.tags().items():
-            snap_tags.setdefault(seq, []).append(name)
-        for e in hist:
-            mark = "*" if e["seq"] == head_seq else " "
-            readable = fs.exists(posixpath.join(path, e["version"]))
-            state = "readable" if readable else "expired "
-            pins = (
-                "  tags=" + ",".join(sorted(snap_tags[e["seq"]]))
-                if e["seq"] in snap_tags
-                else ""
-            )
-            print(
-                f"{mark}seq={e['seq']:<4} {state} "
-                f"{_fmt_ts(e['committed_at'])}  {e['version']}{pins}"
-            )
-        print(
+    elif "current" in head:
+        footer = (
             "*=head; 'readable' commits are valid as_of= targets "
             "(keep_versions GC bounds the window; tagged snapshots are "
             "GC-exempt until untagged)"
         )
-        return 0
 
-    try:
-        head = epochs_io.read_manifest(path, fs)
-    except ValueError as e:
-        print(f"error    {e}")
-        return 2
-    head_seq = epochs_io.commit_seq_of(head)
-    tags_by_seq: dict[int, list[str]] = {}
-    for name, seq in epochs_io.read_tags(path, fs).items():
-        tags_by_seq.setdefault(seq, []).append(name)
-    manifests = epochs_io.served_manifests(path, fs)
-    if not manifests:
-        print(
-            "no archived commits — the index predates manifest history "
-            "(its next commit starts the log) or vacuum expired them all"
+        def summary(m: dict, tags: list[str]) -> str:
+            readable = fs.exists(posixpath.join(root, m["current"]))
+            pins = "  tags=" + ",".join(tags) if tags else ""
+            return f"{_state(readable)} {_fmt_ts(m)}  {m['current']}{pins}"
+    else:
+        footer = (
+            "*=head; 'readable' commits are valid as_of= targets "
+            "(vacuum retain_last bounds the window; tagged commits are "
+            "pinned until the tag is deleted)"
         )
-        return 0
-    for m in manifests:
-        s = m["commit_seq"]
-        kind = m.get("kind", "?")
-        epochs = m.get("epochs", [])
-        subdirs = _KIND_SUBDIRS.get(kind)
-        if subdirs is None:
+
+        def summary(m: dict, tags: list[str]) -> str:
+            kind, epochs = m.get("kind", "?"), m.get("epochs", [])
+            subdirs = _KIND_SUBDIRS.get(kind)
             # an unrecognized kind's epoch layout is unknown: say so
-            # instead of letting all() over an empty generator print a
-            # vacuously-true 'readable' for a possibly-vacuumed target
-            state = "unknown "
-        else:
-            readable = all(
-                fs.exists(posixpath.join(path, sub, f"epoch={e}"))
+            # instead of a vacuously-true 'readable' over no dirs
+            state = "unknown " if subdirs is None else _state(all(
+                fs.exists(posixpath.join(root, sub, f"epoch={e}"))
                 for sub in subdirs
                 for e in epochs
+            ))
+            stamps = "".join(
+                f" {k}={m[k]}"
+                for k in ("corpus_epoch", "stream_epoch")
+                if k in m
             )
-            state = "readable" if readable else "expired "
-        stamps = "".join(
-            f" {k}={m[k]}"
-            for k in ("corpus_epoch", "stream_epoch")
-            if k in m
-        )
-        mark = "*" if s == head_seq else " "
-        names = tags_by_seq.get(s)
-        tagtxt = f" tags={sorted(names)}" if names else ""
+            tagtxt = f" tags={tags}" if tags else ""
+            return f"{state} kind={kind:<7} epochs={epochs}{stamps}{tagtxt}"
+
+    manifests = epochs_io.served_manifests(root, fs, head_file)
+    if not manifests:
         print(
-            f"{mark}seq={s:<4} {state} kind={kind:<7} "
-            f"epochs={epochs}{stamps}{tagtxt}"
+            f"no archived commits — {path} predates commit logging (its "
+            "next commit starts the log) or vacuum expired them all"
         )
-    print(
-        "*=head; 'readable' commits are valid as_of= targets "
-        "(vacuum retain_last bounds the window; tagged commits are "
-        "pinned until the tag is deleted)"
-    )
+        return 0
+    tags_by_seq: dict[int, list[str]] = {}
+    for name, seq in sorted(epochs_io.read_tags(root, fs).items()):
+        tags_by_seq.setdefault(seq, []).append(name)
+    head_seq = epochs_io.commit_seq_of(head)
+    for m in manifests:
+        s = m["commit_seq"]
+        mark = "*" if s == head_seq else " "
+        print(f"{mark}seq={s:<4} {summary(m, tags_by_seq.get(s, []))}")
+    print(footer)
     return 0
 
 
@@ -600,9 +542,11 @@ def _cmd_provenance(args) -> int:
     registry seq, per-view online snapshot seq, per-index commit_seq +
     tags — a few JSON reads, NO Spark session.  ``provenance describe
     RUN.json`` prints a stamped record and verifies every pin is still
-    a replayable target (registry archive present, index as_of
-    readable, online seq retained); exit 1 when any pin has been GC'd
-    past its layer's retention window, exit 2 on a bad path/argument."""
+    a replayable target: the registry through ``RunReplay.registry``
+    (its archive, else the embedded payload), every other layer of
+    ``provenance.record_layers`` against its own archive and tag
+    table; exit 1 when any pin has been GC'd past its layer's
+    retention window, exit 2 on a bad path/argument."""
     import json as _json
     from types import SimpleNamespace
 
@@ -657,7 +601,9 @@ def _cmd_provenance(args) -> int:
         return 0
 
     # describe: print + verify replayability of every pin
-    from feast_spark.provenance import load_provenance
+    from feast_spark.provenance import (
+        NEVER_MATERIALIZED, RunReplay, load_provenance, record_layers,
+    )
 
     try:
         doc = load_provenance(args.path, fs=fs)
@@ -665,119 +611,63 @@ def _cmd_provenance(args) -> int:
         print(f"error    {e}")
         return 2
     print(_json.dumps(doc, indent=1))
+    run = RunReplay(doc, registry_fs=fs)
     expired = 0
     pin = doc.get("pin_tag")
-
-    def _verify_pin(scope, name, recorded_tags, pseq, read_live, label):
-        """ok/missing line for one recorded pin (r15) — the doc
-        records each layer's tag map, so a pin deleted or re-pointed
-        since the snapshot is caught before a replay fails.  Returns
-        the expired increment."""
-        if not (pin and recorded_tags.get(pin) == pseq):
-            return 0
-        live = read_live()
-        if live.get(pin) == pseq:
-            print(f"ok       {scope} {name} pin {pin!r} -> {label}={pseq}")
-            return 0
-        print(
-            f"missing  {scope} {name} pin {pin!r}: live tag is "
-            f"{live.get(pin)!r} (deleted or re-pointed)"
-        )
-        return 1
-
     seq = doc["registry"]["seq"]
     if seq is not None:
         try:
-            Registry.load_as_of(doc["registry"]["path"], seq, fs=fs)
-            print(f"ok       registry seq={seq} replayable")
+            run.registry
+            how = (
+                " from the embedded payload" if run.registry_from_payload
+                else ""
+            )
+            print(f"ok       registry seq={seq} replayable{how}")
         except ValueError as e:
             expired += 1
             print(f"expired  registry seq={seq}: {e}")
     online = doc["online"]
-    if "views" in online:
-        # the doc records the online root (like the registry path), so
-        # verification does not depend on the --online-path flag
-        # matching what the snapshot used; old records fall back
-        store = OnlineStore(online.get("path") or args.online_path)
-        for view, vseq in sorted(online["views"].items()):
-            if vseq == 0:
-                print(f"ok       online {view}: pre-history (seq 0)")
-                continue
-            try:
-                store._mtable(
-                    store._table_dir(doc["project"], view)
-                ).path_as_of(vseq)
-                print(f"ok       online {view} seq={vseq} replayable")
-            except ValueError as e:
-                expired += 1
-                print(f"expired  online {view} seq={vseq}: {e}")
-                continue
-            expired += _verify_pin(
-                "online", view, online.get("tags", {}).get(view, {}),
-                vseq,
-                lambda v=view: store.snapshot_tags(doc["project"], v),
-                "seq",
-            )
-    else:
+    if "views" not in online:
         print(
             f"warn     online store ({online['type']}) keeps no "
             "history — not replayable"
         )
-    for name, info in sorted(doc["indexes"].items()):
+    # the doc records the online root (like the registry path), so
+    # verification does not depend on the --online-path flag matching
+    # what the snapshot used; old records fall back to it
+    for scope, name, root, lseq, tags, _meta in record_layers(
+        doc, args.online_path
+    ):
+        label = "seq" if scope == "online" else "commit_seq"
+        if lseq == NEVER_MATERIALIZED:
+            print(f"ok       {scope} {name}: pre-history (seq 0)")
+            continue
         try:
-            epochs_io.read_manifest(
-                info["path"], fs, as_of_seq=info["commit_seq"]
-            )
-            print(
-                f"ok       index {name} commit_seq={info['commit_seq']} "
-                "replayable"
-            )
+            epochs_io.read_manifest(root, fs, (), kind=scope, as_of_seq=lseq)
         except ValueError as e:
             expired += 1
-            print(
-                f"expired  index {name} commit_seq={info['commit_seq']}: {e}"
-            )
+            print(f"expired  {scope} {name} {label}={lseq}: {e}")
             continue
-        expired += _verify_pin(
-            "index", name, info.get("tags", {}), info["commit_seq"],
-            lambda p=info["path"]: epochs_io.read_tags(p, fs),
-            "commit_seq",
-        )
-    from feast_spark.io.manifest import ManifestedParquetTable
-
-    for name, info in sorted(doc.get("datasets", {}).items()):
-        t = ManifestedParquetTable(info["path"], fs=fs)
-        try:
-            t.path_as_of(info["commit_seq"])
-            print(
-                f"ok       dataset {name} commit_seq="
-                f"{info['commit_seq']} replayable"
-            )
-        except ValueError as e:
+        print(f"ok       {scope} {name} {label}={lseq} replayable")
+        # the doc records each layer's tag map, so a pin deleted or
+        # re-pointed since the snapshot is caught before a replay fails
+        if not (pin and tags.get(pin) == lseq):
+            continue
+        live = epochs_io.read_tags(root, fs).get(pin)
+        if live == lseq:
+            print(f"ok       {scope} {name} pin {pin!r} -> {label}={lseq}")
+        else:
             expired += 1
             print(
-                f"expired  dataset {name} commit_seq="
-                f"{info['commit_seq']}: {e}"
+                f"missing  {scope} {name} pin {pin!r}: live tag is "
+                f"{live!r} (deleted or re-pointed)"
             )
-            continue
-        expired += _verify_pin(
-            "dataset", name, info.get("tags", {}), info["commit_seq"],
-            t.tags, "commit_seq",
-        )
     # streaming watermarks recorded at snapshot time: "this run
-    # trained on data ingested through epoch E" per layer (r15)
-    layers = [("online", online.get("meta", {}))]
-    layers.append(
-        ("index", {n: i["meta"] for n, i in doc["indexes"].items()
-                   if "meta" in i})
-    )
-    layers.append(
-        ("dataset", {n: i["meta"]
-                     for n, i in doc.get("datasets", {}).items()
-                     if "meta" in i})
-    )
-    for scope, entries in layers:
-        for name, m in sorted(entries.items()):
+    # trained on data ingested through epoch E" per layer
+    for scope, section in (
+        ("online", "online"), ("index", "indexes"), ("dataset", "datasets")
+    ):
+        for name, m in sorted(run.ingest_meta[section].items()):
             stamps = " ".join(
                 f"{k}={m[k]}" for k in ("stream_epoch", "corpus_epoch")
                 if k in m
@@ -956,9 +846,10 @@ def main(argv: list[str] | None = None) -> int:
     )
     sp.add_argument(
         "--history", default=None, metavar="PATH",
-        help="print a persisted index's commit log (archived manifests "
-        "under _history/): seq, kind, epochs, stamps, and whether each "
-        "commit is still a readable as_of= time-travel target",
+        help="print the commit log of a persisted index, a snapshot "
+        "table (online view, dataset) or a registry file (archived "
+        "manifests under _history/): seq, a per-kind summary, tags, and "
+        "whether each commit is still a readable as_of= target",
     )
     sp.add_argument(
         "--provenance-orphans", default=None, metavar="RUN_DIR",
@@ -1156,12 +1047,17 @@ def main(argv: list[str] | None = None) -> int:
         import os
         import shutil
 
+        from feast_spark.registry import archive_root
+
         if os.path.isdir(args.online_path):
             shutil.rmtree(args.online_path)
             print(f"removed online store {args.online_path}")
         if os.path.exists(args.registry):
             os.unlink(args.registry)
             print(f"removed registry {args.registry}")
+        if os.path.isdir(archive_root(args.registry)):
+            shutil.rmtree(archive_root(args.registry))
+            print(f"removed registry history {archive_root(args.registry)}")
         return 0
     return 1
 

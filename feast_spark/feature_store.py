@@ -32,7 +32,7 @@ from feast_spark.inference import (
 )
 from feast_spark.online.store import OnlineStore, encode_request_keys
 from feast_spark.operators.asof_join import AsOfJoinSpec, as_of_join
-from feast_spark.operators.dedup import latest_per_key
+from feast_spark.operators.dedup import latest_per_key, time_range_filter
 from feast_spark.registry import Registry
 
 
@@ -195,10 +195,11 @@ class FeatureStore:
         259-274): online state for every view, then the registry
         content itself."""
         self.online_store.teardown(self.config.project)
+        # services first: a view a service projects cannot be deleted
+        self.registry.feature_services.clear()
         for v in list(self.registry.feature_views):
             self.registry.delete_feature_view(v)
         self.registry.entities.clear()
-        self.registry.feature_services.clear()
         self.registry.on_demand_views.clear()
         self.registry.commit()
 
@@ -615,9 +616,11 @@ class FeatureStore:
         )
 
     # -- materialization (§2.2) ----------------------------------------
-    def _pull_latest(
+    def _pull_window(
         self, view: FeatureView, start: datetime, end: datetime
     ) -> tuple[DataFrame, list[str], str, str | None]:
+        """The view's source rows with event time in [start, end), and
+        the (join keys, ts column, created column) that order them."""
         src = view.batch_source
         if src is None:
             raise ValueError(f"view {view.name!r} has no batch source")
@@ -625,10 +628,8 @@ class FeatureStore:
         ts_col = infer_event_timestamp_column(fdf, src.event_timestamp_column)
         join_keys = self._join_keys_for_view(view)
         created = src.created_timestamp_column or None
-        latest = latest_per_key(
-            fdf, join_keys, ts_col, created_col=created, start=start, end=end
-        )
-        return latest, join_keys, ts_col, created
+        window = time_range_filter(fdf, ts_col, start, end)
+        return window, join_keys, ts_col, created
 
     def materialize(
         self,
@@ -636,20 +637,26 @@ class FeatureStore:
         end: datetime,
         feature_views: list[str] | None = None,
     ) -> None:
-        """A1 over half-open [start, end) -> online upsert (S8), then
-        record the interval (M2)."""
+        """Upsert each view's source rows with event time in the
+        half-open [start, end) into the online store (S8), then record
+        the interval (M2).  The backend's ``online_write_batch`` keeps
+        the newest (event_ts, created_ts) row per key (A1) over the
+        window and what it already holds, so the window is handed over
+        unreduced."""
         views = (
             [self.registry.get_feature_view(n) for n in feature_views]
             if feature_views
             else [v for v in self.registry.list_feature_views() if v.online]
         )
         for view in views:
-            latest, join_keys, ts_col, created = self._pull_latest(view, start, end)
+            window, join_keys, ts_col, created = self._pull_window(
+                view, start, end
+            )
             self.online_store.online_write_batch(
                 self.spark,
                 self.config.project,
                 view.name,
-                latest,
+                window,
                 join_keys,
                 ts_col,
                 created,
@@ -692,17 +699,23 @@ class FeatureStore:
 
         This is the hand-off point to a reference-compatible serving
         stack (Redis/Datastore/DynamoDB writers consume exactly these
-        rows).  Same A1 latest-per-key pull as :meth:`materialize`;
-        the explode to wire rows is an Arrow-batched per-row map with
-        no extra shuffle.  ``path`` writes parquet and returns the
-        frame either way.  ``key_version=1`` is bit-compatible with the
-        reference (int64 keys limited to int32 range — its struct
-        quirk); 2 widens to 8 bytes.
+        rows).  The [start, end) window of :meth:`materialize`, reduced
+        to the newest row per key (A1); the explode to wire rows is an
+        Arrow-batched per-row map with no extra shuffle.  ``path``
+        writes parquet and returns the frame either way.
+        ``key_version=1`` is bit-compatible with the reference (int64
+        keys limited to int32 range — its struct quirk); 2 widens to 8
+        bytes.
         """
         from feast_spark.functions.value_proto import to_online_format
 
         view = self.registry.get_feature_view(view_name)
-        latest, join_keys, ts_col, created = self._pull_latest(view, start, end)
+        window, join_keys, ts_col, created = self._pull_window(
+            view, start, end
+        )
+        latest = latest_per_key(
+            window, join_keys, ts_col, created_col=created
+        )
         wire = to_online_format(
             latest,
             join_keys,
@@ -840,26 +853,8 @@ class FeatureStore:
             # store's NAIVE-UTC event timestamps — an aware cutoff
             # would TypeError mid-classification
             as_of = as_of.astimezone(timezone.utc).replace(tzinfo=None)
-        refs = (
-            features.feature_refs
-            if isinstance(features, FeatureService)
-            else list(features)
-        )
-        odfv_feats: dict[str, list[str]] = {}
-        base_refs: list[str] = []
-        for ref in refs:
-            head = ref.split(":", 1)[0]
-            if head in self.registry.on_demand_views:
-                odfv_feats.setdefault(head, []).append(ref.split(":", 1)[1])
-            else:
-                base_refs.append(ref)
-        seen = set(base_refs)
-        for name in odfv_feats:
-            for src_ref in self.registry.get_on_demand_view(name).sources:
-                if src_ref not in seen:
-                    base_refs.append(src_ref)
-                    seen.add(src_ref)
-
+        explicit_base, base_refs, odfv_feats = self._split_refs(features)
+        self._validate_out_names(explicit_base, odfv_feats, False)
         grouped = self._group_feature_refs(base_refs)
         result: dict[str, list] = {
             c: [r[c] for r in entity_rows]
@@ -950,7 +945,17 @@ class FeatureStore:
                         "PRESENT" if v is not None else "NOT_FOUND"
                         for v in vals
                     ]
-        result["__statuses"] = statuses
+        # the caller sees what it asked for: auto-fetched on-demand
+        # sources are dropped, as in batch retrieval
+        wanted = {
+            *(entity_rows[0] if entity_rows else ()),
+            *(ref.split(":", 1)[1] for ref in explicit_base),
+            *(f for feats in odfv_feats.values() for f in feats),
+        }
+        result = {k: v for k, v in result.items() if k in wanted}
+        result["__statuses"] = {
+            k: v for k, v in statuses.items() if k in wanted
+        }
         return result
 
     # -- training-run provenance ----------------------------------------

@@ -469,6 +469,7 @@ def retention_window(
     retain_last: int,
     head_seq: int | None = None,
     read_manifests: bool = True,
+    served: list[int] | None = None,
 ) -> tuple[set[int], set[int], list[dict]]:
     """The vacuum retention window: ``(protected_epochs, keep_seqs,
     retained_manifests)`` covering the ``retain_last`` most recent
@@ -480,12 +481,13 @@ def retention_window(
     Iceberg expire-snapshots discipline: the time-travel window and the
     in-flight-reader grace window are the same mechanism, because a
     reader that resolved manifest N scans exactly the directories
-    manifest N lists."""
+    manifest N lists.  ``served`` is :func:`served_seqs` when the
+    caller already listed it."""
     if retain_last < 0:
         raise ValueError(f"retain_last must be >= 0, got {retain_last}")
     if head_seq is None:
         head_seq = head_commit_seq(path, fs)
-    seqs = served_seqs(path, fs, head_seq)
+    seqs = served_seqs(path, fs, head_seq) if served is None else served
     keep = set(seqs[-retain_last:]) if retain_last > 0 else set()
     if head_seq:
         keep.add(head_seq)
@@ -509,15 +511,19 @@ def expire_history(
     fs: StoreFS,
     keep_seqs: set[int],
     head_file: str | None = None,
+    served: list[int] | None = None,
 ) -> list[int]:
     """Delete the served commits' archived manifests outside
     ``keep_seqs``; returns the expired seqs.  :func:`vacuum` runs it
     BEFORE any data directory is deleted, so every archived seq that
     survives a failed delete or a crash still has all of its
     directories, and an expired target fails with the friendly range
-    error instead of a missing-path read mid-scan."""
+    error instead of a missing-path read mid-scan.  ``served`` is
+    :func:`served_seqs` when the caller already listed it."""
+    if served is None:
+        served = served_seqs(path, fs, head_file=head_file)
     removed = []
-    for s in served_seqs(path, fs, head_file=head_file):
+    for s in served:
         if s not in keep_seqs:
             fs.delete(history_manifest_path(path, s))
             removed.append(s)
@@ -538,14 +544,17 @@ def vacuum(
     ``sweep(head, protected_epochs, retained_manifests)`` deletes the
     layer's data directories that no kept commit references.  A layer
     without data directories (the registry) passes ``sweep=None`` and
-    the kept manifests are never read.  Returns ``(expired_seqs,
+    the kept manifests are never read.  One head read and one archive
+    listing serve the whole pass.  Returns ``(expired_seqs,
     sweep_result)``."""
     with retention_lock(path, fs, head_file):
         head = read_head()
+        head_seq = commit_seq_of(head)
+        served = served_seqs(path, fs, head_seq)
         protected, keep, retained = retention_window(
-            path, fs, retain_last, commit_seq_of(head), sweep is not None
+            path, fs, retain_last, head_seq, sweep is not None, served
         )
-        expired = expire_history(path, fs, keep, head_file)
+        expired = expire_history(path, fs, keep, served=served)
         if sweep is None:
             return expired, None
         return expired, sweep(head, protected, retained)

@@ -2,13 +2,14 @@
 coordinates of every layer at training time, and the verb that re-pins
 all of them for a faithful replay.
 
-The three layers travel in time through the one commit core,
+Every layer travels in time through the one commit core,
 ``io/epochs.py`` (registry versions, ``registry.py load_as_of``; index
-manifests, ``as_of=``; online snapshots, ``io/manifest.py
-path_as_of``), and they answer "what was live when model X trained"
-only if someone recorded the coordinates AT training time.
-:func:`snapshot_provenance` is that record — the MLflow-run-tag /
-Delta-commit-pin discipline applied across all three layers at once:
+manifests, ``as_of=``; online snapshots and datasets,
+``io/manifest.py path_as_of``), and they answer "what was live when
+model X trained" only if someone recorded the coordinates AT training
+time.  :func:`snapshot_provenance` is that record — the
+MLflow-run-tag / Delta-commit-pin discipline applied across all layers
+at once:
 
     prov = store.snapshot_provenance(
         index_paths={"bm25": bm25_path}, path=run_dir + "/provenance.json"
@@ -20,16 +21,25 @@ Delta-commit-pin discipline applied across all three layers at once:
     bm25_index_topk(..., as_of=run.index_as_of["bm25"])
 
 The snapshot reads ONLY committed heads (registry seq, per-view online
-manifest seq, per-index manifest commit_seq + tags) — no Spark job, a
-few JSON reads — so stamping every training run is control-plane cheap.
-Replay durability is the layers' own retention windows
-(the registry's newest 50 versions / ``keep_versions`` /
-``*_index_vacuum retain_last``)
-— unless the run is PINNED: ``pin_tag="june-run"`` tags every recorded
-index commit and online snapshot (tagged commits are GC/vacuum-exempt
-until deleted), and ``embed_registry`` (default) copies the small
-registry payload into the JSON itself, so a pinned run replays for as
-long as someone keeps its provenance file and tags.
+manifest seq, per-index and per-dataset commit_seq + tags) — no Spark
+job, a few JSON reads — so stamping every training run is
+control-plane cheap.  Replay durability is the layers' own retention
+windows (the registry's newest 50 versions / ``keep_versions`` /
+``*_index_vacuum retain_last``) — unless the run is PINNED:
+``pin_tag="june-run"`` tags every recorded online snapshot, index
+commit and dataset commit (tagged commits are GC/vacuum-exempt until
+deleted), and ``embed_registry`` (default) copies the small registry
+payload into the JSON itself, so a pinned run replays for as long as
+someone keeps its provenance file and tags.
+
+:func:`record_layers` is the one list of a record's tag-capable layers
+(online views, indexes, datasets, each with its epoch root): the pin
+loop, ``provenance describe``, ``doctor --provenance-orphans`` and
+:attr:`RunReplay.ingest_meta` all walk it, and every check goes
+through ``io/epochs.py`` (``read_manifest(as_of_seq=)``,
+``read_tags``, ``tag_commit``).  The registry has no tags and is
+checked through :attr:`RunReplay.registry`, so a version the archive
+window expired still replays from the embedded payload.
 
 The reference keeps no cross-layer run record (its registry is a
 single mutable proto, sdk/python/feast/registry.py); this extends its
@@ -40,6 +50,7 @@ story a 100 TB training pipeline audits against.
 from __future__ import annotations
 
 import json
+import posixpath
 import time
 from datetime import datetime, timezone
 
@@ -55,6 +66,34 @@ PROVENANCE_FORMAT = 1
 #: replays the empty pre-history state (NOT_FOUND rows) — exactly what
 #: serving returned then.
 NEVER_MATERIALIZED = 0
+
+#: the record section holding each layer scope
+_SECTION = {"online": "online", "index": "indexes", "dataset": "datasets"}
+
+
+def record_layers(doc: dict, online_root: str | None = None):
+    """Every tag-capable layer of provenance record ``doc``, as
+    ``(scope, name, root, seq, tags, meta)``: each online view (root
+    ``<online path>/<project>/<view>``), then each index, then each
+    dataset, names sorted within a scope.  ``online_root`` stands in
+    for a record that predates the recorded online path; with neither,
+    an online root is None.  The registry is not among them: it has no
+    tags, and it replays through :attr:`RunReplay.registry`."""
+    online = doc["online"]
+    oroot = online.get("path") or online_root
+    for view, seq in sorted(online.get("views", {}).items()):
+        yield (
+            "online", view,
+            posixpath.join(oroot, doc["project"], view) if oroot else None,
+            seq, online.get("tags", {}).get(view, {}),
+            online.get("meta", {}).get(view, {}),
+        )
+    for scope in ("index", "dataset"):
+        for name, info in sorted(doc.get(_SECTION[scope], {}).items()):
+            yield (
+                scope, name, info["path"], info["commit_seq"],
+                info.get("tags", {}), info.get("meta", {}),
+            )
 
 
 def snapshot_provenance(
@@ -77,10 +116,10 @@ def snapshot_provenance(
     JSON (atomic write through the registry's filesystem).  ``note``
     is a free-form caller tag (model name, run id).
 
-    ``pin_tag`` makes the run's pins VACUUM-IMMUNE: every recorded
-    index commit is tagged (io/epochs.py tag table) and every
-    materialized view's snapshot and dataset commit is tagged
-    (the same io/epochs.py tag table), so daily vacuums / ``keep_versions`` GC can
+    ``pin_tag`` makes the run's pins VACUUM-IMMUNE: every layer of
+    :func:`record_layers` with a commit (each materialized view's
+    snapshot, each index commit, each dataset commit) is tagged in its
+    io/epochs.py tag table, so daily vacuums / ``keep_versions`` GC can
     never expire what this run replays — delete the tags when the run
     is retired.
 
@@ -105,47 +144,34 @@ def snapshot_provenance(
         # a head from before the commit core counts with a legacy seq
         registry_seq = epochs_io.commit_seq_of(registry_payload) or None
 
-    online: dict = {"type": type(store.online_store).__name__}
-    if getattr(store.online_store, "supports_time_travel", False):
+    project = store.config.project
+    ostore = store.online_store
+    online: dict = {"type": type(ostore).__name__}
+    if getattr(ostore, "supports_time_travel", False):
         # the root is recorded so `provenance describe` can verify the
         # online pins from the document alone, like the registry path
-        online["path"] = getattr(store.online_store, "root", None)
+        online["path"] = getattr(ostore, "root", None)
         views = {}
-        views_tags: dict[str, dict] = {}
         views_meta: dict[str, dict] = {}
         for view in reg.list_feature_views():
-            seq = store.online_store.snapshot_seq(
-                store.config.project, view.name
+            seq = ostore.snapshot_seq(project, view.name)
+            views[view.name] = NEVER_MATERIALIZED if seq is None else seq
+            # last-commit manifest meta: the streaming sink's
+            # stream_epoch watermark — "ingested through epoch E", the
+            # missing coordinate for a view fed by a query that never
+            # stops writing
+            meta = {} if seq is None else ostore.snapshot_meta(
+                project, view.name
             )
-            views[view.name] = (
-                NEVER_MATERIALIZED if seq is None else seq
-            )
-            if seq is not None:
-                tags = store.online_store.snapshot_tags(
-                    store.config.project, view.name
-                )
-                if tags:
-                    views_tags[view.name] = tags
-                # last-commit manifest meta: the streaming sink's
-                # stream_epoch watermark — "ingested through epoch E",
-                # the missing coordinate for a view fed by a query
-                # that never stops writing
-                m = store.online_store.snapshot_meta(
-                    store.config.project, view.name
-                )
-                if m:
-                    views_meta[view.name] = m
+            if meta:
+                views_meta[view.name] = meta
         online["views"] = views
-        if views_tags:
-            online["tags"] = views_tags
         if views_meta:
             online["meta"] = views_meta
     else:
         # KV backends overwrite in place — recorded honestly so replay
         # raises instead of silently serving head
         online["supports_time_travel"] = False
-
-    from feast_spark.io.manifest import ManifestedParquetTable
 
     ifs = index_fs or LocalFS()
     indexes = {}
@@ -155,7 +181,6 @@ def snapshot_provenance(
             "path": ipath,
             "commit_seq": manifest["commit_seq"],
             "kind": manifest.get("kind"),
-            "tags": epochs_io.read_tags(ipath, ifs),
         }
         # streaming sidecar watermarks (index co-sinks stamp
         # stream_epoch; paired sinks add the corpus_epoch pair token)
@@ -169,96 +194,17 @@ def snapshot_provenance(
 
     datasets = {}
     for name, droot in (dataset_paths or {}).items():
-        t = ManifestedParquetTable(droot, fs=ifs)
-        seq = t.head()[1]
+        head = epochs_io.current_head(droot, ifs)
+        seq = epochs_io.commit_seq_of(head)
         if not seq:
             raise ValueError(
                 f"no committed dataset at {droot} — commit it with "
                 "RetrievalJob.to_dataset / datasets.commit_dataset "
                 "before recording it"
             )
-        datasets[name] = {"path": droot, "commit_seq": seq,
-                          "tags": t.tags()}
-        meta = t.current_meta()
-        if meta:
-            datasets[name]["meta"] = meta
-
-    # pins are applied only after EVERY coordinate was read and
-    # validated above — a failure before this point leaves no orphaned
-    # vacuum-immune tags behind.  The loop itself is rollback-protected:
-    # a failure pinning layer N (e.g. a concurrent vacuum GC'd a
-    # recorded seq between the coordinate read and the tag call) undoes
-    # the tags already applied to layers 1..N-1 — otherwise they would
-    # sit vacuum-immune forever with NO provenance file referencing
-    # them (the JSON is only written after this block).  Each undo
-    # restores the tag's PRIOR state: deleted if it did not exist,
-    # re-pointed if this call overwrote an existing pin.
-    if pin_tag is not None:
-        undo: list = []
-
-        def _undo_all() -> None:
-            for fn in reversed(undo):
-                try:
-                    fn()
-                except Exception:
-                    pass  # best-effort: never mask the original error
-
-        try:
-            if "views" in online:
-                for view_name, seq in online["views"].items():
-                    if seq == NEVER_MATERIALIZED:
-                        continue
-                    prior = online.get("tags", {}).get(
-                        view_name, {}
-                    ).get(pin_tag)
-                    store.online_store.tag_snapshot(
-                        store.config.project, view_name, pin_tag, seq
-                    )
-                    undo.append(
-                        (lambda v=view_name, p=prior:
-                         store.online_store.delete_snapshot_tag(
-                             store.config.project, v, pin_tag)
-                         if p is None else
-                         store.online_store.tag_snapshot(
-                             store.config.project, v, pin_tag, p))
-                    )
-            for info in indexes.values():
-                prior = info["tags"].get(pin_tag)
-                epochs_io.tag_commit(
-                    info["path"], ifs, pin_tag, info["commit_seq"]
-                )
-                undo.append(
-                    (lambda ip=info["path"], p=prior:
-                     epochs_io.delete_tag(ip, ifs, pin_tag)
-                     if p is None else
-                     epochs_io.tag_commit(ip, ifs, pin_tag, p))
-                )
-                info["tags"] = epochs_io.read_tags(info["path"], ifs)
-            for info in datasets.values():
-                t = ManifestedParquetTable(info["path"], fs=ifs)
-                prior = info["tags"].get(pin_tag)
-                t.tag(pin_tag, info["commit_seq"])
-                undo.append(
-                    (lambda tt=t, p=prior:
-                     tt.delete_tag(pin_tag) if p is None
-                     else tt.tag(pin_tag, p))
-                )
-                info["tags"] = t.tags()
-        except BaseException:
-            _undo_all()
-            raise
-        # the doc records the online pin state too (mirroring the
-        # index/dataset entries), so `provenance describe` can show
-        # and verify the online pin_tag, not just the seq
-        if "views" in online:
-            vt = dict(online.get("tags", {}))
-            for view_name, seq in online["views"].items():
-                if seq != NEVER_MATERIALIZED:
-                    vt[view_name] = store.online_store.snapshot_tags(
-                        store.config.project, view_name
-                    )
-            if vt:
-                online["tags"] = vt
+        datasets[name] = {"path": droot, "commit_seq": seq}
+        if head.get("meta"):
+            datasets[name]["meta"] = head["meta"]
 
     doc = {
         "format": PROVENANCE_FORMAT,
@@ -266,12 +212,34 @@ def snapshot_provenance(
         "created_at_epoch_s": time.time(),
         "note": note,
         "pin_tag": pin_tag,
-        "project": store.config.project,
+        "project": project,
         "registry": {"path": reg.path, "seq": registry_seq},
         "online": online,
         "indexes": indexes,
         "datasets": datasets,
     }
+
+    def fs_of(scope: str) -> StoreFS:
+        return ostore.fs if scope == "online" else ifs
+
+    # pins are applied only after EVERY coordinate was read and
+    # validated above — a failure before this point leaves no orphaned
+    # vacuum-immune tags behind
+    if pin_tag is not None:
+        _pin(doc, pin_tag, fs_of)
+    # the record carries each layer's tag table, so `provenance
+    # describe` can verify a pin, not just the seq: an index or dataset
+    # entry always, the online section only for views with tags
+    online_tags = {}
+    for scope, name, root, _seq, _tags, _meta in record_layers(doc):
+        tags = epochs_io.read_tags(root, fs_of(scope))
+        if scope != "online":
+            doc[_SECTION[scope]][name]["tags"] = tags
+        elif tags:
+            online_tags[name] = tags
+    if online_tags:
+        online["tags"] = online_tags
+
     if embed_registry and registry_payload is not None:
         doc["registry"]["payload"] = registry_payload
     if path is not None:
@@ -279,6 +247,36 @@ def snapshot_provenance(
             path, json.dumps(doc, indent=1).encode()
         )
     return doc
+
+
+def _pin(doc: dict, pin_tag: str, fs_of) -> None:
+    """Tag every committed layer of ``doc`` with ``pin_tag``.  A failure
+    pinning layer N (e.g. a concurrent vacuum GC'd a recorded seq
+    between the coordinate read and the tag call) undoes the tags
+    already applied to layers 1..N-1 — otherwise they would sit
+    vacuum-immune forever with NO provenance file referencing them (the
+    JSON is only written afterwards).  Each undo restores the tag's
+    PRIOR state: deleted if it did not exist, re-pointed if this call
+    overwrote an existing pin."""
+    undo: list = []
+    try:
+        for scope, _name, root, seq, _tags, _meta in record_layers(doc):
+            if seq == NEVER_MATERIALIZED:
+                continue
+            fs = fs_of(scope)
+            prior = epochs_io.read_tags(root, fs).get(pin_tag)
+            epochs_io.tag_commit(root, fs, pin_tag, seq)
+            undo.append((root, fs, prior))
+    except BaseException:
+        for root, fs, prior in reversed(undo):
+            try:
+                if prior is None:
+                    epochs_io.delete_tag(root, fs, pin_tag)
+                else:
+                    epochs_io.tag_commit(root, fs, pin_tag, prior)
+            except Exception:
+                pass  # best-effort: never mask the original error
+        raise
 
 
 def load_provenance(path: str, fs: StoreFS | None = None) -> dict:
@@ -312,6 +310,8 @@ class RunReplay:
         self.doc = doc
         self._registry_fs = registry_fs
         self._registry = None
+        #: set once :attr:`registry` resolved from the embedded payload
+        self.registry_from_payload = False
 
     @property
     def registry(self):
@@ -339,6 +339,7 @@ class RunReplay:
                     info["payload"], path=info["path"],
                     fs=self._registry_fs, seq=info["seq"],
                 )
+                self.registry_from_payload = True
         return self._registry
 
     @property
@@ -371,20 +372,11 @@ class RunReplay:
         trained on data ingested through epoch E" per layer — the
         coordinate a snapshot seq alone cannot express when the head
         advances every micro-batch."""
-        doc = self.doc
-        return {
-            "online": dict(doc["online"].get("meta", {})),
-            "indexes": {
-                n: i["meta"]
-                for n, i in doc["indexes"].items()
-                if "meta" in i
-            },
-            "datasets": {
-                n: i["meta"]
-                for n, i in doc.get("datasets", {}).items()
-                if "meta" in i
-            },
-        }
+        out: dict = {"online": {}, "indexes": {}, "datasets": {}}
+        for scope, name, _root, _seq, _tags, meta in record_layers(self.doc):
+            if meta:
+                out[_SECTION[scope]][name] = meta
+        return out
 
     @property
     def dataset_as_of(self) -> dict[str, int]:

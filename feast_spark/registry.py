@@ -51,8 +51,9 @@ _SECTIONS = (
 )
 
 
-def _root(path: str) -> str:
-    """The epoch root holding the archive of the registry at ``path``."""
+def archive_root(path: str) -> str:
+    """The epoch root holding the archive (and tag table) of the
+    registry at ``path``."""
     return f"{path}.history"
 
 
@@ -63,6 +64,20 @@ def _canonical(payload: dict) -> dict[tuple[str, str], str]:
         for section in _SECTIONS
         for d in payload.get(section, [])
     }
+
+
+def _check_projections(payload: dict, path: str) -> None:
+    """Raise if a feature service in ``payload`` projects a view the
+    payload does not hold."""
+    views = {d["name"] for d in payload.get("feature_views", [])}
+    for s in payload.get("feature_services", []):
+        for p in s.get("projections", []):
+            if p["view"] not in views:
+                raise ValueError(
+                    f"registry at {path}: feature service {s['name']!r} "
+                    f"projects feature view {p['view']!r}, which the "
+                    "registry does not hold"
+                )
 
 
 class Registry:
@@ -109,6 +124,15 @@ class Registry:
     def delete_feature_view(self, name: str) -> None:
         if name not in self.feature_views:
             raise FeatureViewNotFoundError(name)
+        users = sorted(
+            s.name for s in self.feature_services.values()
+            if any(p.view.name == name for p in s.features)
+        )
+        if users:
+            raise ValueError(
+                f"feature view {name!r} is projected by feature services "
+                f"{users} — delete or re-apply them first"
+            )
         del self.feature_views[name]
 
     # -- getters -------------------------------------------------------
@@ -158,9 +182,13 @@ class Registry:
         state is what was committed, merge included."""
         for _ in range(COMMIT_ATTEMPTS):
             payload = self._payload()
+            # a merge can pair one writer's view deletion with another
+            # writer's new service on that view: refuse before the head
+            # is written, or every later load of the file would fail
+            _check_projections(payload, self.path)
             try:
                 head = epochs_io.commit_manifest(
-                    _root(self.path), self.fs,
+                    archive_root(self.path), self.fs,
                     {**payload, "commit_seq": self._seq},
                     head_file=self.path,
                 )
@@ -169,7 +197,7 @@ class Registry:
                 continue
             self._seq, self._base = head["commit_seq"], _canonical(payload)
             epochs_io.vacuum(
-                _root(self.path), self.fs, self.KEEP_HISTORY,
+                archive_root(self.path), self.fs, self.KEEP_HISTORY,
                 lambda: self.read_payload(self.path, fs=self.fs),
                 None, head_file=self.path,
             )
@@ -210,7 +238,7 @@ class Registry:
     def history_seqs(self) -> list[int]:
         """Sorted archived registry versions (the load_as_of targets)."""
         return epochs_io.served_seqs(
-            _root(self.path), self.fs, head_file=self.path
+            archive_root(self.path), self.fs, head_file=self.path
         )
 
     @classmethod
@@ -223,13 +251,15 @@ class Registry:
         fs = fs or LocalFS()
         try:
             return epochs_io.read_manifest(
-                _root(path), fs, (), kind="registry", as_of_seq=seq,
+                archive_root(path), fs, (), kind="registry", as_of_seq=seq,
                 head_file=path,
             )
         except ValueError:
             if seq is None:
                 raise
-            seqs = epochs_io.served_seqs(_root(path), fs, head_file=path)
+            seqs = epochs_io.served_seqs(
+                archive_root(path), fs, head_file=path
+            )
             window = (
                 f"archived seqs {seqs[0]}..{seqs[-1]}" if seqs
                 else "no archived versions"
@@ -254,7 +284,9 @@ class Registry:
         fs = fs or LocalFS()
         if isinstance(as_of, datetime):
             payload = epochs_io.manifest_at(
-                epochs_io.served_manifests(_root(path), fs, head_file=path),
+                epochs_io.served_manifests(
+                    archive_root(path), fs, head_file=path
+                ),
                 as_of, path, "registry version",
             )
         else:
@@ -310,6 +342,7 @@ class Registry:
         self.entities = by_name(Entity, "entities")
         self.feature_views = by_name(FeatureView, "feature_views")
         # services need views resolved
+        _check_projections(payload, self.path)
         self.feature_services = {}
         for s in payload.get("feature_services", []):
             projections = [

@@ -5,7 +5,7 @@ delegates execution to externally-launched Spark jobs
 (docs/reference/feast-and-spark.md).  Here the capability is native:
 
     readStream -> parse payload -> watermark(ttl) -> foreachBatch:
-        per-batch latest-per-key dedup -> online upsert
+        online upsert (the backend keeps the newest row per key)
 
 Semantics are identical to batch ``materialize`` (A1 + created_ts
 tie-break + newest-wins upsert), so ingestion order does not matter and
@@ -23,7 +23,6 @@ from pyspark.sql.types import StructType
 from feast_spark.data_source import KafkaSource
 from feast_spark.feature_view import FeatureView
 from feast_spark.online.store import OnlineStore
-from feast_spark.operators.dedup import latest_per_key
 
 
 def decode_payload(
@@ -102,7 +101,7 @@ def stream_to_online(
     """Start the stream-materialization query.  Returns the
     StreamingQuery handle; call ``.awaitTermination()`` on it.
 
-    Watermarking: the per-batch dedup + newest-wins upsert make the sink
+    Watermarking: the backend's newest-wins upsert makes the sink
     idempotent and order-insensitive, so a watermark is not needed for
     correctness — only to bound state if a stateful op is added upstream.
     """
@@ -115,12 +114,13 @@ def stream_to_online(
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if not batch_df.head(1):
             return
-        latest = latest_per_key(batch_df, join_keys, ts_col, created_col)
+        # every backend's online_write_batch keeps the newest
+        # (event_ts, created_ts) row per key, the batch's own included
         store.online_write_batch(
             batch_df.sparkSession,
             project,
             view.name,
-            latest,
+            batch_df,
             join_keys,
             ts_col,
             created_col,

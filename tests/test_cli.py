@@ -71,6 +71,7 @@ def test_registry_dump_and_teardown(tmp_path, capsys):
     assert payload["entities"][0]["name"] == "driver"
     assert main(base + ["teardown"]) == 0
     assert not os.path.exists(reg)
+    assert not os.path.exists(reg + ".history")
 
 
 def test_cli_expire_online(spark, tmp_path, monkeypatch):

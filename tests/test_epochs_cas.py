@@ -81,6 +81,51 @@ def test_pre_cas_manifest_upgrades_on_first_commit(tmp_path):
     assert _read(root, fs)["commit_seq"] == 1
 
 
+class _CountingFS(LocalFS):
+    """LocalFS that counts head reads and archive listings per path."""
+
+    def __init__(self):
+        self.reads, self.listings = [], []
+
+    def read_bytes(self, path):
+        self.reads.append(path)
+        return super().read_bytes(path)
+
+    def list_files(self, path):
+        self.listings.append(path)
+        return super().list_files(path)
+
+
+def test_vacuum_pass_reads_head_and_lists_archive_once(tmp_path, monkeypatch):
+    """The retention pass after a registry commit hands one head read
+    and one ``_history/`` listing from the keep-set step to the expire
+    step."""
+    from feast_spark.entity import Entity
+    from feast_spark.registry import Registry
+
+    fs = _CountingFS()
+    path = str(tmp_path / "registry.json")
+    reg = Registry(path, fs=fs)
+    for name in ("a", "b", "c"):
+        reg.apply_entity(Entity(name=name, join_key=f"{name}_id"))
+        reg.commit()
+    passes = []
+    vacuum = epochs_io.vacuum
+
+    def counted(*args, **kwargs):
+        fs.reads.clear()
+        fs.listings.clear()
+        out = vacuum(*args, **kwargs)
+        passes.append((fs.reads.count(path), len(fs.listings)))
+        return out
+
+    monkeypatch.setattr(epochs_io, "vacuum", counted)
+    reg.apply_entity(Entity(name="d", join_key="d_id"))
+    reg.commit()
+    assert passes == [(1, 1)]
+    assert reg.history_seqs() == [1, 2, 3, 4]
+
+
 def test_operator_level_append_race_is_loud(spark, tmp_path):
     """The realistic interleave: a writer holds a manifest read while
     another append lands — its commit must raise, and the committed

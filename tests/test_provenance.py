@@ -274,18 +274,18 @@ def test_pin_failure_rolls_back_applied_tags(
     ds = str(tmp_path / "rb_ds")
     commit_dataset(_docs(spark, range(3)), ds)
 
-    # datasets are pinned LAST — failing there (and ONLY there: the
-    # online pin shares ManifestedParquetTable.tag, so the injection
-    # is scoped to the dataset root) exercises rollback of both
-    # earlier layers (online views, then indexes)
-    orig_tag = ManifestedParquetTable.tag
+    # datasets are pinned LAST — failing there (and ONLY there: every
+    # layer pins through epochs_io.tag_commit, so the injection is
+    # scoped to the dataset root) exercises rollback of both earlier
+    # layers (online views, then indexes)
+    orig_tag = epochs_io.tag_commit
 
-    def _boom(self, name, seq=None):
-        if self.root == ds:
+    def _boom(path, fs, name, seq):
+        if path == ds:
             raise OSError("injected: dataset tag I/O failure")
-        return orig_tag(self, name, seq)
+        return orig_tag(path, fs, name, seq)
 
-    monkeypatch.setattr(ManifestedParquetTable, "tag", _boom)
+    monkeypatch.setattr(epochs_io, "tag_commit", _boom)
     prov_path = str(tmp_path / "rb.json")
     with pytest.raises(OSError, match="injected"):
         store.snapshot_provenance(
