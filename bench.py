@@ -419,7 +419,7 @@ def main() -> None:
         # the read is driver-side; the slot's frame only carries the
         # per-key found flags for the harness's count()
         hits = _online_store.online_store.online_read(
-            spark, _online_store.config.project, "user_latest",
+            _online_store.config.project, "user_latest",
             _online_keys, ["value"],
         )
         return local_df(spark, [(h is not None,) for h in hits], "found BOOLEAN")

@@ -117,9 +117,7 @@ class RetrievalJob:
         return self._df.toPandas()
 
     def to_arrow(self):
-        import pyarrow as pa
-
-        return pa.Table.from_pandas(self._df.toPandas())
+        return self._df.toArrow()
 
     def to_parquet(self, path: str, mode: str = "overwrite") -> None:
         self._df.write.mode(mode).parquet(path)
@@ -783,8 +781,11 @@ class FeatureStore:
         Served from the driver: each request row's join keys are
         encoded once in Python (``online/store.encode_request_keys``)
         and each view's backend answers ``online_read`` with one row
-        per key; the request never becomes a DataFrame.  An empty
-        ``entity_rows`` returns ``[]`` for every feature and status.
+        per key; the request never becomes a DataFrame, and no Spark
+        code runs unless a Spark-mode on-demand view is requested (a
+        ``FeatureStore(None, config)`` serves a materialized store).
+        An empty ``entity_rows`` returns ``[]`` for every feature and
+        status.
 
         Default statuses are PRESENT/NOT_FOUND — exactly what the
         reference's Python serving path emits
@@ -881,8 +882,7 @@ class FeatureStore:
                 kw = {} if as_of is None else {"as_of": as_of}
             # one dict per request row, None on a miss
             ordered = self.online_store.online_read(
-                self.spark, self.config.project, view.name,
-                encoded[join_keys], feats, **kw,
+                self.config.project, view.name, encoded[join_keys], feats, **kw
             )
             if full_field_statuses:
                 cutoff = None

@@ -49,14 +49,13 @@ _DS_PUT_CHUNK = 400
 _SCHEMA_KEY = "__feast_schema__"
 
 
-def _is_conditional_fail(ex: Exception) -> bool:
-    """True when a DynamoDB put lost its newest-wins condition — works
-    for both real botocore ClientError and injected fakes that carry
-    the same ``.response`` shape."""
+def _error_code(ex: Exception) -> str | None:
+    """The AWS error code of ``ex`` (e.g. ``ConditionalCheckFailedException``
+    when a put lost its newest-wins condition) — works for both real
+    botocore ClientError and injected fakes that carry the same
+    ``.response`` shape; None for any other exception."""
     resp = getattr(ex, "response", None)
-    if not isinstance(resp, dict):
-        return False
-    return resp.get("Error", {}).get("Code") == "ConditionalCheckFailedException"
+    return resp.get("Error", {}).get("Code") if isinstance(resp, dict) else None
 
 
 class DynamoDBOnlineStore:
@@ -99,11 +98,9 @@ class DynamoDBOnlineStore:
             if waiter is not None:  # real boto3: block until ACTIVE
                 waiter("table_exists").wait(TableName=name)
         except Exception as ex:  # reference dynamodb.py:75-80
-            resp = getattr(ex, "response", None)
-            code = (
-                resp.get("Error", {}).get("Code") if isinstance(resp, dict) else None
-            )
-            if code not in ("ResourceInUseException", "TableAlreadyExistsException"):
+            if _error_code(ex) not in (
+                "ResourceInUseException", "TableAlreadyExistsException"
+            ):
                 raise
         self._known_tables.add(name)
 
@@ -157,7 +154,7 @@ class DynamoDBOnlineStore:
                         },
                     )
                 except Exception as ex:
-                    if not _is_conditional_fail(ex):
+                    if _error_code(ex) != "ConditionalCheckFailedException":
                         raise  # stale incoming row: stored value is newer
 
     def _lookup(
@@ -169,11 +166,7 @@ class DynamoDBOnlineStore:
                 TableName=name, Key={"entity_id": {"S": _SCHEMA_KEY}}
             )
         except Exception as ex:
-            resp = getattr(ex, "response", None)
-            code = (
-                resp.get("Error", {}).get("Code") if isinstance(resp, dict) else None
-            )
-            if code == "ResourceNotFoundException":
+            if _error_code(ex) == "ResourceNotFoundException":
                 return [], None
             raise
         item = got.get("Item")
@@ -181,7 +174,7 @@ class DynamoDBOnlineStore:
             return [], None
         schema_json = item["payload"]["S"]
         payloads: list[str] = []
-        for chunk in _chunked(iter(keys), _DDB_GET_CHUNK):
+        for chunk in _chunked(keys, _DDB_GET_CHUNK):
             request = {name: {"Keys": [{"entity_id": {"S": k}} for k in chunk]}}
             # bounded retry over UnprocessedKeys (throttling contract)
             for _ in range(8):
@@ -194,10 +187,8 @@ class DynamoDBOnlineStore:
                     break
         return payloads, schema_json
 
-    def online_read(self, *args, **kwargs) -> list[dict | None]:
-        """Driver-side multiget (``online/kv._read_via_lookup``): one
-        ``batch_get_item`` per 100 distinct keys."""
-        return _read_via_lookup(self, *args, **kwargs)
+    #: driver-side multiget: one ``batch_get_item`` per 100 distinct keys
+    online_read = _read_via_lookup
 
     def teardown(self, project: str, view_names: list[str] | None = None) -> None:
         """DELETE the project's tables (dynamodb.py:88-101
@@ -215,13 +206,7 @@ class DynamoDBOnlineStore:
             try:
                 self.client.delete_table(TableName=name)
             except Exception as ex:
-                resp = getattr(ex, "response", None)
-                code = (
-                    resp.get("Error", {}).get("Code")
-                    if isinstance(resp, dict)
-                    else None
-                )
-                if code != "ResourceNotFoundException":
+                if _error_code(ex) != "ResourceNotFoundException":
                     raise
             self._known_tables.discard(name)
 
@@ -321,10 +306,8 @@ class DatastoreOnlineStore:
                 payloads.append(row["payload"])
         return payloads, meta["schema_json"]
 
-    def online_read(self, *args, **kwargs) -> list[dict | None]:
-        """Driver-side multiget (``online/kv._read_via_lookup``): one
-        ``get`` per distinct key."""
-        return _read_via_lookup(self, *args, **kwargs)
+    #: driver-side multiget: one ``get`` per distinct key
+    online_read = _read_via_lookup
 
     def teardown(self, project: str, view_names: list[str] | None = None) -> None:
         """Delete all Row children + the table metadata entity

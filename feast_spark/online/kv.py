@@ -18,8 +18,8 @@ materialization.  Spark-first split of the same design:
   (newest wins), so the store is never read back into Spark.
 
 Values travel as ``to_json`` payloads with the Spark schema recorded at
-write time, so timestamps/arrays/structs/binary round-trip exactly
-(``from_json`` with the recorded schema on read) — replacing the
+write time, so typed values round-trip exactly (decoded in Python by
+that schema on read: ``online_read`` runs no Spark) — replacing the
 reference's ValueProto blobs (type_map.py:163-297) with a
 self-describing encoding that needs no generated code.
 
@@ -32,13 +32,19 @@ is the documented path — the distributed merge plan is unchanged.
 
 from __future__ import annotations
 
+import base64
 import json
 import sqlite3
+import struct
+import threading
+from datetime import date, datetime, timezone
+from decimal import Decimal
+from itertools import islice
 from typing import Iterable, Iterator
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql import types as T
 
 from feast_spark.online.store import (
     _CREATED_TS,
@@ -49,8 +55,11 @@ from feast_spark.online.store import (
 from feast_spark.operators.dedup import latest_per_key
 
 _CHUNK = 1000
-# default to_json truncates to milliseconds; keep full µs fidelity
-_JSON_OPTS = {"timestampFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"}
+# default to_json truncates both timestamp kinds to ms; keep full µs
+_JSON_OPTS = {
+    "timestampFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX",
+    "timestampNTZFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSS",
+}
 
 
 def _table_id(project: str, view_name: str) -> str:
@@ -88,52 +97,70 @@ def _snapshot_rows(
     return rows, schema_json
 
 
-def _chunked(it: Iterator, n: int) -> Iterable[list]:
-    buf: list = []
-    for x in it:
-        buf.append(x)
-        if len(buf) >= n:
-            yield buf
-            buf = []
-    if buf:
-        yield buf
+def _chunked(items: Iterable, n: int) -> Iterator[list]:
+    it = iter(items)
+    while chunk := list(islice(it, n)):
+        yield chunk
+
+
+# leaf decoders by Spark type; any other leaf keeps its JSON value
+_LEAF = {
+    T.TimestampType: lambda v: datetime.fromisoformat(v)
+    .astimezone(timezone.utc).replace(tzinfo=None),
+    T.TimestampNTZType: datetime.fromisoformat,  # µs, or ms in older rows
+    T.DateType: date.fromisoformat,
+    T.BinaryType: base64.b64decode,
+    T.DoubleType: float,  # also from "NaN", "Infinity", "-Infinity"
+    T.FloatType: lambda v: struct.unpack("f", struct.pack("f", float(v)))[0],
+    T.DecimalType: Decimal,
+    **dict.fromkeys((T.ByteType, T.ShortType, T.IntegerType, T.LongType), int),
+    T.BooleanType: lambda v: v == "true" if isinstance(v, str) else v,
+}
+
+
+def _decode(v, dt: T.DataType):
+    """The value Spark's JSON reader with type ``dt`` and a ``collect``
+    give for the JSON value ``v`` (``json.loads``, ``parse_float=Decimal``):
+    timestamps naive UTC, binary as bytes, float32 values widened as
+    Spark widens them, structs as ``Row``, and map keys decoded by the
+    key type (JSON object keys are always strings)."""
+    if v is None:
+        return None
+    if isinstance(dt, T.StructType):
+        return Row(**{f.name: _decode(v.get(f.name), f.dataType) for f in dt})
+    if isinstance(dt, T.MapType):
+        kt, vt = dt.keyType, dt.valueType
+        return {_decode(k, kt): _decode(x, vt) for k, x in v.items()}
+    if isinstance(dt, T.ArrayType):
+        return [_decode(x, dt.elementType) for x in v]
+    leaf = _LEAF.get(type(dt))
+    return v if leaf is None else leaf(v)
 
 
 def _parse_hits(
-    spark: SparkSession,
-    payloads: list[str],
-    schema_json: str | None,
-    feature_cols: list[str],
+    payloads: list, schema_json: str | None, feature_cols: list[str]
 ) -> dict[str, dict]:
-    """``{key: row}`` from stored JSON payloads, decoded with the
-    recorded schema by Spark's ``from_json`` (µs timestamps, arrays,
-    structs and binary round-trip exactly) in one collect of a
-    hits-only LocalRelation.  No hits: no Spark at all."""
+    """``{key: row}`` from stored JSON payloads (str or bytes), decoded
+    in Python with the schema recorded at write time.  A field the
+    payload lacks (``to_json`` drops nulls) or a feature added after
+    the write reads None; a row with a NULL event ts is never served."""
     if schema_json is None or not payloads:
         return {}
-    schema = StructType.fromJson(json.loads(schema_json))
-    from feast_spark.io.localframe import local_df
-
-    # LocalRelation: the request-sized payload frame never pays a
-    # pickled-RDD Python stage (guide §4)
-    raw = local_df(spark, [(p,) for p in payloads], "payload STRING")
-    parsed = raw.select(
-        F.from_json("payload", schema, _JSON_OPTS).alias("j")
-    ).select("j.*")
-    # schema evolution: a feature added after the write reads None
-    avail = [f for f in feature_cols if f in parsed.columns]
+    schema = T.StructType.fromJson(json.loads(schema_json))
+    types = {f.name: f.dataType for f in schema}
+    wanted = [c for c in (_EVENT_TS, *feature_cols) if c in types]
     hits: dict[str, dict] = {}
-    for r in parsed.select(_KEY, _EVENT_TS, *avail).collect():
-        if r[_EVENT_TS] is not None:  # a NULL event ts never served
-            row = dict.fromkeys(feature_cols)
-            row.update(r.asDict())
-            hits[row.pop(_KEY)] = row
+    for p in payloads:
+        obj = json.loads(p, parse_float=Decimal)
+        row = dict.fromkeys(feature_cols)
+        row.update((c, _decode(obj.get(c), types[c])) for c in wanted)
+        if row[_EVENT_TS] is not None:
+            hits[obj[_KEY]] = row
     return hits
 
 
 def _read_via_lookup(
     store,
-    spark: SparkSession,
     project: str,
     view_name: str,
     keys: list[str],
@@ -143,8 +170,8 @@ def _read_via_lookup(
     """Shared ``online_read``: point-lookup the distinct request keys
     in the KV from the driver — the reference's online_read loop
     (sqlite.py:139-166) — and answer one ``dict | None`` per key, in
-    key order.  The KV is never scanned.  KV backends overwrite in
-    place, so there is no snapshot to serve ``as_of`` from."""
+    key order, with no Spark code.  The KV is never scanned.  KV
+    backends overwrite in place: no snapshot serves ``as_of``."""
     if as_of is not None:
         raise ValueError(
             f"{type(store).__name__} keeps no history; as_of reads need "
@@ -152,7 +179,7 @@ def _read_via_lookup(
         )
     distinct = list(dict.fromkeys(keys))
     payloads, schema_json = store._lookup(project, view_name, distinct)
-    hits = _parse_hits(spark, payloads, schema_json, feature_cols)
+    hits = _parse_hits(payloads, schema_json, feature_cols)
     return [hits.get(k) for k in keys]
 
 
@@ -162,11 +189,14 @@ class SqliteOnlineStore:
     One row per entity key per ``{project}_{view}`` table; conditional
     upsert keeps the newest (event_ts, created_ts) — the reference's
     UPDATE-then-INSERT-OR-IGNORE pair collapsed into one
-    ``ON CONFLICT DO UPDATE ... WHERE`` statement."""
+    ``ON CONFLICT DO UPDATE ... WHERE`` statement.  Threads share one
+    connection under one lock, held for a whole write transaction and
+    all of a lookup's chunks, so no response mixes two commits."""
 
     def __init__(self, path: str):
         self.path = path
         self._conn: sqlite3.Connection | None = None
+        self._lock = threading.Lock()
 
     def _get_conn(self) -> sqlite3.Connection:
         if self._conn is None:
@@ -175,9 +205,8 @@ class SqliteOnlineStore:
             parent = os.path.dirname(self.path)
             if parent:
                 os.makedirs(parent, exist_ok=True)
-            # check_same_thread=False: foreachBatch callbacks run on the
-            # streaming query thread; batch upserts are serialized, so
-            # cross-thread reuse of the single connection is safe
+            # check_same_thread=False: foreachBatch callbacks and
+            # serving threads share the connection under self._lock
             self._conn = sqlite3.connect(self.path, check_same_thread=False)
             self._conn.execute(
                 "CREATE TABLE IF NOT EXISTS _feast_schemas ("
@@ -201,12 +230,6 @@ class SqliteOnlineStore:
             df, join_keys, ts_col, created_col, feature_cols
         )
         tid = _table_id(project, view_name)
-        conn = self._get_conn()
-        conn.execute(
-            f'CREATE TABLE IF NOT EXISTS "{tid}" ('
-            "entity_key TEXT PRIMARY KEY, event_us INTEGER, "
-            "created_us INTEGER, payload TEXT)"
-        )
         upsert = (
             f'INSERT INTO "{tid}" (entity_key, event_us, created_us, payload) '
             "VALUES (?, ?, ?, ?) "
@@ -216,7 +239,12 @@ class SqliteOnlineStore:
             "WHERE excluded.event_us > event_us OR (excluded.event_us = event_us "
             "AND COALESCE(excluded.created_us, -1) >= COALESCE(created_us, -1))"
         )
-        with conn:
+        with self._lock, self._get_conn() as conn:
+            conn.execute(
+                f'CREATE TABLE IF NOT EXISTS "{tid}" ('
+                "entity_key TEXT PRIMARY KEY, event_us INTEGER, "
+                "created_us INTEGER, payload TEXT)"
+            )
             conn.execute(
                 "INSERT INTO _feast_schemas (table_id, schema_json) VALUES (?, ?) "
                 "ON CONFLICT(table_id) DO UPDATE SET schema_json=excluded.schema_json",
@@ -236,37 +264,34 @@ class SqliteOnlineStore:
         self, project: str, view_name: str, keys: list[str]
     ) -> tuple[list[str], str | None]:
         tid = _table_id(project, view_name)
-        conn = self._get_conn()
-        row = conn.execute(
-            "SELECT schema_json FROM _feast_schemas WHERE table_id = ?", (tid,)
-        ).fetchone()
-        if row is None:
-            return [], None
-        payloads: list[str] = []
-        for chunk in _chunked(iter(keys), 500):  # sqlite variable limit
-            marks = ",".join("?" * len(chunk))
-            payloads.extend(
+        with self._lock:
+            conn = self._get_conn()
+            row = conn.execute(
+                "SELECT schema_json FROM _feast_schemas WHERE table_id = ?", (tid,)
+            ).fetchone()
+            if row is None:
+                return [], None
+            payloads = [
                 r[0]
+                for chunk in _chunked(keys, 500)  # sqlite variable limit
                 for r in conn.execute(
-                    f'SELECT payload FROM "{tid}" WHERE entity_key IN ({marks})',
+                    f'SELECT payload FROM "{tid}" WHERE entity_key IN '
+                    f'({",".join("?" * len(chunk))})',
                     chunk,
                 )
-            )
+            ]
         return payloads, row[0]
 
-    def online_read(self, *args, **kwargs) -> list[dict | None]:
-        """Driver-side multiget (``_read_via_lookup``): one
-        ``SELECT ... IN`` per 500 distinct keys."""
-        return _read_via_lookup(self, *args, **kwargs)
+    #: driver-side multiget: one ``SELECT ... IN`` per 500 distinct keys
+    online_read = _read_via_lookup
 
     def expire(self, spark, project: str, view_name: str, cutoff) -> int:
         """TTL sweep: one indexed DELETE of rows older than ``cutoff``
         (storage reclaim; mirrors OnlineStore.expire).  Returns the
         number of rows removed."""
         tid = _table_id(project, view_name)
-        conn = self._get_conn()
         cutoff_us = int(cutoff.timestamp() * 1_000_000)
-        with conn:
+        with self._lock, self._get_conn() as conn:
             try:
                 cur = conn.execute(
                     f'DELETE FROM "{tid}" WHERE event_us < ?', (cutoff_us,)
@@ -277,8 +302,7 @@ class SqliteOnlineStore:
 
     def teardown(self, project: str, view_names: list[str] | None = None) -> None:
         """DROP the project's tables (sqlite.py teardown: DROP TABLE)."""
-        conn = self._get_conn()
-        with conn:
+        with self._lock, self._get_conn() as conn:
             rows = conn.execute(
                 "SELECT table_id FROM _feast_schemas WHERE table_id LIKE ?",
                 (f"{project}_%",),
@@ -351,26 +375,19 @@ class RedisOnlineStore:
 
     def _lookup(
         self, project: str, view_name: str, keys: list[str]
-    ) -> tuple[list[str], str | None]:
+    ) -> tuple[list, str | bytes | None]:
         prefix = self._prefix(project, view_name)
         schema_json = self.client.get(f"{prefix}:_schema")
         if schema_json is None:
             return [], None
-        if isinstance(schema_json, bytes):
-            schema_json = schema_json.decode()
         pipe = self.client.pipeline()
         for k in keys:
             pipe.hget(f"{prefix}:{k}", "payload")
-        found = pipe.execute()
-        payloads = [
-            p.decode() if isinstance(p, bytes) else p for p in found if p is not None
-        ]
-        return payloads, schema_json
+        # json.loads takes the bytes a real client returns as they are
+        return [p for p in pipe.execute() if p is not None], schema_json
 
-    def online_read(self, *args, **kwargs) -> list[dict | None]:
-        """Driver-side multiget (``_read_via_lookup``): one pipelined
-        ``HGET`` per distinct key."""
-        return _read_via_lookup(self, *args, **kwargs)
+    #: driver-side multiget: one pipelined ``HGET`` per distinct key
+    online_read = _read_via_lookup
 
     def teardown(self, project: str, view_names: list[str] | None = None) -> None:
         """DEL the project's keys (redis.py teardown: delete by

@@ -20,33 +20,33 @@ write reads the head once (snapshot path and ``commit_seq``), merges
 the incoming rows over that snapshot, writes a FRESH ``v_NNNNNNNN``
 directory and publishes it with a compare-and-swap on the seq it read.
 If another writer committed in between (a streaming sink plus a manual
-backfill of one view), the staged directory is deleted and
-``online_write_batch`` re-reads the head, re-merges the same incoming
-rows and commits again, raising ``ConcurrentCommitError`` after
-``epochs.COMMIT_ATTEMPTS`` lost races.  The newest-wins merge is
-commutative, so a retry lands the rows a serial run would.  Readers
-resolve the head once per query and only ever see a fully written
-snapshot; a crashed writer leaves an orphan directory that the next
-commit numbers past and GC later removes.  Filesystem access is behind
-``StoreFS`` (LocalFS for tests/POSIX, HadoopFS for any scheme the
-cluster resolves).
+backfill of one view), the staged directory is deleted and the
+writer re-reads the head, re-merges the same incoming rows and commits
+again, raising ``ConcurrentCommitError`` after ``epochs.COMMIT_ATTEMPTS``
+lost races.  The newest-wins merge is commutative, so a retry lands the
+rows a serial run would; a TTL sweep (``expire``) retries the same way.
+Readers resolve the head once per query and only ever see a fully
+written snapshot; a crashed writer leaves an orphan directory that the
+next commit numbers past and GC later removes.  Filesystem access is
+behind ``StoreFS`` (LocalFS for tests/POSIX, HadoopFS for any scheme
+the cluster resolves).
 
 The READ path is driver-side, like the reference's point lookup
 (sqlite.py:139-166, the multiget in feature_store.py:568-587): the
 request never becomes a DataFrame.  ``encode_request_keys`` encodes the
 request rows in Python, and every backend answers
-``online_read(spark, project, view, keys, feature_cols, as_of=None)``
-with one ``dict | None`` per key, in key order.  This store reads the
-resolved snapshot's parquet files through its own ``StoreFS`` and
-filters them with pyarrow on the key column — no Spark job per request.
+``online_read(project, view, keys, feature_cols, as_of=None)`` with one
+``dict | None`` per key, in key order; no backend takes a Spark session
+to read.  This store reads the resolved snapshot's parquet files through
+its own ``StoreFS`` and filters them with pyarrow on the key column.
 Like the Spark scan it replaced, the read scans every file of the
 snapshot (the key filter prunes only row groups whose key range misses
 every requested key).  There is deliberately no read cache: a
 per-snapshot index answered in ~2 ms warm but cost ~185 ms to rebuild
 after each commit, against ~25 ms for the plain read of three 1-2 MB
 snapshots (4 vCPU host), and a serving workload that commits between
-requests pays the rebuild every time; with no cache there is nothing
-to invalidate or lock, so concurrent serving threads share no state.
+requests pays the rebuild every time; with no cache there is nothing to
+invalidate or lock, so concurrent serving threads share no state.
 
 Key encoding: ``k1=v1|k2=v2`` over join keys sorted by name —
 order-insensitive and deterministic across partitions, mirroring the
@@ -61,6 +61,7 @@ from __future__ import annotations
 
 import numbers
 import posixpath
+from collections.abc import Callable
 from datetime import date, datetime, timezone
 from decimal import Decimal
 
@@ -291,10 +292,9 @@ class OnlineStore:
         watermark here so a provenance snapshot can record how far a
         never-stopping ingestion had gotten.  A concurrent commit makes
         it re-merge and retry (module docstring)."""
-        table = self._mtable(self._table_dir(project, view_name))
         incoming = project_incoming(df, join_keys, ts_col, created_col, feature_cols)
-        for attempt in range(COMMIT_ATTEMPTS):
-            current, seq = table.head()
+
+        def merge(current):
             rows = incoming
             if current is not None:
                 existing = read_parquet_memo(spark, current)
@@ -305,11 +305,29 @@ class OnlineStore:
                             c, F.lit(None).cast(incoming.schema[c].dataType)
                         )
                 rows = existing.select(*incoming.columns).unionByName(incoming)
-            merged = latest_per_key(
-                rows, [_KEY], _EVENT_TS, created_col=_CREATED_TS
-            )
+            return latest_per_key(rows, [_KEY], _EVENT_TS, created_col=_CREATED_TS)
+
+        self._read_modify_write(project, view_name, merge, meta)
+
+    def _read_modify_write(
+        self,
+        project: str,
+        view_name: str,
+        derive: Callable[[str | None], DataFrame | None],
+        meta: dict | None = None,
+    ) -> None:
+        """Commit ``derive(head snapshot path or None)`` over the head it
+        was derived from; on a lost compare-and-swap re-read the head
+        and derive again, up to ``COMMIT_ATTEMPTS`` times.  ``derive``
+        returning None commits nothing."""
+        table = self._mtable(self._table_dir(project, view_name))
+        for attempt in range(COMMIT_ATTEMPTS):
+            current, seq = table.head()
+            rows = derive(current)
+            if rows is None:
+                return
             try:
-                table.commit(merged, meta=meta, base_seq=seq)
+                table.commit(rows, meta=meta, base_seq=seq)
                 return
             except ConcurrentCommitError:
                 if attempt + 1 == COMMIT_ATTEMPTS:
@@ -328,16 +346,21 @@ class OnlineStore:
         crashed sweep leaves only an orphan the next commit numbers
         past).  Returns the number of expired rows.  The reference
         relies on each read filtering by ttl — this reclaims the
-        storage too."""
-        current = self._current_data_path(project, view_name)
-        if current is None:
-            return 0
-        existing = read_parquet_memo(spark, current)
-        live = existing.where(F.col(_EVENT_TS) >= F.lit(cutoff))
-        n_expired = existing.count() - live.count()
-        if n_expired == 0:
-            return 0
-        self._mtable(self._table_dir(project, view_name)).commit(live)
+        storage too.  A concurrent write makes it sweep the new head
+        and retry, so the write's rows survive."""
+        n_expired = 0
+
+        def sweep(current):
+            nonlocal n_expired
+            n_expired = 0
+            if current is None:
+                return None
+            existing = read_parquet_memo(spark, current)
+            live = existing.where(F.col(_EVENT_TS) >= F.lit(cutoff))
+            n_expired = existing.count() - live.count()
+            return live if n_expired else None
+
+        self._read_modify_write(project, view_name, sweep)
         return n_expired
 
     def staleness(
@@ -405,7 +428,6 @@ class OnlineStore:
 
     def online_read(
         self,
-        spark: SparkSession,
         project: str,
         view_name: str,
         keys: list[str],

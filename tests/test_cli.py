@@ -118,7 +118,7 @@ def test_cli_expire_online(spark, tmp_path, monkeypatch):
     assert rc == 0
     # stale row gone, fresh row still served
     got = st.online_store.online_read(
-        spark, "t", "fv",
+        "t", "fv",
         encode_request_keys([{"driver_id": 1}, {"driver_id": 2}], ["driver_id"]),
         ["value"],
     )

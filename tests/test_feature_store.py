@@ -271,3 +271,16 @@ def test_time_series_splits_facade(store):
 
     with _pytest.raises(FeatureViewNotFoundError):
         store.time_series_splits("missing_view", n_folds=2)
+
+
+def test_to_arrow_keeps_nullable_long_columns_int64(spark):
+    """RetrievalJob.to_arrow converts through Arrow directly: a nullable
+    bigint column (a retrieval miss) stays int64, not pandas' double."""
+    import pyarrow as pa
+
+    from feast_spark.feature_store import RetrievalJob
+
+    df = spark.createDataFrame([(1, None), (2, 5)], "k INT, v BIGINT")
+    table = RetrievalJob(df).to_arrow()
+    assert table.schema.field("v").type == pa.int64()
+    assert table.column("v").to_pylist() == [None, 5]

@@ -144,7 +144,7 @@ def _write(store, spark, rows, features=("value",)):
 
 def _read(store, spark, ids, features=("value",)):
     keys = encode_request_keys([{"driver_id": i} for i in ids], ["driver_id"])
-    out = store.online_read(spark, "p", "v", keys, list(features))
+    out = store.online_read("p", "v", keys, list(features))
     return {
         i: {**dict.fromkeys(features), **(r or {}), "__found": r is not None}
         for i, r in zip(ids, out)

@@ -26,7 +26,7 @@ def _write(store, spark, rows):
 
 def _read_values(store, spark, ids):
     keys = encode_request_keys([{"driver_id": i} for i in ids], ["driver_id"])
-    out = store.online_read(spark, "p", "v", keys, ["value"])
+    out = store.online_read("p", "v", keys, ["value"])
     return {i: None if r is None else r["value"] for i, r in zip(ids, out)}
 
 
@@ -159,7 +159,7 @@ def test_interleaved_writers_keep_both_writers_rows(spark, tmp_path, monkeypatch
     table = ManifestedParquetTable(str(tmp_path / "p" / "v"))
     assert [e["seq"] for e in table.history()] == [1, 2, 3]
     b_snapshot = store.online_read(
-        spark, "p", "v",
+        "p", "v",
         encode_request_keys([{"driver_id": i} for i in (1, 2, 3)], ["driver_id"]),
         ["value"], as_of=2,
     )
@@ -184,3 +184,28 @@ def test_superseded_base_raises_and_leaves_the_table_untouched(spark, tmp_path):
         t.commit(spark.createDataFrame([(2,)], "x INT"), base_seq=1)
     assert state() == before
     assert t.read(spark).collect()[0]["x"] == 1
+
+
+def test_expire_keeps_a_concurrent_writers_rows(spark, tmp_path, monkeypatch):
+    """A write lands between expire's read of the head and its commit:
+    the sweep's compare-and-swap fails, it sweeps the new head and
+    commits again, so the written key survives — a blind overwrite
+    would publish the sweep of the older snapshot without it."""
+    store = OnlineStore(str(tmp_path), keep_versions=3)
+    _write(store, spark, [Row(driver_id=1, ts=_ts("2024-01-01T00:00"), value=1.0),
+                          Row(driver_id=2, ts=_ts("2024-01-05T00:00"), value=2.0)])
+    orig = ManifestedParquetTable.commit
+    commits = []
+
+    def interleaved(self, *args, **kwargs):
+        commits.append(len(commits))
+        if len(commits) == 1:  # the sweep's first commit: a write lands first
+            _write(store, spark,
+                   [Row(driver_id=3, ts=_ts("2024-01-06T00:00"), value=3.0)])
+        return orig(self, *args, **kwargs)
+
+    monkeypatch.setattr(ManifestedParquetTable, "commit", interleaved)
+    assert store.expire(spark, "p", "v", _ts("2024-01-03T00:00")) == 1
+    monkeypatch.undo()
+    assert _read_values(store, spark, [1, 2, 3]) == {1: None, 2: 2.0, 3: 3.0}
+    assert len(commits) == 3  # the lost sweep, the write, the retried sweep

@@ -4,7 +4,9 @@ consistency through the FeatureStore facade (the reference's
 test_online_retrieval + test_offline_online_store_consistency patterns
 against infra/online_stores/{sqlite,redis}.py)."""
 
-from datetime import datetime, timedelta
+import math
+from datetime import date, datetime, timedelta
+from decimal import Decimal
 
 import pytest
 from pyspark.sql import Row
@@ -74,7 +76,7 @@ def _write(store, spark, rows, features=("value",)):
 
 def _read(store, spark, ids, features=("value",)):
     keys = encode_request_keys([{"driver_id": i} for i in ids], ["driver_id"])
-    out = store.online_read(spark, "p", "v", keys, list(features))
+    out = store.online_read("p", "v", keys, list(features))
     return {
         i: {**dict.fromkeys(features), **(r or {}), "__found": r is not None}
         for i, r in zip(ids, out)
@@ -100,7 +102,9 @@ def test_newest_wins_upsert(spark, tmp_path, kind):
 
 @pytest.mark.parametrize("kind", ["sqlite", "redis"])
 def test_typed_payload_roundtrip(spark, tmp_path, kind):
-    """Arrays, strings and timestamps survive the JSON payload."""
+    """Arrays, strings, timestamps (both kinds, to the microsecond),
+    dates, binary, decimals, non-finite doubles, structs and maps
+    survive the JSON payload."""
     store = _mk_store(kind, tmp_path)
     rows = [
         Row(
@@ -115,6 +119,75 @@ def test_typed_payload_roundtrip(spark, tmp_path, kind):
     assert got[1]["emb"] == [1.5, -2.25]
     assert got[1]["tag"] == "a|b"
     assert got[1]["__event_ts"] == _ts("2024-01-01T10:30:15.123456")
+
+    feats = ["ntz", "d", "b", "dec", "nan", "inf", "ninf", "specials",
+             "st", "m"]
+    df = spark.createDataFrame(
+        [(2, _ts("2024-01-02T00:00"), _ts("2024-01-01T10:30:15.123456"),
+          date(2024, 2, 29), bytearray(b"\x00\xffab"), Decimal("123.4500"),
+          float("nan"), float("inf"), float("-inf"),
+          [1.5, float("nan"), float("inf"), float("-inf")],
+          Row(a="x", n=3), {"k": 1, "j": None})],
+        "driver_id INT, ts TIMESTAMP, ntz TIMESTAMP_NTZ, d DATE, b BINARY, "
+        "dec DECIMAL(12,4), nan DOUBLE, inf DOUBLE, ninf DOUBLE, "
+        "specials ARRAY<DOUBLE>, st STRUCT<a: STRING, n: BIGINT>, "
+        "m MAP<STRING, BIGINT>",
+    )
+    store.online_write_batch(spark, "p", "w", df, ["driver_id"], "ts", None, feats)
+    [r] = store.online_read(
+        "p", "w", encode_request_keys([{"driver_id": 2}], ["driver_id"]), feats
+    )
+    assert r["ntz"] == _ts("2024-01-01T10:30:15.123456")
+    assert r["d"] == date(2024, 2, 29)
+    assert r["b"] == b"\x00\xffab"
+    assert r["dec"] == Decimal("123.4500") and isinstance(r["dec"], Decimal)
+    assert math.isnan(r["nan"])
+    assert (r["inf"], r["ninf"]) == (float("inf"), float("-inf"))
+    s = r["specials"]
+    assert s[0] == 1.5 and math.isnan(s[1]) and s[2:] == [float("inf"), float("-inf")]
+    assert r["st"] == Row(a="x", n=3) and r["st"].a == "x"
+    assert r["m"] == {"k": 1, "j": None}
+
+
+def test_int_keyed_map_roundtrip(spark, tmp_path):
+    """A MAP<INT, STRING> feature reads back with int keys (Spark's
+    ``from_json`` rejects any non-string map key)."""
+    store = _mk_store("sqlite", tmp_path)
+    df = spark.createDataFrame(
+        [(1, _ts("2024-01-01T00:00"), {1: "one", -2: "neg"})],
+        "driver_id INT, ts TIMESTAMP, labels MAP<INT, STRING>",
+    )
+    store.online_write_batch(
+        spark, "p", "v", df, ["driver_id"], "ts", None, ["labels"]
+    )
+    got = _read(store, spark, [1, 2], features=("labels",))
+    assert got[1]["labels"] == {1: "one", -2: "neg"}
+    assert got[2]["__found"] is False
+
+
+def test_sqlite_serves_without_spark(spark, tmp_path):
+    """A store materialized by one Spark session serves from a
+    ``FeatureStore(None, config)``: the KV read path runs no Spark."""
+    from feast_spark import FeatureStore, RepoConfig
+
+    st = _sqlite_facade_store(spark, tmp_path)
+    cfg = RepoConfig(
+        project="t",
+        registry_path=str(tmp_path / "registry.json"),
+        online_store_path=str(tmp_path / "online.db"),
+        online_store_type="sqlite",
+    )
+    want = st.get_online_features(
+        ["simple_fv:value"], [{"driver_id": 1}, {"driver_id": 3}]
+    )
+    got = FeatureStore(None, cfg).get_online_features(
+        ["simple_fv:value"],
+        [{"driver_id": 1}, {"driver_id": 3}, {"driver_id": 9}],
+        full_field_statuses=True,
+        now=_ts("2021-06-01T12:00:00"),
+    )
+    assert got["value"][:2] == want["value"] == pytest.approx([0.3, 4.0])
+    assert got["__statuses"]["value"] == ["PRESENT", "PRESENT", "NOT_FOUND"]
 
 
 @pytest.mark.parametrize("kind", ["sqlite", "redis"])
@@ -134,9 +207,9 @@ def test_batch_collapses_before_driver(spark, tmp_path, kind):
         assert n == 1
 
 
-def test_sqlite_feature_store_e2e(spark, tmp_path):
-    """Full facade flow on online_store_type='sqlite': materialize then
-    serve, matching the parquet-backed answers."""
+def _sqlite_facade_store(spark, tmp_path):
+    """A sqlite-backed FeatureStore whose view ``simple_fv`` is
+    materialized over (now - 5h, now - 2h]: driver 1 -> 0.3, 3 -> 4.0."""
     from feast_spark import (
         Entity,
         FeatureStore,
@@ -180,6 +253,14 @@ def test_sqlite_feature_store_e2e(spark, tmp_path):
         ]
     )
     st.materialize(now - timedelta(hours=5), now - timedelta(hours=2))
+    return st
+
+
+def test_sqlite_feature_store_e2e(spark, tmp_path):
+    """Full facade flow on online_store_type='sqlite': materialize then
+    serve, matching the parquet-backed answers."""
+    now = _ts("2021-06-01T12:00:00")
+    st = _sqlite_facade_store(spark, tmp_path)
     resp = st.get_online_features(
         ["simple_fv:value"], [{"driver_id": 1}, {"driver_id": 3}]
     )
@@ -256,7 +337,7 @@ def test_delete_feature_view_and_teardown(spark, tmp_path):
             st.get_feature_view("fv")
         # online state gone: a fresh store of the same view serves a miss
         assert st.online_store.online_read(
-            spark, "t", "fv",
+            "t", "fv",
             encode_request_keys([{"driver_id": 1}], ["driver_id"]), ["value"],
         ) == [None]
         st.teardown()
@@ -339,7 +420,7 @@ def test_ttl_expiry_sweep_parquet_and_sqlite(spark, tmp_path):
         assert swept == {"fv": 1}, kind
         # fresh row still serves; stale key is now a miss at the store
         got = st.online_store.online_read(
-            spark, "t", "fv",
+            "t", "fv",
             encode_request_keys([{"driver_id": 1}, {"driver_id": 2}],
                                 ["driver_id"]),
             ["value"],
@@ -372,5 +453,5 @@ def test_sqlite_accepts_timestamp_ntz_source(spark, tmp_path):
     keys = encode_request_keys(
         [{"user_id": r["user_id"]} for r in ev.limit(3).collect()], ["user_id"]
     )
-    out = store.online_read(spark, "p", "v", keys, ["value"])
+    out = store.online_read("p", "v", keys, ["value"])
     assert len(out) == 3 and all(r is not None for r in out)

@@ -87,7 +87,7 @@ def test_online_read_values_match_spark_collect(spark, tmp_path):
     )
     store.online_write_batch(spark, "p", "v", df, ["k"], "ts", None, feats)
     got = store.online_read(
-        spark, "p", "v", encode_request_keys([{"k": 1}, {"k": 2}], ["k"]), feats
+        "p", "v", encode_request_keys([{"k": 1}, {"k": 2}], ["k"]), feats
     )
     want = spark.read.parquet(store._current_data_path("p", "v")).collect()[0]
     assert got[1] is None
@@ -140,15 +140,17 @@ def test_get_online_features_empty_request(spark, tmp_path, kind):
     ) == {"value": [], "__statuses": {"value": []}}
 
 
-def test_concurrent_serving_threads_see_whole_snapshots(spark, tmp_path):
+@pytest.mark.parametrize("kind,n", [("parquet", 20), ("sqlite", 2000)])
+def test_concurrent_serving_threads_see_whole_snapshots(spark, tmp_path, kind, n):
     """8 serving threads read while one materialize commits new values
     for every key: each response is wholly the old snapshot or wholly
-    the new one, and no thread raises."""
+    the new one, and no thread raises.  The sqlite case asks for more
+    keys than one ``SELECT ... IN`` chunk (500) and than one upsert
+    chunk (1000), so a commit could land between a request's chunks."""
     import sys
     import threading
 
-    n = 20
-    st, src = _serving_store(spark, tmp_path, n=n)
+    st, src = _serving_store(spark, tmp_path, kind, n=n)
     rows = [{"driver_id": i} for i in range(1, n + 1)]
     before = [float(i) for i in range(1, n + 1)]
     after = [float(i + 100) for i in range(1, n + 1)]

@@ -593,7 +593,7 @@ def test_as_of_degrades_like_head(spark, store, tmp_path):
         ["value", "value2"],
     )
     got = store.online_store.online_read(
-        spark, "tt", "fv",
+        "tt", "fv",
         encode_request_keys([{"driver_id": 1}], ["driver_id"]),
         ["value", "value2"], as_of=between,
     )[0]

@@ -127,9 +127,11 @@ def test_scan_pruning_injected(spark, tmp_path):
     assert out.collect()[0]["v"] == 31.0
 
 
-def test_online_read_runs_no_spark_job(spark, tmp_path):
-    """An online request on a materialized parquet store is a driver-side
-    read: after warm-up, get_online_features adds no Spark job."""
+@pytest.mark.parametrize("kind", ["parquet", "sqlite"])
+def test_online_read_runs_no_spark_job(spark, tmp_path, kind):
+    """An online request on a materialized parquet or KV store is a
+    driver-side read: after warm-up, get_online_features adds no Spark
+    job."""
     import uuid
 
     from feast_spark import (
@@ -149,7 +151,8 @@ def test_online_read_runs_no_spark_job(spark, tmp_path):
         spark,
         RepoConfig(
             registry_path=str(tmp_path / "r.json"),
-            online_store_path=str(tmp_path / "o"),
+            online_store_path=str(tmp_path / ("o.db" if kind == "sqlite" else "o")),
+            online_store_type=kind,
         ),
     )
     store.apply(
@@ -167,6 +170,15 @@ def test_online_read_runs_no_spark_job(spark, tmp_path):
     rows = [{"k": 5}, {"k": 7}, {"k": 1000}]
     store.get_online_features(["fv:v"], rows)  # warm-up
 
+    # a collect over a LocalRelation runs on the driver without a job,
+    # so the session itself is watched too: serving must not touch it
+    touched: list[str] = []
+
+    class WatchedSession:
+        def __getattr__(self, name):
+            touched.append(name)
+            return getattr(spark, name)
+
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     control, group = f"control-{uuid.uuid4()}", f"online-{uuid.uuid4()}"
@@ -175,11 +187,14 @@ def test_online_read_runs_no_spark_job(spark, tmp_path):
         sc.setJobGroup(control, "control")
         spark.range(10).collect()
         sc.setJobGroup(group, "online read")
+        store.spark = WatchedSession()
         resp = store.get_online_features(["fv:v"], rows)
     finally:
+        store.spark = spark
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert tracker.getJobIdsForGroup(control)
     assert tracker.getJobIdsForGroup(group) == []
+    assert touched == []
     assert resp["v"] == [5.0, 7.0, None]
     assert resp["__statuses"]["v"] == ["PRESENT", "PRESENT", "NOT_FOUND"]
 

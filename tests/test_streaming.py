@@ -78,7 +78,7 @@ def test_stream_to_online_upsert_and_late_data(spark, tmp_path):
     run_stream()
 
     req = encode_request_keys([{"driver_id": 1}, {"driver_id": 2}], ["driver_id"])
-    got = store.online_read(spark, "t", "driver_stream", req, ["conv_rate"])
+    got = store.online_read("t", "driver_stream", req, ["conv_rate"])
     vals = {i: r["conv_rate"] for i, r in zip([1, 2], got)}
     assert vals == {1: 0.5, 2: 0.6}
 
@@ -88,7 +88,7 @@ def test_stream_to_online_upsert_and_late_data(spark, tmp_path):
         Row(driver_id=2, ts=t0 - timedelta(hours=5), created=t0, conv_rate=0.1),
     ])
     run_stream()
-    got = store.online_read(spark, "t", "driver_stream", req, ["conv_rate"])
+    got = store.online_read("t", "driver_stream", req, ["conv_rate"])
     vals = {i: r["conv_rate"] for i, r in zip([1, 2], got)}
     assert vals == {1: 0.9, 2: 0.6}, "late event must not overwrite newer value"
     # the sink stamps its micro-batch watermark into the snapshot
@@ -225,7 +225,7 @@ def test_stream_to_online_sqlite_backend(spark, tmp_path):
     )
     q.awaitTermination(120)
     got = store.online_read(
-        spark, "t", "driver_stream",
+        "t", "driver_stream",
         encode_request_keys([{"driver_id": 1}], ["driver_id"]), ["conv_rate"]
     )[0]
     assert got is not None  # found

@@ -3,12 +3,12 @@
 
 The reference's only performance artifact is an online WRITE throughput
 script (sdk/python/tests/online_write_benchmark.py:46-95); this is the
-read-path counterpart.  Both paths are driver-side: the parquet
+read-path counterpart.  Neither path runs Spark code: the parquet
 snapshot store filters the snapshot's files with pyarrow on the
-request keys (no Spark job; latency grows with snapshot size), and the
-SQLite path is the reference's local-serving shape (per-key point
-lookups; a hit's payload decodes through one small Spark collect).
-Run solo (timing protocol, SCALE.md).
+request keys (latency grows with snapshot size), and the SQLite path
+is the reference's local-serving shape (per-key point lookups; a hit's
+JSON payload decodes in Python against the schema recorded at write
+time).  Run solo (timing protocol, SCALE.md).
 
 Usage: python tools/online_bench.py   -> one JSON line; the table is
 recorded in SCALE.md / README.
