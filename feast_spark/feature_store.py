@@ -285,13 +285,9 @@ class FeatureStore:
 
     # -- historical retrieval (the query path, §3.2) -------------------
     def _group_feature_refs(
-        self, features: list[str] | FeatureService
+        self, refs: list[str]
     ) -> list[tuple[FeatureView, list[str]]]:
         """Group 'view:feature' refs by view (feature_store.py:660-681)."""
-        if isinstance(features, FeatureService):
-            refs = features.feature_refs
-        else:
-            refs = list(features)
         by_view: dict[str, list[str]] = {}
         for ref in refs:
             if ":" not in ref:
@@ -819,16 +815,16 @@ class FeatureStore:
         ``full_field_statuses`` require an explicit ``now=`` clock.
 
         ``as_of`` may also be a **tag name** (str) — a snapshot pinned
-        with ``tag_snapshot`` (io/manifest.py tags, GC-exempt until
-        deleted), or a **per-view pin map** ``{view_name: seq_or_tag}``
-        — what :meth:`describe_run` returns as ``run.online_as_of``
-        (provenance.py): each view replays its OWN recorded commit,
-        with seq 0 meaning "before the first materialization"
-        (NOT_FOUND rows, exactly what serving returned then).  A
-        requested view missing from the map raises — the provenance
-        record did not cover it, and silently serving head would fake
-        reproducibility.  Tags and seqs name snapshots, not instants,
-        so both forms share the explicit-``now`` requirement.
+        with ``online_store.table(project, view).tag`` (io/manifest.py
+        tags, GC-exempt until deleted), or a **per-view pin map**
+        ``{view_name: seq_or_tag}`` — what :meth:`describe_run` returns
+        as ``run.online_as_of`` (provenance.py): each view replays its
+        OWN recorded commit, with seq 0 meaning "before the first
+        materialization" (NOT_FOUND rows, exactly what serving returned
+        then).  A requested view missing from the map raises — the
+        provenance record did not cover it, and silently serving head
+        would fake reproducibility.  Tags and seqs name snapshots, not
+        instants, so both forms share the explicit-``now`` requirement.
         """
         if as_of is not None and not getattr(
             self.online_store, "supports_time_travel", False

@@ -6,8 +6,8 @@ state, training datasets) client of the one commit protocol,
     <root>/
         _MANIFEST.json              head: {"current": "v_00000003",
                                     "format", "keep_versions",
-                                    ["meta"], ["tables"],
-                                    "commit_seq", "committed_at"}
+                                    ["meta"], "commit_seq",
+                                    "committed_at"}
         _history/commit_seq=N.json  every commit, archived
         _TAGS.json                  named pins {name: commit_seq}
         v_00000001/ ...             immutable parquet snapshots
@@ -124,37 +124,6 @@ class ManifestedParquetTable:
         the streaming epoch watermark); empty before the first commit."""
         return self._read_manifest().get("meta", {})
 
-    def read_table(self, spark: SparkSession, name: str) -> DataFrame | None:
-        """Read one named sub-table of a :meth:`commit_tables` snapshot."""
-        current = self.current_path()
-        if current is None:
-            return None
-        return spark.read.parquet(posixpath.join(current, name))
-
-    def commit_tables(
-        self,
-        tables: dict[str, DataFrame],
-        partition_by: dict[str, list[str]] | None = None,
-        meta: dict | None = None,
-        base_seq: int | None = None,
-    ) -> int:
-        """Atomically commit SEVERAL named tables as ONE snapshot (one
-        manifest flip): each DataFrame lands under
-        ``{root}/v_<n>/<name>``, optionally ``partitionBy`` its listed
-        columns, and readers resolving the manifest always see a
-        CONSISTENT set (e.g. a postings table and the corpus stats it
-        was computed with — two separate manifests could flip between a
-        reader's two resolves).  Meta and ``base_seq`` work as in
-        :meth:`commit`.  Returns the commit seq."""
-        version = self._next_version()
-        for name, tdf in tables.items():
-            w = tdf.write.mode("errorifexists")
-            cols = (partition_by or {}).get(name)
-            if cols:
-                w = w.partitionBy(*cols)
-            w.parquet(posixpath.join(self.root, version, name))
-        return self._publish(version, meta, base_seq, sorted(tables))
-
     def commit(
         self,
         df: DataFrame,
@@ -185,14 +154,10 @@ class ManifestedParquetTable:
         return self._publish(version, meta, base_seq)
 
     def _publish(
-        self,
-        version: str,
-        meta: dict | None,
-        base_seq: int | None,
-        tables: list[str] | None = None,
+        self, version: str, meta: dict | None, base_seq: int | None
     ) -> int:
         try:
-            head = self._flip(version, meta, base_seq, tables)
+            head = self._flip(version, meta, base_seq)
         except ConcurrentCommitError:
             # never published: the staged snapshot goes with the loser
             self.fs.delete(posixpath.join(self.root, version))
@@ -204,11 +169,7 @@ class ManifestedParquetTable:
         return head["commit_seq"]
 
     def _flip(
-        self,
-        version: str,
-        meta: dict | None,
-        base_seq: int | None,
-        tables: list[str] | None,
+        self, version: str, meta: dict | None, base_seq: int | None
     ) -> dict:
         while True:
             prev = self._read_manifest()
@@ -224,8 +185,6 @@ class ManifestedParquetTable:
                     else base_seq
                 ),
             }
-            if tables:
-                manifest["tables"] = tables
             merged = {**prev.get("meta", {}), **(meta or {})}
             merged = {k: v for k, v in merged.items() if v is not None}
             if merged:

@@ -6,7 +6,8 @@ DynamoDB table, HASH key ``entity_id``, blind ``put_item`` per row;
 infra/online_stores/datastore.py:142-220: Datastore entities under the
 ("Project", project, "Table", view, "Row", doc_id) key path, written
 ``put_multi`` in transaction-sized minibatches).  Spark-first split —
-identical to the SQLite/Redis backends in ``online/kv.py``:
+both inherit the one write and read of ``online/kv._KVOnlineStore``,
+like the SQLite/Redis backends:
 
 - the distributed part (collapse an arbitrarily large batch to one row
   per entity key, newest event_ts, created_ts tie-break) is the shared
@@ -31,11 +32,9 @@ adapter over ``google.cloud.datastore`` is import-gated.
 
 from __future__ import annotations
 
-from typing import Iterable
+from typing import Iterable, Iterator
 
-from pyspark.sql import DataFrame, SparkSession
-
-from feast_spark.online.kv import _chunked, _read_via_lookup, _snapshot_rows
+from feast_spark.online.kv import _chunked, _KVOnlineStore
 
 # DynamoDB caps BatchGetItem at 100 keys; Datastore transactions at 500
 # mutations (reference datastore.py:DatastoreOnlineStoreConfig
@@ -58,7 +57,7 @@ def _error_code(ex: Exception) -> str | None:
     return resp.get("Error", {}).get("Code") if isinstance(resp, dict) else None
 
 
-class DynamoDBOnlineStore:
+class DynamoDBOnlineStore(_KVOnlineStore):
     """DynamoDB-backed online store (reference
     infra/online_stores/dynamodb.py).
 
@@ -72,6 +71,8 @@ class DynamoDBOnlineStore:
     (the low-level typed-AttributeValue API): create_table, put_item,
     batch_get_item, get_item, delete_table, list_tables.
     """
+
+    write_batch_size = _DDB_PUT_CHUNK
 
     def __init__(self, client):
         self.client = client
@@ -104,21 +105,10 @@ class DynamoDBOnlineStore:
                 raise
         self._known_tables.add(name)
 
-    def online_write_batch(
-        self,
-        spark: SparkSession,
-        project: str,
-        view_name: str,
-        df: DataFrame,
-        join_keys: list[str],
-        ts_col: str,
-        created_col: str | None,
-        feature_cols: list[str],
-        meta: dict | None = None,  # KV stores overwrite in place: no manifest to stamp
+    def _write(
+        self, project: str, view_name: str, schema_json: str,
+        chunks: Iterator[list],
     ) -> None:
-        rows, schema_json = _snapshot_rows(
-            df, join_keys, ts_col, created_col, feature_cols
-        )
         name = self._table_name(project, view_name)
         self._ensure_table(name)
         self.client.put_item(
@@ -128,10 +118,9 @@ class DynamoDBOnlineStore:
                 "payload": {"S": schema_json},
             },
         )
-        # one row per distinct entity key streams from the cluster;
         # conditional put = the newest-wins upsert the reference's
         # blind batch_writer (dynamodb.py:113-126) lacks
-        for chunk in _chunked(rows.toLocalIterator(), _DDB_PUT_CHUNK):
+        for chunk in chunks:
             for r in chunk:
                 event_us = r["event_us"]
                 created_us = r["created_us"] if r["created_us"] is not None else -1
@@ -187,9 +176,6 @@ class DynamoDBOnlineStore:
                     break
         return payloads, schema_json
 
-    #: driver-side multiget: one ``batch_get_item`` per 100 distinct keys
-    online_read = _read_via_lookup
-
     def teardown(self, project: str, view_names: list[str] | None = None) -> None:
         """DELETE the project's tables (dynamodb.py:88-101
         _delete_tables_idempotent)."""
@@ -211,7 +197,7 @@ class DynamoDBOnlineStore:
             self._known_tables.discard(name)
 
 
-class DatastoreOnlineStore:
+class DatastoreOnlineStore(_KVOnlineStore):
     """Datastore-backed online store (reference
     infra/online_stores/datastore.py).
 
@@ -249,26 +235,15 @@ class DatastoreOnlineStore:
             "Project", project, "Table", view_name, "Row", entity_key
         )
 
-    def online_write_batch(
-        self,
-        spark: SparkSession,
-        project: str,
-        view_name: str,
-        df: DataFrame,
-        join_keys: list[str],
-        ts_col: str,
-        created_col: str | None,
-        feature_cols: list[str],
-        meta: dict | None = None,  # KV stores overwrite in place: no manifest to stamp
+    def _write(
+        self, project: str, view_name: str, schema_json: str,
+        chunks: Iterator[list],
     ) -> None:
-        rows, schema_json = _snapshot_rows(
-            df, join_keys, ts_col, created_col, feature_cols
-        )
         self.client.put(self._parent(project, view_name), {"schema_json": schema_json})
         # transaction-sized minibatches (datastore.py:167-178
         # _to_minibatches); read-compare-put inside the transaction is
         # the newest-wins guard the reference's blind put_multi lacks
-        for chunk in _chunked(rows.toLocalIterator(), self.write_batch_size):
+        for chunk in chunks:
             with self.client.transaction():
                 for r in chunk:
                     key = self._row_key(project, view_name, r["entity_key"])
@@ -305,9 +280,6 @@ class DatastoreOnlineStore:
             if row is not None and "payload" in row:
                 payloads.append(row["payload"])
         return payloads, meta["schema_json"]
-
-    #: driver-side multiget: one ``get`` per distinct key
-    online_read = _read_via_lookup
 
     def teardown(self, project: str, view_names: list[str] | None = None) -> None:
         """Delete all Row children + the table metadata entity

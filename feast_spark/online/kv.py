@@ -12,8 +12,8 @@ materialization.  Spark-first split of the same design:
   snapshot store uses;
 - only that collapsed snapshot (one row per DISTINCT entity key in the
   batch, not per source row) crosses to the driver via
-  ``toLocalIterator`` and upserts into the KV in chunked transactions,
-  mirroring the reference's driver-side write loop;
+  ``toLocalIterator`` and upserts into the KV in chunks, mirroring the
+  reference's driver-side write loop;
 - merge-with-existing happens IN the KV via a conditional upsert
   (newest wins), so the store is never read back into Spark.
 
@@ -22,6 +22,10 @@ write time, so typed values round-trip exactly (decoded in Python by
 that schema on read: ``online_read`` runs no Spark) — replacing the
 reference's ValueProto blobs (type_map.py:163-297) with a
 self-describing encoding that needs no generated code.
+
+``_KVOnlineStore`` owns that write loop and the point-lookup read for
+every KV backend here and in ``online/cloud.py``; a backend supplies
+only its storage verbs (``_write``, ``_lookup``, ``teardown``).
 
 Scale posture: a KV row set bounded by entity cardinality is exactly
 what these stores are for (the reference's sqlite store is its
@@ -159,31 +163,63 @@ def _parse_hits(
     return hits
 
 
-def _read_via_lookup(
-    store,
-    project: str,
-    view_name: str,
-    keys: list[str],
-    feature_cols: list[str],
-    as_of=None,
-) -> list[dict | None]:
-    """Shared ``online_read``: point-lookup the distinct request keys
-    in the KV from the driver — the reference's online_read loop
-    (sqlite.py:139-166) — and answer one ``dict | None`` per key, in
-    key order, with no Spark code.  The KV is never scanned.  KV
-    backends overwrite in place: no snapshot serves ``as_of``."""
-    if as_of is not None:
-        raise ValueError(
-            f"{type(store).__name__} keeps no history; as_of reads need "
-            "the parquet online store"
+class _KVOnlineStore:
+    """The one write and the one read every KV backend shares.
+
+    A backend fills in two storage verbs: ``_write(project, view_name,
+    schema_json, chunks)`` records the payload schema, then upserts each
+    chunk of collapsed rows newest-wins; ``_lookup(project, view_name,
+    keys)`` returns ``(payloads, schema_json)`` for the keys it holds."""
+
+    #: collapsed rows per storage round trip
+    write_batch_size = _CHUNK
+
+    def online_write_batch(
+        self,
+        spark: SparkSession,
+        project: str,
+        view_name: str,
+        df: DataFrame,
+        join_keys: list[str],
+        ts_col: str,
+        created_col: str | None,
+        feature_cols: list[str],
+        meta: dict | None = None,  # KV stores overwrite in place: no manifest to stamp
+    ) -> None:
+        rows, schema_json = _snapshot_rows(
+            df, join_keys, ts_col, created_col, feature_cols
         )
-    distinct = list(dict.fromkeys(keys))
-    payloads, schema_json = store._lookup(project, view_name, distinct)
-    hits = _parse_hits(payloads, schema_json, feature_cols)
-    return [hits.get(k) for k in keys]
+        # one row per distinct entity key streams from the cluster
+        self._write(
+            project, view_name, schema_json,
+            _chunked(rows.toLocalIterator(), self.write_batch_size),
+        )
+
+    def online_read(
+        self,
+        project: str,
+        view_name: str,
+        keys: list[str],
+        feature_cols: list[str],
+        as_of=None,
+    ) -> list[dict | None]:
+        """Point-lookup the distinct request keys in the KV from the
+        driver — the reference's online_read loop (sqlite.py:139-166) —
+        and answer one ``dict | None`` per key, in key order, with no
+        Spark code.  The KV is never scanned.  KV backends overwrite in
+        place: no snapshot serves ``as_of``."""
+        if as_of is not None:
+            raise ValueError(
+                f"{type(self).__name__} keeps no history; as_of reads need "
+                "the parquet online store"
+            )
+        distinct = list(dict.fromkeys(keys))
+        payloads, schema_json = self._lookup(project, view_name, distinct)
+        hits = _parse_hits(payloads, schema_json, feature_cols)
+        return [hits.get(k) for k in keys]
 
 
-class SqliteOnlineStore:
+class SqliteOnlineStore(_KVOnlineStore):
     """SQLite-backed online store (reference infra/online_stores/sqlite.py).
 
     One row per entity key per ``{project}_{view}`` table; conditional
@@ -191,7 +227,9 @@ class SqliteOnlineStore:
     UPDATE-then-INSERT-OR-IGNORE pair collapsed into one
     ``ON CONFLICT DO UPDATE ... WHERE`` statement.  Threads share one
     connection under one lock, held for a whole write transaction and
-    all of a lookup's chunks, so no response mixes two commits."""
+    all of a lookup's chunks, so no response mixes two commits.  A
+    write drains its rows from Spark before it takes the lock, so no
+    read waits on the Spark job."""
 
     def __init__(self, path: str):
         self.path = path
@@ -214,21 +252,17 @@ class SqliteOnlineStore:
             )
         return self._conn
 
-    def online_write_batch(
-        self,
-        spark: SparkSession,
-        project: str,
-        view_name: str,
-        df: DataFrame,
-        join_keys: list[str],
-        ts_col: str,
-        created_col: str | None,
-        feature_cols: list[str],
-        meta: dict | None = None,  # KV stores overwrite in place: no manifest to stamp
+    def _write(
+        self, project: str, view_name: str, schema_json: str,
+        chunks: Iterator[list],
     ) -> None:
-        rows, schema_json = _snapshot_rows(
-            df, join_keys, ts_col, created_col, feature_cols
-        )
+        # drained before the lock, so no read waits on the Spark job;
+        # one row per distinct key, which the table holds anyway
+        params = [
+            (r["entity_key"], r["event_us"], r["created_us"], r["payload"])
+            for chunk in chunks
+            for r in chunk
+        ]
         tid = _table_id(project, view_name)
         upsert = (
             f'INSERT INTO "{tid}" (entity_key, event_us, created_us, payload) '
@@ -250,15 +284,7 @@ class SqliteOnlineStore:
                 "ON CONFLICT(table_id) DO UPDATE SET schema_json=excluded.schema_json",
                 (tid, schema_json),
             )
-            # one row per distinct entity key streams from the cluster
-            for chunk in _chunked(rows.toLocalIterator(), _CHUNK):
-                conn.executemany(
-                    upsert,
-                    [
-                        (r["entity_key"], r["event_us"], r["created_us"], r["payload"])
-                        for r in chunk
-                    ],
-                )
+            conn.executemany(upsert, params)
 
     def _lookup(
         self, project: str, view_name: str, keys: list[str]
@@ -281,9 +307,6 @@ class SqliteOnlineStore:
                 )
             ]
         return payloads, row[0]
-
-    #: driver-side multiget: one ``SELECT ... IN`` per 500 distinct keys
-    online_read = _read_via_lookup
 
     def expire(self, spark, project: str, view_name: str, cutoff) -> int:
         """TTL sweep: one indexed DELETE of rows older than ``cutoff``
@@ -317,7 +340,7 @@ class SqliteOnlineStore:
                 )
 
 
-class RedisOnlineStore:
+class RedisOnlineStore(_KVOnlineStore):
     """Redis-backed online store (reference infra/online_stores/redis.py:
     HSET per entity key under ``{project}:{view}:{entity_key}``, HGET
     multiget).  Takes a redis-py-compatible client (``redis.Redis`` in
@@ -333,24 +356,13 @@ class RedisOnlineStore:
     def _prefix(self, project: str, view_name: str) -> str:
         return f"{project}:{view_name}"
 
-    def online_write_batch(
-        self,
-        spark: SparkSession,
-        project: str,
-        view_name: str,
-        df: DataFrame,
-        join_keys: list[str],
-        ts_col: str,
-        created_col: str | None,
-        feature_cols: list[str],
-        meta: dict | None = None,  # KV stores overwrite in place: no manifest to stamp
+    def _write(
+        self, project: str, view_name: str, schema_json: str,
+        chunks: Iterator[list],
     ) -> None:
-        rows, schema_json = _snapshot_rows(
-            df, join_keys, ts_col, created_col, feature_cols
-        )
         prefix = self._prefix(project, view_name)
         self.client.set(f"{prefix}:_schema", schema_json)
-        for chunk in _chunked(rows.toLocalIterator(), _CHUNK):
+        for chunk in chunks:
             keys = [f"{prefix}:{r['entity_key']}" for r in chunk]
             # read-before-write newest-wins guard, pipelined
             pipe = self.client.pipeline()
@@ -385,9 +397,6 @@ class RedisOnlineStore:
             pipe.hget(f"{prefix}:{k}", "payload")
         # json.loads takes the bytes a real client returns as they are
         return [p for p in pipe.execute() if p is not None], schema_json
-
-    #: driver-side multiget: one pipelined ``HGET`` per distinct key
-    online_read = _read_via_lookup
 
     def teardown(self, project: str, view_names: list[str] | None = None) -> None:
         """DEL the project's keys (redis.py teardown: delete by

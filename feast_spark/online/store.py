@@ -193,82 +193,13 @@ class OnlineStore:
             None if keep_versions is None else max(1, keep_versions)
         )
 
-    def _table_dir(self, project: str, view_name: str) -> str:
-        return posixpath.join(self.root, project, view_name)
-
-    # -- manifest (shared protocol: io.manifest) ---------------------------
-
-    def _mtable(self, table_dir: str) -> ManifestedParquetTable:
+    def table(self, project: str, view_name: str) -> ManifestedParquetTable:
+        """The view's snapshot table (``io/manifest.py``): its head,
+        commit archive, tags and ``vacuum`` are the table's own verbs."""
         return ManifestedParquetTable(
-            table_dir, fs=self.fs, keep_versions=self.keep_versions
+            posixpath.join(self.root, project, view_name),
+            fs=self.fs, keep_versions=self.keep_versions,
         )
-
-    def _current_data_path(self, project: str, view_name: str) -> str | None:
-        return self._mtable(self._table_dir(project, view_name)).current_path()
-
-    def snapshot_seq(self, project: str, view_name: str) -> int | None:
-        """The view's head snapshot commit seq, or None before its
-        first materialization — the coordinate a provenance record
-        (provenance.py) stores for later ``as_of=`` replay.
-
-        A manifest WITHOUT a commit log (written before commit logging
-        existed) raises instead of returning None: the view WAS
-        serving real values, and recording it as never-materialized
-        would make a later replay silently serve NOT_FOUND — fake
-        reproducibility.  Its next materialization starts the log."""
-        table_dir = self._table_dir(project, view_name)
-        if not self.fs.exists(posixpath.join(table_dir, MANIFEST)):
-            return None
-        seq = self._mtable(table_dir).head()[1]
-        if not seq:
-            raise ValueError(
-                f"online table {project}/{view_name} has a manifest but "
-                "no commit log — it predates commit logging, so its "
-                "serving state has no replayable coordinate; "
-                "materialize once to start the log"
-            )
-        return seq
-
-    def tag_snapshot(
-        self, project: str, view_name: str, name: str,
-        seq: int | None = None,
-    ) -> int:
-        """Pin the view's snapshot commit ``seq`` (default head) under
-        ``name`` — GC-exempt until :meth:`delete_snapshot_tag`, so a
-        provenance-pinned serving state survives every later
-        materialization regardless of ``keep_versions``.  Returns the
-        pinned seq; readable via ``online_read(as_of=name)``."""
-        return self._mtable(
-            self._table_dir(project, view_name)
-        ).tag(name, seq)
-
-    def snapshot_tags(self, project: str, view_name: str) -> dict[str, int]:
-        """The view's named snapshot pins ``{name: seq}`` — what a
-        provenance record stores so ``describe`` can verify the online
-        pin, not just the seq."""
-        return self._mtable(self._table_dir(project, view_name)).tags()
-
-    def snapshot_meta(self, project: str, view_name: str) -> dict:
-        """The view's last-commit manifest meta — e.g. the streaming
-        sink's ``stream_epoch`` watermark, the missing coordinate for
-        a view fed by a pipeline that never stops writing."""
-        return self._mtable(
-            self._table_dir(project, view_name)
-        ).current_meta()
-
-    def delete_snapshot_tag(
-        self, project: str, view_name: str, name: str
-    ) -> None:
-        """Unpin ``name``; the snapshot rejoins the GC window at the
-        next materialization (or :meth:`vacuum_snapshots`)."""
-        self._mtable(self._table_dir(project, view_name)).delete_tag(name)
-
-    def vacuum_snapshots(self, project: str, view_name: str) -> list[str]:
-        """Reclaim snapshot versions outside the keep window NOW —
-        e.g. after a retired run's tag was deleted on a view that is
-        no longer materialized (commit-path GC would otherwise never
-        run again).  Returns the deleted version dirs."""
-        return self._mtable(self._table_dir(project, view_name)).vacuum()
 
     # -- write / read ------------------------------------------------------
 
@@ -320,7 +251,7 @@ class OnlineStore:
         was derived from; on a lost compare-and-swap re-read the head
         and derive again, up to ``COMMIT_ATTEMPTS`` times.  ``derive``
         returning None commits nothing."""
-        table = self._mtable(self._table_dir(project, view_name))
+        table = self.table(project, view_name)
         for attempt in range(COMMIT_ATTEMPTS):
             current, seq = table.head()
             rows = derive(current)
@@ -382,7 +313,7 @@ class OnlineStore:
         This is the monitoring half of the freshness story: the
         ``expectations.freshness`` check gates the SOURCE before
         materialize; this profiles what serving actually holds."""
-        path = self._current_data_path(project, view_name)
+        path = self.table(project, view_name).current_path()
         if path is None:
             return {"n_keys": 0, "age_p50_s": None, "age_p90_s": None,
                     "age_p99_s": None, "age_max_s": None}
@@ -418,7 +349,7 @@ class OnlineStore:
             self.fs.delete(posixpath.join(self.root, project))
         else:
             for v in view_names:
-                self.fs.delete(self._table_dir(project, v))
+                self.fs.delete(posixpath.join(self.root, project, v))
 
     #: the parquet store keeps ``keep_versions`` immutable snapshots, so
     #: it can serve time-travel reads; KV backends overwrite in place
@@ -451,8 +382,8 @@ class OnlineStore:
         and a feature column added after the replayed instant serves
         None (serving then had no such column) — only an
         actually-expired snapshot errors."""
+        table = self.table(project, view_name)
         if as_of is not None:
-            table_dir = self._table_dir(project, view_name)
             if as_of == 0:
                 # seq 0 = "before the first commit" (numbering starts
                 # at 1): the pre-history replay a provenance record
@@ -460,14 +391,14 @@ class OnlineStore:
                 # snapshot was taken (provenance.NEVER_MATERIALIZED) —
                 # serving then returned NOT_FOUND rows, so replay does
                 path = None
-            elif not self.fs.exists(posixpath.join(table_dir, MANIFEST)):
+            elif not self.fs.exists(posixpath.join(table.root, MANIFEST)):
                 # never committed: the head path serves NOT_FOUND rows
                 # for this state, and so did serving at the instant
                 path = None
             else:
-                path = self._mtable(table_dir).path_as_of(as_of)
+                path = table.path_as_of(as_of)
         else:
-            path = self._current_data_path(project, view_name)
+            path = table.current_path()
         if path is None or not keys:
             return [None] * len(keys)
         hits = self._read_hits(path, sorted(set(keys)), feature_cols)

@@ -14,7 +14,7 @@ from __future__ import annotations
 
 from datetime import datetime
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -39,37 +39,21 @@ def latest_per_key(
     created_col: str | None = None,
     start: datetime | None = None,
     end: datetime | None = None,
-    strategy: str = "agg",
 ) -> DataFrame:
     """One newest row per key, ordering by (ts DESC[, created DESC]).
 
-    ``agg`` (default — the scale path): groupBy(keys).agg(max_by(row,
-    (ts, created))).  Hash aggregation with MAP-SIDE PARTIAL COMBINE:
-    each task reduces its input to one candidate per key before the
-    shuffle, so shuffle volume is O(distinct keys), not O(rows) — at
-    100 TB with hot keys this is the difference between a skew stall
-    and an even reduce.  Ties beyond (ts, created) resolve arbitrarily
-    (= the reference's ANY_VALUE, bigquery.py:650).
-
-    ``window``: ROW_NUMBER() = 1 (the reference's SQL formulation,
-    bigquery.py:86-95).  Shuffles every row; kept for parity testing.
+    groupBy(keys).agg(max_by(row, (ts, created))): hash aggregation
+    with MAP-SIDE PARTIAL COMBINE.  Each task reduces its input to one
+    candidate per key before the shuffle, so shuffle volume is
+    O(distinct keys), not O(rows) — at 100 TB with hot keys this is the
+    difference between a skew stall and an even reduce.  Ties beyond
+    (ts, created) resolve arbitrarily (= the reference's ANY_VALUE,
+    bigquery.py:650).
 
     The time filter always runs before the shuffle and is pushed into
     the parquet scan (min/max row-group skipping).
     """
     df = time_range_filter(df, ts_col, start, end)
-    if strategy == "window":
-        order = [F.col(ts_col).desc()]
-        if created_col:
-            order.append(F.col(created_col).desc())
-        w = Window.partitionBy(*join_keys).orderBy(*order)
-        return (
-            df.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-    if strategy != "agg":
-        raise ValueError(f"unknown latest_per_key strategy: {strategy}")
     payload_cols = [c for c in df.columns if c not in join_keys]
     order_expr = (
         F.struct(F.col(ts_col), F.col(created_col))

@@ -154,17 +154,26 @@ def snapshot_provenance(
         views = {}
         views_meta: dict[str, dict] = {}
         for view in reg.list_feature_views():
-            seq = ostore.snapshot_seq(project, view.name)
-            views[view.name] = NEVER_MATERIALIZED if seq is None else seq
+            table = ostore.table(project, view.name)
+            head = epochs_io.current_head(table.root, table.fs)
+            seq = epochs_io.commit_seq_of(head)
+            if head and not seq:
+                # the view WAS serving real values: recording it as
+                # never-materialized would make a later replay silently
+                # serve NOT_FOUND — fake reproducibility
+                raise ValueError(
+                    f"online table {project}/{view.name} has a manifest "
+                    "but no commit log — it predates commit logging, so "
+                    "its serving state has no replayable coordinate; "
+                    "materialize once to start the log"
+                )
+            views[view.name] = seq if head else NEVER_MATERIALIZED
             # last-commit manifest meta: the streaming sink's
             # stream_epoch watermark — "ingested through epoch E", the
             # missing coordinate for a view fed by a query that never
             # stops writing
-            meta = {} if seq is None else ostore.snapshot_meta(
-                project, view.name
-            )
-            if meta:
-                views_meta[view.name] = meta
+            if head.get("meta"):
+                views_meta[view.name] = head["meta"]
         online["views"] = views
         if views_meta:
             online["meta"] = views_meta

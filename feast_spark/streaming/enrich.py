@@ -126,7 +126,7 @@ def online_snapshot_spec(
     Use with ``enrich_stream(..., specs=lambda:
     online_snapshot_spec(...))`` so each micro-batch re-reads the
     manifest and picks up concurrent materializations."""
-    path = store._current_data_path(project, view_name)
+    path = store.table(project, view_name).current_path()
     if path is None:
         raise ValueError(
             f"online store has no snapshot for {project}/{view_name}"

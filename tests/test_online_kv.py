@@ -190,6 +190,57 @@ def test_sqlite_serves_without_spark(spark, tmp_path):
     assert got["__statuses"]["value"] == ["PRESENT", "PRESENT", "NOT_FOUND"]
 
 
+def test_sqlite_reads_do_not_wait_on_the_write_job(spark, tmp_path, monkeypatch):
+    """A write drains its collapsed rows from Spark before it takes the
+    store lock: while the write's row iterator is held open (a slow
+    Spark job), a lookup from another thread still answers, from the
+    last committed state."""
+    import threading
+
+    from feast_spark.online import kv
+
+    store = _mk_store("sqlite", tmp_path)
+    _write(store, spark, [Row(driver_id=1, ts=_ts("2024-01-01T00:00"), value=1.0)])
+    started, release = threading.Event(), threading.Event()
+    snapshot_rows = kv._snapshot_rows
+
+    class HeldRows:
+        def __init__(self, rows):
+            self.rows = rows
+
+        def toLocalIterator(self):
+            started.set()
+            release.wait(60)
+            yield from self.rows.toLocalIterator()
+
+    def held(*args, **kwargs):
+        rows, schema_json = snapshot_rows(*args, **kwargs)
+        return HeldRows(rows), schema_json
+
+    monkeypatch.setattr(kv, "_snapshot_rows", held)
+    df = spark.createDataFrame(
+        [Row(driver_id=1, ts=_ts("2024-01-02T00:00"), value=2.0)]
+    )
+    writer = threading.Thread(
+        target=store.online_write_batch,
+        args=(spark, "p", "v", df, ["driver_id"], "ts", None, ["value"]),
+    )
+    got: list[dict] = []
+    reader = threading.Thread(target=lambda: got.append(_read(store, spark, [1])))
+    writer.start()
+    try:
+        assert started.wait(60)
+        reader.start()
+        reader.join(5)
+        assert not reader.is_alive(), "the lookup waited on the write's Spark job"
+    finally:
+        release.set()
+        writer.join(120)
+        reader.join(120)
+    assert got[0][1]["value"] == pytest.approx(1.0)
+    assert _read(store, spark, [1])[1]["value"] == pytest.approx(2.0)
+
+
 @pytest.mark.parametrize("kind", ["sqlite", "redis"])
 def test_batch_collapses_before_driver(spark, tmp_path, kind):
     """Many source rows per key -> exactly the latest lands in the KV

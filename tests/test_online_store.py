@@ -89,7 +89,7 @@ def test_online_read_values_match_spark_collect(spark, tmp_path):
     got = store.online_read(
         "p", "v", encode_request_keys([{"k": 1}, {"k": 2}], ["k"]), feats
     )
-    want = spark.read.parquet(store._current_data_path("p", "v")).collect()[0]
+    want = spark.read.parquet(store.table("p", "v").current_path()).collect()[0]
     assert got[1] is None
     assert got[0] == {f: want[f] for f in ["__event_ts", *feats]}
     assert isinstance(got[0]["st"], Row) and got[0]["st"].s == "x"

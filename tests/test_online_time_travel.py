@@ -151,10 +151,10 @@ def test_manifest_vacuum_reclaims_unpinned_without_a_commit(
 
 
 def test_online_snapshot_tag_serves_by_name(spark, store):
-    """tag_snapshot -> get_online_features(as_of='name') replays the
+    """table(...).tag -> get_online_features(as_of='name') replays the
     pinned materialization through every later upsert."""
     now = _utcnow()
-    store.online_store.tag_snapshot("tt", "fv", "june-run")
+    store.online_store.table("tt", "fv").tag("june-run")
     for v in (5.0, 6.0):
         store.online_store.online_write_batch(
             spark, "tt", "fv",
@@ -560,7 +560,7 @@ def test_doctor_history_detects_all_three_layers(
     assert "*seq=1" in out and "readable" in out and "v_00000001" in out
 
     # snapshot tags (r14) show up as pins in the same log
-    store.online_store.tag_snapshot("tt", "fv", "june-run")
+    store.online_store.table("tt", "fv").tag("june-run")
     assert main(["doctor", "--history", table_dir]) == 0
     out = capsys.readouterr().out
     assert "tags=june-run" in out

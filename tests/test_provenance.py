@@ -297,9 +297,7 @@ def test_pin_failure_rolls_back_applied_tags(
 
     assert not os.path.exists(prov_path)
     # online: the fresh tag was rolled back
-    assert "june-run" not in store.online_store.snapshot_tags(
-        "prov", "fv"
-    )
+    assert "june-run" not in store.online_store.table("prov", "fv").tags()
     # index: restored to the PRIOR pin (seq 1), not the head (seq 2)
     assert epochs_io.read_tags(idx, epochs_io.LocalFS()) == {
         "june-run": 1
@@ -359,7 +357,7 @@ def test_doctor_provenance_orphans(spark, store, tmp_path, capsys):
 
     # hard-kill simulation: a second run's pins land on all three
     # layers, then the process dies before writing its JSON
-    store.online_store.tag_snapshot("prov", "fv", "killed-run")
+    store.online_store.table("prov", "fv").tag("killed-run")
     epochs_io.tag_commit(idx, None, "killed-run", 1)
     ManifestedParquetTable(ds).tag("killed-run", 1)
     assert main(["doctor", "--provenance-orphans", str(run_dir)]) == 1
@@ -372,7 +370,7 @@ def test_doctor_provenance_orphans(spark, store, tmp_path, capsys):
     assert not any("'v1'" in line for line in orphan_lines)
 
     # deleting the strays (the advertised repair) makes the dir clean
-    store.online_store.delete_snapshot_tag("prov", "fv", "killed-run")
+    store.online_store.table("prov", "fv").delete_tag("killed-run")
     epochs_io.delete_tag(idx, None, "killed-run")
     ManifestedParquetTable(ds).delete_tag("killed-run")
     assert main(["doctor", "--provenance-orphans", str(run_dir)]) == 0
@@ -399,7 +397,7 @@ def test_online_pin_recorded_and_verified_by_describe(
     assert main(base + ["provenance", "describe", prov_path]) == 0
     out = capsys.readouterr().out
     assert f"ok       online fv pin 'june-run' -> seq={seq}" in out
-    store.online_store.delete_snapshot_tag("prov", "fv", "june-run")
+    store.online_store.table("prov", "fv").delete_tag("june-run")
     assert main(base + ["provenance", "describe", prov_path]) == 1
     assert "missing  online fv pin 'june-run'" in capsys.readouterr().out
 
@@ -827,7 +825,7 @@ def test_vacuum_honors_committed_keep_versions(spark, tmp_path):
         _write(wide, v)
     narrow = OnlineStore(online_root)  # default config
     _write(narrow, 9)
-    hist = narrow._mtable(narrow._table_dir("p", "fv")).history()
+    hist = narrow.table("p", "fv").history()
     assert [e["seq"] for e in hist] == [2, 3, 4, 5]
 
 
@@ -881,25 +879,24 @@ def test_pin_tag_validated_before_any_layer_is_tagged(
     from feast_spark.io.fs import LocalFS
 
     assert epochs_io.read_tags(idx, LocalFS()) == {}
-    assert store.online_store._mtable(
-        store.online_store._table_dir("prov", "fv")
-    ).tags() == {}
+    assert store.online_store.table("prov", "fv").tags() == {}
 
 
 def test_snapshot_seq_refuses_prehistoric_manifest(store, tmp_path):
     """A manifest WITHOUT a commit log means the view WAS serving —
-    recording it as never-materialized would fake reproducibility."""
+    recording its seq as never-materialized would fake
+    reproducibility, so the snapshot refuses."""
     import json as _json
     import os
 
     table_dir = os.path.join(
-        store.config.online_store_path, "prov", "legacy_view"
+        store.config.online_store_path, "prov", "fv_unmaterialized"
     )
     os.makedirs(os.path.join(table_dir, "v_00000001"))
     with open(os.path.join(table_dir, "_MANIFEST.json"), "w") as f:
         _json.dump({"current": "v_00000001", "format": "parquet"}, f)
     with pytest.raises(ValueError, match="predates commit logging"):
-        store.online_store.snapshot_seq("prov", "legacy_view")
+        store.snapshot_provenance()
 
 
 def test_cli_tag_verb_is_layer_agnostic(spark, store, tmp_path, capsys):

@@ -319,24 +319,6 @@ def test_manifest_meta_merges_and_deletes(spark, tmp_path):
     assert t.current_meta() == {"epoch": 9}
 
 
-def test_manifest_commit_tables_consistent_snapshot(spark, tmp_path):
-    """commit_tables flips several named tables as ONE snapshot: after
-    a second commit, readers see the new postings AND the new stats —
-    never a mix — and GC still bounds versions."""
-    from feast_spark.io.manifest import ManifestedParquetTable
-
-    t = ManifestedParquetTable(str(tmp_path / "mt"), keep_versions=1)
-    a1 = spark.createDataFrame([(1, "x")], "id INT, v STRING")
-    s1 = spark.createDataFrame([(1,)], "n INT")
-    t.commit_tables({"data": a1, "stats": s1}, meta={"gen": 1})
-    a2 = spark.createDataFrame([(1, "x"), (2, "y")], "id INT, v STRING")
-    s2 = spark.createDataFrame([(2,)], "n INT")
-    t.commit_tables({"data": a2, "stats": s2}, meta={"gen": 2})
-    assert t.read_table(spark, "data").count() == 2
-    assert t.read_table(spark, "stats").collect()[0]["n"] == 2
-    assert t.current_meta()["gen"] == 2
-
-
 def test_histogram_table_incremental_update_equals_rebuild(spark, tmp_path):
     """Two slice updates == one build over the union (histogram merge
     is exact), and quantiles answer from the stored rows."""

@@ -243,9 +243,7 @@ def test_latest_per_key_hot_key_absorbed_by_partial_combine(
     from feast_spark.operators.dedup import latest_per_key
     from feast_spark.plans import explain_formatted, plan_nodes
 
-    out = latest_per_key(
-        hot_events, join_keys=["user_id"], ts_col="ts", strategy="agg"
-    )
+    out = latest_per_key(hot_events, join_keys=["user_id"], ts_col="ts")
     rows = {r["user_id"]: (r["ts"], r["value"]) for r in out.collect()}
     assert len(rows) == 501
     # winner for every key is its max-ts event; key 0's is id 29999

@@ -94,7 +94,7 @@ def test_stream_to_online_upsert_and_late_data(spark, tmp_path):
     # the sink stamps its micro-batch watermark into the snapshot
     # manifest, so a provenance snapshot can record "ingested through
     # epoch E" for a view fed by a query that never stops (r15)
-    wm = store.snapshot_meta("t", "driver_stream").get("stream_epoch")
+    wm = store.table("t", "driver_stream").current_meta().get("stream_epoch")
     assert isinstance(wm, int) and wm >= 0
 
 

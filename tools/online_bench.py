@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import statistics
 import sys
 import tempfile
@@ -88,22 +89,25 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
     tmp = tempfile.mkdtemp(prefix="online_bench_")
-    results: dict[str, dict] = {}
-    for kind in ("parquet", "sqlite"):
-        st = _build_store(spark, sf_dir, tmp, kind)
-        per = {}
-        st.get_online_features(  # untimed warmup
-            ["user_latest:value"], [{"user_id": 0}]
-        )
-        for n in counts:
-            rows = [{"user_id": i} for i in range(n)]
-            samples = []
-            for _ in range(runs):
-                t0 = time.monotonic()
-                st.get_online_features(["user_latest:value"], rows)
-                samples.append(time.monotonic() - t0)
-            per[f"k{n}"] = round(statistics.median(samples), 3)
-        results[kind] = per
+    try:
+        results: dict[str, dict] = {}
+        for kind in ("parquet", "sqlite"):
+            st = _build_store(spark, sf_dir, tmp, kind)
+            per = {}
+            st.get_online_features(  # untimed warmup
+                ["user_latest:value"], [{"user_id": 0}]
+            )
+            for n in counts:
+                rows = [{"user_id": i} for i in range(n)]
+                samples = []
+                for _ in range(runs):
+                    t0 = time.monotonic()
+                    st.get_online_features(["user_latest:value"], rows)
+                    samples.append(time.monotonic() - t0)
+                per[f"k{n}"] = round(statistics.median(samples), 3)
+            results[kind] = per
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
     print(
         json.dumps(
             {
