@@ -14,6 +14,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from feast_spark.io.pread import read_parquet_memo
+
 
 @dataclass
 class DataSource:
@@ -112,6 +114,16 @@ class FileSource(DataSource):
         return ManifestedParquetTable(self.path)
 
     def load(self, spark: SparkSession) -> DataFrame:
+        """The source as a DataFrame, field mapping applied.
+
+        A plain local parquet file or directory reads through
+        ``io/pread.read_parquet_memo``: a repeat load of an unchanged
+        path returns the memoized relation and runs no schema-inference
+        or file-listing job.  The memo key is the path's recursive
+        (relpath, mtime_ns, size) listing, so an appended, rewritten or
+        removed file misses and is read afresh.  Globs and URIs
+        (``file://``, ``s3a://``) take the plain reader; manifest-table
+        roots read their committed snapshot."""
         t = self._manifest_table(spark)
         if t is not None:
             if self.file_format != "parquet":
@@ -131,7 +143,7 @@ class FileSource(DataSource):
             )
         reader = spark.read
         if self.file_format == "parquet":
-            df = reader.parquet(self.path)
+            df = read_parquet_memo(spark, self.path)
         elif self.file_format == "csv":
             df = reader.option("header", "true").option("inferSchema", "true").csv(self.path)
         elif self.file_format == "json":

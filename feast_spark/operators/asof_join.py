@@ -14,16 +14,18 @@ For entity row (k, t) and feature view V with ttl τ:
 Three physical strategies, chosen by ``strategy``:
 
 * ``union_window`` (default — the 100 TB scale path): tag and union the
-  entity rows with the (projected) feature rows, hash-partition ONCE by
-  entity key, sort within partitions by (ts, side, created), and carry
-  the latest feature row forward with ``last(struct, ignoreNulls)``.
-  Exactly one shuffle of each side, no range-join row explosion on hot
-  keys, created_ts dedup folded into the same sort.  This is the
-  sort-merge formulation of pandas' merge_asof, distributed.  One
-  builder, :func:`_asof_union_window`, makes the plan for every column
-  name and type: SQL text with quoted identifiers, key/ts casts through
-  ``Column.cast(DataType)``, and typed NULL padding from
-  ``unionByName(allowMissingColumns=True)``.
+  entity rows with the (projected) feature rows of EVERY view that
+  shares the entity join keys, hash-partition ONCE by those keys, sort
+  within partitions by (ts, side, each view's created), and carry each
+  view's latest feature row forward with ``last(struct, ignoreNulls)``;
+  each view's ttl bound applies in the final projection.  One pass per
+  join-key set, whatever the view count: one shuffle of each side, no
+  range-join row explosion on hot keys, created_ts dedup folded into
+  the same sort.  This is the sort-merge formulation of pandas'
+  merge_asof, distributed.  One builder, :func:`_asof_union_window`,
+  makes the plan for every column name and type: SQL text with quoted
+  identifiers, key/ts casts through ``Column.cast(DataType)``, and
+  typed NULL padding from ``unionByName(allowMissingColumns=True)``.
 
 * ``range_join``: classic range join + ROW_NUMBER (the reference's
   BigQuery formulation).  With a small feature table Spark broadcasts
@@ -162,29 +164,39 @@ def as_of_join(
 ) -> DataFrame:
     """J2 — compose one or more as-of joins onto entity_df.
 
-    Each spec is applied in order; the entity frame grows by each view's
-    feature columns.  Output preserves every entity_df column (entity ts
-    column first, P5) plus ``spec.out_name(f)`` for each feature.
+    ``union_window`` specs that share their entity-side join keys run
+    as ONE pass: one union, one partitioning and one window sort for
+    the whole group, each view carrying its own ttl bound and
+    ``created`` tie-break in that pass.  A retrieval therefore costs
+    one Exchange plus one Sort per distinct join-key set, whatever the
+    view count.  The other strategies apply one spec at a time.
+    Output preserves every entity_df column (entity ts column first,
+    P5) plus ``spec.out_name(f)`` for each feature, in spec order.
 
     ``strategy='auto'`` dispatches per spec via :func:`choose_strategy`
-    (bucket-merge for co-bucketed layouts, broadcast range join for
-    small feature tables, union_window otherwise).
+    against the input ``entity_df`` (bucket-merge for co-bucketed
+    layouts, broadcast range join for small feature tables,
+    union_window otherwise).
     """
+    if strategy not in ("auto", "union_window", "range_join", "sorted_merge"):
+        raise ValueError(f"unknown as-of join strategy: {strategy}")
     out = entity_df
+    fused: dict[tuple[str, ...], list[AsOfJoinSpec]] = {}
     for spec in specs:
         chosen = (
-            choose_strategy(out, spec) if strategy == "auto" else strategy
+            choose_strategy(entity_df, spec) if strategy == "auto" else strategy
         )
         if chosen == "union_window":
-            out = _asof_union_window(out, entity_ts_col, spec)
+            fused.setdefault(tuple(spec.join_keys), []).append(spec)
         elif chosen == "range_join":
             out = _asof_range_join(out, entity_ts_col, spec)
-        elif chosen == "sorted_merge":
-            out = _asof_sorted_merge(out, entity_ts_col, spec)
         else:
-            raise ValueError(f"unknown as-of join strategy: {strategy}")
-    # P5 — entity timestamp column first
-    cols = [entity_ts_col] + [c for c in out.columns if c != entity_ts_col]
+            out = _asof_sorted_merge(out, entity_ts_col, spec)
+    for group in fused.values():
+        out = _asof_union_window(out, entity_ts_col, group)
+    # P5 — entity timestamp column first; features in spec order
+    cols = [entity_ts_col] + [c for c in entity_df.columns if c != entity_ts_col]
+    cols += [s.out_name(f) for s in specs for f in s.features]
     return out.selectExpr(*[_q(c) for c in cols])
 
 
@@ -234,11 +246,13 @@ def _lex_nondecreasing(arrs) -> bool:
 
 
 def _asof_union_window(
-    entity_df: DataFrame, entity_ts_col: str, spec: AsOfJoinSpec
+    entity_df: DataFrame, entity_ts_col: str, specs: list[AsOfJoinSpec]
 ) -> DataFrame:
-    """The ``union_window`` plan: tag and union both sides, partition
-    ONCE by the join keys, sort by (ts, side[, created]) and carry the
-    latest feature struct forward with ``last(struct, ignoreNulls)``.
+    """The ``union_window`` plan for every spec in ``specs`` (all keyed
+    by the same entity-side join keys) in ONE pass: tag and union the
+    entity rows with each view's rows, partition ONCE by the join
+    keys, sort by (ts, side, created...) and carry each view's latest
+    feature struct forward with ``last(struct, ignoreNulls)``.
 
     Every projection is ONE ``selectExpr`` of SQL text with each
     identifier backtick-quoted (an unquoted column named like a niladic
@@ -246,78 +260,95 @@ def _asof_union_window(
     plan construction is driver wall time under the per-call query
     contract, and each Column-DSL node costs a dozen py4j round trips.
 
-    * Feature leg: keys renamed to the entity side's names; keys and ts
-      that differ in type from the entity side are cast first with
+    * View leg ``i``: keys renamed to the entity side's names; keys and
+      ts that differ in type from the entity side are cast first with
       ``Column.cast(DataType)``, exact for every type with no DDL text
       (an identity cast is skipped — the optimizer drops it anyway).
-      The values travel in one struct that is non-null whenever a
-      feature row exists, so a NULL feature value is carried as NULL
-      rather than skipped back to an older value.
+      Rows with a NULL event ts are dropped: they match no entity row.
+      Each view has its own ``__asof_created{i}`` column, so created
+      columns of different types never need a common type, and its
+      values travel in one struct ``__asof_feat{i}`` that is non-null
+      whenever a feature row exists, so a NULL feature value is
+      carried as NULL rather than skipped back to an older value.
     * Entity leg: the ts and side tags.
     * ``unionByName(allowMissingColumns=True)`` pads each leg with
-      Spark-typed NULLs for the other leg's columns (entity payload,
-      struct, created).
+      Spark-typed NULLs for the other legs' columns.
 
     At equal ts, feature rows (side 0) sort before the entity row, so
-    the upper bound is inclusive; among equal (key, ts) feature rows
-    created ASC puts the max created last (NULL created sorts first,
-    so it loses ties)."""
+    the upper bound is inclusive; among one view's equal (key, ts)
+    rows its created ASC puts the max created last (NULL created sorts
+    first, so it loses ties; the other views' created columns are NULL
+    on those rows and never reorder them).  The window spec is the
+    same for every view, so Spark plans one Window node; the final
+    projection applies each view's own ttl bound."""
     ent_schema = entity_df.schema
-    fdf = spec.feature_df
-    f_types = {f.name: f.dataType for f in fdf.schema.fields}
-    casts = {}
-
-    def typed(col: str, dtype, tmp: str) -> str:
-        if f_types.get(col) == dtype:
-            return _q(col)
-        casts[tmp] = _col(col).cast(dtype)
-        return tmp
-
-    key_refs = [
-        typed(spec.key_mapping.get(k, k), ent_schema[k].dataType, f"__asof_k{i}")
-        for i, k in enumerate(spec.join_keys)
-    ]
-    ts_ref = typed(spec.timestamp_col, ent_schema[entity_ts_col].dataType, _TS)
-    if casts:
-        fdf = fdf.withColumns(casts)
-    values = "".join(f", {_q(f)} AS {_q(f)}" for f in spec.features)
-    feat = fdf.selectExpr(
-        *[f"{r} AS {_q(k)}" for r, k in zip(key_refs, spec.join_keys)],
-        f"{ts_ref} AS {_TS}",
-        *([f"{_q(spec.created_col)} AS {_CREATED}"] if spec.created_col else []),
-        f"0 AS {_SIDE}",
-        f"struct({ts_ref} AS __ts{values}) AS {_STRUCT}",
-    )
-    ent = entity_df.selectExpr(
+    keys = list(specs[0].join_keys)
+    legs = []
+    order = [_TS, _SIDE]
+    for i, spec in enumerate(specs):
+        fdf = spec.feature_df
+        f_types = {f.name: f.dataType for f in fdf.schema.fields}
+        casts, refs = {}, []
+        for col, dtype, tmp in [
+            (spec.key_mapping.get(k, k), ent_schema[k].dataType, f"__asof_k{j}")
+            for j, k in enumerate(keys)
+        ] + [(spec.timestamp_col, ent_schema[entity_ts_col].dataType, _TS)]:
+            if f_types.get(col) == dtype:
+                refs.append(_q(col))
+            else:
+                casts[tmp] = _col(col).cast(dtype)
+                refs.append(tmp)
+        *key_refs, ts_ref = refs
+        if casts:
+            fdf = fdf.withColumns(casts)
+        created = []
+        if spec.created_col:
+            created = [f"{_q(spec.created_col)} AS {_CREATED}{i}"]
+            order.append(f"{_CREATED}{i}")
+        values = "".join(f", {_q(f)} AS {_q(f)}" for f in spec.features)
+        legs.append(
+            fdf.selectExpr(
+                *[f"{r} AS {_q(k)}" for r, k in zip(key_refs, keys)],
+                f"{ts_ref} AS {_TS}",
+                *created,
+                f"0 AS {_SIDE}",
+                f"struct({ts_ref} AS __ts{values}) AS {_STRUCT}{i}",
+            ).filter(f"{_TS} IS NOT NULL")
+        )
+    unioned = entity_df.selectExpr(
         "*", f"{_q(entity_ts_col)} AS {_TS}", f"1 AS {_SIDE}"
     )
-    unioned = feat.unionByName(ent, allowMissingColumns=True)
+    for leg in legs:
+        unioned = leg.unionByName(unioned, allowMissingColumns=True)
 
     partition = (
-        f"PARTITION BY {', '.join(_q(k) for k in spec.join_keys)} "
-        if spec.join_keys
-        else ""
+        f"PARTITION BY {', '.join(_q(k) for k in keys)} " if keys else ""
     )
-    order = f"{_TS}, {_SIDE}" + (f", {_CREATED}" if spec.created_col else "")
+    window = (
+        f"OVER ({partition}ORDER BY {', '.join(order)} "
+        "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
+    )
     carried = unioned.selectExpr(
         "*",
-        f"last({_STRUCT}, true) OVER ({partition}ORDER BY {order} "
-        f"ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS __carried",
-    ).filter(f"{_SIDE} = 1")
-    valid = "__carried IS NOT NULL"
-    if spec.ttl is not None:
-        valid += (
-            f" AND __carried.__ts >= {_TS}"
-            f" - INTERVAL {spec.ttl.total_seconds()} SECONDS"
-        )
-    return carried.selectExpr(
-        *[_q(c) for c in ent_schema.names],
         *[
-            f"CASE WHEN {valid} THEN __carried.{_q(f)} END "
+            f"last({_STRUCT}{i}, true) {window} AS __carried{i}"
+            for i in range(len(specs))
+        ],
+    ).filter(f"{_SIDE} = 1")
+    proj = [_q(c) for c in ent_schema.names]
+    for i, spec in enumerate(specs):
+        valid = f"__carried{i} IS NOT NULL"
+        if spec.ttl is not None:
+            valid += (
+                f" AND __carried{i}.__ts >= {_TS}"
+                f" - INTERVAL {spec.ttl.total_seconds()} SECONDS"
+            )
+        proj += [
+            f"CASE WHEN {valid} THEN __carried{i}.{_q(f)} END "
             f"AS {_q(spec.out_name(f))}"
             for f in spec.features
-        ],
-    )
+        ]
+    return carried.selectExpr(*proj)
 
 
 def _asof_sorted_merge(

@@ -57,6 +57,44 @@ def test_asof_union_window_single_shuffle(spark):
     assert "hashpartitioning(user_id" in plan
 
 
+def test_asof_views_sharing_keys_fuse_into_one_shuffle(spark):
+    """Views that share their join keys run as one union-window pass:
+    three views on one key cost one hash Exchange and one Window; a
+    view on a second key set adds one more of each."""
+    ent = spark.range(0, 1000).selectExpr(
+        "id AS rid", "id % 50 AS user_id", "id % 7 AS region",
+        "timestamp_seconds(1600000000 + id) AS ts",
+    )
+    feat = spark.range(0, 5000).selectExpr(
+        "id % 50 AS user_id", "id % 7 AS region",
+        "timestamp_seconds(1600000000 + id * 3) AS ts", "id * 0.5 AS value",
+    )
+
+    def spec(key, prefix, ttl):
+        return AsOfJoinSpec(
+            feature_df=feat, join_keys=[key], timestamp_col="ts",
+            features=["value"], ttl=ttl, prefix=prefix,
+        )
+
+    one_key = as_of_join(
+        ent, "ts",
+        [spec("user_id", "a", timedelta(days=1)), spec("user_id", "b", None),
+         spec("user_id", "c", timedelta(hours=1))],
+    )
+    plan = _optimized_explain(one_key)
+    assert count_exchanges(plan) == 1, plan
+    assert plan_nodes(plan).count("Window") == 1, plan
+
+    two_keys = as_of_join(
+        ent, "ts",
+        [spec("user_id", "a", None), spec("region", "b", None),
+         spec("user_id", "c", None)],
+    )
+    plan = _optimized_explain(two_keys)
+    assert count_exchanges(plan) == 2, plan
+    assert plan_nodes(plan).count("Window") == 2, plan
+
+
 def test_asof_pushdown_reaches_scan(spark):
     """Filters on the feature side must reach the parquet scan."""
     from feast_spark.sources.testdata import load_table
@@ -77,7 +115,11 @@ def test_asof_pushdown_reaches_scan(spark):
         ],
     )
     plan = _optimized_explain(out)
-    assert "PushedFilters: [IsNotNull(event_type), EqualTo(event_type,view)]" in plan
+    # the view leg's own NULL-event-ts filter reaches the scan as well
+    assert (
+        "PushedFilters: [IsNotNull(event_type), EqualTo(event_type,view), "
+        "IsNotNull(ts)]" in plan
+    )
     # column pruning: props/event_id never read on the feature branch
     assert "props" not in plan
 

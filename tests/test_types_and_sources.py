@@ -99,6 +99,37 @@ def test_spark_sql_source(spark):
     )
 
 
+def test_file_source_memoizes_unchanged_parquet(spark, tmp_path):
+    """A repeat load of an unchanged parquet directory runs no Spark
+    job (no schema inference, no listing); appending a file changes
+    the memo key, so the next load sees the new rows.  file:// URIs
+    and globs take the plain reader and still load."""
+    import uuid
+
+    src = str(tmp_path / "src")
+    spark.createDataFrame([Row(k=1, v=1.0)]).write.parquet(src)
+    source = FileSource(path=src)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    first, second = f"first-{uuid.uuid4()}", f"second-{uuid.uuid4()}"
+    try:
+        sc.setJobGroup(first, "first load")
+        source.load(spark)
+        sc.setJobGroup(second, "repeat load")
+        again = source.load(spark)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert tracker.getJobIdsForGroup(first)
+    assert tracker.getJobIdsForGroup(second) == []
+    assert again.count() == 1
+
+    spark.createDataFrame([Row(k=2, v=2.0)]).write.mode("append").parquet(src)
+    assert sorted(r["k"] for r in source.load(spark).collect()) == [1, 2]
+
+    assert FileSource(path=f"file://{src}").load(spark).count() == 2
+    assert FileSource(path=f"{src}/*.parquet").load(spark).count() == 2
+
+
 def test_entity_df_as_pandas_and_sql(spark, tmp_path):
     import pandas as pd
 
