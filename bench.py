@@ -189,7 +189,8 @@ def main() -> None:
     # both sides written bucketed+sorted on the __bucket column ONCE
     # (setup, untimed — that is the point: pay the shuffle+sort at
     # materialization), then each timed run is the zero-Exchange /
-    # zero-Sort bucket-granularity sorted_merge over the scans.
+    # zero-Sort bucket-granularity sorted_merge over the scans (the plan
+    # as_of_join picks when both sides carry __bucket).
     from datetime import timedelta
 
     from feast_spark.operators.asof_join import AsOfJoinSpec, as_of_join
@@ -245,7 +246,6 @@ def main() -> None:
                     ttl=timedelta(days=2),
                 )
             ],
-            strategy="sorted_merge",
         )
 
     queries["pit_sorted_merge_bucketed"] = q_pit_sorted_merge_bucketed

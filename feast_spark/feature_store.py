@@ -48,11 +48,6 @@ class RepoConfig:
     # (project_id[/namespace]) — the reference's provider/online_store
     # registry (repo_config.py, infra/provider.py, infra/online_stores/)
     online_store_type: str = "parquet"
-    # "union_window" (default), "range_join", "sorted_merge", or
-    # "auto" (per-view dispatch: bucket-merge over shared bucket-id
-    # columns, broadcast range join for small feature tables,
-    # union_window otherwise — operators/asof_join.choose_strategy)
-    asof_strategy: str = "union_window"
 
 
 def _fs_for_path(path: str, spark: SparkSession):
@@ -456,9 +451,11 @@ class FeatureStore:
         ``(batch_df, batch_id)`` callable; returns the StreamingQuery.
 
         Scan pruning (A4) does not apply — a stream has no global
-        timestamp bounds; each micro-batch pays the batch operator's
-        plan under ``config.asof_strategy``.  On-demand feature views
-        are applied per micro-batch exactly like the batch path."""
+        timestamp bounds; each micro-batch pays the batch retrieval's
+        as-of plan (one union-window pass per join-key set, or the
+        bucket cogroup when a view and the stream share ``__bucket``).
+        On-demand feature views are applied per micro-batch exactly
+        like the batch path."""
         from feast_spark.streaming.enrich import enrich_stream as _enrich
 
         explicit_base, base_refs, odfv_feats = self._split_refs(features)
@@ -481,7 +478,6 @@ class FeatureStore:
             entity_ts_col,
             specs,
             sink=sink,
-            strategy=self.config.asof_strategy,
             checkpoint_dir=checkpoint_dir,
             trigger_available_now=trigger_available_now,
             transform=_post if odfv_feats else None,
@@ -536,9 +532,7 @@ class FeatureStore:
                     expected=join_keys + [entity_ts_col], missing=missing
                 )
         specs = self._asof_specs(grouped, full_feature_names, ts_bounds)
-        result = as_of_join(
-            entity_sdf, entity_ts_col, specs, strategy=self.config.asof_strategy
-        )
+        result = as_of_join(entity_sdf, entity_ts_col, specs)
 
         if odfv_feats:
             entity_cols = [

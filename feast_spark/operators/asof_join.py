@@ -11,40 +11,41 @@ For entity row (k, t) and feature view V with ttl τ:
   3. no candidate => feature columns NULL (left join); every entity row
      appears exactly once with all original columns preserved.
 
-Three physical strategies, chosen by ``strategy``:
+Each spec's plan follows from its inputs:
 
-* ``union_window`` (default — the 100 TB scale path): tag and union the
-  entity rows with the (projected) feature rows of EVERY view that
-  shares the entity join keys, hash-partition ONCE by those keys, sort
-  within partitions by (ts, side, each view's created), and carry each
-  view's latest feature row forward with ``last(struct, ignoreNulls)``;
-  each view's ttl bound applies in the final projection.  One pass per
-  join-key set, whatever the view count: one shuffle of each side, no
-  range-join row explosion on hot keys, created_ts dedup folded into
-  the same sort.  This is the sort-merge formulation of pandas'
-  merge_asof, distributed.  One builder, :func:`_asof_union_window`,
-  makes the plan for every column name and type: SQL text with quoted
-  identifiers, key/ts casts through ``Column.cast(DataType)``, and
-  typed NULL padding from ``unionByName(allowMissingColumns=True)``.
+* A spec whose two sides share a bucket-id column (``spec.bucket_col``,
+  or ``__bucket`` on both frames — ``skew.with_bucket_id``) runs
+  ``sorted_merge``: cogroup on the bucket id + vectorized in-bucket
+  merge_asof (numpy searchsorted), one Arrow call per BUCKET.  Its
+  ONLY physical requirements are clustering and ASC ordering on the
+  bucket id — exactly what a table bucketed and ``sortBy``'d on it
+  with one file per bucket provides — so over two co-bucketed sorted
+  tables the retrieval runs with ZERO Exchange and ZERO Sort nodes
+  (pay the shuffle+sort once at materialization, never per training
+  run; pinned by tests/test_skew.py).
 
-* ``range_join``: classic range join + ROW_NUMBER (the reference's
-  BigQuery formulation).  With a small feature table Spark broadcasts
-  it and the entity side never shuffles at all — preferable when the
-  feature side fits in a broadcast.  O(n·m) per hot key otherwise.
+* Every other spec rides ``union_window`` (the 100 TB scale path): tag
+  and union the entity rows with the (projected) feature rows of
+  EVERY view on the same set of entity join keys, hash-partition ONCE
+  by those keys, sort within partitions by (ts, side, each view's
+  created), and carry each view's latest feature row forward with
+  ``last(struct, ignoreNulls)``; each view's ttl bound applies in the
+  final projection.  One pass per join-key set, whatever the view
+  count: one shuffle of each side, no range-join row explosion on hot
+  keys, created_ts dedup folded into the same sort.  This is the
+  sort-merge formulation of pandas' merge_asof, distributed.  One
+  builder, :func:`_asof_union_window`, makes the plan for every column
+  name and type: SQL text with quoted identifiers, key/ts casts
+  through ``Column.cast(DataType)``, and typed NULL padding from
+  ``unionByName(allowMissingColumns=True)``.
 
-* ``sorted_merge``: cogroup-by-key + vectorized in-group merge_asof
-  (numpy searchsorted).  Its ONLY physical requirements are clustering
-  and ASC ordering on the join keys — exactly what a bucketed table
-  written ``sortBy(keys)`` with one file per bucket provides — so over
-  two co-bucketed sorted tables the whole retrieval runs with ZERO
-  Exchange and ZERO Sort nodes (pay the shuffle+sort once at
-  materialization, never per training run; pinned by
-  tests/test_skew.py::test_bucketed_pit_retrieval_zero_exchange).
-  The per-task unit is one key's rows in pandas, so the hot-key bound
-  is per-key group size; prefer union_window when keys are skewed and
-  inputs are not pre-bucketed.
+``as_of_join(strategy=...)`` overrides the rule for direct operator
+callers.  ``range_join`` is the classic range join + ROW_NUMBER (the
+reference's BigQuery formulation) and the hot-key path: AQE can split
+its skewed join partition (tests/test_skew.py), which no cheap input
+property predicts, so only an explicit override selects it.
 
-All three strategies take any column name: every reference is quoted
+All three plans take any column name: every reference is quoted
 (``sql_ident``), so a dot or backtick in a key or feature name is part
 of the name.
 """
@@ -81,113 +82,57 @@ class AsOfJoinSpec:
     # entity_df column name -> feature_df column name, when they differ
     # (entity selections, bigquery.py:565-568)
     key_mapping: dict[str, str] = field(default_factory=dict)
-    # sorted_merge only: name of a bucket-id column present on BOTH
-    # sides (a pure function of the join keys, e.g.
-    # skew.with_bucket_id) — the cogroup then runs at BUCKET
-    # granularity, O(buckets) Arrow calls instead of O(distinct keys).
-    # None auto-detects "__bucket" when both frames carry it.
+    # name of a bucket-id column present on BOTH sides (a pure
+    # function of the join keys, e.g. skew.with_bucket_id): selects
+    # the sorted_merge plan, one cogroup per bucket.  None detects
+    # "__bucket" when both frames carry it.
     bucket_col: str | None = None
 
     def out_name(self, feature: str) -> str:
         return f"{self.prefix}__{feature}" if self.prefix else feature
 
 
-def _parse_size_bytes(v: str) -> int:
-    """Parse Spark size confs ('10485760', '10485760b', '10m', '1g',
-    '-1').  Unknown suffixes parse as plain ints of the digit prefix."""
-    s = str(v).strip().lower()
-    mult = 1
-    for suffix, m in (
-        ("kb", 1 << 10), ("mb", 1 << 20), ("gb", 1 << 30), ("tb", 1 << 40),
-        ("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30), ("t", 1 << 40),
-        ("b", 1),
-    ):
-        if s.endswith(suffix):
-            s, mult = s[: -len(suffix)], m
-            break
-    try:
-        return int(s) * mult
-    except ValueError:
-        return -1
-
-
-def choose_strategy(
-    entity_df: DataFrame, spec: AsOfJoinSpec
-) -> str:
-    """Physical-strategy choice for one as-of spec (``strategy='auto'``).
-
-    1. ``sorted_merge`` when a shared bucket-id column is declared or
-       present on both sides (``spec.bucket_col`` / ``__bucket``): the
-       co-bucketed materialized layout, where the bucket-granularity
-       cogroup runs with zero Exchange and zero Sort (SCALE.md
-       "Measured scale curve").  Key-bucketed tables WITHOUT a bucket
-       column deliberately do NOT dispatch here: per-key cogroup pays
-       ~300 us/group (measured 100x+ slower on tiny groups), while
-       union_window over the same co-bucketed scans is also
-       Exchange-free.
-    2. ``range_join`` when Catalyst's size estimate for the feature
-       side fits the broadcast threshold: the entity side then never
-       shuffles at all.
-    3. ``union_window`` otherwise — the one-shuffle default.
-    """
-    if spec.bucket_col is not None or (
-        "__bucket" in entity_df.columns
-        and "__bucket" in spec.feature_df.columns
-    ):
-        return "sorted_merge"
-    spark = entity_df.sparkSession
-    threshold = _parse_size_bytes(
-        spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760b")
-    )
-    if threshold > 0:
-        try:
-            est = int(
-                str(
-                    spec.feature_df._jdf.queryExecution()
-                    .optimizedPlan()
-                    .stats()
-                    .sizeInBytes()
-                )
-            )
-        except Exception:  # stats unavailable (e.g. streaming source)
-            est = None
-        if est is not None and est <= threshold:
-            return "range_join"
-    return "union_window"
+def _bucket_col(entity_df: DataFrame, spec: AsOfJoinSpec) -> str | None:
+    """The bucket-id column both sides of ``spec`` share, if any."""
+    if spec.bucket_col is not None:
+        return spec.bucket_col
+    if "__bucket" in entity_df.columns and "__bucket" in spec.feature_df.columns:
+        return "__bucket"
+    return None
 
 
 def as_of_join(
     entity_df: DataFrame,
     entity_ts_col: str,
     specs: list[AsOfJoinSpec],
-    strategy: str = "union_window",
+    strategy: str | None = None,
 ) -> DataFrame:
     """J2 — compose one or more as-of joins onto entity_df.
 
-    ``union_window`` specs that share their entity-side join keys run
-    as ONE pass: one union, one partitioning and one window sort for
-    the whole group, each view carrying its own ttl bound and
-    ``created`` tie-break in that pass.  A retrieval therefore costs
-    one Exchange plus one Sort per distinct join-key set, whatever the
-    view count.  The other strategies apply one spec at a time.
+    A spec with a shared bucket-id column runs ``sorted_merge``; the
+    rest are grouped by their SET of entity-side join keys and each
+    group runs as ONE ``union_window`` pass: one union, one
+    partitioning and one window sort for the whole group, each view
+    carrying its own ttl bound and ``created`` tie-break in that pass.
+    A retrieval therefore costs one Exchange plus one Sort per
+    distinct join-key set, whatever the view count.
+
+    ``strategy`` (``"union_window"``, ``"range_join"`` or
+    ``"sorted_merge"``) overrides that rule for every spec;
+    ``sorted_merge`` then still needs a bucket-id column on each.
     Output preserves every entity_df column (entity ts column first,
     P5) plus ``spec.out_name(f)`` for each feature, in spec order.
-
-    ``strategy='auto'`` dispatches per spec via :func:`choose_strategy`
-    against the input ``entity_df`` (bucket-merge for co-bucketed
-    layouts, broadcast range join for small feature tables,
-    union_window otherwise).
     """
-    if strategy not in ("auto", "union_window", "range_join", "sorted_merge"):
+    if strategy not in (None, "union_window", "range_join", "sorted_merge"):
         raise ValueError(f"unknown as-of join strategy: {strategy}")
     out = entity_df
     fused: dict[tuple[str, ...], list[AsOfJoinSpec]] = {}
     for spec in specs:
-        chosen = (
-            choose_strategy(entity_df, spec) if strategy == "auto" else strategy
+        chosen = strategy or (
+            "sorted_merge" if _bucket_col(entity_df, spec) else "union_window"
         )
         if chosen == "union_window":
-            fused.setdefault(tuple(spec.join_keys), []).append(spec)
+            fused.setdefault(tuple(sorted(spec.join_keys)), []).append(spec)
         elif chosen == "range_join":
             out = _asof_range_join(out, entity_ts_col, spec)
         else:
@@ -249,7 +194,7 @@ def _asof_union_window(
     entity_df: DataFrame, entity_ts_col: str, specs: list[AsOfJoinSpec]
 ) -> DataFrame:
     """The ``union_window`` plan for every spec in ``specs`` (all keyed
-    by the same entity-side join keys) in ONE pass: tag and union the
+    by the same set of entity-side join keys, in any order) in ONE pass: tag and union the
     entity rows with each view's rows, partition ONCE by the join
     keys, sort by (ts, side, created...) and carry each view's latest
     feature struct forward with ``last(struct, ignoreNulls)``.
@@ -354,37 +299,28 @@ def _asof_union_window(
 def _asof_sorted_merge(
     entity_df: DataFrame, entity_ts_col: str, spec: AsOfJoinSpec
 ) -> DataFrame:
-    """Cogroup both sides and merge-as-of inside each group with numpy
-    searchsorted (the pandas-merge_asof kernel, vectorized per Arrow
-    group — never row-at-a-time).
+    """Cogroup both sides on their shared bucket-id column and
+    merge-as-of inside each bucket with numpy searchsorted (the
+    pandas-merge_asof kernel, vectorized per Arrow group — never
+    row-at-a-time).
 
-    Granularity — the deciding cost factor (measured,
-    tools/groupsize_bench.py):
-
-    * **Per key** (default): cogroup on the join keys.
-      FlatMapCoGroupsInPandas invokes the kernel once per DISTINCT
-      KEY, so the fixed per-group cost (Arrow batch framing + pandas
-      construction + Python call, ~300 us/group) dominates tiny
-      groups: at 300k keys x 5 rows this is ~100x slower than
-      union_window.  Only sane when groups are few and fat.
-    * **Per bucket** (``spec.bucket_col``, or a ``__bucket`` column
-      present on both sides): cogroup on a materialized bucket-id
-      column — any pure function of the join keys shared by both
-      sides (``skew.with_bucket_id``) — and merge EVERY key run
-      inside the bucket in one vectorized kernel call (shared
-      code+ts-rank composite, a single searchsorted, no per-key
-      loop).  O(n_buckets) Arrow calls total; this is the scale
-      path, and at 300k tiny keys it matches union_window's
-      wall-time while keeping the zero-Exchange/zero-Sort plan.
+    The bucket id (``spec.bucket_col``, or a ``__bucket`` column
+    present on both sides) is any pure function of the join keys
+    shared by both sides (``skew.with_bucket_id``).  EVERY key run
+    inside a bucket merges in one vectorized kernel call (shared
+    code+ts-rank composite, a single searchsorted, no per-key loop):
+    O(n_buckets) Arrow calls total.  A cogroup on the join keys would
+    pay the ~300 us fixed per-group cost once per distinct key
+    (measured ~100x slower than union_window on tiny groups,
+    tools/groupsize_bench.py), so a spec without a bucket column is
+    refused rather than planned that way.
 
     Physical contract: FlatMapCoGroupsInPandas requires only
     ClusteredDistribution(grouping) + grouping-ASC ordering on each
-    child.  A pair of tables bucketed AND sortBy'd on the grouping
+    child.  A pair of tables bucketed AND sortBy'd on the bucket
     column (one file per bucket — see ``skew.write_bucketed``)
     satisfies both straight off the scans: no Exchange, no Sort,
-    anywhere in the plan.  This is the co-bucketed merge-join
-    formulation SCALE.md called out as the union_window strategy's
-    known trade-off.
+    anywhere in the plan.
 
     Set ``spark.sql.legacy.bucketedTableScan.outputOrdering=true`` to
     let the scans report their sortBy order (Spark hides it by default
@@ -398,14 +334,15 @@ def _asof_sorted_merge(
     from pyspark.sql import types as T
 
     keys = list(spec.join_keys)
-    bucket_col = spec.bucket_col
-    if bucket_col is None and (
-        "__bucket" in entity_df.columns
-        and "__bucket" in spec.feature_df.columns
-    ):
-        bucket_col = "__bucket"
+    bucket_col = _bucket_col(entity_df, spec)
+    if bucket_col is None:
+        raise ValueError(
+            "the sorted_merge as-of plan needs a bucket-id column on both "
+            "sides (spec.bucket_col, or __bucket from "
+            "skew.with_bucket_id on the entity and feature frames)"
+        )
     feat = _projected_feature_df(
-        spec, entity_df, entity_ts_col, extra_cols=[bucket_col] if bucket_col else []
+        spec, entity_df, entity_ts_col, extra_cols=[bucket_col]
     )
     has_created = spec.created_col is not None
     features = list(spec.features)
@@ -431,13 +368,10 @@ def _asof_sorted_merge(
     ent = entity_df.toDF(*pos.values())
     feat = feat.toDF(
         *[pos[k] for k in keys], _TS, *([_CREATED] if has_created else []),
-        *values, *([pos[bucket_col]] if bucket_col else []),
+        *values, pos[bucket_col],
     )
     keys = [pos[k] for k in keys]
     ent_ts = pos[entity_ts_col]
-    # Per-key groups hold exactly one key, so the key-code arrays are
-    # constant zero; per-bucket groups compute real codes.
-    multi_key = bucket_col is not None
 
     def merge(left, right):
         import numpy as np
@@ -456,21 +390,17 @@ def _asof_sorted_merge(
                 out[n] = None
             out.columns = out_cols
             return out
-        nl, nr = len(left), len(right)
+        nl = len(left)
         rts = right[_TS].to_numpy()
         ets = left[ent_ts].to_numpy(dtype=rts.dtype)
         rts_i = rts.astype("int64")
         ets_i = ets.astype("int64")
-        if multi_key:
-            # shared key codes, assigned in SORTED key order so a
-            # key-sorted scan yields nondecreasing codes (nulls group
-            # like groupBy: null == null, matching the per-key path)
-            both = pd.concat([left[keys], right[keys]], ignore_index=True)
-            codes = both.groupby(keys, sort=True, dropna=False).ngroup().to_numpy()
-            lc, rc = codes[:nl], codes[nl:]
-        else:
-            lc = np.zeros(nl, dtype="int64")
-            rc = np.zeros(nr, dtype="int64")
+        # shared key codes, assigned in SORTED key order so a
+        # key-sorted scan yields nondecreasing codes (nulls group like
+        # groupBy: null == null)
+        both = pd.concat([left[keys], right[keys]], ignore_index=True)
+        codes = both.groupby(keys, sort=True, dropna=False).ngroup().to_numpy()
+        lc, rc = codes[:nl], codes[nl:]
         # created_ts tie-break: NULL created LOSES ties (union_window
         # orders created ASC — Spark sorts nulls first — last wins)
         if has_created:
@@ -524,10 +454,9 @@ def _asof_sorted_merge(
         out.columns = out_cols
         return out
 
-    grouping = [pos[bucket_col]] if bucket_col else keys
     return (
-        ent.groupBy(*grouping)
-        .cogroup(feat.groupBy(*grouping))
+        ent.groupBy(pos[bucket_col])
+        .cogroup(feat.groupBy(pos[bucket_col]))
         .applyInPandas(merge, out_schema)
     )
 

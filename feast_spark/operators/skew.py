@@ -69,8 +69,9 @@ def with_bucket_id(
     shared coarse grouping: every key's rows land in the same bucket
     value on both sides, so a cogroup on this single column co-locates
     whole key families with O(n_buckets) groups.  That is the bucket-
-    granularity contract of ``as_of_join(strategy='sorted_merge')``
-    (spec.bucket_col): write each table
+    granularity contract of the as-of ``sorted_merge`` plan, which
+    ``as_of_join`` picks whenever both sides carry the column
+    (``__bucket``, or spec.bucket_col): write each table
     ``write_bucketed(with_bucket_id(df, keys, n), t, ['__bucket'], n,
     sort_cols=['__bucket', *keys, ts])`` and PIT retrieval runs with
     zero Exchange, zero Sort, and one Arrow call per bucket."""

@@ -33,12 +33,10 @@ Design (Spark-first):
   ``watermark=False`` to skip.
 
 Scale: each micro-batch pays exactly the batch operator's cost —
-union_window's single Exchange on the join keys (or zero, when the
-entity stream source and feature table are co-bucketed and
-``strategy='sorted_merge'`` with a shared bucket column).  The
-feature side is NOT re-shuffled between batches; use ``range_join``
-(broadcast) for small feature tables to avoid shuffling small entity
-batches at all.
+union_window's single Exchange per join-key set (a view that shares a
+``__bucket`` column with the stream, ``skew.with_bucket_id``, runs the
+bucket cogroup instead).  The feature side is NOT re-shuffled between
+batches.
 """
 
 from __future__ import annotations
@@ -58,7 +56,6 @@ def enrich_stream(
     entity_ts_col: str,
     specs: list[AsOfJoinSpec] | Callable[[], list[AsOfJoinSpec]],
     sink: str | Callable[[DataFrame, int], None],
-    strategy: str = "union_window",
     checkpoint_dir: str | None = None,
     trigger_available_now: bool = True,
     watermark: bool = True,
@@ -85,9 +82,7 @@ def enrich_stream(
         if not batch_df.head(1):
             return
         batch_specs = static_specs if static_specs is not None else specs()
-        out = as_of_join(
-            batch_df, entity_ts_col, batch_specs, strategy=strategy
-        )
+        out = as_of_join(batch_df, entity_ts_col, batch_specs)
         if transform is not None:
             out = transform(out)
         if callable(sink):

@@ -2,12 +2,14 @@
 reference's tests/test_historical_retrieval.py: run the engine, compare
 to an independent oracle)."""
 
+import dataclasses
 from datetime import datetime, timedelta
 
 import pytest
 from pyspark.sql import Row
 
 from feast_spark.operators.asof_join import AsOfJoinSpec, as_of_join
+from feast_spark.operators.skew import with_bucket_id
 from tests.conftest import SF_MED
 
 
@@ -15,9 +17,35 @@ def ts(s: str) -> datetime:
     return datetime.fromisoformat(s)
 
 
+def _executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
 @pytest.fixture(scope="module", params=["union_window", "range_join", "sorted_merge"])
-def strategy(request):
-    return request.param
+def asof(request):
+    """``as_of_join`` under one explicit plan.  The sorted_merge arm
+    runs over ``with_bucket_id`` frames (2 buckets, so several keys
+    share a cogroup): that plan needs a bucket-id column on both
+    sides."""
+    strategy = request.param
+
+    def join(entity, entity_ts_col, specs):
+        if strategy == "sorted_merge":
+            keys = specs[0].join_keys
+            entity = with_bucket_id(entity, keys, 2)
+            specs = [
+                dataclasses.replace(
+                    s,
+                    feature_df=with_bucket_id(
+                        s.feature_df,
+                        [s.key_mapping.get(k, k) for k in s.join_keys], 2,
+                    ),
+                )
+                for s in specs
+            ]
+        return as_of_join(entity, entity_ts_col, specs, strategy=strategy)
+
+    return join
 
 
 def _handwritten_frames(spark):
@@ -56,9 +84,9 @@ def _handwritten_frames(spark):
     return entity, feats
 
 
-def test_asof_semantics_handwritten(spark, strategy):
+def test_asof_semantics_handwritten(spark, asof):
     entity, feats = _handwritten_frames(spark)
-    out = as_of_join(
+    out = asof(
         entity,
         "event_timestamp",
         [
@@ -71,7 +99,6 @@ def test_asof_semantics_handwritten(spark, strategy):
                 ttl=timedelta(hours=2),
             )
         ],
-        strategy=strategy,
     )
     got = {r["driver_id"]: r["conv_rate"] for r in out.collect()}
     assert got == {1: 0.2, 2: None, 3: 0.5, 4: 0.6}
@@ -80,9 +107,9 @@ def test_asof_semantics_handwritten(spark, strategy):
     assert out.count() == 4
 
 
-def test_asof_no_ttl_unbounded(spark, strategy):
+def test_asof_no_ttl_unbounded(spark, asof):
     entity, feats = _handwritten_frames(spark)
-    out = as_of_join(
+    out = asof(
         entity,
         "event_timestamp",
         [
@@ -95,14 +122,13 @@ def test_asof_no_ttl_unbounded(spark, strategy):
                 ttl=None,
             )
         ],
-        strategy=strategy,
     )
     got = {r["driver_id"]: r["conv_rate"] for r in out.collect()}
     # driver 2's 05:00 row now within (unbounded) range
     assert got == {1: 0.2, 2: 0.3, 3: 0.5, 4: 0.6}
 
 
-def test_asof_prefix_and_null_feature_value(spark, strategy):
+def test_asof_prefix_and_null_feature_value(spark, asof):
     # A NULL feature value in the winning row must be returned as NULL,
     # not replaced by an older non-null row (struct-carry semantics).
     entity = spark.createDataFrame(
@@ -114,7 +140,7 @@ def test_asof_prefix_and_null_feature_value(spark, strategy):
             Row(k=1, etts=ts("2021-01-01 11:00:00"), v=None),
         ]
     )
-    out = as_of_join(
+    out = asof(
         entity,
         "event_timestamp",
         [
@@ -126,14 +152,13 @@ def test_asof_prefix_and_null_feature_value(spark, strategy):
                 prefix="view1",
             )
         ],
-        strategy=strategy,
     )
     rows = out.collect()
     assert rows[0]["view1__v"] is None
     assert "view1__v" in out.columns
 
 
-def test_asof_vs_duckdb_oracle(spark, duck, strategy):
+def test_asof_vs_duckdb_oracle(spark, duck, asof):
     """Differential test on driver testdata at sf0.01: purchases as the
     entity frame, views as the feature frame."""
     from feast_spark.sources.testdata import load_table
@@ -145,7 +170,7 @@ def test_asof_vs_duckdb_oracle(spark, duck, strategy):
     feats = events.filter("event_type = 'view'").select(
         "user_id", "ts", "value"
     )
-    out = as_of_join(
+    out = asof(
         entity,
         "ts",
         [
@@ -157,7 +182,6 @@ def test_asof_vs_duckdb_oracle(spark, duck, strategy):
                 ttl=timedelta(days=2),
             )
         ],
-        strategy=strategy,
     )
     got = {r["event_id"]: r["value"] for r in out.collect()}
 
@@ -184,7 +208,7 @@ def test_asof_vs_duckdb_oracle(spark, duck, strategy):
     assert got == want
 
 
-def test_asof_null_entity_ts_yields_null_features(spark, strategy):
+def test_asof_null_entity_ts_yields_null_features(spark, asof):
     """A NULL entity timestamp matches nothing (``ts <= NULL`` is never
     true in SQL); all strategies must agree.  Guards the numpy kernel,
     where NaT sorts as +inf in searchsorted (reference semantics:
@@ -204,7 +228,7 @@ def test_asof_null_entity_ts_yields_null_features(spark, strategy):
         ]
     )
     for ttl in (None, timedelta(hours=24)):
-        out = as_of_join(
+        out = asof(
             entity,
             "event_timestamp",
             [
@@ -217,13 +241,12 @@ def test_asof_null_entity_ts_yields_null_features(spark, strategy):
                     ttl=ttl,
                 )
             ],
-            strategy=strategy,
         )
         got = {r["event_timestamp"]: r["conv_rate"] for r in out.collect()}
-        assert got == {ts("2021-04-12 10:59:42"): 0.1, None: None}, (strategy, ttl)
+        assert got == {ts("2021-04-12 10:59:42"): 0.1, None: None}, ttl
 
 
-def test_asof_null_created_ts_loses_ties(spark, strategy):
+def test_asof_null_created_ts_loses_ties(spark, asof):
     """Among equal event_ts rows, a NULL created_ts loses to any real
     created value (union_window orders created ASC — Spark puts nulls
     first — and the last row wins); sorted_merge must match via
@@ -240,7 +263,7 @@ def test_asof_null_created_ts_loses_ties(spark, strategy):
         ],
         "driver_id int, datetime timestamp, created timestamp, conv_rate double",
     )
-    out = as_of_join(
+    out = asof(
         entity,
         "event_timestamp",
         [
@@ -253,18 +276,15 @@ def test_asof_null_created_ts_loses_ties(spark, strategy):
                 ttl=None,
             )
         ],
-        strategy=strategy,
     )
     assert [r["conv_rate"] for r in out.collect()] == [0.2]
 
 
 def test_asof_bucket_granularity_matches_per_key(spark):
-    """sorted_merge at BUCKET granularity (spec.bucket_col, several
-    keys per cogroup) must reproduce the per-key result exactly —
-    incl. ttl misses, created tie-breaks, inclusive bounds, and keys
-    with no feature rows."""
-    from feast_spark.operators.skew import with_bucket_id
-
+    """sorted_merge at BUCKET granularity (several keys per cogroup)
+    must reproduce the other plans' result exactly — incl. ttl misses,
+    created tie-breaks, inclusive bounds, and keys with no feature
+    rows."""
     entity, feats = _handwritten_frames(spark)
     # driver 5 has no feature rows at all
     entity = entity.union(
@@ -301,8 +321,6 @@ def test_asof_bucket_granularity_multi_rows_per_key(spark):
     """Bucketed kernel with several entity rows per key and interleaved
     timestamps — exercises the shared code+rank composite across key
     runs (no ttl, so every row with any prior feature matches)."""
-    from feast_spark.operators.skew import with_bucket_id
-
     entity = spark.createDataFrame(
         [
             Row(k=i, event_timestamp=ts(f"2021-04-12 {h:02d}:30:00"))
@@ -339,57 +357,65 @@ def test_asof_bucket_granularity_multi_rows_per_key(spark):
     assert gs == ws and len(gs) == 21
 
 
-def test_auto_strategy_dispatch(spark, tmp_path):
-    """strategy='auto' dispatch arms: bucket-merge for shared __bucket,
-    broadcast range join under the size threshold, union_window when
-    broadcasting is disabled — and the auto result matches explicit."""
-    from feast_spark.operators.asof_join import choose_strategy
-    from feast_spark.operators.skew import with_bucket_id
-
+def test_asof_plan_follows_inputs(spark, tmp_path):
+    """The plan rule: a spec whose two sides share a bucket-id column
+    (``__bucket`` on both frames, or ``spec.bucket_col``) runs the
+    bucket cogroup; every other spec rides the union-window pass,
+    including a small parquet-backed feature frame (no broadcast-size
+    rule sends it to a range join).  Each plan returns the same rows."""
     entity, feats = _handwritten_frames(spark)
-    mk = lambda f: AsOfJoinSpec(
+    mk = lambda f, **kw: AsOfJoinSpec(
         feature_df=f, join_keys=["driver_id"], timestamp_col="datetime",
         features=["conv_rate"], created_col="created",
-        ttl=timedelta(hours=2),
+        ttl=timedelta(hours=2), **kw,
     )
+    rows = lambda df: sorted(
+        (r["driver_id"], r["conv_rate"]) for r in df.collect()
+    )
+    want = [(1, 0.2), (2, None), (3, 0.5), (4, 0.6)]
 
-    # tiny parquet-backed feature frame (real size stats) -> range_join
+    # tiny parquet-backed feature frame (real size stats, well under
+    # the broadcast threshold) -> the fused union-window pass
     feats.write.parquet(str(tmp_path / "feats"))
     featp = spark.read.parquet(str(tmp_path / "feats"))
-    assert choose_strategy(entity, mk(featp)) == "range_join"
+    out = as_of_join(entity, "event_timestamp", [mk(featp), mk(feats, prefix="b")])
+    plan = _executed_plan(out)
+    assert "Window" in plan and "Join" not in plan, plan
+    assert "FlatMapCoGroupsInPandas" not in plan, plan
+    assert rows(out) == want
 
-    # a createDataFrame frame reports UNKNOWN stats (Long.MaxValue):
-    # auto must not broadcast blind -> union_window
-    assert choose_strategy(entity, mk(feats)) == "union_window"
-
-    # broadcasting off -> union_window even for the small parquet frame
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        assert choose_strategy(entity, mk(featp)) == "union_window"
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-
-    # shared bucket column -> sorted_merge (bucket granularity)
+    # shared __bucket column -> sorted_merge at bucket granularity
     eb = with_bucket_id(entity, ["driver_id"], 2)
-    fb = with_bucket_id(feats, ["driver_id"], 2)
-    assert choose_strategy(eb, mk(fb)) == "sorted_merge"
+    out = as_of_join(
+        eb, "event_timestamp", [mk(with_bucket_id(feats, ["driver_id"], 2))]
+    )
+    assert "FlatMapCoGroupsInPandas" in _executed_plan(out)
+    assert rows(out) == want
 
-    # explicit bucket_col wins even without the __bucket convention
+    # an explicit bucket_col selects it without the __bucket convention
+    out = as_of_join(
+        eb.withColumnRenamed("__bucket", "bkt"), "event_timestamp",
+        [mk(with_bucket_id(feats, ["driver_id"], 2, col="bkt"),
+            bucket_col="bkt")],
+    )
+    assert "FlatMapCoGroupsInPandas" in _executed_plan(out)
+    assert rows(out) == want
+
+    # __bucket on one side only is not a shared bucket id
+    out = as_of_join(eb, "event_timestamp", [mk(feats)])
+    assert "FlatMapCoGroupsInPandas" not in _executed_plan(out)
+    assert rows(out) == want
+
+
+def test_asof_sorted_merge_needs_bucket_column(spark):
+    """An explicit sorted_merge over frames without a shared bucket id
+    is refused, naming the helper that adds one; "auto" is no plan."""
+    entity, feats = _handwritten_frames(spark)
     spec = AsOfJoinSpec(
-        feature_df=fb.withColumnRenamed("__bucket", "bkt"),
-        join_keys=["driver_id"], timestamp_col="datetime",
-        features=["conv_rate"], bucket_col="bkt",
+        feature_df=feats, join_keys=["driver_id"], timestamp_col="datetime",
+        features=["conv_rate"],
     )
-    assert choose_strategy(
-        eb.withColumnRenamed("__bucket", "bkt"), spec
-    ) == "sorted_merge"
-
-    # end-to-end: auto == explicit union_window result
-    out = as_of_join(entity, "event_timestamp", [mk(feats)], strategy="auto")
-    want = as_of_join(
-        entity, "event_timestamp", [mk(feats)], strategy="union_window"
-    )
-    assert sorted(map(tuple, out.collect())) == sorted(
-        map(tuple, want.collect())
-    )
+    with pytest.raises(ValueError, match="skew.with_bucket_id"):
+        as_of_join(entity, "event_timestamp", [spec], strategy="sorted_merge")
+    with pytest.raises(ValueError, match="unknown as-of join strategy"):
+        as_of_join(entity, "event_timestamp", [spec], strategy="auto")

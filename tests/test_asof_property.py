@@ -117,7 +117,7 @@ def oracle(feats, ents, ttl_hours, with_created):
 
 @pytest.mark.parametrize(
     "strategy",
-    ["union_window", "range_join", "sorted_merge", "sorted_merge_bucket"],
+    ["union_window", "range_join", "sorted_merge_bucket"],
 )
 @settings(
     max_examples=6,
@@ -257,7 +257,7 @@ def test_asof_multi_view_matches_oracle_and_strategies(spark, data):
         "c__v": oracle(fc, by_g, ttl_c, False),
         "b__v": oracle(fb, by_k, None, False),
     }
-    for strategy in ("union_window", "range_join", "sorted_merge"):
+    for strategy in ("union_window", "range_join"):
         out = as_of_join(edf, "event_timestamp", specs, strategy=strategy)
         assert out.columns == [
             "event_timestamp", "rid", "k", "g", "a__v", "c__v", "b__v"

@@ -60,7 +60,8 @@ def test_asof_union_window_single_shuffle(spark):
 def test_asof_views_sharing_keys_fuse_into_one_shuffle(spark):
     """Views that share their join keys run as one union-window pass:
     three views on one key cost one hash Exchange and one Window; a
-    view on a second key set adds one more of each."""
+    view on a second key set adds one more of each; the same key set
+    named in a different order is still one pass."""
     ent = spark.range(0, 1000).selectExpr(
         "id AS rid", "id % 50 AS user_id", "id % 7 AS region",
         "timestamp_seconds(1600000000 + id) AS ts",
@@ -71,8 +72,9 @@ def test_asof_views_sharing_keys_fuse_into_one_shuffle(spark):
     )
 
     def spec(key, prefix, ttl):
+        keys = key if isinstance(key, list) else [key]
         return AsOfJoinSpec(
-            feature_df=feat, join_keys=[key], timestamp_col="ts",
+            feature_df=feat, join_keys=keys, timestamp_col="ts",
             features=["value"], ttl=ttl, prefix=prefix,
         )
 
@@ -93,6 +95,15 @@ def test_asof_views_sharing_keys_fuse_into_one_shuffle(spark):
     plan = _optimized_explain(two_keys)
     assert count_exchanges(plan) == 2, plan
     assert plan_nodes(plan).count("Window") == 2, plan
+
+    reordered = as_of_join(
+        ent, "ts",
+        [spec(["user_id", "region"], "a", None),
+         spec(["region", "user_id"], "b", timedelta(days=1))],
+    )
+    plan = _optimized_explain(reordered)
+    assert count_exchanges(plan) == 1, plan
+    assert plan_nodes(plan).count("Window") == 1, plan
 
 
 def test_asof_pushdown_reaches_scan(spark):

@@ -7,7 +7,7 @@ builders (nearest_centroid, probe_cells, with_lsh_signature), the
 zero-Exchange repetition_stats rewrite, the bm25 batch
 subset-partitioning exchange collapse, the connected_components
 one-job small-graph path, dsir's single-tokenize persist, and the
-as-of join's SQL-text union_window builder (every strategy, every spec
+as-of join's SQL-text union_window builder (both SQL plans, every spec
 shape and column name).
 """
 
@@ -280,7 +280,7 @@ def test_dsir_weights_tokenize_pass_is_persisted_once(spark):
 
 
 # ---------------------------------------------------------------------------
-# asof join: every strategy agrees on every spec shape and column name
+# asof join: both SQL plans agree on every spec shape and column name
 # ---------------------------------------------------------------------------
 
 def _asof_oracle(ent_rows, feat_rows, spec, ent_ts):
@@ -320,7 +320,7 @@ def _asof_oracle(ent_rows, feat_rows, spec, ent_ts):
     ],
 )
 def test_asof_join_shapes_agree_across_strategies(spark, shape):
-    """All three strategies return the nested-loop oracle's rows and
+    """union_window and range_join return the nested-loop oracle's rows and
     the declared schema for each spec shape: ttl / no ttl, prefix +
     created tie-break (a NULL created loses), key mapping, an int
     feature key joined to a long entity key, an entity column with a
@@ -409,7 +409,7 @@ def test_asof_join_shapes_agree_across_strategies(spark, shape):
         )
     )
 
-    strategies = ("union_window", "range_join", "sorted_merge")
+    strategies = ("union_window", "range_join")
     outs = []
     for strategy in strategies:
         out = as_of_join(entity_df, ts, [spec], strategy=strategy)
@@ -417,7 +417,7 @@ def test_asof_join_shapes_agree_across_strategies(spark, shape):
             shape, strategy,
         )
         outs.append(out.withColumn("__strategy", F.lit(strategy)))
-    # one job for all three strategies keeps the test to seconds
+    # one job for both strategies keeps the test to seconds
     rows = functools.reduce(DataFrame.unionByName, outs).collect()
     for strategy in strategies:
         got = sorted(

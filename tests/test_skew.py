@@ -90,23 +90,30 @@ def test_bucketed_join_no_exchange(spark, tmp_path):
 def test_bucketed_pit_retrieval_zero_exchange(spark, tmp_path):
     """The 100 TB retrieval shape: feature table AND entity table
     written bucketed+sorted on the join key -> get_historical_features
-    runs with ZERO shuffle Exchange (range_join: the sort-merge join
-    reads both bucketed scans co-located; the dedup window's
-    (keys, row_id) partitioning is satisfied by the join output), and
-    with the sorted_merge strategy ZERO Sort nodes as well — the
-    cogroup needs only keys-ASC ordering, which one-file-per-bucket
-    sortBy scans provide straight from disk.  Pay the shuffle+sort
-    once at materialization, never per training run.  All strategies
-    must agree on results."""
+    with the default config runs with ZERO shuffle Exchange.  Tables
+    bucketed on a materialized ``__bucket`` column
+    (``skew.with_bucket_id``) run the bucket cogroup with ZERO Sort
+    nodes as well — it needs only bucket-ASC ordering, which
+    one-file-per-bucket sortBy scans provide straight from disk;
+    key-only bucketed tables ride the union-window pass, whose key
+    window reuses the scans' partitioning.  The hot-key range join
+    over the same key-bucketed tables is exchange-free too (the
+    sort-merge join reads both scans co-located; the dedup window's
+    (keys, row_id) partitioning is satisfied by the join output).  Pay
+    the shuffle+sort once at materialization, never per training run.
+    All plans must agree on results."""
     import uuid
     from datetime import datetime, timedelta
 
     from feast_spark import (
         Entity, FeatureStore, FeatureView, RepoConfig, SparkSqlSource, ValueType,
     )
+    from feast_spark.operators.asof_join import AsOfJoinSpec, as_of_join
+    from feast_spark.operators.skew import with_bucket_id
 
     suffix = uuid.uuid4().hex[:8]
     tf, te = f"bk_feat_{suffix}", f"bk_ent_{suffix}"
+    tfb, teb = f"bkb_feat_{suffix}", f"bkb_ent_{suffix}"
     base = datetime(2021, 6, 1, 12, 0, 0)
     feat = spark.range(0, 2000).select(
         (F.col("id") % 100).alias("driver_id"),
@@ -124,15 +131,22 @@ def test_bucketed_pit_retrieval_zero_exchange(spark, tmp_path):
     )
     write_bucketed(feat, tf, ["driver_id"], 8, sort_cols=["driver_id"])
     write_bucketed(ent, te, ["driver_id"], 8, sort_cols=["driver_id"])
+    write_bucketed(
+        with_bucket_id(feat, ["driver_id"], 8), tfb, ["__bucket"], 8,
+        sort_cols=["__bucket", "driver_id", "event_ts"],
+    )
+    write_bucketed(
+        with_bucket_id(ent, ["driver_id"], 8), teb, ["__bucket"], 8,
+        sort_cols=["__bucket", "driver_id", "event_timestamp"],
+    )
 
-    def mk_store(strategy):
+    def retrieve(feat_table, ent_table):
         st = FeatureStore(
             spark,
             RepoConfig(
-                project=f"bk_{strategy}",
-                registry_path=str(tmp_path / f"reg_{strategy}.json"),
-                online_store_path=str(tmp_path / f"online_{strategy}"),
-                asof_strategy=strategy,
+                project=f"p_{feat_table}",
+                registry_path=str(tmp_path / f"reg_{feat_table}.json"),
+                online_store_path=str(tmp_path / f"online_{feat_table}"),
             ),
         )
         st.apply(
@@ -146,13 +160,21 @@ def test_bucketed_pit_retrieval_zero_exchange(spark, tmp_path):
                     entities=["driver"],
                     ttl=timedelta(days=30),
                     batch_source=SparkSqlSource(
-                        table=tf, event_timestamp_column="event_ts",
+                        table=feat_table, event_timestamp_column="event_ts",
                         created_timestamp_column="created_ts",
                     ),
                 ),
             ]
         )
-        return st
+        return st.get_historical_features(
+            spark.table(ent_table), ["drv:conv_rate"]
+        ).to_spark_df()
+
+    def rows(df):
+        return {
+            (r["driver_id"], r["event_timestamp"], r["conv_rate"])
+            for r in df.collect()
+        }
 
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -161,54 +183,51 @@ def test_bucketed_pit_retrieval_zero_exchange(spark, tmp_path):
     # behind a conf since 3.0 because multi-file buckets break it)
     spark.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
     try:
-        out = mk_store("range_join").get_historical_features(
-            spark.table(te), ["drv:conv_rate"]
-        ).to_spark_df()
-        plan = _executed_plan(out)
-        assert "SortMergeJoin" in plan, plan
-        assert "Exchange" not in plan, plan
-
-        # sorted_merge: zero Exchange AND zero Sort — the cogroup's
-        # required keys-ASC ordering comes straight off the sortBy'd
-        # one-file-per-bucket scans.  ("Sort [" is the Sort exec node's
-        # print shape; "SortMergeJoin [" never matches it.)
-        out_sm = mk_store("sorted_merge").get_historical_features(
-            spark.table(te), ["drv:conv_rate"]
-        ).to_spark_df()
+        # __bucket on both tables: the bucket cogroup, zero Exchange AND
+        # zero Sort.  ("Sort [" is the Sort exec node's print shape;
+        # "SortMergeJoin [" never matches it.)
+        out_sm = retrieve(tfb, teb)
         plan_sm = _executed_plan(out_sm)
         assert "FlatMapCoGroupsInPandas" in plan_sm, plan_sm
         assert "Exchange" not in plan_sm, plan_sm
         assert "Sort [" not in plan_sm, plan_sm
 
-        # union_window over the same co-bucketed tables is ALSO
-        # exchange-free: both union children report the bucketed
+        # key-only bucketed tables: union_window, also exchange-free —
+        # both union children report the bucketed
         # HashPartitioning(driver_id, 8) and the key window reuses it
-        out_uw = mk_store("union_window").get_historical_features(
-            spark.table(te), ["drv:conv_rate"]
-        ).to_spark_df()
-        assert "Exchange" not in _executed_plan(out_uw), _executed_plan(out_uw)
+        out_uw = retrieve(tf, te)
+        plan_uw = _executed_plan(out_uw)
+        assert "Window" in plan_uw, plan_uw
+        assert "FlatMapCoGroupsInPandas" not in plan_uw, plan_uw
+        assert "Exchange" not in plan_uw, plan_uw
 
-        got = {
-            (r["driver_id"], r["event_timestamp"], r["conv_rate"])
-            for r in out.collect()
-        }
-        want = {
-            (r["driver_id"], r["event_timestamp"], r["conv_rate"])
-            for r in out_uw.collect()
-        }
-        assert got == want and len(got) > 0
-        got_sm = {
-            (r["driver_id"], r["event_timestamp"], r["conv_rate"])
-            for r in out_sm.collect()
-        }
-        assert got_sm == want
+        # the hot-key override over the same key-bucketed tables
+        out_rj = as_of_join(
+            spark.table(te), "event_timestamp",
+            [
+                AsOfJoinSpec(
+                    feature_df=spark.table(tf), join_keys=["driver_id"],
+                    timestamp_col="event_ts", features=["conv_rate"],
+                    created_col="created_ts", ttl=timedelta(days=30),
+                )
+            ],
+            strategy="range_join",
+        )
+        plan_rj = _executed_plan(out_rj)
+        assert "SortMergeJoin" in plan_rj, plan_rj
+        assert "Exchange" not in plan_rj, plan_rj
+
+        want = rows(out_uw)
+        assert len(want) > 0
+        assert rows(out_rj) == want
+        assert rows(out_sm) == want
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
         spark.conf.set(
             "spark.sql.legacy.bucketedTableScan.outputOrdering", "false"
         )
-        spark.sql(f"DROP TABLE IF EXISTS {tf}")
-        spark.sql(f"DROP TABLE IF EXISTS {te}")
+        for t in (tf, te, tfb, teb):
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
 # ---------------------------------------------------------------------------

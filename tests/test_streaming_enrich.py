@@ -218,7 +218,7 @@ def test_online_snapshot_enrichment(spark, tmp_path):
 def test_feature_store_enrich_stream_matches_batch(spark, tmp_path):
     """FeatureStore.enrich_stream resolves the same feature refs as
     get_historical_features and produces identical rows for identical
-    timestamps (strategy from config, prefix naming contract)."""
+    timestamps (the same as-of plan rule, prefix naming contract)."""
     import uuid
 
     from feast_spark import (

@@ -1,16 +1,17 @@
-"""Measure sorted_merge's per-GROUP overhead at high key cardinality.
+"""Measure the as-of plans at high key cardinality.
 
-FlatMapCoGroupsInPandas invokes the merge kernel once per distinct
-key.  Over a corpus with millions of tiny groups the fixed per-group
-cost (Arrow batch framing + pandas DataFrame construction + Python
-call) can dominate the actual searchsorted work, even though the plan
-shows zero Exchange and zero Sort.  This harness quantifies that: a
-worst-case corpus of N distinct keys with 5 feature rows and 1 entity
-row each, co-bucketed + sorted, timed under every as-of strategy.
+A cogroup invokes the merge kernel once per GROUP, and its fixed
+per-group cost (Arrow batch framing + pandas DataFrame construction +
+Python call) dominates the searchsorted work on tiny groups — which is
+why ``sorted_merge`` groups on a bucket id (``skew.with_bucket_id``),
+never on the keys.  This harness times a worst-case corpus of N
+distinct keys with 5 feature rows and 1 entity row each: union_window
+and range_join over key-bucketed + sorted tables, and the bucket
+cogroup (the plan ``as_of_join`` picks when both sides carry
+``__bucket``) over ``__bucket``-bucketed twins.
 
 Usage:  python tools/groupsize_bench.py [n_keys] [n_buckets]
-Prints one JSON line; results recorded in SCALE.md and the
-sorted_merge docstring.
+Prints one JSON line; results recorded in SCALE.md.
 """
 
 from __future__ import annotations
@@ -85,7 +86,7 @@ def main() -> None:
     featb, entb = spark.table("gs_feat"), spark.table("gs_ent")
     featbb, entbb = spark.table("gs_featb"), spark.table("gs_entb")
 
-    def run(strategy: str, e, f) -> float:
+    def run(strategy: str | None, e, f) -> float:
         samples = []
         for _ in range(runs):
             t = time.monotonic()
@@ -106,11 +107,8 @@ def main() -> None:
             samples.append(time.monotonic() - t)
         return round(statistics.median(samples), 3)
 
-    out = {
-        s: run(s, entb, featb)
-        for s in ("union_window", "range_join", "sorted_merge")
-    }
-    out["sorted_merge_bucket"] = run("sorted_merge", entbb, featbb)
+    out = {s: run(s, entb, featb) for s in ("union_window", "range_join")}
+    out["sorted_merge_bucket"] = run(None, entbb, featbb)
     print(
         json.dumps(
             {
