@@ -453,7 +453,8 @@ class FeatureStore:
         Scan pruning (A4) does not apply — a stream has no global
         timestamp bounds; each micro-batch pays the batch retrieval's
         as-of plan (one union-window pass per join-key set, or the
-        bucket cogroup when a view and the stream share ``__bucket``).
+        bucket cogroup when ``with_bucket_id`` bucketed a view and the
+        stream over the view's keys).
         On-demand feature views are applied per micro-batch exactly
         like the batch path."""
         from feast_spark.streaming.enrich import enrich_stream as _enrich

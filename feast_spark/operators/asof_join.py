@@ -13,16 +13,18 @@ For entity row (k, t) and feature view V with ttl τ:
 
 Each spec's plan follows from its inputs:
 
-* A spec whose two sides share a bucket-id column (``spec.bucket_col``,
-  or ``__bucket`` on both frames — ``skew.with_bucket_id``) runs
-  ``sorted_merge``: cogroup on the bucket id + vectorized in-bucket
-  merge_asof (numpy searchsorted), one Arrow call per BUCKET.  Its
-  ONLY physical requirements are clustering and ASC ordering on the
-  bucket id — exactly what a table bucketed and ``sortBy``'d on it
-  with one file per bucket provides — so over two co-bucketed sorted
-  tables the retrieval runs with ZERO Exchange and ZERO Sort nodes
-  (pay the shuffle+sort once at materialization, never per training
-  run; pinned by tests/test_skew.py).
+* A spec whose two sides provably share a bucket id runs
+  ``sorted_merge``: ``skew.with_bucket_id`` stamped both frames'
+  ``__bucket`` (or ``spec.bucket_col``) over this spec's join keys,
+  with the same key types and bucket count (:func:`_bucket_col`).  It
+  cogroups on the bucket id + vectorized in-bucket merge_asof (numpy
+  searchsorted), one Arrow call per BUCKET.  Its ONLY physical
+  requirements are clustering and ASC ordering on the bucket id —
+  exactly what a table bucketed and ``sortBy``'d on it with one file
+  per bucket provides — so over two co-bucketed sorted tables the
+  retrieval runs with ZERO Exchange and ZERO Sort nodes (pay the
+  shuffle+sort once at materialization, never per training run;
+  pinned by tests/test_skew.py).
 
 * Every other spec rides ``union_window`` (the 100 TB scale path): tag
   and union the entity rows with the (projected) feature rows of
@@ -39,11 +41,10 @@ Each spec's plan follows from its inputs:
   through ``Column.cast(DataType)``, and typed NULL padding from
   ``unionByName(allowMissingColumns=True)``.
 
-``as_of_join(strategy=...)`` overrides the rule for direct operator
-callers.  ``range_join`` is the classic range join + ROW_NUMBER (the
-reference's BigQuery formulation) and the hot-key path: AQE can split
-its skewed join partition (tests/test_skew.py), which no cheap input
-property predicts, so only an explicit override selects it.
+:func:`_asof_range_join`, the classic range join + ROW_NUMBER (the
+reference's BigQuery formulation), is no plan ``as_of_join`` picks: it
+stays as the independent second formulation the tests check the other
+two against.
 
 All three plans take any column name: every reference is quoted
 (``sql_ident``), so a dot or backtick in a key or feature name is part
@@ -59,6 +60,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from feast_spark.functions.text import sql_ident as _q
+from feast_spark.operators.skew import BUCKET_ID
 
 _TS = "__asof_ts"
 _SIDE = "__asof_side"  # 0 = feature row, 1 = entity row (sorts after at equal ts)
@@ -82,10 +84,9 @@ class AsOfJoinSpec:
     # entity_df column name -> feature_df column name, when they differ
     # (entity selections, bigquery.py:565-568)
     key_mapping: dict[str, str] = field(default_factory=dict)
-    # name of a bucket-id column present on BOTH sides (a pure
-    # function of the join keys, e.g. skew.with_bucket_id): selects
-    # the sorted_merge plan, one cogroup per bucket.  None detects
-    # "__bucket" when both frames carry it.
+    # name of the skew.with_bucket_id column to look for on both
+    # sides (None: "__bucket"); a match selects the sorted_merge plan,
+    # one cogroup per bucket
     bucket_col: str | None = None
 
     def out_name(self, feature: str) -> str:
@@ -93,50 +94,65 @@ class AsOfJoinSpec:
 
 
 def _bucket_col(entity_df: DataFrame, spec: AsOfJoinSpec) -> str | None:
-    """The bucket-id column both sides of ``spec`` share, if any."""
-    if spec.bucket_col is not None:
-        return spec.bucket_col
-    if "__bucket" in entity_df.columns and "__bucket" in spec.feature_df.columns:
-        return "__bucket"
-    return None
+    """The bucket-id column both sides of ``spec`` provably share, if any.
+
+    Both sides' columns must carry the ``with_bucket_id`` record of what
+    they hash, and the records must agree with the spec: the entity
+    side over the spec's join keys, the feature side over their mapped
+    names in the same order, with one bucket count and one type per key
+    — and those still the key columns' types now.  Equal join keys then
+    hash to equal bucket ids.  Anything else (no record, ids over other
+    keys, another n, an INT key against a LONG one) is no shared id."""
+    col = spec.bucket_col or "__bucket"
+    try:
+        ent = entity_df.schema[col].metadata.get(BUCKET_ID)
+        feat = spec.feature_df.schema[col].metadata.get(BUCKET_ID)
+        if not ent or not feat or sorted(ent["keys"]) != sorted(spec.join_keys):
+            return None
+        mapped = [spec.key_mapping.get(k, k) for k in ent["keys"]]
+        ent_types = [_type(entity_df, k) for k in ent["keys"]]
+        feat_types = [_type(spec.feature_df, k) for k in mapped]
+    except KeyError:
+        return None
+    shared = (
+        feat["keys"] == mapped
+        and ent["n"] == feat["n"]
+        and ent["types"] == feat["types"] == ent_types == feat_types
+    )
+    return col if shared else None
+
+
+def _type(df: DataFrame, name: str) -> str:
+    return df.schema[name].dataType.simpleString()
 
 
 def as_of_join(
     entity_df: DataFrame,
     entity_ts_col: str,
     specs: list[AsOfJoinSpec],
-    strategy: str | None = None,
 ) -> DataFrame:
     """J2 — compose one or more as-of joins onto entity_df.
 
-    A spec with a shared bucket-id column runs ``sorted_merge``; the
-    rest are grouped by their SET of entity-side join keys and each
-    group runs as ONE ``union_window`` pass: one union, one
-    partitioning and one window sort for the whole group, each view
-    carrying its own ttl bound and ``created`` tie-break in that pass.
+    A spec whose sides share a bucket id (:func:`_bucket_col`) runs
+    ``sorted_merge``; the rest are grouped by their SET of entity-side
+    join keys and each group runs as ONE ``union_window`` pass: one
+    union, one partitioning and one window sort for the whole group,
+    each view carrying its own ttl bound and ``created`` tie-break in
+    that pass.
     A retrieval therefore costs one Exchange plus one Sort per
     distinct join-key set, whatever the view count.
 
-    ``strategy`` (``"union_window"``, ``"range_join"`` or
-    ``"sorted_merge"``) overrides that rule for every spec;
-    ``sorted_merge`` then still needs a bucket-id column on each.
     Output preserves every entity_df column (entity ts column first,
     P5) plus ``spec.out_name(f)`` for each feature, in spec order.
     """
-    if strategy not in (None, "union_window", "range_join", "sorted_merge"):
-        raise ValueError(f"unknown as-of join strategy: {strategy}")
     out = entity_df
     fused: dict[tuple[str, ...], list[AsOfJoinSpec]] = {}
     for spec in specs:
-        chosen = strategy or (
-            "sorted_merge" if _bucket_col(entity_df, spec) else "union_window"
-        )
-        if chosen == "union_window":
-            fused.setdefault(tuple(sorted(spec.join_keys)), []).append(spec)
-        elif chosen == "range_join":
-            out = _asof_range_join(out, entity_ts_col, spec)
+        bucket_col = _bucket_col(entity_df, spec)
+        if bucket_col:
+            out = _asof_sorted_merge(out, entity_ts_col, spec, bucket_col)
         else:
-            out = _asof_sorted_merge(out, entity_ts_col, spec)
+            fused.setdefault(tuple(sorted(spec.join_keys)), []).append(spec)
     for group in fused.values():
         out = _asof_union_window(out, entity_ts_col, group)
     # P5 — entity timestamp column first; features in spec order
@@ -194,10 +210,11 @@ def _asof_union_window(
     entity_df: DataFrame, entity_ts_col: str, specs: list[AsOfJoinSpec]
 ) -> DataFrame:
     """The ``union_window`` plan for every spec in ``specs`` (all keyed
-    by the same set of entity-side join keys, in any order) in ONE pass: tag and union the
-    entity rows with each view's rows, partition ONCE by the join
-    keys, sort by (ts, side, created...) and carry each view's latest
-    feature struct forward with ``last(struct, ignoreNulls)``.
+    by the same set of entity-side join keys, in any order) in ONE
+    pass: tag and union the entity rows with each view's rows,
+    partition ONCE by the join keys, sort by (ts, side, created...)
+    and carry each view's latest feature struct forward with
+    ``last(struct, ignoreNulls)``.
 
     Every projection is ONE ``selectExpr`` of SQL text with each
     identifier backtick-quoted (an unquoted column named like a niladic
@@ -297,23 +314,25 @@ def _asof_union_window(
 
 
 def _asof_sorted_merge(
-    entity_df: DataFrame, entity_ts_col: str, spec: AsOfJoinSpec
+    entity_df: DataFrame,
+    entity_ts_col: str,
+    spec: AsOfJoinSpec,
+    bucket_col: str,
 ) -> DataFrame:
     """Cogroup both sides on their shared bucket-id column and
     merge-as-of inside each bucket with numpy searchsorted (the
     pandas-merge_asof kernel, vectorized per Arrow group — never
     row-at-a-time).
 
-    The bucket id (``spec.bucket_col``, or a ``__bucket`` column
-    present on both sides) is any pure function of the join keys
-    shared by both sides (``skew.with_bucket_id``).  EVERY key run
-    inside a bucket merges in one vectorized kernel call (shared
+    ``bucket_col`` names a column on both sides that maps equal join
+    keys to equal values (``as_of_join`` passes the one
+    :func:`_bucket_col` proves shared).  EVERY key run inside a bucket
+    merges in one vectorized kernel call (shared
     code+ts-rank composite, a single searchsorted, no per-key loop):
     O(n_buckets) Arrow calls total.  A cogroup on the join keys would
     pay the ~300 us fixed per-group cost once per distinct key
     (measured ~100x slower than union_window on tiny groups,
-    tools/groupsize_bench.py), so a spec without a bucket column is
-    refused rather than planned that way.
+    tools/groupsize_bench.py), so no plan groups on the keys.
 
     Physical contract: FlatMapCoGroupsInPandas requires only
     ClusteredDistribution(grouping) + grouping-ASC ordering on each
@@ -334,13 +353,6 @@ def _asof_sorted_merge(
     from pyspark.sql import types as T
 
     keys = list(spec.join_keys)
-    bucket_col = _bucket_col(entity_df, spec)
-    if bucket_col is None:
-        raise ValueError(
-            "the sorted_merge as-of plan needs a bucket-id column on both "
-            "sides (spec.bucket_col, or __bucket from "
-            "skew.with_bucket_id on the entity and feature frames)"
-        )
     feat = _projected_feature_df(
         spec, entity_df, entity_ts_col, extra_cols=[bucket_col]
     )
@@ -464,6 +476,10 @@ def _asof_sorted_merge(
 def _asof_range_join(
     entity_df: DataFrame, entity_ts_col: str, spec: AsOfJoinSpec
 ) -> DataFrame:
+    """The reference's BigQuery formulation: left range join on (keys,
+    ts window), then ROW_NUMBER per entity row keeps the latest.  No
+    input selects it; it is the second formulation tests check
+    ``union_window`` and ``sorted_merge`` against."""
     keys = list(spec.join_keys)
     feat = _projected_feature_df(spec, entity_df, entity_ts_col)
     # Rename to avoid collisions with entity columns during the join

@@ -22,6 +22,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from feast_spark.functions.text import sql_ident
+
+# column-metadata key under which with_bucket_id records what it hashed
+BUCKET_ID = "bucket_id"
+
 
 def salted_join(
     left: DataFrame,
@@ -69,15 +74,25 @@ def with_bucket_id(
     shared coarse grouping: every key's rows land in the same bucket
     value on both sides, so a cogroup on this single column co-locates
     whole key families with O(n_buckets) groups.  That is the bucket-
-    granularity contract of the as-of ``sorted_merge`` plan, which
-    ``as_of_join`` picks whenever both sides carry the column
-    (``__bucket``, or spec.bucket_col): write each table
+    granularity contract of the as-of ``sorted_merge`` plan.  The
+    column's metadata records what it hashes (``BUCKET_ID``: key names
+    in hash order, their types, n) and survives selects, renames and
+    bucketed-table writes; ``as_of_join`` picks the cogroup only when
+    both sides' records match its join keys, so ids over other keys,
+    another n, or keys of another type (murmur3 hashes an INT and a
+    LONG differently) never meet in one cogroup.  Write each table
     ``write_bucketed(with_bucket_id(df, keys, n), t, ['__bucket'], n,
     sort_cols=['__bucket', *keys, ts])`` and PIT retrieval runs with
     zero Exchange, zero Sort, and one Arrow call per bucket."""
-    return df.withColumn(
-        col, F.pmod(F.hash(*[F.col(k) for k in key_cols]), F.lit(n_buckets))
+    stamp = {
+        "keys": list(key_cols),
+        "types": [df.schema[k].dataType.simpleString() for k in key_cols],
+        "n": n_buckets,
+    }
+    bucket = F.pmod(
+        F.hash(*[F.col(sql_ident(k)) for k in key_cols]), F.lit(n_buckets)
     )
+    return df.withColumn(col, bucket.alias(col, metadata={BUCKET_ID: stamp}))
 
 
 def write_bucketed(

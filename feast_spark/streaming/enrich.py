@@ -33,10 +33,10 @@ Design (Spark-first):
   ``watermark=False`` to skip.
 
 Scale: each micro-batch pays exactly the batch operator's cost —
-union_window's single Exchange per join-key set (a view that shares a
-``__bucket`` column with the stream, ``skew.with_bucket_id``, runs the
-bucket cogroup instead).  The feature side is NOT re-shuffled between
-batches.
+union_window's single Exchange per join-key set (a view that
+``skew.with_bucket_id`` bucketed together with the stream, over the
+view's keys, runs the bucket cogroup instead).  The feature side is
+NOT re-shuffled between batches.
 """
 
 from __future__ import annotations

@@ -1,3 +1,4 @@
+import dataclasses
 import os
 import sys
 
@@ -46,3 +47,46 @@ def duck():
         )
     yield con
     con.close()
+
+
+def asof_plan(plan, entity_df, entity_ts_col, specs, n_buckets=2):
+    """``as_of_join``'s output under ONE named physical plan, whatever
+    its rule would pick: ``"union_window"`` (one pass per join-key
+    set), ``"range_join"``, or ``"sorted_merge"`` (each spec cogrouped
+    on its own bucket id over ``n_buckets``; the feature side hashes
+    its keys cast to the entity types, so an INT feature key and a
+    LONG entity key share buckets, and the ids never reach the
+    output)."""
+    from pyspark.sql import functions as F
+
+    from feast_spark.functions.text import sql_ident
+    from feast_spark.operators import asof_join as aj
+
+    def bucket(keys, types):
+        cols = [F.col(sql_ident(k)).cast(t) for k, t in zip(keys, types)]
+        return F.pmod(F.hash(*cols), F.lit(n_buckets))
+
+    out = entity_df
+    if plan == "union_window":
+        groups = {}
+        for s in specs:
+            groups.setdefault(tuple(sorted(s.join_keys)), []).append(s)
+        for group in groups.values():
+            out = aj._asof_union_window(out, entity_ts_col, group)
+    for i, s in enumerate(specs):
+        if plan == "range_join":
+            out = aj._asof_range_join(out, entity_ts_col, s)
+        elif plan == "sorted_merge":
+            types = [entity_df.schema[k].dataType for k in s.join_keys]
+            fkeys = [s.key_mapping.get(k, k) for k in s.join_keys]
+            out = out.withColumn(f"__b{i}", bucket(s.join_keys, types))
+            feat = s.feature_df.withColumn(
+                f"__b{i}", bucket(fkeys, types)
+            )
+            out = aj._asof_sorted_merge(
+                out, entity_ts_col,
+                dataclasses.replace(s, feature_df=feat), f"__b{i}",
+            )
+    cols = [entity_ts_col] + [c for c in entity_df.columns if c != entity_ts_col]
+    cols += [s.out_name(f) for s in specs for f in s.features]
+    return out.selectExpr(*[sql_ident(c) for c in cols])

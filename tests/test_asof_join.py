@@ -2,15 +2,15 @@
 reference's tests/test_historical_retrieval.py: run the engine, compare
 to an independent oracle)."""
 
-import dataclasses
 from datetime import datetime, timedelta
 
 import pytest
 from pyspark.sql import Row
+from pyspark.sql import functions as F
 
 from feast_spark.operators.asof_join import AsOfJoinSpec, as_of_join
 from feast_spark.operators.skew import with_bucket_id
-from tests.conftest import SF_MED
+from tests.conftest import SF_MED, asof_plan
 
 
 def ts(s: str) -> datetime:
@@ -23,29 +23,10 @@ def _executed_plan(df) -> str:
 
 @pytest.fixture(scope="module", params=["union_window", "range_join", "sorted_merge"])
 def asof(request):
-    """``as_of_join`` under one explicit plan.  The sorted_merge arm
-    runs over ``with_bucket_id`` frames (2 buckets, so several keys
-    share a cogroup): that plan needs a bucket-id column on both
-    sides."""
-    strategy = request.param
-
-    def join(entity, entity_ts_col, specs):
-        if strategy == "sorted_merge":
-            keys = specs[0].join_keys
-            entity = with_bucket_id(entity, keys, 2)
-            specs = [
-                dataclasses.replace(
-                    s,
-                    feature_df=with_bucket_id(
-                        s.feature_df,
-                        [s.key_mapping.get(k, k) for k in s.join_keys], 2,
-                    ),
-                )
-                for s in specs
-            ]
-        return as_of_join(entity, entity_ts_col, specs, strategy=strategy)
-
-    return join
+    """``as_of_join``'s output under one physical plan (``asof_plan``;
+    its sorted_merge arm cogroups on 2 buckets, so several keys share
+    a cogroup)."""
+    return lambda *args: asof_plan(request.param, *args)
 
 
 def _handwritten_frames(spark):
@@ -308,9 +289,8 @@ def test_asof_bucket_granularity_matches_per_key(spark):
                 ttl=timedelta(hours=2),
             )
         ],
-        strategy="sorted_merge",
     )
-    assert "FlatMapCoGroupsInPandas" in out._jdf.queryExecution().executedPlan().toString()
+    assert "FlatMapCoGroupsInPandas" in _executed_plan(out)
     got = {r["driver_id"]: r["conv_rate"] for r in out.collect()}
     assert got == {1: 0.2, 2: None, 3: 0.5, 4: 0.6, 5: None}
     # bucket col is an entity column, so it is preserved in the output
@@ -344,10 +324,9 @@ def test_asof_bucket_granularity_multi_rows_per_key(spark):
             features=["v"],
         )
     ]
-    got = as_of_join(eb, "event_timestamp", spec(fb), strategy="sorted_merge")
-    want = as_of_join(
-        entity, "event_timestamp", spec(feats), strategy="union_window"
-    )
+    got = as_of_join(eb, "event_timestamp", spec(fb))
+    assert "FlatMapCoGroupsInPandas" in _executed_plan(got)
+    want = as_of_join(entity, "event_timestamp", spec(feats))
     gs = sorted(
         (r["k"], r["event_timestamp"], r["v"]) for r in got.collect()
     )
@@ -358,11 +337,12 @@ def test_asof_bucket_granularity_multi_rows_per_key(spark):
 
 
 def test_asof_plan_follows_inputs(spark, tmp_path):
-    """The plan rule: a spec whose two sides share a bucket-id column
-    (``__bucket`` on both frames, or ``spec.bucket_col``) runs the
-    bucket cogroup; every other spec rides the union-window pass,
-    including a small parquet-backed feature frame (no broadcast-size
-    rule sends it to a range join).  Each plan returns the same rows."""
+    """The plan rule: a spec whose two sides share a bucket id
+    (``with_bucket_id`` over its join keys on both frames, as
+    ``__bucket`` or ``spec.bucket_col``) runs the bucket cogroup; every
+    other spec rides the union-window pass, including a small
+    parquet-backed feature frame (no broadcast-size rule sends it to a
+    range join).  Each plan returns the same rows."""
     entity, feats = _handwritten_frames(spark)
     mk = lambda f, **kw: AsOfJoinSpec(
         feature_df=f, join_keys=["driver_id"], timestamp_col="datetime",
@@ -401,21 +381,19 @@ def test_asof_plan_follows_inputs(spark, tmp_path):
     assert "FlatMapCoGroupsInPandas" in _executed_plan(out)
     assert rows(out) == want
 
-    # __bucket on one side only is not a shared bucket id
-    out = as_of_join(eb, "event_timestamp", [mk(feats)])
-    assert "FlatMapCoGroupsInPandas" not in _executed_plan(out)
-    assert rows(out) == want
-
-
-def test_asof_sorted_merge_needs_bucket_column(spark):
-    """An explicit sorted_merge over frames without a shared bucket id
-    is refused, naming the helper that adds one; "auto" is no plan."""
-    entity, feats = _handwritten_frames(spark)
-    spec = AsOfJoinSpec(
-        feature_df=feats, join_keys=["driver_id"], timestamp_col="datetime",
-        features=["conv_rate"],
-    )
-    with pytest.raises(ValueError, match="skew.with_bucket_id"):
-        as_of_join(entity, "event_timestamp", [spec], strategy="sorted_merge")
-    with pytest.raises(ValueError, match="unknown as-of join strategy"):
-        as_of_join(entity, "event_timestamp", [spec], strategy="auto")
+    # __bucket on one side only is not a shared bucket id, nor are ids
+    # over another bucket count, over an INT key against the entity's
+    # LONG one (murmur3 hashes the two differently), or over a key
+    # column retyped since it was hashed
+    int_key = feats.withColumn("driver_id", F.col("driver_id").cast("int"))
+    for f in (
+        feats,
+        with_bucket_id(feats, ["driver_id"], 3),
+        with_bucket_id(int_key, ["driver_id"], 2),
+        with_bucket_id(feats, ["driver_id"], 2).withColumn(
+            "driver_id", F.col("driver_id").cast("int")
+        ),
+    ):
+        out = as_of_join(eb, "event_timestamp", [mk(f)])
+        assert "FlatMapCoGroupsInPandas" not in _executed_plan(out)
+        assert rows(out) == want

@@ -11,6 +11,7 @@ that views fused into one pass keep their own ttl, created tie-break
 and key casts, and that the output columns come in spec order.
 """
 
+import dataclasses
 from datetime import datetime, timedelta
 
 import pytest
@@ -20,6 +21,8 @@ from pyspark.sql import Row
 from pyspark.sql import types as T
 
 from feast_spark.operators.asof_join import AsOfJoinSpec, as_of_join
+from feast_spark.operators.skew import with_bucket_id
+from tests.conftest import asof_plan
 
 BASE = datetime(2024, 1, 1)
 
@@ -38,6 +41,10 @@ ENT_SCHEMA = T.StructType(
         T.StructField("event_timestamp", T.TimestampType()),
     ]
 )
+
+
+def _executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
 
 
 def _hour(h):
@@ -117,7 +124,7 @@ def oracle(feats, ents, ttl_hours, with_created):
 
 @pytest.mark.parametrize(
     "strategy",
-    ["union_window", "range_join", "sorted_merge_bucket"],
+    ["union_window", "range_join", "sorted_merge", "sorted_merge_bucket"],
 )
 @settings(
     max_examples=6,
@@ -144,29 +151,22 @@ def test_asof_matches_bruteforce_oracle(spark, strategy, data):
     edf = spark.createDataFrame(
         [Row(rid=r, k=k, event_timestamp=t) for r, k, t in ents], ENT_SCHEMA
     )
-    if strategy == "sorted_merge_bucket":
-        # bucket-granularity kernel: 2 buckets force several keys per
-        # cogroup, exercising the multi-key composite merge
-        from feast_spark.operators.skew import with_bucket_id
-
-        fdf = with_bucket_id(fdf, ["k"], 2)
-        edf = with_bucket_id(edf, ["k"], 2)
-        strategy = "sorted_merge"
-    out = as_of_join(
-        edf,
-        "event_timestamp",
-        [
-            AsOfJoinSpec(
-                feature_df=fdf,
-                join_keys=["k"],
-                timestamp_col="ts",
-                features=["v"],
-                created_col="created" if with_created else None,
-                ttl=timedelta(hours=ttl_hours) if ttl_hours else None,
-            )
-        ],
-        strategy=strategy,
+    spec = AsOfJoinSpec(
+        feature_df=fdf,
+        join_keys=["k"],
+        timestamp_col="ts",
+        features=["v"],
+        created_col="created" if with_created else None,
+        ttl=timedelta(hours=ttl_hours) if ttl_hours else None,
     )
+    if strategy == "sorted_merge_bucket":
+        # as_of_join's own pick over with_bucket_id frames: 2 buckets
+        # force several keys per cogroup (the multi-key composite merge)
+        spec = dataclasses.replace(spec, feature_df=with_bucket_id(fdf, ["k"], 2))
+        out = as_of_join(with_bucket_id(edf, ["k"], 2), "event_timestamp", [spec])
+        assert "FlatMapCoGroupsInPandas" in _executed_plan(out)
+    else:
+        out = asof_plan(strategy, edf, "event_timestamp", [spec])
     got = {r["rid"]: r["v"] for r in out.collect()}
     want = oracle(feats, ents, ttl_hours, with_created)
     assert got == want
@@ -218,8 +218,11 @@ def test_asof_multi_view_matches_oracle_and_strategies(spark, data):
     ``b`` (no ttl, entity key ``k`` read from an INT column ``kk``
     through ``key_mapping``) fuse into one union-window pass on ``k``;
     ``c`` (INT ``g`` cast to the entity's LONG) forms a second pass.
-    Every strategy matches the per-view oracle, and the feature
-    columns follow spec order, not pass order."""
+    Every plan matches the per-view oracle, and the feature columns
+    follow spec order, not pass order.  Over ``with_bucket_id`` frames
+    (``__bucket`` on the entity over ``k``, on each view over its own
+    key) the rule cogroups ``a`` alone: ``b``'s INT key hashes apart
+    from the entity's LONG ``k`` and ``c``'s ids are over ``g``."""
     fa, fb, fc, ents, ttl_a, ttl_c = data
     edf = spark.createDataFrame(
         [Row(rid=r, k=k, g=g, event_timestamp=t) for r, k, g, t in ents],
@@ -257,11 +260,25 @@ def test_asof_multi_view_matches_oracle_and_strategies(spark, data):
         "c__v": oracle(fc, by_g, ttl_c, False),
         "b__v": oracle(fb, by_k, None, False),
     }
-    for strategy in ("union_window", "range_join"):
-        out = as_of_join(edf, "event_timestamp", specs, strategy=strategy)
-        assert out.columns == [
-            "event_timestamp", "rid", "k", "g", "a__v", "c__v", "b__v"
-        ], strategy
+    cols = ["event_timestamp", "rid", "k", "g", "a__v", "c__v", "b__v"]
+    for strategy in ("union_window", "range_join", "sorted_merge", "rule"):
+        if strategy == "rule":
+            bucketed = [
+                dataclasses.replace(s, feature_df=with_bucket_id(
+                    s.feature_df,
+                    [s.key_mapping.get(k, k) for k in s.join_keys], 2,
+                ))
+                for s in specs
+            ]
+            out = as_of_join(
+                with_bucket_id(edf, ["k"], 2), "event_timestamp", bucketed
+            )
+            plan = _executed_plan(out)
+            assert plan.count("FlatMapCoGroupsInPandas") == 1, plan
+            out = out.drop("__bucket")
+        else:
+            out = asof_plan(strategy, edf, "event_timestamp", specs)
+        assert out.columns == cols, strategy
         rows = out.collect()
         got = {c: {r["rid"]: r[c] for r in rows} for c in want}
         assert got == want, strategy

@@ -7,7 +7,7 @@ builders (nearest_centroid, probe_cells, with_lsh_signature), the
 zero-Exchange repetition_stats rewrite, the bm25 batch
 subset-partitioning exchange collapse, the connected_components
 one-job small-graph path, dsir's single-tokenize persist, and the
-as-of join's SQL-text union_window builder (both SQL plans, every spec
+as-of join's SQL-text union_window builder (every plan, every spec
 shape and column name).
 """
 
@@ -17,7 +17,7 @@ import pytest
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_MED
+from tests.conftest import SF_MED, asof_plan
 
 
 # ---------------------------------------------------------------------------
@@ -280,7 +280,7 @@ def test_dsir_weights_tokenize_pass_is_persisted_once(spark):
 
 
 # ---------------------------------------------------------------------------
-# asof join: both SQL plans agree on every spec shape and column name
+# asof join: every plan agrees on every spec shape and column name
 # ---------------------------------------------------------------------------
 
 def _asof_oracle(ent_rows, feat_rows, spec, ent_ts):
@@ -320,19 +320,21 @@ def _asof_oracle(ent_rows, feat_rows, spec, ent_ts):
     ],
 )
 def test_asof_join_shapes_agree_across_strategies(spark, shape):
-    """union_window and range_join return the nested-loop oracle's rows and
+    """Every physical plan returns the nested-loop oracle's rows and
     the declared schema for each spec shape: ttl / no ttl, prefix +
     created tie-break (a NULL created loses), key mapping, an int
     feature key joined to a long entity key, an entity column with a
     space, an entity ts named like a niladic SQL function
     (``current_date`` must resolve as the column), non-nullable nested
     features (nested nullability survives), no join keys, and key and
-    feature names containing a dot or a backtick."""
+    feature names containing a dot or a backtick.  The bucket cogroup
+    sits out the keyless spec, which has no key to hash a bucket id
+    from."""
     from datetime import datetime, timedelta
 
     from pyspark.sql import types as T
 
-    from feast_spark.operators.asof_join import AsOfJoinSpec, as_of_join
+    from feast_spark.operators.asof_join import AsOfJoinSpec
 
     L, I, D, TS = T.LongType(), T.IntegerType(), T.DoubleType(), T.TimestampType()
 
@@ -410,14 +412,16 @@ def test_asof_join_shapes_agree_across_strategies(spark, shape):
     )
 
     strategies = ("union_window", "range_join")
+    if keys:
+        strategies += ("sorted_merge",)
     outs = []
     for strategy in strategies:
-        out = as_of_join(entity_df, ts, [spec], strategy=strategy)
+        out = asof_plan(strategy, entity_df, ts, [spec])
         assert [(f.name, f.dataType) for f in out.schema] == want_schema, (
             shape, strategy,
         )
         outs.append(out.withColumn("__strategy", F.lit(strategy)))
-    # one job for both strategies keeps the test to seconds
+    # one job for every plan keeps the test to seconds
     rows = functools.reduce(DataFrame.unionByName, outs).collect()
     for strategy in strategies:
         got = sorted(

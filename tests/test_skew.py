@@ -5,6 +5,7 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from feast_spark.operators.skew import salted_join, write_bucketed
+from tests.conftest import asof_plan
 
 
 def _executed_plan(df) -> str:
@@ -96,8 +97,8 @@ def test_bucketed_pit_retrieval_zero_exchange(spark, tmp_path):
     nodes as well — it needs only bucket-ASC ordering, which
     one-file-per-bucket sortBy scans provide straight from disk;
     key-only bucketed tables ride the union-window pass, whose key
-    window reuses the scans' partitioning.  The hot-key range join
-    over the same key-bucketed tables is exchange-free too (the
+    window reuses the scans' partitioning.  The range-join plan over
+    the same key-bucketed tables is exchange-free too (the
     sort-merge join reads both scans co-located; the dedup window's
     (keys, row_id) partitioning is satisfied by the join output).  Pay
     the shuffle+sort once at materialization, never per training run.
@@ -201,9 +202,9 @@ def test_bucketed_pit_retrieval_zero_exchange(spark, tmp_path):
         assert "FlatMapCoGroupsInPandas" not in plan_uw, plan_uw
         assert "Exchange" not in plan_uw, plan_uw
 
-        # the hot-key override over the same key-bucketed tables
-        out_rj = as_of_join(
-            spark.table(te), "event_timestamp",
+        # the range-join plan over the same key-bucketed tables
+        out_rj = asof_plan(
+            "range_join", spark.table(te), "event_timestamp",
             [
                 AsOfJoinSpec(
                     feature_df=spark.table(tf), join_keys=["driver_id"],
@@ -211,7 +212,6 @@ def test_bucketed_pit_retrieval_zero_exchange(spark, tmp_path):
                     created_col="created_ts", ttl=timedelta(days=30),
                 )
             ],
-            strategy="range_join",
         )
         plan_rj = _executed_plan(out_rj)
         assert "SortMergeJoin" in plan_rj, plan_rj
@@ -297,7 +297,7 @@ def test_asof_range_join_hot_key_aqe_skew_split(spark, hot_events):
        and equal the union_window strategy's."""
     from datetime import timedelta
 
-    from feast_spark.operators.asof_join import AsOfJoinSpec, as_of_join
+    from feast_spark.operators.asof_join import AsOfJoinSpec
 
     entity = hot_events.select(
         "user_id", F.col("ts").alias("event_timestamp")
@@ -310,7 +310,8 @@ def test_asof_range_join_hot_key_aqe_skew_split(spark, hot_events):
     )
 
     def run(strategy):
-        return as_of_join(
+        return asof_plan(
+            strategy,
             entity,
             "event_timestamp",
             [
@@ -322,7 +323,6 @@ def test_asof_range_join_hot_key_aqe_skew_split(spark, hot_events):
                     ttl=timedelta(days=1),
                 )
             ],
-            strategy=strategy,
         )
 
     confs = {
@@ -412,10 +412,7 @@ def test_bucket_granularity_pit_zero_exchange_zero_sort(spark):
             features=["conv_rate"],
             ttl=timedelta(days=30),
         )
-        out = as_of_join(
-            spark.table(te), "event_timestamp", [spec],
-            strategy="sorted_merge",
-        )
+        out = as_of_join(spark.table(te), "event_timestamp", [spec])
         plan = _executed_plan(out)
         assert "FlatMapCoGroupsInPandas" in plan, plan
         assert "Exchange" not in plan, plan
@@ -426,9 +423,7 @@ def test_bucket_granularity_pit_zero_exchange_zero_sort(spark):
             timestamp_col="event_ts", features=["conv_rate"],
             ttl=timedelta(days=30),
         )
-        want = as_of_join(
-            ent, "event_timestamp", [want_spec], strategy="union_window"
-        )
+        want = as_of_join(ent, "event_timestamp", [want_spec])
         got = sorted(
             (r["driver_id"], r["event_timestamp"], r["conv_rate"])
             for r in out.collect()

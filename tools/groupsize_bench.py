@@ -6,9 +6,10 @@ Python call) dominates the searchsorted work on tiny groups — which is
 why ``sorted_merge`` groups on a bucket id (``skew.with_bucket_id``),
 never on the keys.  This harness times a worst-case corpus of N
 distinct keys with 5 feature rows and 1 entity row each: union_window
-and range_join over key-bucketed + sorted tables, and the bucket
-cogroup (the plan ``as_of_join`` picks when both sides carry
-``__bucket``) over ``__bucket``-bucketed twins.
+(``as_of_join``'s plan without a shared bucket id) and the range-join
+formulation over key-bucketed + sorted tables, and the bucket cogroup
+(its plan when both sides carry ``with_bucket_id``'s ``__bucket``)
+over ``__bucket``-bucketed twins.
 
 Usage:  python tools/groupsize_bench.py [n_keys] [n_buckets]
 Prints one JSON line; results recorded in SCALE.md.
@@ -53,7 +54,9 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    from feast_spark.operators.asof_join import AsOfJoinSpec, as_of_join
+    from feast_spark.operators.asof_join import (
+        AsOfJoinSpec, _asof_range_join, as_of_join,
+    )
     from feast_spark.operators.skew import with_bucket_id, write_bucketed
 
     t0 = F.to_timestamp(F.lit("2024-01-01 00:00:00"))
@@ -86,29 +89,27 @@ def main() -> None:
     featb, entb = spark.table("gs_feat"), spark.table("gs_ent")
     featbb, entbb = spark.table("gs_featb"), spark.table("gs_entb")
 
-    def run(strategy: str | None, e, f) -> float:
+    def run(join, e, f) -> float:
+        spec = AsOfJoinSpec(
+            feature_df=f,
+            join_keys=["key"],
+            timestamp_col="event_ts",
+            features=["val"],
+            ttl=timedelta(days=2),
+        )
         samples = []
         for _ in range(runs):
             t = time.monotonic()
-            as_of_join(
-                e,
-                "ts",
-                [
-                    AsOfJoinSpec(
-                        feature_df=f,
-                        join_keys=["key"],
-                        timestamp_col="event_ts",
-                        features=["val"],
-                        ttl=timedelta(days=2),
-                    )
-                ],
-                strategy=strategy,
-            ).count()
+            join(e, "ts", spec).count()
             samples.append(time.monotonic() - t)
         return round(statistics.median(samples), 3)
 
-    out = {s: run(s, entb, featb) for s in ("union_window", "range_join")}
-    out["sorted_merge_bucket"] = run(None, entbb, featbb)
+    rule = lambda e, ts, spec: as_of_join(e, ts, [spec])
+    out = {
+        "union_window": run(rule, entb, featb),
+        "range_join": run(_asof_range_join, entb, featb),
+        "sorted_merge_bucket": run(rule, entbb, featbb),
+    }
     print(
         json.dumps(
             {
